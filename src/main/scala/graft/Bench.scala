@@ -19,6 +19,19 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private val warmDir = "/root/testdata/sf0.001"
 
+  /** The `local[N]` core count Bench, Verify and Plans size their
+    * session with: SPARK_GRAFT_CPUS when set, else 32 (the bench
+    * protocol's `local[32]`). A value that is not a positive integer
+    * fails here, naming the variable and the value, instead of as a
+    * bare NumberFormatException or a master-URL error.
+    */
+  private[graft] def localCores(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(32) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
   /** The record's self-describing protocol fragment — extracted so
     * BenchProtocolSpec can pin that EVERY future BENCH record carries
     * the context fields the cross-round comparisons depend on
@@ -100,9 +113,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val ticks0 = cpuTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default 32: the driver contract benches at local[32]; override via
-    // SPARK_GRAFT_CPUS for constrained dev hosts
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = localCores().toString
     // shuffle sizing: 32 initial shuffle partitions by DEFAULT. The env
     // knob is an ESCAPE HATCH no shipped protocol currently sets: round
     // 12 shipped 256 as the unconditional default on the claim that AQE

@@ -14,9 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    // toInt-validated (round-17 advice): a non-numeric value would
-    // otherwise surface as an opaque master-URL error
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt.toString
+    val cpus = Bench.localCores().toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

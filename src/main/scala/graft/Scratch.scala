@@ -18,13 +18,16 @@ object Scratch {
     if (f.isFile) f.length
     else Option(f.listFiles).map(_.iterator.map(size).sum).getOrElse(0L)
 
-  /** Scratch roots, in Spark's own precedence for local dirs: every
-    * path in `spark.local.dir` (comma-separated), else SPARK_LOCAL_DIRS
-    * (env), else java.io.tmpdir.
+  /** Scratch roots, in Spark's own precedence for local dirs
+    * (`Utils.getConfiguredLocalDirs`): every path in SPARK_LOCAL_DIRS
+    * (env, comma-separated), else `spark.local.dir`, else
+    * java.io.tmpdir. Spark ignores `spark.local.dir` when the env var
+    * is set, so the walk must too.
     */
-  def roots(conf: org.apache.spark.SparkConf): Seq[File] = {
-    val dirs = conf.getOption("spark.local.dir")
-      .orElse(sys.env.get("SPARK_LOCAL_DIRS"))
+  def roots(conf: org.apache.spark.SparkConf,
+            env: Map[String, String] = sys.env): Seq[File] = {
+    val dirs = env.get("SPARK_LOCAL_DIRS")
+      .orElse(conf.getOption("spark.local.dir"))
       .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))
     dirs.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map(new File(_))
   }

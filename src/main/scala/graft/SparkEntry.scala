@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ops._
 import graft.pipelines.{Curation, Ecommerce, Iot, PetsNutrition}
 import graft.sources.{Fixtures, Sources}
-import graft.text.{CcNet, Dsir, Pii, Retrieval, TextAnalysis}
+import graft.text.{Bm25Route, CcNet, Dsir, Pii, Retrieval, TextAnalysis}
 import graft.neardup.{Decontaminate, NearDup, ParaDedup, SpanDedup}
 import graft.sim.Similarity
 import graft.multimodal.Multimodal
@@ -2357,61 +2357,41 @@ object SparkEntry {
       Retrieval.bm25TopK(docs(s, d), "doc_id", "text",
         fixedCountPred(docs(s, d), "doc_id", bmQueryTarget),
         k1 = bmK1, b = bmB, k = bmK, maxDfFrac = bmDfFrac)),
-    // impact-ordered exact BM25 (WAND/max-score first cut): OUTPUT-
-    // identical to x70 — same screened postings, same fixed-point
-    // contributions, same tiebreak, same DuckDB oracle — but the common
-    // terms' long posting lists are pruned by the essential-term
-    // threshold before the score aggregation, so the score shuffle is
-    // candidate-bounded instead of Q·Σdf (see Retrieval.bm25TopKImpact).
-    // AUTO-branched on corpus size (the x59 pattern): below the
-    // measured 250k-doc crossover the impact scaffolding is pure
-    // overhead (x86 was the sf0.1 suite's most expensive query at
-    // 16.3s in round 12 — for a 6k-doc corpus) and the plain exact
-    // join runs instead; output is branch-invariant, so the oracle
-    // needs no replay of the rule
+    // BM25 top-k, auto-routed on corpus size and scratch budget (see the
+    // route table in text.Retrieval): every harness corpus sits below
+    // the measured 250k-doc crossover, so this runs the plain exact
+    // join; output is route-invariant, so the oracle needs no replay of
+    // the rule
     "x86_bm25_wand" -> ((s, d) =>
-      Retrieval.bm25TopKAuto(docs(s, d), "doc_id", "text",
+      Retrieval.bm25TopK(docs(s, d), "doc_id", "text",
         fixedCountPred(docs(s, d), "doc_id", bmQueryTarget),
-        n = docsCount(s, d),
+        route = Bm25Route.Auto(docsCount(s, d)),
         k1 = bmK1, b = bmB, k = bmK, maxDfFrac = bmDfFrac)),
-    // the impact branch FORCED (crossover = 0): with x86 auto-routing,
-    // every harness corpus sits below the 250k crossover and would take
-    // the plain branch — this entry keeps bm25TopKImpact itself under
-    // DuckDB oracle replay (and under Bench's sf0.001 warm pass, so a
-    // scale sweep's first timed rep doesn't pay its codegen compile)
+    // the Impact route forced: x86 never reaches it on a harness
+    // corpus, so this entry keeps it under oracle replay (and under
+    // Bench's sf0.001 warm pass)
     "x87_bm25_wand_forced" -> ((s, d) =>
-      Retrieval.bm25TopKAuto(docs(s, d), "doc_id", "text",
+      Retrieval.bm25TopK(docs(s, d), "doc_id", "text",
         fixedCountPred(docs(s, d), "doc_id", bmQueryTarget),
-        n = docsCount(s, d), k1 = bmK1, b = bmB, k = bmK,
-        maxDfFrac = bmDfFrac, crossover = 0L)),
-    // query-batch-partitioned BM25 (the round-14 scratch-wall knob):
-    // same query sample split into [bmBatches] deterministic groups,
-    // one screened postings index built/scored/RELEASED per group, so
-    // peak shuffle scratch divides by the batch count while the output
-    // stays identical to x70 (same oracle) — the shape a >5M-docs-per-
-    // node single-machine deployment runs
+        route = Bm25Route.Impact(),
+        k1 = bmK1, b = bmB, k = bmK, maxDfFrac = bmDfFrac)),
+    // the Batched route forced at [bmBatches]: the shape a >5M-docs-
+    // per-node deployment runs, kept under oracle replay
     "x89_bm25_batched" -> ((s, d) =>
-      Retrieval.bm25TopKBatched(docs(s, d), "doc_id", "text",
+      Retrieval.bm25TopK(docs(s, d), "doc_id", "text",
         fixedCountPred(docs(s, d), "doc_id", bmQueryTarget),
-        batches = bmBatches, k1 = bmK1, b = bmB, k = bmK,
-        maxDfFrac = bmDfFrac, stageTokens = true)),
-    // the auto entry's SCRATCH branch forced (the x87 idiom): the
-    // budget is pinned to half the measured estimate for the corpus at
-    // hand, so the routing rule engages (2 batches) at every harness
-    // corpus — keeping the default path's scratch wiring under DuckDB
-    // oracle replay and Bench's warm pass, exactly as x87 keeps the
-    // impact branch covered while x86 auto-routes. Production callers
-    // pass their node's real budget (default 48 GiB); at sf-scale
-    // corpora the default never engages, which is why this forced twin
-    // exists
+        route = Bm25Route.Batched(bmBatches),
+        k1 = bmK1, b = bmB, k = bmK, maxDfFrac = bmDfFrac)),
+    // Auto's scratch branch forced: a budget of half the estimate for
+    // the corpus at hand makes Auto pick 2 batches at every harness
+    // corpus, where the default 48 GiB budget never engages
     "x92_bm25_auto_scratch" -> ((s, d) => {
       val n = docsCount(s, d)
-      Retrieval.bm25TopKAuto(docs(s, d), "doc_id", "text",
+      Retrieval.bm25TopK(docs(s, d), "doc_id", "text",
         fixedCountPred(docs(s, d), "doc_id", bmQueryTarget),
-        n = n, k1 = bmK1, b = bmB, k = bmK, maxDfFrac = bmDfFrac,
-        queryCount = bmQueryTarget,
-        scratchBudgetMb = math.max(1L,
-          Retrieval.bm25ScratchEstimateMb(n, bmQueryTarget) / 2))
+        route = Bm25Route.Auto(n, bmQueryTarget, math.max(1L,
+          Retrieval.bm25ScratchEstimateMb(n, bmQueryTarget) / 2)),
+        k1 = bmK1, b = bmB, k = bmK, maxDfFrac = bmDfFrac)
     }),
     // hybrid retrieval: the x70 sparse (BM25) and x05 dense (brute
     // cosine) rankers run over the doc∩vec corpus (doc_id = vec_id)
@@ -3986,8 +3966,8 @@ object SparkEntry {
     // every float constant below is interpolated from the SAME Scala
     // doubles the Spark plan lits (shortest-round-trip formatting, and
     // ::DOUBLE casts keep DuckDB out of DECIMAL arithmetic).
-    // x87 forces the impact branch, so bm25TopKImpact stays under
-    // oracle replay on corpora where x86 auto-routes to plain
+    // x87 forces the Impact route, so it stays under oracle replay on
+    // corpora where x86 auto-routes to Plain
     "x87_bm25_wand_forced" -> bm25TopKOracle,
     // x86 (impact-ordered BM25) is output-identical by construction
     // and spec (RetrievalSpec), so it shares this oracle text verbatim

@@ -11,7 +11,7 @@ object Verify {
     val only = args.drop(2)
     // default 32 to match the driver's local[32] contract (and to exercise
     // the catalog's partition-independence claims under real parallelism)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.localCores().toString
     // same shuffle sizing as Bench (see the note there): default 32,
     // raised only by the scale-sweep protocol via the env knob. The
     // oracle results are knob-invariant by design (fixed-point integer

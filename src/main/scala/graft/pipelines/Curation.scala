@@ -169,10 +169,11 @@ object Curation {
     // budget-gated route (round 18, the x89/x92 routing pattern): the
     // fused prime-then-one-job spelling when the estimated one-job
     // scratch fits the node budget, the proven per-stage sequential
-    // spelling above it (or when the caller supplies no corpus size —
-    // scale deployments must pass one). Output identical either way
-    // (spec-pinned); only job structure differs.
-    val fuse = nDocs.exists(n => scratchBudgetMb <= 0L ||
+    // spelling above it, and whenever the corpus size or the budget is
+    // unknown (no nDocs, or a non-positive budget): unknown input fails
+    // closed. Output identical either way (spec-pinned); only job
+    // structure differs.
+    val fuse = nDocs.exists(n => scratchBudgetMb > 0L &&
       funnelOneJobScratchEstimateMb(n) <= scratchBudgetMb)
     if (fuse) b.funnelFused else b.funnel
   }

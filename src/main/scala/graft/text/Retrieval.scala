@@ -4,6 +4,35 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** How [[Retrieval.bm25TopK]] runs its work — see the route table on
+  * [[Retrieval]]. Every route returns the same rows.
+  */
+sealed trait Bm25Route
+
+object Bm25Route {
+  case object Plain extends Bm25Route
+
+  final case class Impact(essTerms: Int = 8) extends Bm25Route {
+    require(essTerms >= 1, s"essTerms must be >= 1, got $essTerms")
+  }
+
+  final case class Batched(batches: Int) extends Bm25Route {
+    require(batches >= 1, s"batches must be >= 1, got $batches")
+  }
+
+  /** `n` is the corpus size (one metadata-cheap count), `queryCount`
+    * the caller's fixed query sample size. A non-positive budget is
+    * rejected: an unknown budget must not route to the unbounded
+    * spellings.
+    */
+  final case class Auto(n: Long, queryCount: Long = 40L,
+      scratchBudgetMb: Long = Retrieval.bm25DefaultScratchBudgetMb)
+      extends Bm25Route {
+    require(scratchBudgetMb > 0L,
+      s"scratchBudgetMb must be > 0, got $scratchBudgetMb")
+  }
+}
+
 /** Lexical top-k retrieval over the corpus — the BM25 scoring family
   * (Robertson/Sparck-Jones probabilistic weighting with TF saturation
   * and length normalization), the standard tool for query-driven
@@ -31,6 +60,26 @@ import org.apache.spark.sql.functions._
   * Everything upstream of the floor is a fixed sequence of IEEE
   * +,-,*,/ on integer-exact doubles — both engines replay it bitwise.
   *
+  * ONE entry point, [[Retrieval.bm25TopK]]. Its `route` ([[Bm25Route]])
+  * decides only how the work runs: every route returns the same rows
+  * (spec-pinned in RetrievalSpec, one shared DuckDB oracle).
+  *
+  * | Route | What it runs | `Auto` picks it when |
+  * |---|---|---|
+  * | `Plain` (default) | one screened postings index; every query-term posting is scored, summed and ranked | the estimated index fits `scratchBudgetMb` and `n` < [[Retrieval.bm25ImpactCrossoverDocs]] |
+  * | `Impact(essTerms)` | the `essTerms` highest-impact terms per query set a threshold θ; the common terms' long postings are joined only for docs that can still reach θ | the estimated index fits and `n` ≥ the crossover |
+  * | `Batched(batches)` | the query sample in `batches` groups, each scored like `Plain` and checkpointed before the next starts; the tokens are staged once to scratch parquet when `batches` > 1 | the estimated index (`bm25ScratchEstimateMb`) exceeds `scratchBudgetMb`; `batches` is the count that fits |
+  * | `Auto(n, queryCount, scratchBudgetMb)` | one of the three above, chosen from the corpus size, the query count and the node's scratch budget | — |
+  *
+  * The measured constants behind `Auto`, each with its provenance on
+  * the val: [[Retrieval.bm25ImpactCrossoverDocs]] (250k docs — plain
+  * wins 2.75× at 150k, impact 2.1× at 500k),
+  * [[Retrieval.bm25ScratchMbPer1MDocsPer10Queries]] (~3 GB per 1M docs
+  * per 10 queries, round 15 at 10M docs) and
+  * [[Retrieval.bm25DefaultScratchBudgetMb]] (48 GiB). Staging the
+  * tokens of a batched run measured 0.83× the per-batch re-tokenize at
+  * equal peak scratch (round 16, v2-5M, 4 batches).
+  *
   * Scale shape: the distinct query-term set (fixed query count ×
   * bounded per-doc vocabulary — broadcast-sized) screens the token
   * explode BEFORE the index aggregation, so the only shuffled index is
@@ -50,18 +99,16 @@ import org.apache.spark.sql.functions._
   * the per-doc side never shuffles until the (qid, nid) partial-agg
   * sum. Cost ∝ Σ_{query terms} df(term) — linear in corpus size for a
   * fixed query count, linear in the query count, never all-pairs. The
-  * further pruning path at web scale is impact ordering (WAND /
-  * block-max): skip postings that cannot reach the current top-k
-  * bound — noted, not implemented; the frac-cap is the first-order
-  * version of the same idea.
+  * `Impact` route is the relational first cut of impact ordering
+  * (WAND / max-score); block-max ordering is not implemented.
   */
 object Retrieval {
 
   /** The screened query-term postings (`tf`: nid, dl, tid, tf) and the
     * annotated + df-capped query-term frame (`qterms`: tid, qid, df,
-    * n, sl) both BM25 scorers share — split out so [[bm25TopK]] and
-    * [[bm25TopKImpact]] consume the EXACT same frames (any drift
-    * between the two would break their spec-pinned output equality).
+    * n, sl) every route shares — split out so all routes consume the
+    * EXACT same frames (any drift between them would break their
+    * spec-pinned output equality).
     *
     * Term identity in every shuffled/aggregated frame is `tid`, the
     * term's 60-bit portable md5 base
@@ -89,8 +136,8 @@ object Retrieval {
       idCol, queryPred, maxDfFrac)
 
   /** [[bm25Parts]] over an ALREADY-TOKENIZED frame `(idCol, tk)` — the
-    * seam the staged-tokenize path ([[bm25TopKBatched]] `stageDir`)
-    * plugs a scratch-parquet read into, so each query batch re-scans
+    * seam the batched route plugs its staged scratch-parquet read
+    * into, so each query batch re-scans
     * fixed token arrays instead of re-running the tokenizer over the
     * raw text. `queryPred` must reference only `idCol` (both callers'
     * preds are id-hash predicates); tokenization is deterministic and
@@ -183,10 +230,27 @@ object Retrieval {
       .filter(col("rnk") <= k)
   }
 
+  /** Exact contributions `(qid, nid, c)` of every posting of `qterms`'
+    * terms, the query doc itself excluded.
+    */
+  private def contribs(tf: DataFrame, qterms: DataFrame, k1: Double,
+                       b: Double): DataFrame =
+    tf.join(broadcast(qterms), Seq("tid"))
+      .filter(col("nid") =!= col("qid"))
+      .select(col("qid"), col("nid"), contribExpr(k1, b).as("c"))
+
+  /** Plain scoring: every query-term posting, summed and ranked. */
+  private def plainTopK(parts: Bm25Parts, k1: Double, b: Double,
+                        k: Int): DataFrame =
+    topKByScore(contribs(parts.tf, parts.qterms, k1, b), k)
+
   /** Top-k BM25-scored corpus docs per query doc. Output one row per
     * (query, hit): (qid, nid, score, rnk) — `score` in integer
     * millionths, `rnk` the dense 1-based rank (score DESC, nid ASC
     * deterministic tiebreak). The query doc itself is excluded.
+    *
+    * `route` picks how the work runs (see the route table in the
+    * [[Retrieval]] header); the output does not depend on it.
     *
     * `queryPred` must reference ONLY `idCol`: the predicate is applied
     * to the projected `(idCol, tokens)` frame (so the tokenize runs
@@ -195,27 +259,36 @@ object Retrieval {
     * id-hash sampling predicates; a caller needing a content predicate
     * filters the corpus BEFORE calling (the filtered frame is the
     * corpus, so df/idf then honestly reflect the filtered collection).
-    * Same contract on every bm25TopK* entry point — they all route
-    * through the shared [[bm25Parts]].
     */
   def bm25TopK(corpus: DataFrame, idCol: String, textCol: String,
-               queryPred: Column, k1: Double = 1.2, b: Double = 0.75,
-               k: Int = 5, maxDfFrac: Double = 0.9): DataFrame = {
-    val parts = bm25Parts(corpus, idCol, textCol, queryPred, maxDfFrac)
-    val scored = parts.tf
-      .join(broadcast(parts.qterms), Seq("tid"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"), contribExpr(k1, b).as("c"))
-    topKByScore(scored, k)
+               queryPred: Column, route: Bm25Route = Bm25Route.Plain,
+               k1: Double = 1.2, b: Double = 0.75, k: Int = 5,
+               maxDfFrac: Double = 0.9): DataFrame = {
+    def parts = bm25Parts(corpus, idCol, textCol, queryPred, maxDfFrac)
+    route match {
+      case Bm25Route.Plain => plainTopK(parts, k1, b, k)
+      case Bm25Route.Impact(essTerms) => impactTopK(parts, k1, b, k, essTerms)
+      case Bm25Route.Batched(batches) =>
+        batchedTopK(corpus, idCol, textCol, queryPred, batches, k1, b, k,
+          maxDfFrac)
+      case Bm25Route.Auto(n, queryCount, scratchBudgetMb) =>
+        // survival axis first (the only route that completes above the
+        // node's scratch budget), then the CPU axis
+        val batches = bm25AutoBatches(n, queryCount, scratchBudgetMb)
+        val chosen =
+          if (batches > 1) Bm25Route.Batched(batches)
+          else if (n < bm25ImpactCrossoverDocs) Bm25Route.Plain
+          else Bm25Route.Impact()
+        bm25TopK(corpus, idCol, textCol, queryPred, chosen, k1, b, k,
+          maxDfFrac)
+    }
   }
 
-  /** Impact-ordered exact BM25 top-k — the relational first cut of
-    * WAND / max-score pruning (Broder et al. 2003; Turtle & Flood 1995),
-    * the non-relational escape Retrieval's header notes for exact
-    * BM25's Q·Σdf candidate cost. OUTPUT-IDENTICAL to [[bm25TopK]]
-    * (same postings, same fixed-point contributions, same tiebreak —
-    * spec-pinned and sharing its DuckDB oracle); only the WORK is
-    * routed differently:
+  /** The `Impact` route — impact-ordered exact BM25 top-k, the
+    * relational first cut of WAND / max-score pruning (Broder et al.
+    * 2003; Turtle & Flood 1995). Same postings, same fixed-point
+    * contributions, same tiebreak as `Plain`; only the WORK is routed
+    * differently:
     *
     *  1. Split each query's terms into the `essTerms` highest-impact
     *     ("essential": rarest, largest upper-bound contribution) terms
@@ -263,7 +336,66 @@ object Retrieval {
     * exchange inputs — same driver-memory class, ~10 fewer scheduler
     * rounds per invocation (round 18, guide §2.6).
     */
-  /** The impact-split scaffolding [[bm25TopKImpact]] routes work with:
+  private def impactTopK(parts: Bm25Parts, k1: Double, b: Double, k: Int,
+                         essTerms: Int): DataFrame = {
+    val tf = parts.tf
+    val impact = bm25ImpactParts(parts, k1, b, k, essTerms)
+    // every scaffolding frame except sE is a LocalRelation (driver-local
+    // rows — see bm25ImpactParts), so the routing below reads them
+    // without jobs, arms with no queries are dropped from the plan
+    // entirely, and every broadcast build in the assembly is job-free.
+    // Rows are driver-sorted, so the literal screens — and with them
+    // the canonicalized plan the auto≡forced identity spec compares —
+    // are deterministic across invocations.
+    val metaRows = impact.qmeta.collect() // local rows: no job
+    val openQids = metaRows.filter(_.getBoolean(3)).map(_.get(0)).toSeq
+    val anyPruned = metaRows.exists(!_.getBoolean(3))
+    // open queries: the plain exact join over ALL their terms (≡ x70
+    // restricted to those queries)
+    val openScored: Option[DataFrame] =
+      if (openQids.isEmpty) None
+      else Some(contribs(tf, impact.qt.filter(col("qid").isin(openQids: _*)),
+        k1, b))
+    // pruned queries: the common terms' long posting lists meet ONLY
+    // the candidate docs — nid screen first (cuts the posting rows),
+    // pair screen second (a doc may be candidate for one query but not
+    // another). All three screens are LocalRelations built from the
+    // collected candidate rows (the r17 plan collected the same rows to
+    // the driver twice, as broadcast-exchange inputs).
+    val prunedScored: Option[DataFrame] = if (!anyPruned) None else {
+      val candE = impact.candE
+      val candRows = candE.collect() // local rows: no job
+      val session = tf.sparkSession
+      def ids(vals: Seq[Any], name: String) = session.createDataFrame(
+        java.util.Arrays.asList(vals.map(org.apache.spark.sql.Row(_)): _*),
+        org.apache.spark.sql.types.StructType(Seq(
+          candE.schema(name).copy(name = name))))
+      val candNids = ids(candRows.map(_.get(1)).distinct.toSeq, "nid")
+      val candPairs = candE.select("qid", "nid")
+      val prunedQids = metaRows.filterNot(_.getBoolean(3)).map(_.get(0)).toSeq
+      val qNonPruned = impact.qNon.filter(col("qid").isin(prunedQids: _*))
+      val nScored = tf.join(broadcast(candNids), Seq("nid"))
+        .join(broadcast(qNonPruned), Seq("tid"))
+        .filter(col("nid") =!= col("qid"))
+        .join(broadcast(candPairs), Seq("qid", "nid"))
+        .select(col("qid"), col("nid"), contribExpr(k1, b).as("c"))
+      // assemble: every candidate pair contributes its exact essential
+      // score once (as a c-row) plus its non-essential contributions —
+      // summed by the same topK aggregate the open path uses
+      Some(candE.select(col("qid"), col("nid"), col("s_e").as("c"))
+        .unionAll(nScored))
+    }
+    val scored = (openScored.toSeq ++ prunedScored.toSeq)
+      .reduceOption(_ unionAll _)
+      // no queries at all (empty corpus / empty sample): an empty frame
+      // with the contract (qid, nid, c) shape keeps topKByScore's
+      // output schema intact
+      .getOrElse(impact.sE.select(col("qid"), col("nid"), col("s_e").as("c"))
+        .filter(lit(false)))
+    topKByScore(scored, k)
+  }
+
+  /** The impact-split scaffolding the `Impact` route routes work with:
     * `qt` (qterms + analytic per-posting upper bound), its
     * essential/non-essential split (`qEss`/`qNon`), the exact essential
     * partial scores `sE` (distributed, lazy), the pruned-query
@@ -360,10 +492,7 @@ object Retrieval {
     // the one genuinely corpus-sized frame here; distributed and LAZY
     // (not cached: its only consumer is the single pass-2 job below —
     // r17 cached it for three consumers that no longer exist)
-    val c = contribExpr(k1, b)
-    val sE = tf.join(broadcast(qEss), Seq("tid"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"), c.as("c"))
+    val sE = contribs(tf, qEss, k1, b)
       .groupBy("qid", "nid").agg(sum(col("c")).as("s_e"))
 
     // ---- pass 2 (one job): θ + candidate screen in ONE window pass ----
@@ -427,81 +556,13 @@ object Retrieval {
     Bm25ImpactParts(qt, qEss, qNon, sE, candE, qmeta)
   }
 
-  /** `queryPred` contract: id-only — see [[bm25TopK]]. */
-  def bm25TopKImpact(corpus: DataFrame, idCol: String, textCol: String,
-                     queryPred: Column, k1: Double = 1.2, b: Double = 0.75,
-                     k: Int = 5, maxDfFrac: Double = 0.9,
-                     essTerms: Int = 8): DataFrame = {
-    require(essTerms >= 1, s"essTerms must be >= 1, got $essTerms")
-    val parts = bm25Parts(corpus, idCol, textCol, queryPred, maxDfFrac)
-    val tf = parts.tf
-    val c = contribExpr(k1, b)
-    val impact = bm25ImpactParts(parts, k1, b, k, essTerms)
-    // every scaffolding frame except sE is a LocalRelation (driver-local
-    // rows — see bm25ImpactParts), so the routing below reads them
-    // without jobs, arms with no queries are dropped from the plan
-    // entirely, and every broadcast build in the assembly is job-free.
-    // Rows are driver-sorted, so the literal screens — and with them
-    // the canonicalized plan the auto≡forced identity spec compares —
-    // are deterministic across invocations.
-    val metaRows = impact.qmeta.collect() // local rows: no job
-    val openQids = metaRows.filter(_.getBoolean(3)).map(_.get(0)).toSeq
-    val anyPruned = metaRows.exists(!_.getBoolean(3))
-    // open queries: the plain exact join over ALL their terms (≡ x70
-    // restricted to those queries)
-    val openScored: Option[DataFrame] =
-      if (openQids.isEmpty) None
-      else Some(tf
-        .join(broadcast(impact.qt.filter(col("qid").isin(openQids: _*))),
-          Seq("tid"))
-        .filter(col("nid") =!= col("qid"))
-        .select(col("qid"), col("nid"), c.as("c")))
-    // pruned queries: the common terms' long posting lists meet ONLY
-    // the candidate docs — nid screen first (cuts the posting rows),
-    // pair screen second (a doc may be candidate for one query but not
-    // another). All three screens are LocalRelations built from the
-    // collected candidate rows (the r17 plan collected the same rows to
-    // the driver twice, as broadcast-exchange inputs).
-    val prunedScored: Option[DataFrame] = if (!anyPruned) None else {
-      val candE = impact.candE
-      val candRows = candE.collect() // local rows: no job
-      val session = tf.sparkSession
-      def ids(vals: Seq[Any], name: String) = session.createDataFrame(
-        java.util.Arrays.asList(vals.map(org.apache.spark.sql.Row(_)): _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          candE.schema(name).copy(name = name))))
-      val candNids = ids(candRows.map(_.get(1)).distinct.toSeq, "nid")
-      val candPairs = candE.select("qid", "nid")
-      val prunedQids = metaRows.filterNot(_.getBoolean(3)).map(_.get(0)).toSeq
-      val qNonPruned = impact.qNon.filter(col("qid").isin(prunedQids: _*))
-      val nScored = tf.join(broadcast(candNids), Seq("nid"))
-        .join(broadcast(qNonPruned), Seq("tid"))
-        .filter(col("nid") =!= col("qid"))
-        .join(broadcast(candPairs), Seq("qid", "nid"))
-        .select(col("qid"), col("nid"), c.as("c"))
-      // assemble: every candidate pair contributes its exact essential
-      // score once (as a c-row) plus its non-essential contributions —
-      // summed by the same topK aggregate the open path uses
-      Some(candE.select(col("qid"), col("nid"), col("s_e").as("c"))
-        .unionAll(nScored))
-    }
-    val scored = (openScored.toSeq ++ prunedScored.toSeq)
-      .reduceOption(_ unionAll _)
-      // no queries at all (empty corpus / empty sample): an empty frame
-      // with the contract (qid, nid, c) shape keeps topKByScore's
-      // output schema intact
-      .getOrElse(impact.sE.select(col("qid"), col("nid"), col("s_e").as("c"))
-        .filter(lit(false)))
-    topKByScore(scored, k)
-  }
-
-  /** Query-batch-partitioned exact BM25 — the scratch-bounding knob the
-    * round-14 10M-doc wall asked for. OUTPUT-IDENTICAL to [[bm25TopK]]
-    * over the same `queryPred` (per-query scores never depend on other
-    * queries, and the deterministic batch split below partitions the
-    * query set exhaustively), but the WORK runs one query batch at a
-    * time: query docs are routed to `batches` groups by
-    * `portableBase(id) mod batches` (engine-portable, lattice-free),
+  /** The `Batched` route — query-batch-partitioned exact BM25, the
+    * scratch-bounding route the round-14 10M-doc wall asked for. Same
+    * rows as `Plain` over the same `queryPred` (per-query scores never
+    * depend on other queries, and the deterministic batch split below
+    * partitions the query set exhaustively), but the WORK runs one
+    * query batch at a time: query docs are routed to `batches` groups
+    * by `portableBase(id) mod batches` (engine-portable, lattice-free),
     * and each batch builds, scores, and MATERIALIZES its own screened
     * postings index before the next batch starts — an eager
     * `localCheckpoint` pins the batch's (queries·k)-row result, the
@@ -512,51 +573,44 @@ object Retrieval {
     * batch 3 runs — exactly the round-14 failure mode).
     *
     * Peak scratch is therefore ∝ Σ_{batch terms} df — the measured
-    * ~15 GB/1M-docs/40-query sizing rule divides by `batches` — while
-    * total work adds one corpus tokenize+explode pass per extra batch
-    * (map-only, spill-free). The trade: wall-clock up ~linearly in
-    * `batches` on the scan side, scratch down ~linearly on the shuffle
-    * side — size `batches` so one batch's index fits the node's scratch
-    * budget. batches=1 degenerates to exactly [[bm25TopK]]'s plan plus
-    * one checkpoint write of the final (tiny) result.
+    * ~15 GB/1M-docs/40-query sizing rule divides by `batches`. The
+    * trade: wall-clock up on the scan side, scratch down ~linearly on
+    * the shuffle side — size `batches` so one batch's index fits the
+    * node's scratch budget. batches=1 degenerates to exactly the
+    * `Plain` plan plus one checkpoint write of the final (tiny) result.
     *
-    * `stageTokens`: when true (and `batches` > 1 — a single batch
-    * tokenizes once anyway), the tokenized corpus `(idCol, tk)` is
-    * written ONCE to a scratch-parquet temp dir and every batch reads
-    * the staged frame instead of re-running the tokenizer over the raw
+    * With `batches` > 1 the tokenized corpus `(idCol, tk)` is written
+    * ONCE to a scratch-parquet temp dir and every batch reads the
+    * staged frame instead of re-running the tokenizer over the raw
     * text — trading one corpus-sized staging write for `batches`×
     * tokenize passes. Measured at v2-5M / 4 batches (round 16, boot
-    * `ccb92f53`): 2113.8s unstaged vs **1762.9s staged (0.83×)** at
-    * equal peak scratch (14.5 vs 14.3 GB) — the staging write costs
+    * `ccb92f53`): 2113.8s re-tokenizing vs **1762.9s staged (0.83×)**
+    * at equal peak scratch (14.5 vs 14.3 GB) — the staging write costs
     * less than one tokenize pass and each avoided pass is ~115s/5M
     * docs, so the win GROWS with the batch count; the staged frame is
     * ~0.23 KB/doc (1.17 GB at 5M), disk the run's shuffle budget
     * dwarfs. The temp dir is deleted (try/finally — a failing batch
     * cannot leak a corpus-sized staged parquet) before returning —
     * every batch's result is eagerly localCheckpointed, so nothing
-    * references the staged files after the loop. Output-identical
-    * either way (spec-pinned): tokenization is deterministic and
-    * parquet round-trips array<string> losslessly.
+    * references the staged files after the loop. Tokenization is
+    * deterministic and parquet round-trips array<string> losslessly.
     *
     * Staging-path resolution: if the session has a checkpoint dir
     * (`sparkContext.setCheckpointDir` — by construction a path every
     * executor can reach), the staged parquet goes under it; otherwise
     * a driver-local temp dir is used, which is correct in LOCAL mode
-    * only (a multi-node cluster without a checkpoint dir would hand
-    * executors a path that exists on no worker — such deployments must
-    * either set a checkpoint dir or pass `stageTokens = false`).
-    * Deletion goes through the path's Hadoop FileSystem, so both
-    * shapes clean up.
+    * only — a multi-node cluster must set a checkpoint dir before it
+    * runs this route. Deletion goes through the path's Hadoop
+    * FileSystem, so both shapes clean up.
     */
-  def bm25TopKBatched(corpus: DataFrame, idCol: String, textCol: String,
-                      queryPred: Column, batches: Int, k1: Double = 1.2,
-                      b: Double = 0.75, k: Int = 5,
-                      maxDfFrac: Double = 0.9,
-                      stageTokens: Boolean = false): DataFrame = {
-    require(batches >= 1, s"batches must be >= 1, got $batches")
+  private def batchedTopK(corpus: DataFrame, idCol: String, textCol: String,
+                          queryPred: Column, batches: Int, k1: Double,
+                          b: Double, k: Int, maxDfFrac: Double): DataFrame = {
     val sc = corpus.sparkSession.sparkContext
+    val tokens =
+      corpus.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("tk"))
     val stageDir: Option[String] =
-      if (stageTokens && batches > 1)
+      if (batches > 1)
         Some(sc.getCheckpointDir match {
           case Some(ckpt) => new org.apache.hadoop.fs.Path(ckpt,
             s"bm25toks-${java.util.UUID.randomUUID()}").toString
@@ -565,38 +619,30 @@ object Retrieval {
         })
       else None
     try {
-      val staged: Option[DataFrame] = stageDir.map { dir =>
-        corpus.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("tk"))
-          .write.mode("overwrite").parquet(dir)
+      val toks = stageDir.fold(tokens) { dir =>
+        tokens.write.mode("overwrite").parquet(dir)
         corpus.sparkSession.read.parquet(dir)
       }
       val results = (0 until batches).map { bi =>
         val predB = queryPred &&
           pmod(graft.neardup.NearDup.portableBase(col(idCol).cast("string")),
             lit(batches.toLong)) === lit(bi.toLong)
-        val parts = staged match {
-          case Some(t) => bm25PartsToks(t, idCol, predB, maxDfFrac)
-          case None => bm25Parts(corpus, idCol, textCol, predB, maxDfFrac)
-        }
-        val scored = parts.tf
-          .join(broadcast(parts.qterms), Seq("tid"))
-          .filter(col("nid") =!= col("qid"))
-          .select(col("qid"), col("nid"), contribExpr(k1, b).as("c"))
+        val parts = bm25PartsToks(toks, idCol, predB, maxDfFrac)
         // eager: the batch runs HERE, its result pinned as local blocks;
         // the driver loop is control-only (fixed `batches` iterations)
-        val pinned = topKByScore(scored, k).localCheckpoint(true)
+        val pinned = plainTopK(parts, k1, b, k).localCheckpoint(true)
         parts.tf.unpersist()
         // shuffle files are reclaimed by the ContextCleaner only after the
         // dropped stage references are GC'd — nudge so batch i's scratch
         // is gone before batch i+1 needs the space. CONDITIONAL (round
         // 17): a full GC in a large heap costs 0.1-1s, and at sf-scale
         // the 4-batch entry paid 4 of them to reclaim ~20 MB; the walk
-        // (~ms, graft.Scratch — roots from spark.local.dir per the
-        // round-17 advice) skips the nudge when the visible scratch
-        // trees hold under 1 GiB. When NO scratch tree is visible at
-        // all (cluster mode: shuffle scratch lives on executors) the
-        // nudge runs UNCONDITIONALLY — failing toward cleanup, never
-        // silently re-opening the round-14 disk wall.
+        // (~ms, graft.Scratch — roots in Spark's own precedence) skips
+        // the nudge when the visible scratch trees hold under 1 GiB.
+        // When NO scratch tree is visible at all (cluster mode: shuffle
+        // scratch lives on executors) the nudge runs UNCONDITIONALLY —
+        // failing toward cleanup, never silently re-opening the
+        // round-14 disk wall.
         val (scratchNow, scratchSeen) =
           graft.Scratch.bytesAndFound(sc.getConf)
         if (!scratchSeen || scratchNow > (1L << 30)) System.gc()
@@ -651,7 +697,7 @@ object Retrieval {
     */
   val bm25ScratchMbPer1MDocsPer10Queries: Long = 3072L
 
-  /** Default per-node scratch budget the auto entry sizes against:
+  /** Default per-node scratch budget the `Auto` route sizes against:
     * 48 GiB — the round-15 measured completions on a ~75 GB-free node
     * peaked at 51-52 GB with the whole ten-stage build running, so one
     * query's index must stay under ~2/3 of the free disk to leave the
@@ -659,14 +705,14 @@ object Retrieval {
     */
   val bm25DefaultScratchBudgetMb: Long = 49152L
 
-  /** The auto entry's scratch routing rule, exposed for the spec and
-    * the sizing discussion: estimated monolithic-index scratch in MB
-    * (the measured rule, linear in docs and in query count), and the
-    * batch count that fits `scratchBudgetMb` — 1 when the monolith
-    * already fits (or the budget is non-positive = "unlimited"),
-    * otherwise ceil(estimate / budget) capped at `queryCount` (a batch
-    * per query is the finest split that still amortizes anything; empty
-    * batches would each pay a full corpus tokenize for nothing).
+  /** The `Auto` route's scratch rule, exposed for the spec and the
+    * sizing discussion: estimated monolithic-index scratch in MB (the
+    * measured rule, linear in docs and in query count), and the batch
+    * count that fits `scratchBudgetMb` — 1 when the monolith already
+    * fits, otherwise ceil(estimate / budget) capped at `queryCount` (a
+    * batch per query is the finest split that still amortizes
+    * anything; empty batches would each pay a full corpus tokenize for
+    * nothing). `Auto` guarantees a positive budget.
     */
   private[graft] def bm25ScratchEstimateMb(n: Long, queryCount: Long): Long =
     math.ceil(bm25ScratchMbPer1MDocsPer10Queries
@@ -674,59 +720,12 @@ object Retrieval {
 
   private[graft] def bm25AutoBatches(n: Long, queryCount: Long,
                                      scratchBudgetMb: Long): Int = {
-    if (scratchBudgetMb <= 0L) 1
+    val est = bm25ScratchEstimateMb(n, queryCount)
+    if (est <= scratchBudgetMb) 1
     else {
-      val est = bm25ScratchEstimateMb(n, queryCount)
-      if (est <= scratchBudgetMb) 1
-      else {
-        val want = math.ceil(est.toDouble / scratchBudgetMb).toLong
-        math.max(1L, math.min(want, math.max(1L, queryCount))).toInt
-      }
+      val want = math.ceil(est.toDouble / scratchBudgetMb).toLong
+      math.max(1L, math.min(want, math.max(1L, queryCount))).toInt
     }
-  }
-
-  /** Auto-shaped exact BM25 top-k — the default entry point, the x59
-    * pattern, routing on TWO measured constants. First the survival
-    * axis: if the estimated screened-index scratch
-    * ([[bm25ScratchEstimateMb]] — the measured ~3 GB/1M-docs/10-queries
-    * rule) exceeds `scratchBudgetMb`, the work routes to
-    * [[bm25TopKBatched]] with the batch count that fits the budget —
-    * the only spelling that completes the >5M-docs-per-node regime
-    * (round 14 committed both non-batched spellings dying at 10M docs
-    * on a ~75 GB node; round 15 committed the batched completion at
-    * 32.2 GB peak). Then the CPU axis: [[bm25TopK]] below
-    * [[bm25ImpactCrossoverDocs]], [[bm25TopKImpact]] at or above it.
-    * All three spellings are output-identical (spec-pinned), so the
-    * branches need no oracle replay — `n` (one metadata-cheap count)
-    * and `queryCount` (the caller's fixed sample size) only route the
-    * WORK. Pass `scratchBudgetMb <= 0` to disable scratch routing
-    * (a caller who has provisioned cluster-sharded shuffle space).
-    *
-    * `queryPred` contract: id-only — see [[bm25TopK]]. The batched
-    * route stages tokens to the session checkpoint dir when one is
-    * set, else a driver-local temp dir (local-mode only — see
-    * [[bm25TopKBatched]]); cluster callers without a checkpoint dir
-    * should pass `scratchBudgetMb <= 0`.
-    */
-  def bm25TopKAuto(corpus: DataFrame, idCol: String, textCol: String,
-                   queryPred: Column, n: Long, k1: Double = 1.2,
-                   b: Double = 0.75, k: Int = 5, maxDfFrac: Double = 0.9,
-                   essTerms: Int = 8,
-                   crossover: Long = bm25ImpactCrossoverDocs,
-                   queryCount: Long = 40L,
-                   scratchBudgetMb: Long = bm25DefaultScratchBudgetMb)
-      : DataFrame = {
-    val batches = bm25AutoBatches(n, queryCount, scratchBudgetMb)
-    if (batches > 1)
-      // staged tokenize: measured 0.83× the per-batch re-tokenize at
-      // v2-5M/4 batches with equal peak scratch (see bm25TopKBatched)
-      bm25TopKBatched(corpus, idCol, textCol, queryPred, batches, k1, b, k,
-        maxDfFrac, stageTokens = true)
-    else if (n < crossover)
-      bm25TopK(corpus, idCol, textCol, queryPred, k1, b, k, maxDfFrac)
-    else
-      bm25TopKImpact(corpus, idCol, textCol, queryPred, k1, b, k,
-        maxDfFrac, essTerms)
   }
 
   /** Reciprocal-rank fusion (Cormack/Clarke/Buettcher 2009) of per-query

@@ -228,19 +228,11 @@ object TextAnalysis {
         i => concat_ws(" ", slice(toks, i, lit(n)))))
       .otherwise(array().cast("array<string>"))
 
-  /** Column form of the repetition gate (see `repetition`): TRUE when
-    * the duplicate word-n-gram fraction reaches `threshold`. The
-    * left-hand zero guard short-circuits the NaN that 0.0/0.0 would
-    * otherwise feed into the comparison. NOTE for hot paths: this tree
-    * references the gram array three times — feed it a MATERIALIZED
-    * gram column via `repetitiveFromGrams` inside a staged projection,
-    * or the gram build (and the tokenize under it) re-runs per
-    * reference in interpreted HOF eval.
+  /** The repetition gate (see `repetition`) over an already-built gram
+    * column: TRUE when the duplicate word-n-gram fraction reaches
+    * `threshold`. The left-hand zero guard short-circuits the NaN that
+    * 0.0/0.0 would otherwise feed into the comparison.
     */
-  def repetitiveCol(text: Column, n: Int = 2, threshold: Double = 0.2): Column =
-    repetitiveFromGrams(wordGramsCol(text, n), threshold)
-
-  /** The repetition gate over an already-built gram column. */
   def repetitiveFromGrams(grams: Column, threshold: Double = 0.2): Column =
     size(grams) =!= 0 &&
       round(lit(1.0) - size(array_distinct(grams)).cast("double") /
@@ -279,7 +271,7 @@ object TextAnalysis {
     *
     * CALLER CONTRACT (cache release): the tf cache is NOT unpersisted
     * here — the returned frame is lazy and still references it, and an
-    * eager materialize-then-unpersist (the bm25TopKBatched pattern)
+    * eager materialize-then-unpersist (the batched BM25 route's pattern)
     * would pin a corpus-sized top-terms result in local block storage,
     * strictly worse at scale than the cache it frees. The session owner
     * releases it: Bench/Verify call `spark.catalog.clearCache()` per

@@ -64,4 +64,16 @@ class BenchProtocolSpec extends AnyFunSuite {
     // and it parses as one JSON object (the driver's contract)
     assert(line.startsWith("{") && line.endsWith("}"))
   }
+
+  test("SPARK_GRAFT_CPUS: default 32, positive integers pass, anything " +
+      "else fails naming the variable and the value") {
+    assert(Bench.localCores(Map.empty) == 32)
+    assert(Bench.localCores(Map("SPARK_GRAFT_CPUS" -> "8")) == 8)
+    for (bad <- Seq("", "abc", "4x", "0", "-2", "2.5")) {
+      val e = intercept[IllegalArgumentException](
+        Bench.localCores(Map("SPARK_GRAFT_CPUS" -> bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }

@@ -227,6 +227,19 @@ class TrainingDataOpsSpec extends SparkSpec {
       "source", nDocs = Some(100000000L)))
     assert(viaFused == seqF && viaSeq == seqF)
     spark.catalog.clearCache()
+    // which route ran: the sequential spelling checkpoints each stage
+    // count, so its plan reads LogicalRDD leaves; the fused one does not
+    def sequential(budget: Long) = curationFunnel(train, eval, "doc_id",
+      "text", "source", nDocs = Some(4L), scratchBudgetMb = budget)
+      .queryExecution.logical.collectFirst {
+        case _: org.apache.spark.sql.execution.LogicalRDD => ()
+      }.isDefined
+    assert(!sequential(funnelDefaultScratchBudgetMb),
+      "a fitting corpus must take the fused route")
+    // an unknown (non-positive) budget fails closed: sequential
+    for (budget <- Seq(0L, -1L))
+      assert(sequential(budget), s"budget $budget took the fused route")
+    spark.catalog.clearCache()
   }
 
   test("curationFunnel counts every stage and reconciles with the build") {

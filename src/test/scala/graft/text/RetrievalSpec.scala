@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** BM25 retrieval (x70) contract: ranking follows tf saturation, idf
   * rarity weighting, and length normalization; the fractional df-cap
   * drops ubiquitous terms from scoring; scores are exact integers
-  * (fixed-point millionths) independent of partitioning.
+  * (fixed-point millionths) independent of partitioning and of the
+  * route.
   */
 class RetrievalSpec extends SparkSpec {
   import spark.implicits._
@@ -65,59 +66,74 @@ class RetrievalSpec extends SparkSpec {
       col("doc_id") === 1L).count() == 0L)
   }
 
-  // ---- impact-ordered BM25 (x86): exact-equality contract ----
+  // ---- routes: every route returns the plain route's rows ----
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
 
-  test("impact-ordered BM25 equals the exact spelling on the base fixture " +
-      "for every essential-split size") {
-    val base = rows(topk())
-    for (e <- Seq(1, 2, 3, 8, 100)) {
-      val got = rows(Retrieval.bm25TopKImpact(corpus, "doc_id", "text",
-        col("doc_id") === 1L, k = 5, essTerms = e))
-      assert(got == base, s"essTerms=$e diverged: got $got, want $base")
+  private def canon(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.logical.canonicalized
+
+  // 40 docs over a Zipf-ish vocabulary: three ubiquitous terms (c1-c3,
+  // df=40 — tiny idf, long postings: exactly what the prune must skip),
+  // ten mid terms (m0-m9, df~8), rare terms (r0-r19, df=2). Doc pairs
+  // (2i, 2i+1) share their rare term so integer-score TIES occur and
+  // the nid-asc tiebreak is exercised through the pruned path.
+  private def zipf = (0 until 40).map { i =>
+    val rare = s"r${i / 2}"
+    val mid = s"m${i % 10} m${(i + 3) % 10}"
+    (i.toLong, s"c1 c2 c3 $mid $rare " + ("c1 " * (i % 4)).trim)
+  }.toDF("doc_id", "text")
+
+  // 120 seeded docs, Zipf-ish sampling: term w<j> with j ~ floor(V^u)
+  // over V=30; every 10th doc duplicates the previous one verbatim =>
+  // exact score ties across distinct nids; partition-shuffled
+  private def random = {
+    val rnd = new scala.util.Random(4242)
+    def term(): String = s"w${math.pow(30, rnd.nextDouble()).toInt}"
+    val base = (0 until 120).map { i =>
+      val len = 5 + rnd.nextInt(20)
+      (i.toLong, (0 until len).map(_ => term()).mkString(" "))
     }
-    spark.catalog.clearCache()
+    val byId = base.toMap
+    base.map { case (i, t) => if (i % 10 == 9) (i, byId(i - 1)) else (i, t) }
+      .toDF("doc_id", "text").repartition(7)
   }
 
-  test("query-batched BM25 equals the one-shot spelling for every batch " +
-      "count, including counts above the query count") {
-    // multi-query predicate so batches actually split the sample; the
-    // portableBase-mod routing must partition it exhaustively (every
-    // query appears in the union exactly once, scores unchanged)
-    val pred = col("doc_id") <= 2L
-    val base = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred, k = 5))
-    for (nb <- Seq(1, 2, 3, 7)) {
-      val got = rows(Retrieval.bm25TopKBatched(corpus, "doc_id", "text",
-        pred, batches = nb, k = 5))
-      assert(got == base, s"batches=$nb diverged: got $got, want $base")
+  test("every forced route equals the plain route on every fixture: " +
+      "Impact for each essential-split size, Batched for each batch count " +
+      "(including counts above the query count)") {
+    // (name, corpus, query predicate, maxDfFrac); the multi-query
+    // predicates make the batches actually split the sample — the
+    // portableBase-mod routing must partition it exhaustively
+    val fixtures = Seq(
+      ("base, one query", corpus, col("doc_id") === 1L, 0.9),
+      ("base, two queries", corpus, col("doc_id") <= 2L, 0.9),
+      ("zipf", zipf, col("doc_id") < 4L, 1.0),
+      ("random", random, col("doc_id") % 17L === 0L, 0.9))
+    val routes = Seq(1, 2, 3, 4, 8, 16, 100).map(Bm25Route.Impact(_)) ++
+      Seq(1, 2, 3, 7).map(Bm25Route.Batched(_))
+    for ((name, docs, pred, frac) <- fixtures) {
+      val plain = rows(Retrieval.bm25TopK(docs, "doc_id", "text", pred,
+        k = 5, maxDfFrac = frac))
+      for (route <- routes) {
+        val got = rows(Retrieval.bm25TopK(docs, "doc_id", "text", pred,
+          route = route, k = 5, maxDfFrac = frac))
+        assert(got == plain, s"$route diverged on $name: got $got, want $plain")
+      }
+      spark.catalog.clearCache()
     }
-    spark.catalog.clearCache()
   }
 
   test("impact-ordered BM25 equals the exact spelling on a Zipfian corpus " +
       "where the threshold prune actually engages (and on ties)") {
-    // 40 docs over a Zipf-ish vocabulary: three ubiquitous terms (c1-c3,
-    // df=40 — tiny idf, long postings: exactly what the prune must skip),
-    // ten mid terms (m0-m9, df~8), rare terms (r0-r19, df=2). Doc pairs
-    // (2i, 2i+1) share their rare term so integer-score TIES occur and
-    // the nid-asc tiebreak is exercised through the pruned path.
-    val docs = (0 until 40).map { i =>
-      val rare = s"r${i / 2}"
-      val mid = s"m${i % 10} m${(i + 3) % 10}"
-      (i.toLong, s"c1 c2 c3 $mid $rare " + ("c1 " * (i % 4)).trim)
-    }
-    val zipf = docs.toDF("doc_id", "text")
     val pred = col("doc_id") < 4L // 4 query docs
     val exact = rows(Retrieval.bm25TopK(zipf, "doc_id", "text", pred,
       k = 5, maxDfFrac = 1.0))
-    for (e <- Seq(1, 2, 4, 8)) {
-      val got = rows(Retrieval.bm25TopKImpact(zipf, "doc_id", "text", pred,
-        k = 5, maxDfFrac = 1.0, essTerms = e))
-      assert(got == exact, s"essTerms=$e diverged on the Zipf corpus")
-    }
+    val got = rows(Retrieval.bm25TopK(zipf, "doc_id", "text", pred,
+      route = Bm25Route.Impact(4), k = 5, maxDfFrac = 1.0))
+    assert(got == exact, "Impact(4) diverged on the Zipf corpus")
     // the equality above must not hold VACUOUSLY (every query routed
     // through the open fallback = x70 re-run): at essTerms=4 the three
     // ubiquitous terms are non-essential, their mass bound is tiny next
@@ -135,34 +151,18 @@ class RetrievalSpec extends SparkSpec {
   test("auto-branched BM25 picks the plain spelling below the crossover " +
       "and the impact spelling at/above it (plan-identical to each)") {
     // both branches are output-identical, so the pin is on the PLAN:
-    // auto must return literally the chosen spelling's plan (the x59
+    // auto must return literally the chosen route's plan (the x59
     // idiom adapted — there the outputs differ, here only the work)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.logical.canonicalized
     val pred = col("doc_id") === 1L
-    val below = Retrieval.bm25TopKAuto(corpus, "doc_id", "text", pred,
-      n = 5L, k = 5, crossover = 6L)
-    assert(canon(below) == canon(
-      Retrieval.bm25TopK(corpus, "doc_id", "text", pred, k = 5)),
+    def topk(route: Bm25Route) =
+      Retrieval.bm25TopK(corpus, "doc_id", "text", pred, route = route, k = 5)
+    assert(canon(topk(Bm25Route.Auto(n = 5L))) == canon(topk(Bm25Route.Plain)),
       "n below the crossover must route to the plain exact join")
-    val above = Retrieval.bm25TopKAuto(corpus, "doc_id", "text", pred,
-      n = 6L, k = 5, crossover = 6L)
-    assert(canon(above) == canon(
-      Retrieval.bm25TopKImpact(corpus, "doc_id", "text", pred, k = 5)),
+    assert(canon(topk(Bm25Route.Auto(n = 250000L))) ==
+      canon(topk(Bm25Route.Impact())),
       "n at/above the crossover must route to the impact spelling")
-    // and the default crossover is the measured 250k bracket midpoint
+    // and the crossover is the measured 250k bracket midpoint
     assert(Retrieval.bm25ImpactCrossoverDocs == 250000L)
-    spark.catalog.clearCache()
-  }
-
-  test("staged-tokenize batched BM25 equals the unstaged spelling") {
-    val pred = col("doc_id") <= 2L
-    val base = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred, k = 5))
-    for (nb <- Seq(1, 3)) {
-      val got = rows(Retrieval.bm25TopKBatched(corpus, "doc_id", "text",
-        pred, batches = nb, k = 5, stageTokens = true))
-      assert(got == base, s"staged batches=$nb diverged")
-    }
     spark.catalog.clearCache()
   }
 
@@ -185,8 +185,8 @@ class RetrievalSpec extends SparkSpec {
     val pred = col("doc_id") <= 2L
     val before = stagedDirs()
     val outs = (1 to 3).map { _ =>
-      val r = rows(Retrieval.bm25TopKBatched(corpus, "doc_id", "text",
-        pred, batches = 2, k = 5, stageTokens = true))
+      val r = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred,
+        route = Bm25Route.Batched(2), k = 5))
       spark.catalog.clearCache()
       r
     }
@@ -200,9 +200,8 @@ class RetrievalSpec extends SparkSpec {
     // a predicate naming a non-projected column fails analysis inside
     // the first batch — AFTER the staging write has happened
     intercept[org.apache.spark.sql.AnalysisException] {
-      Retrieval.bm25TopKBatched(corpus, "doc_id", "text",
-        col("no_such_column") === 1L, batches = 2, k = 5,
-        stageTokens = true)
+      Retrieval.bm25TopK(corpus, "doc_id", "text",
+        col("no_such_column") === 1L, route = Bm25Route.Batched(2), k = 5)
     }
     assert(stagedDirs() == before,
       "a throwing batch leaked its corpus-sized staged parquet")
@@ -215,8 +214,8 @@ class RetrievalSpec extends SparkSpec {
       val pred = col("doc_id") <= 2L
       val base = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred, k = 5))
       val before = stagedDirs()
-      val got = rows(Retrieval.bm25TopKBatched(corpus, "doc_id", "text",
-        pred, batches = 2, k = 5, stageTokens = true))
+      val got = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred,
+        route = Bm25Route.Batched(2), k = 5))
       assert(got == base, "checkpoint-dir staging diverged")
       assert(stagedDirs() == before,
         "staging ignored the checkpoint dir (used java.io.tmpdir)")
@@ -232,33 +231,35 @@ class RetrievalSpec extends SparkSpec {
 
   test("auto-branched BM25 routes to the batched spelling above the " +
       "scratch budget, with the batch count that fits it") {
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.logical.canonicalized
     val pred = col("doc_id") <= 2L
     // the sizing rule itself: measured constants, ceil, query-count cap
     assert(Retrieval.bm25ScratchMbPer1MDocsPer10Queries == 3072L)
     assert(Retrieval.bm25ScratchEstimateMb(10000000L, 40L) == 122880L)
     assert(Retrieval.bm25AutoBatches(10000000L, 40L, 49152L) == 3,
       "10M docs x 40 queries over a 48 GiB budget must split in 3")
-    assert(Retrieval.bm25AutoBatches(10000000L, 40L, 0L) == 1,
-      "budget <= 0 disables scratch routing")
     assert(Retrieval.bm25AutoBatches(100000L, 40L, 49152L) == 1,
       "an index that fits the budget stays monolithic")
     assert(Retrieval.bm25AutoBatches(100000000L, 4L, 1L) == 4,
       "batch count is capped at the query count")
-    // the engaged branch returns literally the batched spelling's result
+    // an unknown budget fails closed: rejected, never read as unlimited
+    for (budget <- Seq(0L, -1L)) {
+      val e = intercept[IllegalArgumentException](
+        Bm25Route.Auto(10000000L, 40L, scratchBudgetMb = budget))
+      assert(e.getMessage.contains("scratchBudgetMb"), e.getMessage)
+    }
+    // the engaged branch returns literally the batched route's result
     // (batched is eager — localCheckpoint per batch — so the pin is on
-    // OUTPUT equality against both the batched and plain spellings)
+    // OUTPUT equality against the plain route)
     val base = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred, k = 5))
     // n is caller-supplied: claiming 10M docs at the default budget
     // forces the 3-batch split on the real (tiny) corpus — engagement
     // is asserted via the rule above, equality via the output here
-    val auto = rows(Retrieval.bm25TopKAuto(corpus, "doc_id", "text", pred,
-      n = 10000000L, k = 5, queryCount = 40L))
+    val auto = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred,
+      route = Bm25Route.Auto(10000000L, queryCount = 40L), k = 5))
     assert(auto == base, "scratch-routed auto must stay output-identical")
     // and below the budget the plan is still the crossover-routed one
-    val mono = Retrieval.bm25TopKAuto(corpus, "doc_id", "text", pred,
-      n = 5L, k = 5, queryCount = 2L)
+    val mono = Retrieval.bm25TopK(corpus, "doc_id", "text", pred,
+      route = Bm25Route.Auto(5L, queryCount = 2L), k = 5)
     assert(canon(mono) == canon(
       Retrieval.bm25TopK(corpus, "doc_id", "text", pred, k = 5)),
       "a fitting index must keep the monolithic plan")
@@ -275,38 +276,13 @@ class RetrievalSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val exact = rows(Retrieval.bm25TopK(tiny, "doc_id", "text",
       col("doc_id") === 1L, k = 5, maxDfFrac = 1.0))
-    val got = rows(Retrieval.bm25TopKImpact(tiny, "doc_id", "text",
-      col("doc_id") === 1L, k = 5, maxDfFrac = 1.0, essTerms = 2))
+    val got = rows(Retrieval.bm25TopK(tiny, "doc_id", "text",
+      col("doc_id") === 1L, route = Bm25Route.Impact(2), k = 5,
+      maxDfFrac = 1.0))
     assert(got == exact)
     val empty = tiny.filter(col("doc_id") < 0L)
-    assert(Retrieval.bm25TopKImpact(empty, "doc_id", "text",
-      col("doc_id") === 1L).count() == 0L)
-    spark.catalog.clearCache()
-  }
-
-  test("impact-ordered BM25 equals the exact spelling on seeded random " +
-      "corpora (multi-query, duplicate docs, partition-shuffled)") {
-    val rnd = new scala.util.Random(4242)
-    // Zipf-ish sampling: term w<j> with j ~ floor(V^u) over V=30
-    def term(): String = s"w${math.pow(30, rnd.nextDouble()).toInt}"
-    val base = (0 until 120).map { i =>
-      val len = 5 + rnd.nextInt(20)
-      (i.toLong, (0 until len).map(_ => term()).mkString(" "))
-    }
-    val byId = base.toMap
-    // every 10th doc duplicates the previous one verbatim => exact
-    // score ties across distinct nids
-    val docs = base.map { case (i, t) =>
-      if (i % 10 == 9) (i, byId(i - 1)) else (i, t)
-    }
-    val df = docs.toDF("doc_id", "text").repartition(7)
-    val pred = col("doc_id") % 17L === 0L
-    val exact = rows(Retrieval.bm25TopK(df, "doc_id", "text", pred, k = 5))
-    for (e <- Seq(1, 4, 16)) {
-      val got = rows(Retrieval.bm25TopKImpact(df, "doc_id", "text", pred,
-        k = 5, essTerms = e))
-      assert(got == exact, s"essTerms=$e diverged on the random corpus")
-    }
+    assert(Retrieval.bm25TopK(empty, "doc_id", "text",
+      col("doc_id") === 1L, route = Bm25Route.Impact()).count() == 0L)
     spark.catalog.clearCache()
   }
 

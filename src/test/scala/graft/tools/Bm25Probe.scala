@@ -60,8 +60,8 @@ object Bm25Probe {
     // inherits the other's screened postings)
     spark.catalog.clearCache()
     time("full_impact")(
-      graft.text.Retrieval.bm25TopKImpact(docs, "doc_id", "text", pred,
-        k = 5, maxDfFrac = 0.9))
+      graft.text.Retrieval.bm25TopK(docs, "doc_id", "text", pred,
+        route = graft.text.Bm25Route.Impact(), k = 5, maxDfFrac = 0.9))
     spark.catalog.clearCache()
     spark.stop()
   }

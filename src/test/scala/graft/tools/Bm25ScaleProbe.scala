@@ -10,37 +10,23 @@ import org.apache.spark.sql.functions._
   * wall seconds and the peak Spark scratch growth (2s daemon sampler,
   * Bench's protocol). Modes:
   *
-  *  - `auto`     — [[graft.text.Retrieval.bm25TopKAuto]] with the
-  *                 DEFAULT scratch budget: the round-16 completion run
-  *                 (does the default entry point survive v2-10M
-  *                 single-node where r14 committed both non-batched
-  *                 spellings dying?)
-  *  - `batched`  — bm25TopKBatched, per-batch re-tokenize (the r15 x89
-  *                 spelling), explicit batch count
-  *  - `staged`   — bm25TopKBatched with the tokenized corpus staged
-  *                 ONCE to scratch parquet (the r16 A/B arm); the
+  *  - `auto`     — the `Auto` route with the DEFAULT scratch budget:
+  *                 the round-16 completion run (does the default route
+  *                 survive v2-10M single-node where r14 committed both
+  *                 non-batched spellings dying?)
+  *  - `staged`   — the `Batched` route at an explicit batch count, the
+  *                 tokenized corpus staged ONCE to scratch parquet; the
   *                 staging dir is created under java.io.tmpdir and
-  *                 deleted after the run, its size reported
+  *                 deleted after the run
   *
   * usage: Test/runMain graft.tools.Bm25ScaleProbe <dir> <mode> [batches]
   */
 object Bm25ScaleProbe {
-  private def scratchBytes(): Long = {
-    def size(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles).map(_.iterator.map(size).sum).getOrElse(0L)
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir", "/tmp"))
-    Option(tmp.listFiles).map(_.iterator
-      .filter(f => f.getName.startsWith("spark-") ||
-        f.getName.startsWith("blockmgr-"))
-      .map(size).sum).getOrElse(0L)
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val mode = args(1)
     val batches = if (args.length > 2) args(2).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Bench.localCores().toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -48,6 +34,7 @@ object Bm25ScaleProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    def scratchBytes(): Long = graft.Scratch.bytes(spark.sparkContext.getConf)
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val n = docs.count()
@@ -73,14 +60,11 @@ object Bm25ScaleProbe {
     val t0 = System.nanoTime()
     val out = mode match {
       case "auto" =>
-        graft.text.Retrieval.bm25TopKAuto(docs, "doc_id", "text", pred,
-          n = n, queryCount = 40L)
-      case "batched" =>
-        graft.text.Retrieval.bm25TopKBatched(docs, "doc_id", "text", pred,
-          batches = batches)
+        graft.text.Retrieval.bm25TopK(docs, "doc_id", "text", pred,
+          route = graft.text.Bm25Route.Auto(n, queryCount = 40L))
       case "staged" =>
-        graft.text.Retrieval.bm25TopKBatched(docs, "doc_id", "text", pred,
-          batches = batches, stageTokens = true)
+        graft.text.Retrieval.bm25TopK(docs, "doc_id", "text", pred,
+          route = graft.text.Bm25Route.Batched(batches))
       case other => sys.error(s"unknown mode: $other")
     }
     // row count rides the timed write as an Observation (one scalar
@@ -93,8 +77,8 @@ object Bm25ScaleProbe {
     out.observe(obs, count(lit(1)).as("rows"))
       .write.mode("overwrite").format("noop").save()
     val wallSec = (System.nanoTime() - t0) / 1e9
-    // the staged temp dir is created AND deleted inside
-    // bm25TopKBatched; its one-time size was measured in the round-16
+    // the staged temp dir is created AND deleted inside the
+    // Batched route; its one-time size was measured in the round-16
     // A/B (~0.23 KB/doc) — report -1 here (function-managed)
     val stagedMb = if (mode == "staged") -1L else 0L
     stop = true

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Phase decomposition for the bm25TopKImpact scaffolding (x87): times
+/** Phase decomposition for the BM25 Impact route's scaffolding (x87): times
   * frame CONSTRUCTION (which since round 17 runs eager cache fills /
   * collects) separately from the final materialization, and counts the
   * Spark jobs each phase launches — the round-18 "fewer, fatter
@@ -47,8 +47,8 @@ object ImpactProbe {
       spark.catalog.clearCache()
       val j0 = jobs.get()
       val t0 = System.nanoTime()
-      val df = graft.text.Retrieval.bm25TopKImpact(docs, "doc_id", "text",
-        pred, k = 5, maxDfFrac = 0.9)
+      val df = graft.text.Retrieval.bm25TopK(docs, "doc_id", "text",
+        pred, route = graft.text.Bm25Route.Impact(), k = 5, maxDfFrac = 0.9)
       val t1 = System.nanoTime()
       val j1 = jobs.get()
       df.write.mode("overwrite").format("noop").save()

@@ -40,7 +40,7 @@ object StreamProbe {
     val dir0 = args(0)
     val mfpt = if (args.length > 1) args(1) else "1"
     val parts = if (args.length > 2) args(2).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Bench.localCores().toString
     // state-store partition count: default 8 (the x51/x52 sizing — state
     // files per partition); SPARK_GRAFT_STREAM_PARTS overrides so the
     // round-17 state-stage-saturation sweep can hold scan parallelism

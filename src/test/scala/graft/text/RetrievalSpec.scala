@@ -86,44 +86,30 @@ class RetrievalSpec extends SparkSpec {
     (i.toLong, s"c1 c2 c3 $mid $rare " + ("c1 " * (i % 4)).trim)
   }.toDF("doc_id", "text")
 
-  // 120 seeded docs, Zipf-ish sampling: term w<j> with j ~ floor(V^u)
-  // over V=30; every 10th doc duplicates the previous one verbatim =>
-  // exact score ties across distinct nids; partition-shuffled
-  private def random = {
-    val rnd = new scala.util.Random(4242)
-    def term(): String = s"w${math.pow(30, rnd.nextDouble()).toInt}"
-    val base = (0 until 120).map { i =>
-      val len = 5 + rnd.nextInt(20)
-      (i.toLong, (0 until len).map(_ => term()).mkString(" "))
+  test("impact-ordered BM25 equals the exact spelling on the base fixture " +
+      "for every essential-split size") {
+    val base = rows(topk())
+    for (e <- Seq(1, 2, 3, 8, 100)) {
+      val got = rows(Retrieval.bm25TopK(corpus, "doc_id", "text",
+        col("doc_id") === 1L, route = Bm25Route.Impact(e), k = 5))
+      assert(got == base, s"essTerms=$e diverged: got $got, want $base")
     }
-    val byId = base.toMap
-    base.map { case (i, t) => if (i % 10 == 9) (i, byId(i - 1)) else (i, t) }
-      .toDF("doc_id", "text").repartition(7)
+    spark.catalog.clearCache()
   }
 
-  test("every forced route equals the plain route on every fixture: " +
-      "Impact for each essential-split size, Batched for each batch count " +
-      "(including counts above the query count)") {
-    // (name, corpus, query predicate, maxDfFrac); the multi-query
-    // predicates make the batches actually split the sample — the
-    // portableBase-mod routing must partition it exhaustively
-    val fixtures = Seq(
-      ("base, one query", corpus, col("doc_id") === 1L, 0.9),
-      ("base, two queries", corpus, col("doc_id") <= 2L, 0.9),
-      ("zipf", zipf, col("doc_id") < 4L, 1.0),
-      ("random", random, col("doc_id") % 17L === 0L, 0.9))
-    val routes = Seq(1, 2, 3, 4, 8, 16, 100).map(Bm25Route.Impact(_)) ++
-      Seq(1, 2, 3, 7).map(Bm25Route.Batched(_))
-    for ((name, docs, pred, frac) <- fixtures) {
-      val plain = rows(Retrieval.bm25TopK(docs, "doc_id", "text", pred,
-        k = 5, maxDfFrac = frac))
-      for (route <- routes) {
-        val got = rows(Retrieval.bm25TopK(docs, "doc_id", "text", pred,
-          route = route, k = 5, maxDfFrac = frac))
-        assert(got == plain, s"$route diverged on $name: got $got, want $plain")
-      }
-      spark.catalog.clearCache()
+  test("query-batched BM25 equals the one-shot spelling for every batch " +
+      "count, including counts above the query count") {
+    // multi-query predicate so batches actually split the sample; the
+    // portableBase-mod routing must partition it exhaustively (every
+    // query appears in the union exactly once, scores unchanged)
+    val pred = col("doc_id") <= 2L
+    val base = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred, k = 5))
+    for (nb <- Seq(1, 2, 3, 7)) {
+      val got = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred,
+        route = Bm25Route.Batched(nb), k = 5))
+      assert(got == base, s"batches=$nb diverged: got $got, want $base")
     }
+    spark.catalog.clearCache()
   }
 
   test("impact-ordered BM25 equals the exact spelling on a Zipfian corpus " +
@@ -131,9 +117,11 @@ class RetrievalSpec extends SparkSpec {
     val pred = col("doc_id") < 4L // 4 query docs
     val exact = rows(Retrieval.bm25TopK(zipf, "doc_id", "text", pred,
       k = 5, maxDfFrac = 1.0))
-    val got = rows(Retrieval.bm25TopK(zipf, "doc_id", "text", pred,
-      route = Bm25Route.Impact(4), k = 5, maxDfFrac = 1.0))
-    assert(got == exact, "Impact(4) diverged on the Zipf corpus")
+    for (e <- Seq(1, 2, 4, 8)) {
+      val got = rows(Retrieval.bm25TopK(zipf, "doc_id", "text", pred,
+        route = Bm25Route.Impact(e), k = 5, maxDfFrac = 1.0))
+      assert(got == exact, s"essTerms=$e diverged on the Zipf corpus")
+    }
     // the equality above must not hold VACUOUSLY (every query routed
     // through the open fallback = x70 re-run): at essTerms=4 the three
     // ubiquitous terms are non-essential, their mass bound is tiny next
@@ -163,6 +151,22 @@ class RetrievalSpec extends SparkSpec {
       "n at/above the crossover must route to the impact spelling")
     // and the crossover is the measured 250k bracket midpoint
     assert(Retrieval.bm25ImpactCrossoverDocs == 250000L)
+    spark.catalog.clearCache()
+  }
+
+  test("staged-tokenize batched BM25 equals the unstaged spelling") {
+    // Batched(1) reads the tokens in-plan; Batched(n > 1) stages them
+    // to scratch parquet once and reads every batch from there
+    val pred = col("doc_id") <= 2L
+    val base = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred, k = 5))
+    val unstaged = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred,
+      route = Bm25Route.Batched(1), k = 5))
+    assert(unstaged == base, "unstaged batches=1 diverged")
+    for (nb <- Seq(2, 3)) {
+      val got = rows(Retrieval.bm25TopK(corpus, "doc_id", "text", pred,
+        route = Bm25Route.Batched(nb), k = 5))
+      assert(got == unstaged, s"staged batches=$nb diverged")
+    }
     spark.catalog.clearCache()
   }
 
@@ -283,6 +287,32 @@ class RetrievalSpec extends SparkSpec {
     val empty = tiny.filter(col("doc_id") < 0L)
     assert(Retrieval.bm25TopK(empty, "doc_id", "text",
       col("doc_id") === 1L, route = Bm25Route.Impact()).count() == 0L)
+    spark.catalog.clearCache()
+  }
+
+  test("impact-ordered BM25 equals the exact spelling on seeded random " +
+      "corpora (multi-query, duplicate docs, partition-shuffled)") {
+    val rnd = new scala.util.Random(4242)
+    // Zipf-ish sampling: term w<j> with j ~ floor(V^u) over V=30
+    def term(): String = s"w${math.pow(30, rnd.nextDouble()).toInt}"
+    val base = (0 until 120).map { i =>
+      val len = 5 + rnd.nextInt(20)
+      (i.toLong, (0 until len).map(_ => term()).mkString(" "))
+    }
+    val byId = base.toMap
+    // every 10th doc duplicates the previous one verbatim => exact
+    // score ties across distinct nids
+    val docs = base.map { case (i, t) =>
+      if (i % 10 == 9) (i, byId(i - 1)) else (i, t)
+    }
+    val df = docs.toDF("doc_id", "text").repartition(7)
+    val pred = col("doc_id") % 17L === 0L
+    val exact = rows(Retrieval.bm25TopK(df, "doc_id", "text", pred, k = 5))
+    for (e <- Seq(1, 4, 16)) {
+      val got = rows(Retrieval.bm25TopK(df, "doc_id", "text", pred,
+        route = Bm25Route.Impact(e), k = 5))
+      assert(got == exact, s"essTerms=$e diverged on the random corpus")
+    }
     spark.catalog.clearCache()
   }
 

@@ -32,18 +32,22 @@ object Scratch {
     dirs.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map(new File(_))
   }
 
-  /** (bytes held, any scratch tree visible). `found = false` means the
-    * walk cannot see this deployment's scratch at all — e.g. cluster
-    * mode, where shuffle scratch lives on the executors' disks — and a
-    * caller gating CLEANUP on occupancy must treat it as "assume
-    * occupied" (fail toward cleaning), not as "empty".
+  /** (bytes held in the `spark-` / `blockmgr-` trees, any scratch root
+    * exists). `found = false` means the walk cannot see this
+    * deployment's scratch at all — e.g. cluster mode, where shuffle
+    * scratch lives on the executors' disks — and a caller gating
+    * CLEANUP on occupancy must treat it as "assume occupied" (fail
+    * toward cleaning), not as "empty". A root that exists but holds no
+    * tree yet is found and empty.
     */
-  def bytesAndFound(conf: org.apache.spark.SparkConf): (Long, Boolean) = {
-    val trees = roots(conf)
+  def bytesAndFound(conf: org.apache.spark.SparkConf,
+                    env: Map[String, String] = sys.env): (Long, Boolean) = {
+    val dirs = roots(conf, env).filter(_.isDirectory)
+    val trees = dirs
       .flatMap(r => Option(r.listFiles).map(_.toSeq).getOrElse(Nil))
       .filter(f => f.getName.startsWith("spark-") ||
         f.getName.startsWith("blockmgr-"))
-    (trees.iterator.map(size).sum, trees.nonEmpty)
+    (trees.iterator.map(size).sum, dirs.nonEmpty)
   }
 
   def bytes(conf: org.apache.spark.SparkConf): Long = bytesAndFound(conf)._1

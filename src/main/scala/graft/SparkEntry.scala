@@ -7,7 +7,7 @@ import graft.pipelines.{Curation, Ecommerce, Iot, PetsNutrition}
 import graft.sources.{Fixtures, Sources}
 import graft.text.{Bm25Route, CcNet, Dsir, Pii, Retrieval, TextAnalysis}
 import graft.neardup.{Decontaminate, NearDup, ParaDedup, SpanDedup}
-import graft.sim.Similarity
+import graft.sim.{CellShape, Similarity}
 import graft.multimodal.Multimodal
 
 /** Driver contract — named query catalog + DuckDB oracle SQL.
@@ -33,6 +33,22 @@ object SparkEntry {
 
   private def ev(s: SparkSession, d: String) = Tables.events(s, d)
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
+
+  /** The integer fake embeds of the corpus (x20i and the cell-model
+    * family), cached: every integer-IVF model reads them several times
+    * before its checkpoint pins the assignment.
+    */
+  private def intEmbeds(s: SparkSession, d: String): DataFrame =
+    Multimodal.fakeEmbedInt(s,
+      Multimodal.withPayload(docs(s, d), "doc_id", "text"),
+      dim = fakeEmbedDim).toDF().cache()
+
+  /** x63/x65's kNN-graph shape: the constant-cluster-size two-level
+    * rule at [[knnHierClusterSize]], from one eager corpus count.
+    */
+  private def knnShape(s: SparkSession, d: String): CellShape =
+    CellShape.hier(docs(s, d).count(), ivfIntNlist, knnHierClusterSize,
+      semHierMinCoarse)
 
   /** Corpus row count memoized per data dir: the BM25 auto/forced
     * entries (x86/x87/x92) need `n` only to ROUTE work, yet a fresh
@@ -284,6 +300,32 @@ object SparkEntry {
     // probe from the SAME sample (previously smuggled out through a
     // mutated capture — the round-5 style nit)
     (ex, k)
+  }
+
+  /** The recall-gate tail (x27, x32-x35, x47, x49, x68): `hits` = truth
+    * rows `found` also holds, one output row with the cross-engine count
+    * and the in-plan recall bound, whose oracle is a literal TRUE. With
+    * `queries` the count is the query sample (`n_queries` — the oracle's
+    * own definition, so a query with fewer than k true neighbors does
+    * not skew it) and recall is hits / truth rows; without, the count is
+    * the truth pairs (`n_pairs`). An empty truth set passes: under
+    * Spark 4's default ANSI mode hits/0 THROWS (DIVIDE_BY_ZERO), so the
+    * zero case is branched around, not coalesced after the fact.
+    */
+  private def recallGate(truth: DataFrame, found: DataFrame, keys: Seq[String],
+                         bound: Double, queries: Option[DataFrame] = None,
+                         okCol: String = "recall_ok"): DataFrame = {
+    val hits = truth.join(found, keys, "left_semi")
+      .agg(count(lit(1)).as("hits"))
+    val (counts, nCol, denom) = queries match {
+      case Some(q) =>
+        (q.agg(count(lit(1)).as("n_queries"))
+          .crossJoin(truth.agg(count(lit(1)).as("denom"))), "n_queries", "denom")
+      case None => (truth.agg(count(lit(1)).as("n_pairs")), "n_pairs", "n_pairs")
+    }
+    counts.crossJoin(hits).select(col(nCol),
+      when(col(denom) === 0, lit(true))
+        .otherwise(col("hits") / col(denom) >= bound).as(okCol))
   }
 
   /** DuckDB integer-cosine over two BIGINT[16] lists (the x20i oracle's
@@ -679,7 +721,7 @@ object SparkEntry {
   // kNN-graph replay (x63, nested by x65): the HIERARCHICAL assignment
   // chain (shared verbatim with x56 via hierAssignCtes) with probes
   // ranked INSIDE each vector's coarse cell (vcell ⋈ c1c on ccid — the
-  // cell-restricted trade Similarity.knnGraphIntHier makes), then
+  // cell-restricted trade Similarity.knnGraph makes), then
   // x20i's probe/score/rank spellings — the integer-IVF oracles cannot
   // drift apart
   private lazy val knnGraphHierOracleSql: String =
@@ -809,12 +851,12 @@ object SparkEntry {
       |SELECT a2.doc_id, a2.cid, (d.doc_id IS NULL) AS kept
       |FROM a2 LEFT JOIN drops d ON d.doc_id = a2.doc_id""".stripMargin
 
-  /** x59's branch predicate bound — one definition feeding both the
-    * catalog entry (via Similarity.semDedupCrossoverDocs) and the
-    * oracle's WHERE predicates.
+  /** x59's branch predicate bound — the corpus size where
+    * `CellShape.auto` switches to the two-level shape — interpolated
+    * into the oracle's WHERE predicates.
     */
-  private lazy val semDedupCrossoverDocs: Long =
-    Similarity.semDedupCrossoverDocs(semHierClusterSize)
+  private lazy val semHierCrossoverDocs: Long =
+    CellShape.crossoverDocs(semHierClusterSize)
 
   /** The word-shingle CTE pair (`toks`, shingle set named by `out`) the
     * Jaccard/MinHash oracles share; width and minimum length come from
@@ -1413,15 +1455,7 @@ object SparkEntry {
           threshold = 0.2, maxBucketSize = Some(200), cacheBands = true,
           probePred = probe)
         .select("doc_a", "doc_b")
-      val hits = exact.join(lsh, Seq("doc_a", "doc_b"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      // vacuous truth on an empty truth set: under Spark 4's default ANSI
-      // mode hits/0 THROWS (DIVIDE_BY_ZERO), it does not yield NULL — the
-      // zero case must be branched around, not coalesced after the fact
-      exact.agg(count(lit(1)).as("n_pairs")).crossJoin(hits)
-        .select(col("n_pairs"),
-          when(col("n_pairs") === 0, lit(true))
-            .otherwise(col("hits") / col("n_pairs") >= 0.7).as("recall_ok"))
+      recallGate(exact, lsh, Seq("doc_a", "doc_b"), 0.7)
     }),
     // same gate for the SimHash path (x04): 16-bit chunk banding
     // guarantees hamming ≤ 3 is always caught; near-identical dup pairs
@@ -1447,12 +1481,7 @@ object SparkEntry {
           maxHamming = 8, maxBucketSize = Some(200), cacheBands = true,
           probePred = probe)
         .select("doc_a", "doc_b")
-      val hits = exact.join(sim, Seq("doc_a", "doc_b"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      exact.agg(count(lit(1)).as("n_pairs")).crossJoin(hits)
-        .select(col("n_pairs"),
-          when(col("n_pairs") === 0, lit(true))
-            .otherwise(col("hits") / col("n_pairs") >= 0.5).as("recall_ok"))
+      recallGate(exact, sim, Seq("doc_a", "doc_b"), 0.5)
     }),
     // dup-cluster assignment (connected components of the exact-Jaccard
     // pair graph): the keeper-per-cluster step after pair generation;
@@ -1533,17 +1562,7 @@ object SparkEntry {
       val lsh = Similarity.cosineTopKLsh(emb, "vec_id", "embedding",
           qp, dim = 64, k = 5, nbits = 6, tables = 8)
         .select("qid", "nid")
-      val hits = brute.join(lsh, Seq("qid", "nid"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      // n_queries is the oracle's own definition (count of the query
-      // filter), not denom/k — a query with fewer than k brute-force
-      // neighbors must not skew the cross-engine count. The recall
-      // division is branched around zero: ANSI mode throws on x/0.
-      val nq = emb.filter(qp).agg(count(lit(1)).as("n_queries"))
-      nq.crossJoin(brute.agg(count(lit(1)).as("denom"))).crossJoin(hits)
-        .select(col("n_queries"),
-          when(col("denom") === 0, lit(true))
-            .otherwise(col("hits") / col("denom") >= 0.2).as("recall_ok"))
+      recallGate(brute, lsh, Seq("qid", "nid"), 0.2, Some(emb.filter(qp)))
     }),
     // recall gate for the product-quantization path: PQ-ADC shortlist +
     // exact rerank vs in-plan brute force. PQ codes depend on Lloyd
@@ -1564,13 +1583,7 @@ object SparkEntry {
       val pq = Similarity.cosineTopKPq(emb, "vec_id", "embedding",
           qp, dim = 64, m = 16, ksub = 32,
           shortlist = 100, k = 5).select("qid", "nid")
-      val hits = brute.join(pq, Seq("qid", "nid"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      val nq = emb.filter(qp).agg(count(lit(1)).as("n_queries"))
-      nq.crossJoin(brute.agg(count(lit(1)).as("denom"))).crossJoin(hits)
-        .select(col("n_queries"),
-          when(col("denom") === 0, lit(true))
-            .otherwise(col("hits") / col("denom") >= 0.7).as("recall_ok"))
+      recallGate(brute, pq, Seq("qid", "nid"), 0.7, Some(emb.filter(qp)))
     }),
     // recall gate for the IVF-PQ composition — the production index
     // shape: coarse lists prune WHICH vectors are scored, PQ codes
@@ -1587,13 +1600,7 @@ object SparkEntry {
       val ivfpq = Similarity.cosineTopKIvfPq(emb, "vec_id", "embedding",
           qp, dim = 64, nlist = 16, nprobe = 8,
           m = 16, ksub = 32, shortlist = 100, k = 5).select("qid", "nid")
-      val hits = brute.join(ivfpq, Seq("qid", "nid"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      val nq = emb.filter(qp).agg(count(lit(1)).as("n_queries"))
-      nq.crossJoin(brute.agg(count(lit(1)).as("denom"))).crossJoin(hits)
-        .select(col("n_queries"),
-          when(col("denom") === 0, lit(true))
-            .otherwise(col("hits") / col("denom") >= 0.5).as("recall_ok"))
+      recallGate(brute, ivfpq, Seq("qid", "nid"), 0.5, Some(emb.filter(qp)))
     }),
     // multi-table LSH (8 tables × 4 hyperplanes): single-table recall at
     // this threshold is ~4-11% (measured) — the multi-table profile lifts
@@ -1676,12 +1683,7 @@ object SparkEntry {
           round(Similarity.cosine(col("a.vec"), col("b.vec")), 6).as("sim"))
         .filter(col("sim") >= 0.25)
         .select("id_a", "id_b")
-      val hits = brute.join(lsh, Seq("id_a", "id_b"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      brute.agg(count(lit(1)).as("n_pairs")).crossJoin(hits)
-        .select(col("n_pairs"),
-          when(col("n_pairs") === 0, lit(true))
-            .otherwise(col("hits") / col("n_pairs") >= 0.5).as("recall_ok"))
+      recallGate(brute, lsh, Seq("id_a", "id_b"), 0.5)
     }),
     "x20_cosine_ivf" -> ((s, d) =>
       Similarity.cosineTopKIvf(Tables.embeddings(s, d), "vec_id", "embedding",
@@ -1703,14 +1705,8 @@ object SparkEntry {
       val ivf = Similarity.cosineTopKIvf(emb, "vec_id", "embedding",
         qp, nlist = 16, nprobe = 4, k = 5)
         .select("qid", "nid")
-      val hits = brute.join(ivf, Seq("qid", "nid"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      // same n_queries definition + ANSI zero-branch as x35
-      val nq = emb.filter(qp).agg(count(lit(1)).as("n_queries"))
-      nq.crossJoin(brute.agg(count(lit(1)).as("denom"))).crossJoin(hits)
-        .select(col("n_queries"),
-          when(col("denom") === 0, lit(true))
-            .otherwise(col("hits") / col("denom") >= 0.5).as("mean_recall_ok"))
+      recallGate(brute, ivf, Seq("qid", "nid"), 0.5, Some(emb.filter(qp)),
+        okCol = "mean_recall_ok")
     }),
     // recall gate for the two-stage JL pipeline (shortlist in projected
     // space, exact rerank — the production composition) vs exact-space
@@ -1727,14 +1723,8 @@ object SparkEntry {
       val jl = Similarity.cosineTopKJlRerank(emb, "vec_id", "embedding",
         qp, dim = 64, r = jlOutDim, shortlist = jlShortlist, k = 5)
         .select("qid", "nid")
-      val hits = brute.join(jl, Seq("qid", "nid"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      val nq = emb.filter(qp).agg(count(lit(1)).as("n_queries"))
-      nq.crossJoin(brute.agg(count(lit(1)).as("denom"))).crossJoin(hits)
-        .select(col("n_queries"),
-          when(col("denom") === 0, lit(true))
-            .otherwise(col("hits") / col("denom") >= jlRecallBound)
-            .as("mean_recall_ok"))
+      recallGate(brute, jl, Seq("qid", "nid"), jlRecallBound,
+        Some(emb.filter(qp)), okCol = "mean_recall_ok")
     }),
     // EXACT-INTEGER IVF (hash-green variant of the x20 family): float
     // k-means sums doubles in partition order, so x20's centroids — and
@@ -1747,14 +1737,10 @@ object SparkEntry {
     // refinement, assignment, probes, and the final top-k byte-for-byte.
     // x20 (float path, x27-gated) stays as the production spelling for
     // real float embeddings; this is the determinism proof.
-    "x20i_ivf_int" -> ((s, d) => {
-      val emb = Multimodal.fakeEmbedInt(s,
-        Multimodal.withPayload(docs(s, d), "doc_id", "text"),
-        dim = fakeEmbedDim).toDF().cache()
-      Similarity.cosineTopKIvfInt(emb, "doc_id", "embedding",
+    "x20i_ivf_int" -> ((s, d) =>
+      Similarity.cosineTopKIvfInt(intEmbeds(s, d), "doc_id", "embedding",
         fixedCountPred(docs(s, d), "doc_id", target = ivfIntTarget),
-        nlist = ivfIntNlist, nprobe = ivfIntNprobe, k = ivfIntK)
-    }),
+        nlist = ivfIntNlist, nprobe = ivfIntNprobe, k = ivfIntK)),
     // kNN-GRAPH construction: every vector of the corpus gets its top-k
     // approximate neighbors from the shared TWO-LEVEL exact-integer
     // cell model (x56's hierarchical assignment — ~n^1.25 instead of
@@ -1765,101 +1751,59 @@ object SparkEntry {
     // schedule (knnHierClusterSize — smaller than x56's: every query
     // SCORES nprobe·cluster candidates) keeps candidate scoring linear;
     // assignment checkpoint-pinned
-    "x63_knn_graph" -> ((s, d) => {
-      val emb = Multimodal.fakeEmbedInt(s,
-        Multimodal.withPayload(docs(s, d), "doc_id", "text"),
-        dim = fakeEmbedDim).toDF().cache()
-      val nlist = math.max(ivfIntNlist.toLong,
-        math.ceil(docs(s, d).count() / knnHierClusterSize.toDouble)
-          .toLong).toInt
-      val ncoarse = math.max(semHierMinCoarse.toLong,
-        math.ceil(math.sqrt(nlist.toDouble)).toLong).toInt
-      Similarity.knnGraphIntHier(emb, "doc_id", "embedding",
-        nlist = nlist, ncoarse = ncoarse, nprobe = ivfIntNprobe,
-        k = ivfIntK)
-    }),
+    "x63_knn_graph" -> ((s, d) =>
+      Similarity.knnGraph(intEmbeds(s, d), "doc_id", "embedding",
+        knnShape(s, d), nprobe = ivfIntNprobe, k = ivfIntK)),
     // mutual-kNN communities over x63's graph: sim-thresholded directed
     // edges → mutual-pair symmetrization (one self-semi-join on the
     // reversed key — kills hub chains) → the shared log-diameter CC
     // fold. The cluster assignment graph-based curation consumes;
     // oracle = x63's full replay nested under the x22 recursive-CTE
     // component closure
-    "x65_knn_communities" -> ((s, d) => {
-      val emb = Multimodal.fakeEmbedInt(s,
-        Multimodal.withPayload(docs(s, d), "doc_id", "text"),
-        dim = fakeEmbedDim).toDF().cache()
-      val nlist = math.max(ivfIntNlist.toLong,
-        math.ceil(docs(s, d).count() / knnHierClusterSize.toDouble)
-          .toLong).toInt
-      val ncoarse = math.max(semHierMinCoarse.toLong,
-        math.ceil(math.sqrt(nlist.toDouble)).toLong).toInt
+    "x65_knn_communities" -> ((s, d) =>
       Similarity.mutualKnnClusters(
-        Similarity.knnGraphIntHier(emb, "doc_id", "embedding",
-          nlist = nlist, ncoarse = ncoarse, nprobe = ivfIntNprobe,
-          k = ivfIntK),
-        threshold = semDedupThreshold)
-    }),
+        Similarity.knnGraph(intEmbeds(s, d), "doc_id", "embedding",
+          knnShape(s, d), nprobe = ivfIntNprobe, k = ivfIntK),
+        threshold = semDedupThreshold)),
     // SEMANTIC dedup (SemDeDup, Abbas et al. 2023): k-means-cluster the
     // integer fake embeds (the shared x20i model), then drop every doc
     // with a lower-id cluster-mate inside the cosine epsilon ball —
     // dedup by MEANING-proxy, no text comparison. Same-cluster pair
     // join only (Σ n_c², never corpus²); at real scale nlist grows with
     // the corpus so cluster size — and pair work per row — stays flat
-    "x53_semantic_dedup" -> ((s, d) => {
-      // cached like x20i: ivfIntModel reads the embeds three times
-      // (init + two assign passes) before the checkpoint pins them
-      val emb = Multimodal.fakeEmbedInt(s,
-        Multimodal.withPayload(docs(s, d), "doc_id", "text"),
-        dim = fakeEmbedDim).toDF().cache()
-      // corpus-adaptive nlist (the SemDeDup scale knob), BALANCED shape:
-      // assignment costs n·nlist, the pair stage Σ n_c² ≈ n²/nlist —
-      // nlist ∝ √n equalizes them at the flat-IVF optimum n^1.5 (fixed
-      // nlist makes pairs quadratic, nlist ∝ n makes assignment
-      // quadratic; measured 202s vs 29s at the 100× corpus). Past ~10⁷
-      // docs the knob changes kind, not value: hierarchical two-level
-      // assignment (the x49 IVF-in-IVF composition) restores ~linear.
-      // Eager count at construction, same footer-cheap pattern as
-      // fixedCountPred; the oracle computes the identical bound as a
-      // scalar subquery with the same IEEE sqrt/ceil sequence
-      val nlist = math.max(ivfIntNlist.toLong,
-        math.ceil(math.sqrt(docs(s, d).count() / 2.0)).toLong).toInt
-      Similarity.semDedupInt(emb, "doc_id", "embedding",
-        nlist = nlist, threshold = semDedupThreshold)
-    }),
+    "x53_semantic_dedup" -> ((s, d) =>
+      // corpus-adaptive nlist (the SemDeDup scale knob), BALANCED shape
+      // (CellShape.flat: nlist ∝ √n; fixed nlist makes pairs quadratic,
+      // nlist ∝ n makes assignment quadratic — measured 202s vs 29s at
+      // the 100× corpus). Past ~10⁷ docs the knob changes kind, not
+      // value: the two-level shape (x56) restores ~linear. Eager count
+      // at construction, same footer-cheap pattern as fixedCountPred;
+      // the oracle computes the identical bound as a scalar subquery
+      // with the same IEEE sqrt/ceil sequence
+      Similarity.semDedup(intEmbeds(s, d), "doc_id", "embedding",
+        CellShape.flat(docs(s, d).count(), ivfIntNlist),
+        threshold = semDedupThreshold)),
     // HIERARCHICAL semantic dedup (the x56 scale spelling of x53):
     // constant target cluster size keeps the pair stage LINEAR, and the
     // two-level cell-restricted assignment replaces the flat n·nlist
     // argmax with ~n^1.25 work — the last super-linear schedule in the
     // catalog closed. Shape bounds are the SAME IEEE op sequences the
     // oracle's scalar subqueries evaluate.
-    "x56_semantic_dedup_hier" -> ((s, d) => {
-      val emb = Multimodal.fakeEmbedInt(s,
-        Multimodal.withPayload(docs(s, d), "doc_id", "text"),
-        dim = fakeEmbedDim).toDF().cache()
-      val n = docs(s, d).count()
-      val nlist = math.max(ivfIntNlist.toLong,
-        math.ceil(n / semHierClusterSize.toDouble).toLong).toInt
-      val ncoarse = math.max(semHierMinCoarse.toLong,
-        math.ceil(math.sqrt(nlist.toDouble)).toLong).toInt
-      Similarity.semDedupIntHier(emb, "doc_id", "embedding",
-        nlist = nlist, ncoarse = ncoarse, threshold = semDedupThreshold)
-    }),
+    "x56_semantic_dedup_hier" -> ((s, d) =>
+      Similarity.semDedup(intEmbeds(s, d), "doc_id", "embedding",
+        CellShape.hier(docs(s, d).count(), ivfIntNlist, semHierClusterSize,
+          semHierMinCoarse), threshold = semDedupThreshold)),
     // AUTO-shaped semantic dedup — the default entry point: flat below
     // the targetClusterSize²/2 crossover (where flat's balanced √(2n)
     // clusters are already smaller than the hierarchical target),
     // hierarchical at or above it. The shipped sf dirs all land on the
     // flat branch (≤5k docs); the scale corpora land hierarchical —
     // the branch rule itself is oracle-replayed (same count predicate
-    // on both sides) and spec-pinned (SemDedupAutoSpec).
-    "x59_semantic_dedup_auto" -> ((s, d) => {
-      val emb = Multimodal.fakeEmbedInt(s,
-        Multimodal.withPayload(docs(s, d), "doc_id", "text"),
-        dim = fakeEmbedDim).toDF().cache()
-      Similarity.semDedupAuto(emb, "doc_id", "embedding",
-        n = docs(s, d).count(),
-        minNlist = ivfIntNlist, targetClusterSize = semHierClusterSize,
-        minCoarse = semHierMinCoarse, threshold = semDedupThreshold)
-    }),
+    // on both sides) and spec-pinned (SemDedupSpec).
+    "x59_semantic_dedup_auto" -> ((s, d) =>
+      Similarity.semDedup(intEmbeds(s, d), "doc_id", "embedding",
+        CellShape.auto(docs(s, d).count(), ivfIntNlist, semHierClusterSize,
+          semHierMinCoarse), threshold = semDedupThreshold)),
     // paragraph-level keep-first dedup (CCNet-style boilerplate
     // removal). The fixture corpus is single-line, so the entry first
     // derives deterministic paragraph structure — tokens chunked
@@ -3393,13 +3337,13 @@ object SparkEntry {
     "x56_semantic_dedup_hier" -> semDedupHierOracleSql,
     // auto-shape replay: the SAME two chains, each behind the count
     // crossover predicate — exactly one branch emits rows, mirroring
-    // Similarity.semDedupAuto's branch rule
+    // CellShape.auto's branch rule
     "x59_semantic_dedup_auto" ->
       s"""SELECT doc_id, cid, kept FROM ($semDedupFlatOracleSql) f
-        |WHERE (SELECT count(*) FROM documents) < $semDedupCrossoverDocs
+        |WHERE (SELECT count(*) FROM documents) < $semHierCrossoverDocs
         |UNION ALL
         |SELECT doc_id, cid, kept FROM ($semDedupHierOracleSql) h
-        |WHERE (SELECT count(*) FROM documents) >= $semDedupCrossoverDocs""".stripMargin,
+        |WHERE (SELECT count(*) FROM documents) >= $semHierCrossoverDocs""".stripMargin,
     // paragraph dedup replay: the same token-chunk paragraph derivation
     // (chunk width interpolated from paraChunkTokens — DuckDB slices are
     // inclusive, range() is exclusive), keep-first by (doc_id, pos) via

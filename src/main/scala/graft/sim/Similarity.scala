@@ -4,18 +4,108 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Similarity search over an embedding column (`array<float>`).
+/** The cell structure of the exact-integer IVF model behind
+  * [[Similarity.semDedup]] and [[Similarity.knnGraph]]: `nlist` fine
+  * cells, reached directly (`Flat`) or through `ncoarse` coarse cells
+  * (`Hier`). The companion's rules derive a shape from the corpus size
+  * `n` with the IEEE ceil/sqrt sequences the DuckDB oracles replay as
+  * scalar subqueries; every rule and constructor rejects an
+  * out-of-range input with a message naming the field.
+  */
+sealed trait CellShape
+
+object CellShape {
+  final case class Flat(nlist: Int) extends CellShape {
+    require(nlist >= 1, s"nlist must be >= 1, got $nlist")
+  }
+
+  /** `ncoarse` ≤ `nlist`: the coarse seeds are the prefix of the fine
+    * seeds in the same order, so a larger `ncoarse` would silently
+    * leave the engine with `nlist` coarse cells and the oracle with
+    * `ncoarse`.
+    */
+  final case class Hier(nlist: Int, ncoarse: Int) extends CellShape {
+    require(nlist >= 1, s"nlist must be >= 1, got $nlist")
+    require(ncoarse >= 1, s"ncoarse must be >= 1, got $ncoarse")
+    require(ncoarse <= nlist, s"ncoarse must be <= nlist ($nlist), got $ncoarse")
+  }
+
+  private def checkRule(n: Long, minNlist: Int, clusterSize: Int = 1,
+                        minCoarse: Int = 1): Unit = {
+    require(n >= 0L, s"n must be >= 0, got $n")
+    require(minNlist >= 1, s"minNlist must be >= 1, got $minNlist")
+    require(clusterSize >= 1, s"clusterSize must be >= 1, got $clusterSize")
+    require(minCoarse >= 1, s"minCoarse must be >= 1, got $minCoarse")
+  }
+
+  private def nlistOf(v: Long): Int = {
+    require(v <= Int.MaxValue, s"nlist must be <= ${Int.MaxValue}, got $v")
+    v.toInt
+  }
+
+  /** Balanced flat shape: assignment costs n·nlist and the pair stage
+    * Σ n_c² ≈ n²/nlist, so nlist = max(minNlist, ⌈√(n/2)⌉) equalizes
+    * them at the one-level optimum n^1.5.
+    */
+  def flat(n: Long, minNlist: Int): Flat = {
+    checkRule(n, minNlist)
+    Flat(nlistOf(math.max(minNlist.toLong, math.ceil(math.sqrt(n / 2.0)).toLong)))
+  }
+
+  /** Constant-cluster-size shape: nlist = max(minNlist, ⌈n/clusterSize⌉),
+    * ncoarse = max(minCoarse, ⌈√nlist⌉) — the Scala twin of the oracle's
+    * `hierNlistSqlFor` / `hierNcoarseSqlFor`.
+    */
+  def hier(n: Long, minNlist: Int, clusterSize: Int, minCoarse: Int): Hier = {
+    checkRule(n, minNlist, clusterSize, minCoarse)
+    val nlist = nlistOf(math.max(minNlist.toLong,
+      math.ceil(n / clusterSize.toDouble).toLong))
+    Hier(nlist, math.max(minCoarse.toLong,
+      math.ceil(math.sqrt(nlist.toDouble)).toLong).toInt)
+  }
+
+  /** Corpus size where [[auto]] switches to [[hier]]: flat's balanced
+    * clusters hold √(2n) vectors, which reaches `clusterSize` at
+    * n = clusterSize²/2 — past it the two-level shape does less work in
+    * both stages, with no tuning constant left to the caller.
+    */
+  private[graft] def crossoverDocs(clusterSize: Int): Long = {
+    require(clusterSize >= 1, s"clusterSize must be >= 1, got $clusterSize")
+    clusterSize.toLong * clusterSize / 2
+  }
+
+  /** [[flat]] below [[crossoverDocs]], [[hier]] at or above it. */
+  def auto(n: Long, minNlist: Int, clusterSize: Int, minCoarse: Int): CellShape = {
+    checkRule(n, minNlist, clusterSize, minCoarse)
+    if (n < crossoverDocs(clusterSize)) flat(n, minNlist)
+    else hier(n, minNlist, clusterSize, minCoarse)
+  }
+}
+
+/** Similarity search over an embedding column (`array<float>`, or
+  * integer-valued for the exact-integer family).
   *
-  * Brute-force cosine top-k is the verifiable baseline; the LSH
-  * (random-hyperplane) bucketed variant is the scale path: at 100 TB you
-  * never cross-join the corpus — you broadcast the (small) query set for
-  * brute force, or join on LSH bucket keys so each query only scores its
-  * bucket. The dot product is a codegen'd `aggregate(zip_with(...))` over
-  * the arrays — no UDF, no Python, stays in Tungsten.
-  *
-  * All math is done in double on both engines (embeddings cast from
-  * float) and scores are rounded BEFORE ranking so that ranks are
+  * Brute-force cosine top-k is the verifiable baseline; LSH, IVF, JL
+  * and PQ are the scale paths: at 100 TB you never cross-join the
+  * corpus — you broadcast the (small) query set for brute force, or
+  * join on bucket / list keys so each query only scores its candidates.
+  * Each `cosineTopK*` entry point is one algorithm with its own knobs;
+  * they share one query projection, one scoring step and one top-k tail
+  * (`rnk` by sim DESC, nid ASC). All math is done in double on both
+  * engines and scores are rounded BEFORE ranking, so ranks are
   * deterministic and oracle-stable across engines.
+  *
+  * Semantic dedup ([[semDedup]]) and the kNN graph ([[knnGraph]]) run
+  * on ONE exact-integer cell model whose structure is a [[CellShape]]:
+  *
+  * | Shape | Model | Work (n vectors) |
+  * |---|---|---|
+  * | `Flat(nlist)` | [[ivfIntModel]]: every vector scores all nlist centroids | assignment n·nlist; n^1.5 at `CellShape.flat`'s nlist ≈ √(n/2) |
+  * | `Hier(nlist, ncoarse)` | [[hierIntModel]]: a vector finds its coarse cell, then scores only that cell's fine centroids | n·(ncoarse + nlist/ncoarse); ~n^1.25 at `CellShape.hier`'s ncoarse ≈ √nlist, pair / candidate stage linear at constant cluster size |
+  * | `CellShape.auto(n, …)` | `flat` below n = clusterSize²/2, `hier` at or above it | the smaller of the two |
+  *
+  * `knnGraph` runs `Flat(nlist)` as `Hier(nlist, 1)`: with one coarse
+  * cell the two models are equal (spec-pinned in KnnGraphHierSpec).
   */
 object Similarity {
 
@@ -62,6 +152,35 @@ object Similarity {
     else df
   }
 
+  /** `(<side>id, <side>vec)` rows of `df`: side "n" is the corpus, side
+    * "q" the queries — `emb.filter(queryPred)`, the RAW input frame in
+    * the idCol spelling, the shared contract of every cosineTopK* entry
+    * point.
+    */
+  private def idVecs(df: DataFrame, idCol: String, vecCol: String,
+                     side: String, vec: Column => Column = asDouble): DataFrame =
+    df.select(col(idCol).as(side + "id"), vec(col(vecCol)).as(side + "vec"))
+
+  private def asLong(c: Column): Column = c.cast("array<long>")
+
+  private def cosine6(a: Column, b: Column): Column = round(cosine(a, b), 6)
+
+  /** (qid, nid, sim) over candidate rows carrying qvec/nvec: self pairs
+    * dropped, sim rounded to 6dp before any ranking.
+    */
+  private def scorePairs(cand: DataFrame,
+                         sim: (Column, Column) => Column = cosine): DataFrame =
+    cand.filter(col("nid") =!= col("qid"))
+      .select(col("qid"), col("nid"), round(sim(col("qvec"), col("nvec")), 6).as("sim"))
+
+  /** The family's top-k tail: per qid, `rnk` = row_number over
+    * (sim DESC, nid ASC), kept while ≤ k. Output: qid, nid, sim, rnk.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
+    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+  }
+
   /** Brute-force cosine top-k: for each query vector (`queryPred` selects
     * the query subset), the k nearest corpus vectors (self excluded).
     * The query side is broadcast; scoring is a map-side nested loop over
@@ -70,16 +189,9 @@ object Similarity {
     */
   def cosineTopK(emb: DataFrame, idCol: String, vecCol: String,
                  queryPred: Column, k: Int = 5): DataFrame = {
-    val corpus = spread(
-      emb.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("nvec")))
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
-    val scored = corpus.crossJoin(broadcast(queries))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        round(cosine(col("qvec"), col("nvec")), 6).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+    val corpus = spread(idVecs(emb, idCol, vecCol, "n"))
+    val queries = idVecs(emb.filter(queryPred), idCol, vecCol, "q")
+    topK(scorePairs(corpus.crossJoin(broadcast(queries))), k)
   }
 
   /** Deterministic ±1 sign for the Johnson-Lindenstrauss projection
@@ -129,16 +241,10 @@ object Similarity {
     // join-shaped). The cached frame is r doubles per corpus row —
     // 25 MB at 200k vectors. The broadcast query side needs no cache:
     // broadcast materializes evaluated rows once by construction.
-    val corpus = spread(emb.select(col(idCol).as("nid"),
-      jlProject(asDouble(col(vecCol)), dim, r).as("nvec"))).cache()
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("qid"), jlProject(asDouble(col(vecCol)), dim, r).as("qvec"))
-    val scored = corpus.crossJoin(broadcast(queries))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        round(cosine(col("qvec"), col("nvec")), 6).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+    val project = (v: Column) => jlProject(asDouble(v), dim, r)
+    val corpus = spread(idVecs(emb, idCol, vecCol, "n", project)).cache()
+    val queries = idVecs(emb.filter(queryPred), idCol, vecCol, "q", project)
+    topK(scorePairs(corpus.crossJoin(broadcast(queries))), k)
   }
 
   /** Two-stage compressed-space ANN — the production JL composition:
@@ -156,15 +262,12 @@ object Similarity {
                          shortlist: Int = 100, k: Int = 5): DataFrame = {
     val cand = cosineTopKJl(emb, idCol, vecCol, queryPred, dim, r,
       k = shortlist).select("qid", "nid")
-    val corpus = emb.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("nvec"))
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
+    val corpus = idVecs(emb, idCol, vecCol, "n")
+    val queries = idVecs(emb.filter(queryPred), idCol, vecCol, "q")
     val scored = corpus.join(broadcast(cand), Seq("nid"))
       .join(broadcast(queries), Seq("qid"))
-      .select(col("qid"), col("nid"),
-        round(cosine(col("qvec"), col("nvec")), 6).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+      .select(col("qid"), col("nid"), cosine6(col("qvec"), col("nvec")).as("sim"))
+    topK(scored, k)
   }
 
   /** Deterministic pseudo-random hyperplane component in [-1, 1):
@@ -210,27 +313,18 @@ object Similarity {
   def cosineTopKLsh(emb: DataFrame, idCol: String, vecCol: String,
                     queryPred: Column, dim: Int, k: Int = 5,
                     nbits: Int = 8, tables: Int = 1): DataFrame = {
-    val base = emb.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("nvec"))
-    val banded = base.select(col("nid"), col("nvec"),
-      posexplode(array((0 until tables).map(t =>
-        lshBucket(col("nvec"), dim, nbits, t)): _*)).as(Seq("table_id", "bucket")))
-    // queryPred applies to the RAW input frame (idCol spelling) — the
-    // shared contract of every cosineTopK* entry point; the (tiny) query
-    // subset is re-banded rather than filtered out of `banded`, since
-    // bucketing is a pure per-row function of the vector
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
-      .select(col("qid"), col("qvec"),
+    // the (tiny) query subset is re-banded rather than filtered out of
+    // the banded corpus, since bucketing is a pure per-row function of
+    // the vector
+    def band(df: DataFrame, side: String): DataFrame =
+      df.select(col(side + "id"), col(side + "vec"),
         posexplode(array((0 until tables).map(t =>
-          lshBucket(col("qvec"), dim, nbits, t)): _*)).as(Seq("table_id", "bucket")))
-    val scored = banded.join(broadcast(queries), Seq("table_id", "bucket"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        round(cosine(col("qvec"), col("nvec")), 6).as("sim"))
-      // a pair colliding in several tables must score once
-      .distinct()
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+          lshBucket(col(side + "vec"), dim, nbits, t)): _*)).as(Seq("table_id", "bucket")))
+    val banded = band(idVecs(emb, idCol, vecCol, "n"), "n")
+    val queries = band(idVecs(emb.filter(queryPred), idCol, vecCol, "q"), "q")
+    // a pair colliding in several tables must score once
+    topK(scorePairs(banded.join(broadcast(queries), Seq("table_id", "bucket")))
+      .distinct(), k)
   }
 
   /** AUTO-shaped nbits for the random-hyperplane LSH family: the
@@ -255,7 +349,7 @@ object Similarity {
   /** [[cosineTopKLsh]] with the [[lshAutoNbits]] schedule as the
     * default entry point — `n` is caller-supplied (one metadata-cheap
     * count) so the same count can parameterize the caller's oracle
-    * twin, exactly like [[semDedupAuto]].
+    * twin, like [[CellShape.auto]].
     */
   def cosineTopKLshAuto(emb: DataFrame, idCol: String, vecCol: String,
                         queryPred: Column, dim: Int, n: Long, k: Int = 5,
@@ -287,10 +381,11 @@ object Similarity {
     * rows. Tiebreak (-cid ⇒ min cid on equal csim) matches the
     * window's (csim desc, cid asc).
     */
-  private def ivfAssign(corpus: DataFrame, cs: DataFrame): DataFrame =
+  private def ivfAssign(corpus: DataFrame, cs: DataFrame,
+                        sim: (Column, Column) => Column = cosine6): DataFrame =
     corpus.crossJoin(broadcast(cs))
       .select(col("nid"), col("nvec"), col("cid"),
-        round(cosine(col("nvec"), col("cvec")), 6).as("csim"))
+        sim(col("nvec"), col("cvec")).as("csim"))
       .groupBy("nid")
       .agg(max_by(struct(col("cid"), col("nvec")),
         struct(col("csim"), negate(col("cid")))).as("best"))
@@ -322,57 +417,33 @@ object Similarity {
     centroids.localCheckpoint(true)
   }
 
-  /** Each query's `nprobe` nearest centroid lists: (qid, qvec, cid). */
-  private def ivfProbes(queries: DataFrame, centroids: DataFrame,
-                        nprobe: Int): DataFrame =
-    queries.crossJoin(broadcast(centroids))
-      .select(col("qid"), col("qvec"), col("cid"),
-        round(cosine(col("qvec"), col("cvec")), 6).as("csim"))
-      .withColumn("rn", row_number().over(
+  /** Top-`nprobe` cells per query over (qid, cid, csim) candidate rows:
+    * row_number by (csim DESC, cid ASC), projected to `keep`.
+    */
+  private def topProbes(cand: DataFrame, nprobe: Int, keep: String*): DataFrame =
+    cand.withColumn("rn", row_number().over(
         Window.partitionBy("qid").orderBy(col("csim").desc, col("cid").asc)))
-      .filter(col("rn") <= nprobe).select("qid", "qvec", "cid")
+      .filter(col("rn") <= nprobe).select(keep.map(col): _*)
+
+  /** Each query's `nprobe` nearest centroid lists: (qid, qvec, cid). */
+  private def ivfProbes(queries: DataFrame, centroids: DataFrame, nprobe: Int,
+                        sim: (Column, Column) => Column = cosine6): DataFrame =
+    topProbes(queries.crossJoin(broadcast(centroids))
+      .select(col("qid"), col("qvec"), col("cid"),
+        sim(col("qvec"), col("cvec")).as("csim")), nprobe, "qid", "qvec", "cid")
 
   def cosineTopKIvf(emb: DataFrame, idCol: String, vecCol: String,
                     queryPred: Column, nlist: Int = 16, nprobe: Int = 2,
                     k: Int = 5, refineIters: Int = 1): DataFrame = {
-    val corpus = emb.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("nvec"))
+    val corpus = idVecs(emb, idCol, vecCol, "n")
     val centroids = ivfTrain(corpus, nlist, refineIters)
     // inverted lists: each corpus vector → its nearest (refined) centroid
     val assigned = ivfAssign(corpus, centroids)
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
-    val scored = assigned
-      .join(broadcast(ivfProbes(queries, centroids, nprobe)), Seq("cid"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        round(cosine(col("qvec"), col("nvec")), 6).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+    val queries = idVecs(emb.filter(queryPred), idCol, vecCol, "q")
+    topK(scorePairs(assigned
+      .join(broadcast(ivfProbes(queries, centroids, nprobe)), Seq("cid"))), k)
   }
 
-  /** EXACT-INTEGER IVF top-k: the cross-engine-reproducible variant of
-    * [[cosineTopKIvf]], for integer-valued vectors (Multimodal
-    * .fakeEmbedInt). Float k-means is inherently order-dependent — the
-    * centroid mean sums doubles in partition order, so no SQL oracle can
-    * reproduce the assignment bit-for-bit (x20's rows-only residue).
-    * This path removes every order-dependent float:
-    *
-    *  - init: Knuth-spread order (nid % 1000000007 * 2654435761
-    *    % 1000003, nid) take nlist — pure integer arithmetic, unlike
-    *    [[ivfTrain]]'s engine-murmur spread, so any engine reproduces
-    *    the same seed centroids;
-    *  - Lloyd update: element-wise integer SUM (exact, order-free) and
-    *    floor-divided integer mean — centroids stay integer vectors;
-    *  - similarity: cosine whose three dot products are exact integers
-    *    (< 2^53), so the divide/sqrt chain is a fixed sequence of
-    *    correctly-rounded IEEE ops — bit-identical in any engine;
-    *  - ties: max_by struct (csim, -cid) == row_number (csim DESC, cid
-    *    ASC), the same spelling the oracle uses.
-    *
-    * Same plan shape and scale story as [[cosineTopKIvf]]: broadcast
-    * centroids, map-side max_by argmax (one exchanged row per vector),
-    * localCheckpoint pinning the nlist-row centroid frame.
-    */
   /** Integer-exact cosine: dots are exact-integer doubles, the guard
     * keeps all-zero vectors (empty payloads) at sim 0 instead of NaN.
     */
@@ -380,7 +451,7 @@ object Similarity {
     dot(a, b) / greatest(sqrt(dot(a, a)) * sqrt(dot(b, b)), lit(1e-9))
 
   /** The Knuth multiplicative spread key the integer-IVF family seeds
-    * with — ONE definition for ivfIntModel and semDedupIntHier (the
+    * with — ONE definition for ivfIntModel and hierIntModel (the
     * oracles interpolate the same constants; a typo in a hand-rolled
     * copy would surface as a hash mismatch, not a compile error).
     * Portable-pmod spelled like the rest of the family
@@ -390,8 +461,16 @@ object Similarity {
   private def knuthSpread(id: Column): Column =
     (id % 1000000007L * 2654435761L % 1000003L + 1000003L) % 1000003L
 
+  /** The first `nlist` corpus vectors in Knuth-spread order, as seed
+    * centroids (cid, <vecName>): pure integer arithmetic, unlike
+    * [[ivfTrain]]'s engine-murmur spread, so any engine reproduces them.
+    */
+  private def knuthSeeds(corpus: DataFrame, nlist: Int, vecName: String): DataFrame =
+    corpus.orderBy(knuthSpread(col("nid")).asc, col("nid").asc).limit(nlist)
+      .select(col("nid").as("cid"), col("nvec").as(vecName))
+
   /** Integer FLOOR-mean Lloyd update shared by [[ivfIntModel]] and
-    * [[semDedupIntHier]]: element-wise integer sum, then floor
+    * [[hierIntModel]]: element-wise integer sum, then floor
     * division spelled `(sv - pmod(sv, cnt)) div cnt` — pmod is always
     * in [0, cnt), so the quotient is exact AND floors like DuckDB's
     * `//` even on negative sums (`sv div cnt` alone truncates toward
@@ -408,248 +487,58 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
         s => s.getField("m")).as(outCol))
 
-  /** The epsilon-ball keeper rule shared by [[semDedupInt]] and
-    * [[semDedupIntHier]]: a doc is dropped iff a LOWER-id cluster-mate
-    * sits inside its cosine ball (round-6dp, the cross-engine
-    * float-compare idiom); output one row per doc (idCol, cid, kept).
-    */
-  private def epsilonBallKeep(assigned: DataFrame, idCol: String,
-                              threshold: Double): DataFrame = {
-    // explicit string aliases on both self-join sides: the dataframe-
-    // handle spelling lhs("cid") === rhs("cid") resolved both sides to
-    // the SAME attribute at least once (Spark's "trivially true
-    // equals predicate 'cid == cid'" warning in the r17 Verify tail) —
-    // alias-qualified columns make the degeneration impossible
-    val lhs = assigned.select(col("cid"), col("nid").as("id_a"),
-      col("nvec").as("va")).as("ebl")
-    val rhs = assigned.select(col("cid"), col("nid").as("id_b"),
-      col("nvec").as("vb")).as("ebr")
-    val dropped = lhs.join(rhs,
-        col("ebl.cid") === col("ebr.cid") && col("id_b") < col("id_a"))
-      .filter(round(cosExactInt(col("va"), col("vb")), 6) >= threshold)
-      .select(col("id_a").as("nid")).distinct()
-    assigned.select("nid", "cid")
-      .join(dropped.withColumn("__dup", lit(true)), Seq("nid"), "left")
-      .select(col("nid").as(idCol), col("cid"),
-        col("__dup").isNull.as("kept"))
-  }
-
-  /** The shared integer-exact IVF model: Knuth-spread init, ONE Lloyd
-    * pass with integer-sum / floor-mean centroid update, max_by argmax
-    * assignment — every step exact-integer or a fixed IEEE op sequence,
-    * so any engine reproduces (centroids, assignment) byte-for-byte.
-    * Returns (refined centroids (cid, cvec) — localCheckpoint-pinned so
-    * multiple consumers don't re-run the refine — and the corpus
-    * assignment (nid, nvec, cid)). Shared by [[cosineTopKIvfInt]] (x20i)
-    * and [[semDedupInt]] (x53), whose DuckDB oracles share the matching
-    * CTE chain.
+  /** The one-level (`CellShape.Flat`) integer-exact IVF model: Knuth-
+    * spread init, ONE Lloyd pass with integer-sum / floor-mean centroid
+    * update, max_by argmax assignment — every step exact-integer or a
+    * fixed IEEE op sequence, so any engine reproduces (centroids,
+    * assignment) byte-for-byte. Returns (refined centroids (cid, cvec)
+    * — localCheckpoint-pinned so multiple consumers don't re-run the
+    * refine — and the corpus assignment (nid, nvec, cid)). Shared by
+    * [[cosineTopKIvfInt]] (x20i) and [[semDedup]] (x53), whose DuckDB
+    * oracles share the matching CTE chain.
     */
   private[graft] def ivfIntModel(emb: DataFrame, idCol: String,
                                  vecCol: String, nlist: Int)
       : (DataFrame, DataFrame) = {
-    val corpus = emb.select(col(idCol).as("nid"),
-      col(vecCol).cast("array<long>").as("nvec"))
-    def assign(cs: DataFrame): DataFrame =
-      corpus.crossJoin(broadcast(cs))
-        .select(col("nid"), col("nvec"), col("cid"),
-          cosExactInt(col("nvec"), col("cvec")).as("csim"))
-        .groupBy("nid")
-        .agg(max_by(struct(col("cid"), col("nvec")),
-          struct(col("csim"), negate(col("cid")))).as("best"))
-        .select(col("nid"), col("best.nvec").as("nvec"), col("best.cid").as("cid"))
-    val init = corpus
-      .orderBy(knuthSpread(col("nid")).asc, col("nid").asc)
-      .limit(nlist)
-      .select(col("nid").as("cid"), col("nvec").as("cvec"))
+    val corpus = idVecs(emb, idCol, vecCol, "n", asLong)
+    val init = knuthSeeds(corpus, nlist, "cvec")
     // one Lloyd pass (shared floor-mean update); pinned like ivfTrain
     // so the two consumers don't re-run the refine
-    val refined = lloydFloorMean(assign(init), "cvec").localCheckpoint(true)
-    (refined, assign(refined))
+    val refined = lloydFloorMean(ivfAssign(corpus, init, cosExactInt), "cvec")
+      .localCheckpoint(true)
+    (refined, ivfAssign(corpus, refined, cosExactInt))
   }
 
+  /** EXACT-INTEGER IVF top-k: the cross-engine-reproducible variant of
+    * [[cosineTopKIvf]], for integer-valued vectors (Multimodal
+    * .fakeEmbedInt). Float k-means is inherently order-dependent — the
+    * centroid mean sums doubles in partition order, so no SQL oracle can
+    * reproduce the assignment bit-for-bit (x20's rows-only residue).
+    * [[ivfIntModel]] removes every order-dependent float:
+    *
+    *  - init: Knuth-spread order (nid % 1000000007 * 2654435761
+    *    % 1000003, nid) take nlist;
+    *  - Lloyd update: element-wise integer SUM (exact, order-free) and
+    *    floor-divided integer mean — centroids stay integer vectors;
+    *  - similarity: cosine whose three dot products are exact integers
+    *    (< 2^53), so the divide/sqrt chain is a fixed sequence of
+    *    correctly-rounded IEEE ops — bit-identical in any engine;
+    *  - ties: max_by struct (csim, -cid) == row_number (csim DESC, cid
+    *    ASC), the same spelling the oracle uses.
+    *
+    * Same plan shape and scale story as [[cosineTopKIvf]]: broadcast
+    * centroids, map-side max_by argmax (one exchanged row per vector),
+    * localCheckpoint pinning the nlist-row centroid frame.
+    */
   def cosineTopKIvfInt(emb: DataFrame, idCol: String, vecCol: String,
                        queryPred: Column, nlist: Int = 16, nprobe: Int = 2,
                        k: Int = 5): DataFrame = {
     val (refined, assigned) = ivfIntModel(emb, idCol, vecCol, nlist)
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("qid"), col(vecCol).cast("array<long>").as("qvec"))
-    val probes = queries.crossJoin(broadcast(refined))
-      .select(col("qid"), col("qvec"), col("cid"),
-        cosExactInt(col("qvec"), col("cvec")).as("csim"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("csim").desc, col("cid").asc)))
-      .filter(col("rn") <= nprobe).select("qid", "qvec", "cid")
-    val scored = assigned
-      .join(broadcast(probes), Seq("cid"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        round(cosExactInt(col("qvec"), col("nvec")), 6).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    val queries = idVecs(emb.filter(queryPred), idCol, vecCol, "q", asLong)
+    val probes = ivfProbes(queries, refined, nprobe, cosExactInt)
+    topK(scorePairs(assigned.join(broadcast(probes), Seq("cid")), cosExactInt), k)
   }
 
-  /** Full kNN-GRAPH construction: every corpus vector is a query
-    * against the shared exact-integer IVF model ([[ivfIntModel]]), so
-    * the output is each node's top-k approximate neighbors — the input
-    * of graph-based curation (SemDeDup's cluster graph, connected-
-    * component near-dup groups over embeddings, diversity sampling).
-    *
-    * Differs from [[cosineTopKIvfInt]] (a query-SUBSET operator) in
-    * the two places an all-queries shape changes the plan:
-    *  - the probe frame is corpus-sized, so the candidate stage is a
-    *    shuffle equi-join on cid, NOT a broadcast of the probes;
-    *  - the assignment feeds both join sides (probe derivation and
-    *    candidate scoring) and is checkpoint-pinned once, the same
-    *    trade [[semDedupInt]] makes.
-    *
-    * Scale: with nlist ∝ √n per-query candidates are nprobe·n/nlist ≈
-    * nprobe·√(2n) and total work ~n^1.5 — the flat-IVF optimum for a
-    * ONE-level model. The shipped x63/x65 default is
-    * [[knnGraphIntHier]] (two-level cell-restricted assignment,
-    * ~n^1.25); this flat spelling is its ncoarse = 1 degenerate case
-    * and the equivalence twin KnnGraphHierSpec pins. Every arithmetic
-    * step is exact-integer or a fixed IEEE sequence, so the DuckDB
-    * twin replays the graph byte-for-byte.
-    */
-  def knnGraphInt(emb: DataFrame, idCol: String, vecCol: String,
-                  nlist: Int = 16, nprobe: Int = 2, k: Int = 5): DataFrame = {
-    val (refined, assigned0) = ivfIntModel(emb, idCol, vecCol, nlist)
-    val assigned = assigned0.localCheckpoint(true)
-    val probes = assigned
-      .select(col("nid").as("qid"), col("nvec").as("qvec"))
-      .crossJoin(broadcast(refined))
-      .select(col("qid"), col("qvec"), col("cid"),
-        cosExactInt(col("qvec"), col("cvec")).as("csim"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("csim").desc, col("cid").asc)))
-      .filter(col("rn") <= nprobe).select("qid", "qvec", "cid")
-    val scored = assigned
-      .join(probes, Seq("cid"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        round(cosExactInt(col("qvec"), col("nvec")), 6).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-  }
-
-  /** Mutual-kNN communities over a [[knnGraphInt]] edge list: keep
-    * directed edges with `sim >= threshold`, retain only MUTUAL pairs
-    * (each endpoint in the other's top-k — the standard symmetrization
-    * that kills hub-induced chains in a kNN graph), and fold the
-    * undirected pair set into connected components with the shared
-    * log-diameter CC loop (`NearDup.dupClusters` — pointer doubling,
-    * checkpoint-pinned rounds). Output: (doc_id, cluster_id = min
-    * member id) for every doc in at least one mutual edge — the
-    * community assignment cluster-aware curation (diversity sampling,
-    * per-community caps, SemDeDup-style pruning) consumes.
-    *
-    * Scale shape: the graph is k·n edges (never n²); mutuality is ONE
-    * self-semi-join on the reversed key; CC rounds touch only edge-list
-    * sized frames. The kNN stage's own scale knobs (nlist ∝ √n, then
-    * hierarchical assignment) are inherited, not re-decided here.
-    */
-  def mutualKnnClusters(graph: DataFrame, threshold: Double): DataFrame = {
-    // EAGER localCheckpoint, not cache(): the thresholded edges feed
-    // both sides of the mutuality semi-join, and a lazy cache lets the
-    // first action race TWO concurrent copies of the full kNN-graph
-    // build (the join's two shuffle sides materialize in parallel;
-    // block-level locks only partially serialize them) through one
-    // executor heap — measured at v2-5M (round 17): the cached
-    // spelling OOMs a 64 GB heap ~14 min in, mid graph-build window
-    // sort, while the graph ALONE (x63) completes in less. The
-    // checkpoint runs the expensive subtree exactly once, streaming
-    // into block storage, and the semi-join then reads the pinned
-    // (tiny, k·n-bounded) edge list twice for free.
-    val e = graph.filter(col("sim") >= threshold)
-      .select(col("qid"), col("nid")).localCheckpoint(true)
-    val mutual = e
-      .join(e.select(col("nid").as("qid"), col("qid").as("nid")),
-        Seq("qid", "nid"), "left_semi")
-      .filter(col("qid") < col("nid"))
-      .select(col("qid").as("doc_a"), col("nid").as("doc_b"))
-    graft.neardup.NearDup.dupClusters(mutual)
-  }
-
-  /** Semantic deduplication (SemDeDup — Abbas et al., "SemDeDup: Data-
-    * efficient learning at web-scale through semantic deduplication",
-    * arXiv:2303.09540): cluster the corpus embeddings with k-means,
-    * then inside each cluster drop every document that has a cosine-≥
-    * threshold neighbor — semantically-identical copies collapse to one
-    * representative without any text comparison. The paper's keeper
-    * rule (keep the point FARTHEST from the centroid) is replaced by
-    * the deterministic lowest-id-survives rule the rest of the dedup
-    * family uses (x01/x22), which makes re-runs and the SQL twin exact.
-    *
-    * Built on the exact-integer IVF model ([[ivfIntModel]]) so every
-    * stage — centroids, assignment, the within-cluster pair cosines —
-    * is cross-engine-reproducible and the x53 oracle replays it
-    * byte-for-byte.
-    *
-    * Scale shape: clustering is the linear IVF stage (broadcast
-    * centroids, map-side argmax); the dedup stage is a self-equi-join
-    * on cid — Σ n_c² pair work, NEVER a corpus cross join. The 100 TB
-    * knob is the paper's own: grow nlist ∝ corpus so expected cluster
-    * size stays constant and pair work stays linear (the same fixed-
-    * shape-vs-grown-shape note as x06/x20/x49 in PLANS.md). Output is
-    * one row per document (doc_id, cid, kept) — `kept=false` rows are
-    * the semantic duplicates a curation pipeline would drop.
-    */
-  def semDedupInt(emb: DataFrame, idCol: String, vecCol: String,
-                  nlist: Int = 16, threshold: Double = 0.995): DataFrame = {
-    // the assignment feeds THREE consumers (both pair-join sides + the
-    // output frame): pin it once, or each consumer re-runs the whole
-    // embed + broadcast-argmax pipeline. MEMORY_AND_DISK checkpoint =
-    // one corpus-sized materialization, the same trade a production
-    // SemDeDup makes by persisting cluster assignments between stages
-    val (_, assigned0) = ivfIntModel(emb, idCol, vecCol, nlist)
-    epsilonBallKeep(assigned0.localCheckpoint(true), idCol, threshold)
-  }
-
-  /** HIERARCHICAL semantic dedup — the scale spelling of
-    * [[semDedupInt]]: with constant target cluster size the pair stage
-    * is linear, and the assignment avoids the flat n·nlist argmax by
-    * going through a two-level cell structure (the IVF-in-IVF
-    * composition the x49 PQ path uses for codes): vectors find their
-    * coarse cell (n·ncoarse), then argmax only over the fine centroids
-    * living in that cell (n·nlist/ncoarse expected) — with
-    * ncoarse ≈ √nlist the assignment is ~n^1.25 total instead of
-    * n^1.5, and deeper hierarchies continue the same trade.
-    *
-    * Everything stays exact-integer / fixed-IEEE so the x56 oracle
-    * replays it: Knuth-spread seeds for BOTH levels, argmax ties
-    * (csim DESC, id ASC) everywhere, one integer floor-mean Lloyd pass
-    * on the fine level, refined centroids INHERITING their seed's
-    * coarse cell (re-deriving cells post-Lloyd would need a second
-    * n·ncoarse pass for marginal recall), and vectors restricted to
-    * LIVE cells (a coarse cell no fine seed landed in can otherwise
-    * orphan its vectors). Same keeper rule as the flat path.
-    */
-  def semDedupIntHier(emb: DataFrame, idCol: String, vecCol: String,
-                      nlist: Int, ncoarse: Int,
-                      threshold: Double = 0.995): DataFrame = {
-    val (_, _, assigned) = hierIntModel(emb, idCol, vecCol, nlist, ncoarse)
-    epsilonBallKeep(assigned, idCol, threshold)
-  }
-
-  /** The shared TWO-LEVEL exact-integer cell model [[semDedupIntHier]]
-    * (x56) and [[knnGraphIntHier]] (x63/x65) both ride — one definition
-    * so their DuckDB replay oracles share one CTE chain and the two
-    * consumers cannot drift. Returns
-    * (refined fine centroids with their inherited coarse cell
-    *  `(cid, fvec, ccid)`,
-    *  vector→coarse assignment `(nid, nvec, ccid)`,
-    *  final cell-restricted fine assignment `(nid, nvec, cid)`),
-    * the first and last localCheckpoint-pinned (each feeds ≥2
-    * downstream consumers in every caller).
-    *
-    * With ncoarse = 1 every fine centroid and every vector lands in the
-    * single live coarse cell, so the cell-restricted argmaxes range over
-    * the FULL centroid set and the model degenerates to [[ivfIntModel]]
-    * exactly (same Knuth seeds, same Lloyd pass, same tiebreaks) —
-    * spec-pinned by KnnGraphHierSpec.
-    */
   /** Exchange width for a stage whose tasks each locally SORT a slice
     * of `rows` rows at ~`bytesPerRow` bytes (the rank windows below:
     * partial WindowGroupLimit sorts its whole input partition):
@@ -694,31 +583,51 @@ object Similarity {
     */
   private val rankRowBytes = 48L
 
+  /** The TWO-LEVEL (`CellShape.Hier`) exact-integer cell model — one
+    * definition so the x56 and x63/x65 DuckDB replay oracles share one
+    * CTE chain and [[semDedup]] / [[knnGraph]] cannot drift. Vectors
+    * find their coarse cell (n·ncoarse), then argmax only over the fine
+    * centroids living in that cell (n·nlist/ncoarse expected) — with
+    * ncoarse ≈ √nlist the assignment is ~n^1.25 total instead of the
+    * flat n^1.5 (the IVF-in-IVF composition the x49 PQ path uses for
+    * codes). Returns
+    * (refined fine centroids with their inherited coarse cell
+    *  `(cid, fvec, ccid)`,
+    *  vector→coarse assignment `(nid, nvec, ccid)`,
+    *  final cell-restricted fine assignment `(nid, nvec, cid)`),
+    * the first and last localCheckpoint-pinned (each feeds ≥2
+    * downstream consumers in every caller).
+    *
+    * Everything stays exact-integer / fixed-IEEE: Knuth-spread seeds
+    * for BOTH levels, argmax ties (csim DESC, id ASC) everywhere, one
+    * integer floor-mean Lloyd pass on the fine level, refined centroids
+    * INHERITING their seed's coarse cell (re-deriving cells post-Lloyd
+    * would need a second n·ncoarse pass for marginal recall), and
+    * vectors restricted to LIVE cells (a coarse cell no fine seed landed
+    * in can otherwise orphan its vectors).
+    *
+    * With ncoarse = 1 every fine centroid and every vector lands in the
+    * single live coarse cell, so the cell-restricted argmaxes range over
+    * the FULL centroid set and the model degenerates to [[ivfIntModel]]
+    * exactly (same Knuth seeds, same Lloyd pass, same tiebreaks) —
+    * spec-pinned by KnnGraphHierSpec.
+    */
   private[graft] def hierIntModel(emb: DataFrame, idCol: String,
                                   vecCol: String, nlist: Int, ncoarse: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    val corpus = emb.select(col(idCol).as("nid"),
-      col(vecCol).cast("array<long>").as("nvec"))
-    val fineSeeds = corpus
-      .orderBy(knuthSpread(col("nid")).asc, col("nid").asc).limit(nlist)
-      .select(col("nid").as("cid"), col("nvec").as("fvec"))
+    val corpus = idVecs(emb, idCol, vecCol, "n", asLong)
+    val fineSeeds = knuthSeeds(corpus, nlist, "fvec")
     // the coarse seeds are by construction the PREFIX of the fine seeds
-    // under the same total order (ncoarse ≤ nlist always) — derive them
-    // instead of re-running a second TakeOrdered pass over the corpus
+    // under the same total order (ncoarse ≤ nlist, see CellShape.Hier)
+    // — derive them instead of re-running a second TakeOrdered pass
     val coarseSeeds = fineSeeds.limit(ncoarse)
       .select(col("cid").as("ccid"), col("fvec").as("cvec"))
-    def argmaxTo(df: DataFrame, keyCols: Seq[String], simCol: Column,
-                 idTie: String, keep: Seq[String]): DataFrame = {
-      val w = Window.partitionBy(keyCols.map(col): _*)
-        .orderBy(simCol.desc, col(idTie).asc)
-      df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .select(keep.map(col): _*)
-    }
     // fine seed -> coarse cell (nlist·ncoarse rows, broadcast-sized)
-    val fineCells = argmaxTo(
-      fineSeeds.crossJoin(broadcast(coarseSeeds))
-        .withColumn("__s", cosExactInt(col("fvec"), col("cvec"))),
-      Seq("cid"), col("__s"), "ccid", Seq("cid", "fvec", "ccid"))
+    val fineCells = fineSeeds.crossJoin(broadcast(coarseSeeds))
+      .withColumn("__s", cosExactInt(col("fvec"), col("cvec")))
+      .withColumn("__rn", row_number().over(Window.partitionBy("cid")
+        .orderBy(col("__s").desc, col("ccid").asc)))
+      .filter(col("__rn") === 1).select("cid", "fvec", "ccid")
       .localCheckpoint(true)
     // only cells that actually hold a fine centroid may receive vectors
     val liveCoarse = coarseSeeds.join(
@@ -771,27 +680,98 @@ object Similarity {
     (refined, vCell, assignFine(refined).localCheckpoint(true))
   }
 
-  /** HIERARCHICAL kNN-graph — the scale spelling of [[knnGraphInt]],
-    * riding [[hierIntModel]]: probe derivation ranks each vector only
-    * against the fine centroids of ITS coarse cell (n·nlist/ncoarse
-    * expected rows instead of the flat n·nlist crossJoin), and with
-    * ncoarse ≈ √nlist the whole model stage is ~n^1.25 instead of the
-    * flat path's n^1.5 — at the constant-cluster-size schedule the
-    * candidate scoring stage is linear too (nprobe · targetClusterSize
-    * candidates per query). Same all-queries plan contract as the flat
-    * spelling: the probe frame is corpus-sized so candidate scoring is
-    * a shuffle equi-join on cid, never a broadcast of the probes.
+  /** Semantic deduplication (SemDeDup — Abbas et al., "SemDeDup: Data-
+    * efficient learning at web-scale through semantic deduplication",
+    * arXiv:2303.09540): cluster the corpus embeddings with k-means,
+    * then inside each cluster drop every document that has a cosine-≥
+    * threshold neighbor — semantically-identical copies collapse to one
+    * representative without any text comparison. The paper's keeper
+    * rule (keep the point FARTHEST from the centroid) is replaced by
+    * the deterministic lowest-id-survives rule the rest of the dedup
+    * family uses (x01/x22), which makes re-runs and the SQL twin exact:
+    * a doc is dropped iff a LOWER-id cluster-mate sits inside its
+    * cosine ball (round-6dp, the cross-engine float-compare idiom).
+    *
+    * The clustering is the exact-integer cell model of `shape` —
+    * `Flat(nlist)` runs [[ivfIntModel]] (x53), `Hier(nlist, ncoarse)`
+    * runs [[hierIntModel]] (x56), and [[CellShape.auto]] picks between
+    * them from the corpus size (x59) — so every stage is
+    * cross-engine-reproducible and the oracles replay it byte-for-byte.
+    *
+    * Scale shape: the dedup stage is a self-equi-join on cid — Σ n_c²
+    * pair work, NEVER a corpus cross join. The 100 TB knob is the
+    * paper's own: grow nlist with the corpus so expected cluster size
+    * stays bounded (`CellShape.flat` grows it ∝ √n, `CellShape.hier` ∝ n
+    * at constant cluster size, making pair work linear). Output is one
+    * row per document (idCol, cid, kept) — `kept=false` rows are the
+    * semantic duplicates a curation pipeline would drop.
+    */
+  def semDedup(emb: DataFrame, idCol: String, vecCol: String,
+               shape: CellShape, threshold: Double = 0.995): DataFrame = {
+    // the assignment feeds THREE consumers (both pair-join sides + the
+    // output frame): pin it once, or each consumer re-runs the whole
+    // embed + broadcast-argmax pipeline. MEMORY_AND_DISK checkpoint =
+    // one corpus-sized materialization, the same trade a production
+    // SemDeDup makes by persisting cluster assignments between stages
+    // (hierIntModel returns its assignment already pinned)
+    val assigned = shape match {
+      case CellShape.Flat(nlist) =>
+        ivfIntModel(emb, idCol, vecCol, nlist)._2.localCheckpoint(true)
+      case CellShape.Hier(nlist, ncoarse) =>
+        hierIntModel(emb, idCol, vecCol, nlist, ncoarse)._3
+    }
+    // explicit string aliases on both self-join sides: the dataframe-
+    // handle spelling lhs("cid") === rhs("cid") resolved both sides to
+    // the SAME attribute at least once (Spark's "trivially true
+    // equals predicate 'cid == cid'" warning in the r17 Verify tail) —
+    // alias-qualified columns make the degeneration impossible
+    val lhs = assigned.select(col("cid"), col("nid").as("id_a"),
+      col("nvec").as("va")).as("ebl")
+    val rhs = assigned.select(col("cid"), col("nid").as("id_b"),
+      col("nvec").as("vb")).as("ebr")
+    val dropped = lhs.join(rhs,
+        col("ebl.cid") === col("ebr.cid") && col("id_b") < col("id_a"))
+      .filter(round(cosExactInt(col("va"), col("vb")), 6) >= threshold)
+      .select(col("id_a").as("nid")).distinct()
+    assigned.select("nid", "cid")
+      .join(dropped.withColumn("__dup", lit(true)), Seq("nid"), "left")
+      .select(col("nid").as(idCol), col("cid"),
+        col("__dup").isNull.as("kept"))
+  }
+
+  /** Full kNN-GRAPH construction: every corpus vector is a query
+    * against the exact-integer cell model, so the output is each node's
+    * top-k approximate neighbors (qid, nid, sim, rnk) — the input of
+    * graph-based curation (SemDeDup's cluster graph, connected-
+    * component near-dup groups over embeddings, diversity sampling).
+    *
+    * The model is always [[hierIntModel]]; `Flat(nlist)` runs as
+    * `Hier(nlist, 1)`, which equals the one-level model. Probe
+    * derivation ranks each vector only against the fine centroids of
+    * ITS coarse cell (n·nlist/ncoarse expected rows), and with
+    * ncoarse ≈ √nlist the model stage is ~n^1.25 instead of the flat
+    * n^1.5 — at the constant-cluster-size schedule (x63/x65) the
+    * candidate scoring stage is linear too (nprobe · clusterSize
+    * candidates per query).
+    *
+    * Differs from [[cosineTopKIvfInt]] (a query-SUBSET operator) in
+    * the places an all-queries shape changes the plan: the probe frame
+    * is corpus-sized, so the candidate stage is a shuffle equi-join on
+    * cid, NOT a broadcast of the probes, and the assignment it reads is
+    * checkpoint-pinned once.
     *
     * Approximation note: restricting probes to the vector's own coarse
     * cell is the standard IVF-in-IVF recall trade (a query near a
-    * coarse boundary can't probe a fine list across it); with
-    * ncoarse = 1 this is EXACTLY [[knnGraphInt]] (spec-pinned). Every
-    * stage stays exact-integer / fixed-IEEE, so the x63/x65 DuckDB
-    * twins replay the graph byte-for-byte.
+    * coarse boundary can't probe a fine list across it). Every stage
+    * stays exact-integer / fixed-IEEE, so the x63/x65 DuckDB twins
+    * replay the graph byte-for-byte.
     */
-  def knnGraphIntHier(emb: DataFrame, idCol: String, vecCol: String,
-                      nlist: Int, ncoarse: Int,
-                      nprobe: Int = 2, k: Int = 5): DataFrame = {
+  def knnGraph(emb: DataFrame, idCol: String, vecCol: String,
+               shape: CellShape, nprobe: Int = 2, k: Int = 5): DataFrame = {
+    val (nlist, ncoarse) = shape match {
+      case CellShape.Flat(nl) => (nl, 1)
+      case CellShape.Hier(nl, nc) => (nl, nc)
+    }
     val (refined, vCell, assigned) = hierIntModel(emb, idCol, vecCol,
       nlist, ncoarse)
     val n = vCell.count() // pinned blocks — one cheap job
@@ -802,13 +782,10 @@ object Similarity {
     // n·(nlist/ncoarse)-row sort multiplies its volume ~6× for columns
     // the comparator never reads; see volumeParts for the r17 numbers)
     val probeParts = volumeParts(vCell, n * finePerCoarse, rankRowBytes)
-    val probeSel = spreadTo(vCell, probeParts)
+    val probeSel = topProbes(spreadTo(vCell, probeParts)
       .join(broadcast(refined), Seq("ccid"))
       .select(col("nid").as("qid"), col("cid"),
-        cosExactInt(col("nvec"), col("fvec")).as("csim"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("csim").desc, col("cid").asc)))
-      .filter(col("rn") <= nprobe).select("qid", "cid")
+        cosExactInt(col("nvec"), col("fvec")).as("csim")), nprobe, "qid", "cid")
     val probes = probeSel.join(
       vCell.select(col("nid").as("qid"), col("nvec").as("qvec")), Seq("qid"))
       .select("qid", "qvec", "cid")
@@ -823,52 +800,46 @@ object Similarity {
         (assigned.repartition(scoreParts, col("cid")),
           probes.repartition(scoreParts, col("cid")))
       else (assigned, probes)
-    val scored = aSide
-      .join(pSide, Seq("cid"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        round(cosExactInt(col("qvec"), col("nvec")), 6).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topK(scorePairs(aSide.join(pSide, Seq("cid")), cosExactInt), k)
   }
 
-  /** Documents-count crossover between the flat and hierarchical
-    * semantic-dedup spellings: flat's balanced shape (nlist ∝ √(n/2))
-    * gives expected cluster size √(2n), so once √(2n) exceeds the
-    * hierarchical target cluster size the two-level spelling does
-    * strictly less work in BOTH stages (its pair stage is linear at
-    * constant cluster size, its assignment ~n^1.25 vs flat's n^1.5) —
-    * the crossover is n* = targetClusterSize²/2, with no tuning
-    * constant left to the caller.
+  /** Mutual-kNN communities over a [[knnGraph]] edge list: keep
+    * directed edges with `sim >= threshold`, retain only MUTUAL pairs
+    * (each endpoint in the other's top-k — the standard symmetrization
+    * that kills hub-induced chains in a kNN graph), and fold the
+    * undirected pair set into connected components with the shared
+    * log-diameter CC loop (`NearDup.dupClusters` — pointer doubling,
+    * checkpoint-pinned rounds). Output: (doc_id, cluster_id = min
+    * member id) for every doc in at least one mutual edge — the
+    * community assignment cluster-aware curation (diversity sampling,
+    * per-community caps, SemDeDup-style pruning) consumes.
+    *
+    * Scale shape: the graph is k·n edges (never n²); mutuality is ONE
+    * self-semi-join on the reversed key; CC rounds touch only edge-list
+    * sized frames. The graph's [[CellShape]] (x65 passes x63's
+    * `CellShape.hier`) is the caller's, not re-decided here.
     */
-  def semDedupCrossoverDocs(targetClusterSize: Int): Long =
-    targetClusterSize.toLong * targetClusterSize / 2
-
-  /** AUTO-shaped semantic dedup — the paper's scale schedule as the
-    * default, not a doc note: picks [[semDedupInt]] (flat, nlist ∝
-    * √(n/2)) below [[semDedupCrossoverDocs]] and [[semDedupIntHier]]
-    * (constant cluster size, two-level assignment) at or above it,
-    * deriving each branch's shape bounds from the corpus size `n` with
-    * the exact IEEE ceil/sqrt sequences the SQL oracles replay. `n` is
-    * caller-supplied (one metadata-cheap count) so the same count can
-    * also parameterize the caller's oracle twin.
-    */
-  def semDedupAuto(emb: DataFrame, idCol: String, vecCol: String, n: Long,
-                   minNlist: Int = 16, targetClusterSize: Int = 300,
-                   minCoarse: Int = 4,
-                   threshold: Double = 0.995): DataFrame =
-    if (n < semDedupCrossoverDocs(targetClusterSize)) {
-      val nlist = math.max(minNlist.toLong,
-        math.ceil(math.sqrt(n / 2.0)).toLong).toInt
-      semDedupInt(emb, idCol, vecCol, nlist, threshold)
-    } else {
-      val nlist = math.max(minNlist.toLong,
-        math.ceil(n / targetClusterSize.toDouble).toLong).toInt
-      val ncoarse = math.max(minCoarse.toLong,
-        math.ceil(math.sqrt(nlist.toDouble)).toLong).toInt
-      semDedupIntHier(emb, idCol, vecCol, nlist, ncoarse, threshold)
-    }
+  def mutualKnnClusters(graph: DataFrame, threshold: Double): DataFrame = {
+    // EAGER localCheckpoint, not cache(): the thresholded edges feed
+    // both sides of the mutuality semi-join, and a lazy cache lets the
+    // first action race TWO concurrent copies of the full kNN-graph
+    // build (the join's two shuffle sides materialize in parallel;
+    // block-level locks only partially serialize them) through one
+    // executor heap — measured at v2-5M (round 17): the cached
+    // spelling OOMs a 64 GB heap ~14 min in, mid graph-build window
+    // sort, while the graph ALONE (x63) completes in less. The
+    // checkpoint runs the expensive subtree exactly once, streaming
+    // into block storage, and the semi-join then reads the pinned
+    // (tiny, k·n-bounded) edge list twice for free.
+    val e = graph.filter(col("sim") >= threshold)
+      .select(col("qid"), col("nid")).localCheckpoint(true)
+    val mutual = e
+      .join(e.select(col("nid").as("qid"), col("qid").as("nid")),
+        Seq("qid", "nid"), "left_semi")
+      .filter(col("qid") < col("nid"))
+      .select(col("qid").as("doc_a"), col("nid").as("doc_b"))
+    graft.neardup.NearDup.dupClusters(mutual)
+  }
 
   /** SEMANTIC decontamination: flag training docs whose embedding sits
     * inside the cosine epsilon-ball of ANY benchmark/eval embedding —
@@ -885,7 +856,7 @@ object Similarity {
     * join and x42's broadcast rate map). Cost is |train| · |eval|
     * per-row arithmetic with |eval| constant — linear in the corpus.
     * For an eval side too big to broadcast, restrict candidates with
-    * the shared IVF cells ([[ivfIntModel]]) exactly as [[semDedupInt]]
+    * the shared IVF cells ([[ivfIntModel]]) exactly as [[semDedup]]
     * does; the broadcast spelling here IS the production shape for real
     * benchmark sizes.
     *
@@ -1019,7 +990,7 @@ object Similarity {
     * vectors per table (all shipped sf corpora are far under it);
     * where it engages, [[nearDupBucketLoad]] reports exactly how much
     * each bucket was truncated, and the production answer for clustered
-    * geometry remains the semantic-dedup family ([[semDedupAuto]] —
+    * geometry remains the semantic-dedup family ([[semDedup]] —
     * cluster-restricted pairs at a tight threshold) or top-k
     * ([[cosineTopK]]), not pair enumeration.
     */
@@ -1190,9 +1161,7 @@ object Similarity {
         col("vec").as("nvec")), Seq("nid"))
       .select(col("qid"), col("nid"),
         round(dot(col("qvec"), col("nvec")), 6).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("nid").asc)
-    reranked.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topK(reranked, k)
   }
 
   def cosineTopKPq(emb: DataFrame, idCol: String, vecCol: String,

@@ -639,7 +639,7 @@ object Retrieval {
         // the 4-batch entry paid 4 of them to reclaim ~20 MB; the walk
         // (~ms, graft.Scratch — roots in Spark's own precedence) skips
         // the nudge when the visible scratch trees hold under 1 GiB.
-        // When NO scratch tree is visible at all (cluster mode: shuffle
+        // When NO scratch root exists at all (cluster mode: shuffle
         // scratch lives on executors) the nudge runs UNCONDITIONALLY —
         // failing toward cleanup, never silently re-opening the
         // round-14 disk wall.

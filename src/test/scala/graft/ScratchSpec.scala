@@ -1,6 +1,7 @@
 package graft
 
 import java.io.File
+import java.nio.file.Files
 import org.apache.spark.SparkConf
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,5 +17,16 @@ class ScratchSpec extends AnyFunSuite {
       Seq(new File("/conf/a"), new File("/conf/b")))
     assert(Scratch.roots(new SparkConf(false), Map.empty) ==
       Seq(new File(System.getProperty("java.io.tmpdir"))))
+  }
+
+  test("an existing root with no spark-/blockmgr- tree is found and empty; " +
+      "a missing root is not found") {
+    val dir = Files.createTempDirectory("scratch-spec").toFile
+    try {
+      val conf = new SparkConf(false).set("spark.local.dir", dir.getPath)
+      assert(Scratch.bytesAndFound(conf, Map.empty) == ((0L, true)))
+      dir.delete()
+      assert(Scratch.bytesAndFound(conf, Map.empty) == ((0L, false)))
+    } finally dir.delete()
   }
 }

@@ -2,6 +2,7 @@ package graft.props
 
 import graft.SparkSpec
 import graft.ops.{Dedup, Percentiles, TopK}
+import graft.sim.CellShape
 import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -202,10 +203,46 @@ class PropertySpec extends SparkSpec {
       val df = ids.map(id => (id, Seq(3L, 1L, 4L, 1L)))
         .toDF("doc_id", "embedding")
       val kept = graft.sim.Similarity
-        .semDedupInt(df, "doc_id", "embedding", nlist = 4, threshold = 0.999)
+        .semDedup(df, "doc_id", "embedding", CellShape.Flat(4), threshold = 0.999)
         .collect().filter(_.getBoolean(2)).map(_.getLong(0)).toSeq
       assert(kept == Seq(ids.min),
         s"expected sole survivor ${ids.min}, got $kept from ${ids.sorted.take(8)}…")
+    }
+  }
+
+  test("CellShape: Hier(nlist, 1) dedups exactly like Flat(nlist) on random integer embeddings") {
+    // small components (negatives and zero vectors included) so exact
+    // and near duplicates occur; ≤ 60 rows × 4 dims keeps it cheap
+    val corpusGen = for {
+      n <- Gen.chooseNum(2, 60)
+      vecs <- Gen.listOfN(n, Gen.listOfN(4, Gen.chooseNum(-3L, 6L)))
+      nlist <- Gen.chooseNum(1, 6)
+    } yield (vecs.zipWithIndex.map { case (v, i) => (i * 7L + 3L, v) }, nlist)
+    samples(corpusGen, 3).foreach { case (rows, nlist) =>
+      val df = rows.toDF("doc_id", "embedding")
+      def dedup(shape: CellShape) = graft.sim.Similarity
+        .semDedup(df, "doc_id", "embedding", shape, threshold = 0.99)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      val flat = dedup(CellShape.Flat(nlist))
+      assert(flat.size == rows.size, "one output row per document")
+      assert(dedup(CellShape.Hier(nlist, 1)) == flat,
+        s"Hier($nlist, 1) diverged from Flat($nlist) on ${rows.size} rows")
+    }
+  }
+
+  test("CellShape.auto is flat below clusterSize²/2 and hier at or above it") {
+    val argsGen = for {
+      clusterSize <- Gen.chooseNum(1, 3000)
+      minNlist <- Gen.chooseNum(1, 64)
+      minCoarse <- Gen.chooseNum(1, minNlist)
+      cross = clusterSize.toLong * clusterSize / 2
+      n <- Gen.oneOf(Gen.chooseNum(0L, 2 * cross + 10),
+        Gen.oneOf(cross - 1, cross, cross + 1).map(math.max(0L, _)))
+    } yield (n, minNlist, clusterSize, minCoarse)
+    samples(argsGen, 200).foreach { case (n, minNlist, cs, minCoarse) =>
+      val auto = CellShape.auto(n, minNlist, cs, minCoarse)
+      if (n < cs.toLong * cs / 2) assert(auto == CellShape.flat(n, minNlist))
+      else assert(auto == CellShape.hier(n, minNlist, cs, minCoarse))
     }
   }
 

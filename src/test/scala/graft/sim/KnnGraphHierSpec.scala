@@ -3,14 +3,15 @@ package graft.sim
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 
-/** Hierarchical kNN-graph (the shipped x63/x65 spelling) contract:
+/** Hierarchical cell model (the shipped x63/x65 spelling) contract:
   *
   *  - with ncoarse = 1 the two-level model degenerates to the flat IVF
   *    model EXACTLY (single live coarse cell → the cell-restricted
   *    argmaxes range over the full centroid set, same Knuth seeds, same
-  *    floor-mean Lloyd pass, same tiebreaks), so
-  *    `knnGraphIntHier(ncoarse = 1)` must equal `knnGraphInt`
-  *    row-for-row — the flat path is the hier path's correctness twin;
+  *    floor-mean Lloyd pass, same tiebreaks), so `hierIntModel(nlist, 1)`
+  *    must equal `ivfIntModel(nlist)` in refined centroids and
+  *    assignment — which is why `knnGraph` runs `Flat(nlist)` as
+  *    `Hier(nlist, 1)`;
   *  - with ncoarse > 1 the graph keeps the family invariants: every
   *    corpus vector appears as a query, no self-edges, ranks are dense
   *    from 1 and ordered by (sim DESC, nid ASC).
@@ -26,23 +27,27 @@ class KnnGraphHierSpec extends SparkSpec {
         (i % 11) * 7L))
     }.toDF("doc_id", "embedding")
 
-  private def asSet(df: DataFrame): Set[(Long, Long, Double, Long)] =
-    df.collect().map(r =>
-      (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+  private def rows(df: DataFrame, cols: String*): Set[Seq[Any]] =
+    df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+      .collect().map(_.toSeq).toSet
 
   test("ncoarse = 1 degenerates to the flat kNN graph row-for-row") {
     for (nlist <- Seq(2, 5, 8)) {
-      val flat = asSet(Similarity.knnGraphInt(emb, "doc_id", "embedding",
-        nlist = nlist, nprobe = 2, k = 3))
-      val hier = asSet(Similarity.knnGraphIntHier(emb, "doc_id",
-        "embedding", nlist = nlist, ncoarse = 1, nprobe = 2, k = 3))
-      assert(hier == flat, s"flat/hier divergence at nlist=$nlist")
+      val (flatCents, flatAssign) =
+        Similarity.ivfIntModel(emb, "doc_id", "embedding", nlist)
+      val (hierCents, _, hierAssign) =
+        Similarity.hierIntModel(emb, "doc_id", "embedding", nlist, ncoarse = 1)
+      assert(rows(hierCents, "cid", "fvec") == rows(flatCents, "cid", "cvec"),
+        s"refined centroids diverge at nlist=$nlist")
+      assert(rows(hierAssign, "nid", "nvec", "cid") ==
+        rows(flatAssign, "nid", "nvec", "cid"),
+        s"assignment diverges at nlist=$nlist")
     }
   }
 
   test("ncoarse > 1 keeps the graph invariants") {
-    val g = Similarity.knnGraphIntHier(emb, "doc_id", "embedding",
-      nlist = 8, ncoarse = 3, nprobe = 2, k = 3).collect()
+    val g = Similarity.knnGraph(emb, "doc_id", "embedding",
+      CellShape.Hier(8, 3), nprobe = 2, k = 3).collect()
     val byQ = g.groupBy(_.getLong(0))
     assert(byQ.keySet == (0L until 40L).toSet,
       "every corpus vector must be a query node")

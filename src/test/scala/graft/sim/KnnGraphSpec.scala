@@ -26,8 +26,8 @@ class KnnGraphSpec extends SparkSpec {
     .toDF("doc_id", "embedding")
 
   test("every node appears with k neighbors, ranked by cosine then id") {
-    val out = Similarity.knnGraphInt(emb, "doc_id", "embedding",
-        nlist = 2, nprobe = 2, k = 2)
+    val out = Similarity.knnGraph(emb, "doc_id", "embedding",
+        CellShape.Flat(2), nprobe = 2, k = 2)
       .collect()
       .groupBy(_.getLong(0))
       .map { case (q, rows) =>
@@ -46,8 +46,8 @@ class KnnGraphSpec extends SparkSpec {
   }
 
   test("k larger than the candidate pool returns the pool, never self") {
-    val out = Similarity.knnGraphInt(emb, "doc_id", "embedding",
-        nlist = 2, nprobe = 2, k = 10)
+    val out = Similarity.knnGraph(emb, "doc_id", "embedding",
+        CellShape.Flat(2), nprobe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.forall { case (q, n) => q != n }, "no self-edges")
     // exhaustive probes: each node sees all 5 others

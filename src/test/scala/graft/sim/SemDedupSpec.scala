@@ -1,6 +1,7 @@
 package graft.sim
 
 import graft.SparkSpec
+import graft.sim.CellShape.{Flat, Hier}
 import org.apache.spark.sql.functions._
 
 /** Semantic-dedup (x53) contract: one output row per input document,
@@ -25,8 +26,8 @@ class SemDedupSpec extends SparkSpec {
     .toDF("doc_id", "embedding")
 
   test("exact duplicates collapse to the lowest id; singletons survive") {
-    val out = Similarity.semDedupInt(emb, "doc_id", "embedding",
-        nlist = 4, threshold = 0.999)
+    val out = Similarity.semDedup(emb, "doc_id", "embedding", Flat(4),
+        threshold = 0.999)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(out.size == 7, "one output row per input document")
     assert(out(0L), "group keeper (lowest id) must survive")
@@ -37,8 +38,8 @@ class SemDedupSpec extends SparkSpec {
   }
 
   test("hierarchical path: duplicates collapse, singletons survive, output total") {
-    val out = Similarity.semDedupIntHier(emb, "doc_id", "embedding",
-        nlist = 4, ncoarse = 2, threshold = 0.999)
+    val out = Similarity.semDedup(emb, "doc_id", "embedding", Hier(4, 2),
+        threshold = 0.999)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(out.size == 7, "one output row per input document")
     // identical vectors land in the same fine cluster in ANY cell
@@ -90,10 +91,10 @@ class SemDedupSpec extends SparkSpec {
       (3L, Seq(50L, -60L, 1L, 0L)), (4L, Seq(-1L, -1L, -1L, -1L)),
       (5L, Seq(7L, 7L, -7L, -7L))).toDF("doc_id", "embedding")
     Seq(
-      Similarity.semDedupInt(neg, "doc_id", "embedding", nlist = 2,
+      Similarity.semDedup(neg, "doc_id", "embedding", Flat(2),
         threshold = 0.999),
-      Similarity.semDedupIntHier(neg, "doc_id", "embedding", nlist = 2,
-        ncoarse = 2, threshold = 0.999)
+      Similarity.semDedup(neg, "doc_id", "embedding", Hier(2, 2),
+        threshold = 0.999)
     ).foreach { out =>
       val rows = out.collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
       assert(rows.size == 5)
@@ -105,19 +106,20 @@ class SemDedupSpec extends SparkSpec {
     // flat's balanced cluster size is √(2n); it reaches the hierarchical
     // target exactly at n = target²/2 — the shape-derived bound, no
     // free tuning constant
-    assert(Similarity.semDedupCrossoverDocs(300) == 45000L)
-    assert(Similarity.semDedupCrossoverDocs(20) == 200L)
-    assert(Similarity.semDedupCrossoverDocs(3) == 4L)
+    assert(CellShape.crossoverDocs(300) == 45000L)
+    assert(CellShape.crossoverDocs(20) == 200L)
+    assert(CellShape.crossoverDocs(3) == 4L)
   }
 
   test("auto picks the FLAT spelling below the crossover — bit-identical to semDedupInt") {
     // n=7 < 300²/2: flat branch with nlist = max(min, ceil(√(n/2))) = 4
-    val auto = Similarity.semDedupAuto(emb, "doc_id", "embedding", n = 7L,
-        minNlist = 4, targetClusterSize = 300, minCoarse = 2,
+    val shape = CellShape.auto(7L, minNlist = 4, clusterSize = 300, minCoarse = 2)
+    assert(shape == Flat(4))
+    val auto = Similarity.semDedup(emb, "doc_id", "embedding", shape,
         threshold = 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val flat = Similarity.semDedupInt(emb, "doc_id", "embedding",
-        nlist = 4, threshold = 0.999)
+    val flat = Similarity.semDedup(emb, "doc_id", "embedding", Flat(4),
+        threshold = 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(auto == flat)
   }
@@ -125,12 +127,13 @@ class SemDedupSpec extends SparkSpec {
   test("auto picks the HIERARCHICAL spelling at/above the crossover — bit-identical to semDedupIntHier") {
     // targetClusterSize=3 → crossover 4 ≤ n=7: hierarchical branch with
     // nlist = max(4, ceil(7/3)) = 4, ncoarse = max(2, ceil(√4)) = 2
-    val auto = Similarity.semDedupAuto(emb, "doc_id", "embedding", n = 7L,
-        minNlist = 4, targetClusterSize = 3, minCoarse = 2,
+    val shape = CellShape.auto(7L, minNlist = 4, clusterSize = 3, minCoarse = 2)
+    assert(shape == Hier(4, 2))
+    val auto = Similarity.semDedup(emb, "doc_id", "embedding", shape,
         threshold = 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val hier = Similarity.semDedupIntHier(emb, "doc_id", "embedding",
-        nlist = 4, ncoarse = 2, threshold = 0.999)
+    val hier = Similarity.semDedup(emb, "doc_id", "embedding", Hier(4, 2),
+        threshold = 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(auto == hier)
   }
@@ -140,9 +143,34 @@ class SemDedupSpec extends SparkSpec {
       (5L, Seq(13L, 1L, 0L, 0L)), (6L, Seq(1L, 13L, 0L, 0L)),
       (7L, Seq(0L, 1L, 13L, 0L)), (8L, Seq(0L, 0L, 1L, 13L)))
       .toDF("doc_id", "embedding")
-    val kept = Similarity.semDedupInt(singles, "doc_id", "embedding",
-        nlist = 2, threshold = 0.9999)
+    val kept = Similarity.semDedup(singles, "doc_id", "embedding", Flat(2),
+        threshold = 0.9999)
       .filter(col("kept")).count()
     assert(kept == 4)
+  }
+
+  test("shape rules and constructors fail closed, naming the field at fault") {
+    def msg(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+    // a negative count once took the flat branch at nlist = minNlist
+    // (ceil(sqrt(-0.5)) is NaN → 0); a zero cluster size once made the
+    // crossover 0 and nlist = max(16, Long.MaxValue).toInt = -1
+    assert(msg(CellShape.auto(-1L, 16, 300, 4)).contains("n must be >= 0"))
+    assert(msg(CellShape.flat(-1L, 16)).contains("n must be >= 0"))
+    assert(msg(CellShape.hier(-1L, 16, 300, 4)).contains("n must be >= 0"))
+    assert(msg(CellShape.auto(1000L, 16, 0, 4)).contains("clusterSize must be >= 1"))
+    assert(msg(CellShape.hier(1000L, 16, 0, 4)).contains("clusterSize must be >= 1"))
+    assert(msg(CellShape.crossoverDocs(0)).contains("clusterSize must be >= 1"))
+    assert(msg(CellShape.flat(1000L, 0)).contains("minNlist must be >= 1"))
+    assert(msg(CellShape.auto(1000L, -2, 300, 4)).contains("minNlist must be >= 1"))
+    assert(msg(CellShape.auto(1000L, 16, 300, 0)).contains("minCoarse must be >= 1"))
+    assert(msg(CellShape.hier(1000L, 16, 300, -1)).contains("minCoarse must be >= 1"))
+    assert(msg(CellShape.hier(Long.MaxValue, 16, 1, 4)).contains("nlist must be <="))
+    assert(msg(Flat(0)).contains("nlist must be >= 1"))
+    assert(msg(Hier(0, 1)).contains("nlist must be >= 1"))
+    assert(msg(Hier(4, 0)).contains("ncoarse must be >= 1"))
+    assert(msg(Hier(4, 5)).contains("ncoarse must be <= nlist"))
+    // the boundary values themselves are legal
+    assert(CellShape.auto(0L, 1, 1, 1) == Hier(1, 1))
+    assert(CellShape.flat(0L, 1) == Flat(1))
   }
 }

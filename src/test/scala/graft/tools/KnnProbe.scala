@@ -3,13 +3,13 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Matched flat-vs-hier kNN-graph probe (x63's operator) for the
-  * PLANS.md scale tables: times `Similarity.knnGraphInt` (the flat
-  * n·nlist crossJoin spelling at x63's PRE-round-11 √(n/2) schedule)
-  * against `Similarity.knnGraphIntHier` (the shipped two-level
-  * spelling at the knnHierClusterSize=100 schedule) on the same
-  * corpus, same JVM, noop-sink materialization, warm-up on sf0.001 —
-  * the isolated-matched protocol the bench memory requires for
-  * per-query scale conclusions.
+  * PLANS.md scale tables: times `Similarity.knnGraph` at the flat
+  * `CellShape.flat` schedule (x63's PRE-round-11 √(n/2) nlist; `Flat`
+  * runs as one coarse cell, the n·nlist crossJoin spelling) against the
+  * shipped `CellShape.hier` schedule (knnHierClusterSize=100) on the
+  * same corpus, same JVM, noop-sink materialization, warm-up on
+  * sf0.001 — the isolated, matched protocol that per-query scale
+  * conclusions need.
   *
   * usage: Test/runMain graft.tools.KnnProbe <sfDir> <flat|hier|both> [reps]
   */
@@ -26,7 +26,7 @@ object KnnProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions.col
-    import graft.sim.Similarity
+    import graft.sim.{CellShape, Similarity}
     import graft.multimodal.Multimodal
 
     def graph(d: String, hier: Boolean) = {
@@ -35,16 +35,10 @@ object KnnProbe {
         Multimodal.withPayload(docs, "doc_id", "text"), dim = 16)
         .toDF().cache()
       val n = docs.count()
-      if (hier) {
-        val nlist = math.max(16L, math.ceil(n / 100.0).toLong).toInt
-        val ncoarse = math.max(4L, math.ceil(math.sqrt(nlist.toDouble)).toLong).toInt
-        Similarity.knnGraphIntHier(emb, "doc_id", "embedding",
-          nlist = nlist, ncoarse = ncoarse, nprobe = 2, k = 5)
-      } else {
-        val nlist = math.max(16L, math.ceil(math.sqrt(n / 2.0)).toLong).toInt
-        Similarity.knnGraphInt(emb, "doc_id", "embedding",
-          nlist = nlist, nprobe = 2, k = 5)
-      }
+      val shape =
+        if (hier) CellShape.hier(n, minNlist = 16, clusterSize = 100, minCoarse = 4)
+        else CellShape.flat(n, minNlist = 16)
+      Similarity.knnGraph(emb, "doc_id", "embedding", shape, nprobe = 2, k = 5)
     }
     def run(hier: Boolean): Unit = {
       val label = if (hier) "hier" else "flat"

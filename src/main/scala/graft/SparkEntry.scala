@@ -179,7 +179,7 @@ object SparkEntry {
       // the new epoch is fully written — retire the previous one now
       if (epoch > 1L)
         deleteRecursively(sinkScratchRoot.resolve(s"${view}_out_${epoch - 1}"))
-      parent.read.parquet(out.toString)
+      Tables.parquet(parent, out.toString)
     } finally drainsInFlight.remove(view)
   }
 
@@ -1196,7 +1196,7 @@ object SparkEntry {
       graft.sources.Sinks.truncateReload(
         events.filter(col("event_id") % 5 === 0), tmp)
       graft.sources.Sinks.truncateReload(events, tmp)
-      s.read.parquet(tmp)
+      Tables.parquet(s, tmp)
     }),
     // K5 windowed delete+rebuild under the oracle gate: full partitioned
     // load with the last-7-days partitions CORRUPTED (n = -1), then a
@@ -1234,7 +1234,7 @@ object SparkEntry {
         events.filter(col("event_id") % 3 === 0), tmp)
       graft.sources.Sinks.appendIfAbsent(
         events.filter(col("event_id") % 2 === 0), tmp, Seq("event_id"))
-      s.read.parquet(tmp)
+      Tables.parquet(s, tmp)
     }),
     // K4 upsert DISK sink under the oracle gate (q11/q32 pin the merge
     // logic; this pins the staging-swap storage round-trip): load the
@@ -1253,7 +1253,7 @@ object SparkEntry {
         .withColumn("event_id", col("event_id") + 10000000L)
       graft.sources.Sinks.upsertReload(updates.unionByName(inserts),
         tmp, Seq("event_id"))
-      s.read.parquet(tmp)
+      Tables.parquet(s, tmp)
     }),
 
     // ---- sorts / set ops / arrays (T1-T3, U1, J3, A8, F12) ----
@@ -1918,7 +1918,7 @@ object SparkEntry {
       // restart compatibility is at stake. A long-lived production
       // stream sizes this to its key cardinality instead.
       ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val raw = ss.read.parquet(s"$d/events.parquet").schema
+      val raw = Tables.parquet(ss, s"$d/events.parquet").schema
       // a file stream ingests a DIRECTORY (the landing-zone shape);
       // the single-file table is linked into a scratch dir to stand in
       // for one arrived batch of files
@@ -1979,7 +1979,7 @@ object SparkEntry {
       val ss = s.newSession()
       // 8 state stores, same sizing rationale as x51
       ss.conf.set("spark.sql.shuffle.partitions", "8")
-      val raw = ss.read.parquet(s"$d/documents.parquet").schema
+      val raw = Tables.parquet(ss, s"$d/documents.parquet").schema
       val landing = sinkScratch("x52_landing")
       linkIntoLanding(landing, java.nio.file.Paths.get(d, "documents.parquet"))
       // synthetic event time BOUNDED to one day: ts only orders state

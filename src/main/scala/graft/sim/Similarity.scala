@@ -594,7 +594,8 @@ object Similarity {
     * (refined fine centroids with their inherited coarse cell
     *  `(cid, fvec, ccid)`,
     *  vector→coarse assignment `(nid, nvec, ccid)`,
-    *  final cell-restricted fine assignment `(nid, nvec, cid)`),
+    *  final cell-restricted fine assignment `(nid, nvec, cid)`,
+    *  the corpus size n it counted to size its exchanges),
     * the first and last localCheckpoint-pinned (each feeds ≥2
     * downstream consumers in every caller).
     *
@@ -614,7 +615,7 @@ object Similarity {
     */
   private[graft] def hierIntModel(emb: DataFrame, idCol: String,
                                   vecCol: String, nlist: Int, ncoarse: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame, Long) = {
     val corpus = idVecs(emb, idCol, vecCol, "n", asLong)
     val fineSeeds = knuthSeeds(corpus, nlist, "fvec")
     // the coarse seeds are by construction the PREFIX of the fine seeds
@@ -677,7 +678,7 @@ object Similarity {
     val refined = lloydFloorMean(assignFine(fineCells), "fvec")
       .join(fineCells.select("cid", "ccid"), Seq("cid"))
       .localCheckpoint(true)
-    (refined, vCell, assignFine(refined).localCheckpoint(true))
+    (refined, vCell, assignFine(refined).localCheckpoint(true), n)
   }
 
   /** Semantic deduplication (SemDeDup — Abbas et al., "SemDeDup: Data-
@@ -772,9 +773,8 @@ object Similarity {
       case CellShape.Flat(nl) => (nl, 1)
       case CellShape.Hier(nl, nc) => (nl, nc)
     }
-    val (refined, vCell, assigned) = hierIntModel(emb, idCol, vecCol,
+    val (refined, vCell, assigned, n) = hierIntModel(emb, idCol, vecCol,
       nlist, ncoarse)
-    val n = vCell.count() // pinned blocks — one cheap job
     val finePerCoarse = math.max(1L, nlist.toLong / math.max(1, ncoarse))
     // probe derivation: NARROW rank rows (qid, cid, csim) through the
     // volume-spread top-nprobe window — qvec rejoins from the pinned

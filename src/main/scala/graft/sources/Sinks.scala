@@ -58,6 +58,9 @@ object Sinks {
     * call refuses to bootstrap-over them instead of silently truncating
     * history. (A real lakehouse would use a transactional table format;
     * this keeps the same read-modify-write semantics on plain parquet.)
+    *
+    * The target is read through `graft.Tables.parquet`: its schema comes
+    * from one footer on the driver, so the read starts no schema job.
     */
   def upsertReload(incoming: DataFrame, path: String, keys: Seq[String]): Unit = {
     val spark = incoming.sparkSession
@@ -84,7 +87,7 @@ object Sinks {
     val batch = incoming.dropDuplicates(keys)
     if (!fs.exists(p)) return truncateReload(batch, path)
     graft.ops.Incremental
-      .upsertByKey(spark.read.parquet(path), batch, keys)
+      .upsertByKey(graft.Tables.parquet(spark, path), batch, keys)
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
     require(fs.rename(p, backup), s"could not move $p aside")
     require(fs.rename(staging, p), s"could not land $staging at $p")
@@ -95,6 +98,12 @@ object Sinks {
     * Bootstraps ONLY when the target genuinely does not exist — any
     * other read failure (corrupt footer, permissions, transient FS
     * error) propagates instead of silently overwriting history.
+    *
+    * The target's keys are read through `graft.Tables.parquet` (schema
+    * from one footer, no schema job) and are NOT de-duplicated: a
+    * left-anti join never multiplies its left rows, so a key the target
+    * holds twice still excludes its incoming rows exactly once, and a
+    * `distinct()` would only add a shuffle stage.
     */
   def appendIfAbsent(incoming: DataFrame, existingPath: String,
                      keys: Seq[String]): Unit = {
@@ -102,8 +111,8 @@ object Sinks {
     val path = new org.apache.hadoop.fs.Path(existingPath)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return truncateReload(incoming, existingPath)
-    val existing = spark.read.parquet(existingPath)
-      .select(keys.map(col): _*).distinct()
+    val existing = graft.Tables.parquet(spark, existingPath)
+      .select(keys.map(col): _*)
     incoming.join(existing, keys, "left_anti")
       .write.mode(SaveMode.Append).parquet(existingPath)
   }

@@ -621,7 +621,7 @@ object Retrieval {
     try {
       val toks = stageDir.fold(tokens) { dir =>
         tokens.write.mode("overwrite").parquet(dir)
-        corpus.sparkSession.read.parquet(dir)
+        graft.Tables.parquet(corpus.sparkSession, dir)
       }
       val results = (0 until batches).map { bi =>
         val predB = queryPred &&

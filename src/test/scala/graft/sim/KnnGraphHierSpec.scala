@@ -35,7 +35,7 @@ class KnnGraphHierSpec extends SparkSpec {
     for (nlist <- Seq(2, 5, 8)) {
       val (flatCents, flatAssign) =
         Similarity.ivfIntModel(emb, "doc_id", "embedding", nlist)
-      val (hierCents, _, hierAssign) =
+      val (hierCents, _, hierAssign, _) =
         Similarity.hierIntModel(emb, "doc_id", "embedding", nlist, ncoarse = 1)
       assert(rows(hierCents, "cid", "fvec") == rows(flatCents, "cid", "cvec"),
         s"refined centroids diverge at nlist=$nlist")

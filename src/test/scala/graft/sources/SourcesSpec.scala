@@ -85,6 +85,16 @@ class SourcesSpec extends SparkSpec {
     assert(out == Set((1, "a"), (2, "b"), (3, "c")))
   }
 
+  test("appendIfAbsent excludes a key the target holds twice, multiplying no row") {
+    val dir = tmp() + "/dupkey"
+    Sinks.truncateReload(Seq((1, "a"), (1, "a2"), (2, "b")).toDF("k", "v"), dir)
+    Sinks.appendIfAbsent(
+      Seq((1, "NEW"), (1, "NEW2"), (3, "c")).toDF("k", "v"), dir, Seq("k"))
+    val out = spark.read.parquet(dir).collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq.sorted
+    assert(out == Seq((1, "a"), (1, "a2"), (2, "b"), (3, "c")))
+  }
+
   test("surrogate ids are contiguous and deterministic; child table references parent") {
     val parents = Seq(("Rex", Seq("beef", "chicken")), ("Mia", Seq("tuna")))
       .toDF("name", "foods")

@@ -28,9 +28,11 @@ object NearDup {
     * tokens produce no shingles (mirrors the oracle's explicit guard).
     */
   def shingles(df: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame =
-    shinglesFromToks(
-      df.select(col(idCol).as("id"),
-        TextAnalysis.tokens(col(textCol)).as("toks")), k)
+    shinglesFromToks(tokenized(df, idCol, textCol), k)
+
+  /** The `(id, toks)` frame every `…FromToks` core takes. */
+  private def tokenized(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("toks"))
 
   /** [[shingles]] over an ALREADY-TOKENIZED `(id, toks)` frame — the
     * seam that lets a multi-family consumer (the x58 drift gate, the
@@ -39,11 +41,17 @@ object NearDup {
     * (round 18; previously each family re-ran the tokenizer per pass).
     */
   def shinglesFromToks(toks: DataFrame, k: Int): DataFrame =
+    kGrams(toks, k).distinct()
+
+  /** Every word k-gram occurrence of an `(id, toks)` frame: (id,
+    * shingle), one row per window, before any de-duplication. Docs
+    * shorter than k tokens produce none.
+    */
+  private def kGrams(toks: DataFrame, k: Int): DataFrame =
     toks.filter(size(col("toks")) >= k)
       .select(col("id"), explode(
         transform(sequence(lit(1), size(col("toks")) - (k - 1)),
           i => concat_ws(" ", slice(col("toks"), i, lit(k))))).as("shingle"))
-      .distinct()
 
   /** Distinct character n-grams per doc as an inverted index —
     * (id, shingle) like `shingles`, but over characters instead of word
@@ -176,12 +184,7 @@ object NearDup {
     */
   def dupGramProfile(df: DataFrame, idCol: String, textCol: String,
                      k: Int = 8): DataFrame = {
-    val toks = TextAnalysis.tokens(col(textCol))
-    val sh = df.select(col(idCol).as("id"), toks.as("toks"))
-      .filter(size(col("toks")) >= k)
-      .select(col("id"), explode(
-        transform(sequence(lit(1), size(col("toks")) - (k - 1)),
-          i => concat_ws(" ", slice(col("toks"), i, lit(k))))).as("shingle"))
+    val sh = kGrams(tokenized(df, idCol, textCol), k)
       .select(col("id"), portableBase(col("shingle")).as("gk"))
       .distinct()
     val freq = sh.groupBy("gk").agg(count(lit(1)).as("df"))
@@ -461,9 +464,7 @@ object NearDup {
 
   def simhash(df: DataFrame, idCol: String, textCol: String,
               portable: Boolean = false): DataFrame =
-    simhashFromToks(
-      df.select(col(idCol).as("id"),
-        TextAnalysis.tokens(col(textCol)).as("toks")), portable)
+    simhashFromToks(tokenized(df, idCol, textCol), portable)
 
   /** Per-family bit-sum aggregate columns (prefix disambiguates when two
     * families share one aggregation) and the sign-bit packing over them.
@@ -518,20 +519,11 @@ object NearDup {
         packBits(simhashBits(false), "x_").as("sim_prod"))
   }
 
-
   /** The (id, simhash, chunk_id, chunk_val) chunk-banded inverted index
-    * both simhash consumers join on — hot-cap applied.
-    */
-  private def simhashBanded(df: DataFrame, idCol: String, textCol: String,
-                            maxBucketSize: Option[Int],
-                            cacheBands: Boolean,
-                            portable: Boolean): DataFrame =
-    simhashBandedSig(simhash(df, idCol, textCol, portable = portable),
-      maxBucketSize, cacheBands, portable)
-
-  /** The chunk-banding step over a prebuilt `(id, simhash)` signature
-    * frame — split out (round 18) so the x58 drift gate can band both
-    * hash families from one shared signature aggregate.
+    * over a prebuilt `(id, simhash)` signature frame, hot-cap applied —
+    * what the pair and candidate joins read. Taking signatures (round
+    * 18) lets the x58 drift gate band both hash families from one
+    * shared signature aggregate.
     */
   private[graft] def simhashBandedSig(sig: DataFrame,
                                       maxBucketSize: Option[Int],
@@ -571,8 +563,8 @@ object NearDup {
                    cacheBands: Boolean = false,
                    probePred: Option[Column] = None,
                    portable: Boolean = false): DataFrame =
-    pairsOfBanded(simhashBanded(df, idCol, textCol, maxBucketSize,
-      cacheBands, portable), maxHamming, probePred)
+    simhashPairsFromToks(tokenized(df, idCol, textCol), maxHamming,
+      maxBucketSize, cacheBands, probePred, portable)
 
   /** [[simhashPairs]] over an ALREADY-TOKENIZED `(id, toks)` frame —
     * the shared-tokenize seam (the x34 gate tokenizes the corpus once
@@ -601,18 +593,10 @@ object NearDup {
       .distinct()
   }
 
-  /** Chunk-banded CANDIDATE pairs of the SimHash path, before the
-    * Hamming filter — the simhash analogue of [[minhashCandidatesOver]]
-    * for the x58 production-vs-portable bucket-structure drift gate.
-    */
-  def simhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        maxBucketSize: Option[Int] = None,
-                        portable: Boolean = false): DataFrame =
-    candidatesOfBanded(simhashBanded(df, idCol, textCol, maxBucketSize,
-      cacheBands = false, portable = portable))
-
-  /** [[simhashCandidates]] over a prebuilt `(id, simhash)` signature
-    * frame — the shared-signature seam for the x58 drift gate.
+  /** Chunk-banded CANDIDATE pairs of the SimHash path over a prebuilt
+    * `(id, simhash)` signature frame, before the Hamming filter — the
+    * simhash analogue of [[minhashCandidatesOver]] for the x58
+    * production-vs-portable bucket-structure drift gate.
     */
   def simhashCandidatesFromSig(sig: DataFrame,
                                maxBucketSize: Option[Int] = None,

@@ -38,7 +38,7 @@ object Bm25ScaleProbe {
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val n = docs.count()
-    // the catalog's fixed-count ~40-query sample (SparkEntry's
+    // the catalog's fixed-count ~40-query sample (catalog.Shared.fixedCountPred's
     // portableBase range test, replicated)
     val pred = graft.neardup.NearDup.portableBase(
       col("doc_id").cast("string")) <

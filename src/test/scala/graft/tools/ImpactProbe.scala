@@ -39,7 +39,7 @@ object ImpactProbe {
     })
     def docs: DataFrame = spark.read.parquet(s"$dir/documents.parquet")
     val n = docs.count()
-    // SparkEntry.fixedCountPred's spelling (private there), ~40 queries
+    // catalog.Shared.fixedCountPred's spelling (catalog-private there), ~40 queries
     val buckets = math.max(1L, n / 40L)
     val pred = graft.neardup.NearDup.portableBase(col("doc_id").cast("string")) <
       lit((1L << 60) / buckets)

@@ -40,7 +40,7 @@ class ScaleGenV2Spec extends SparkSpec {
     // the round-11 lesson: ScaleGen v1's decimal-lattice replica ids
     // aliased the old linear bucket predicate 27x over target — v2 ids
     // must keep hash-derived sampling within Poisson noise of target
-    // (the predicate below is SparkEntry.fixedCountPred's spelling)
+    // (the predicate below is catalog.Shared.fixedCountPred's spelling)
     val target = 40L
     val buckets = math.max(1L, docs.count() / target)
     val pred = graft.neardup.NearDup

@@ -19,18 +19,66 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private val warmDir = "/root/testdata/sf0.001"
 
-  /** The `local[N]` core count Bench, Verify and Plans size their
-    * session with: SPARK_GRAFT_CPUS when set, else 32 (the bench
-    * protocol's `local[32]`). A value that is not a positive integer
-    * fails here, naming the variable and the value, instead of as a
-    * bare NumberFormatException or a master-URL error.
+  /** A positive-integer environment setting: `default` when unset. A
+    * value that is not a positive integer fails here, naming the
+    * variable and the value, instead of as a bare NumberFormatException
+    * or a Spark conf error.
     */
-  private[graft] def localCores(env: Map[String, String] = sys.env): Int =
-    env.get("SPARK_GRAFT_CPUS").fold(32) { v =>
+  private def positiveInt(env: Map[String, String], name: String,
+                          default: Int): Int =
+    env.get(name).fold(default) { v =>
       v.trim.toIntOption.filter(_ > 0).getOrElse(
         throw new IllegalArgumentException(
-          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+          s"$name must be a positive integer, got '$v'"))
     }
+
+  /** The `local[N]` core count of [[localSession]]: SPARK_GRAFT_CPUS
+    * when set, else 32 (the bench protocol's `local[32]`).
+    */
+  private[graft] def localCores(env: Map[String, String] = sys.env): Int =
+    positiveInt(env, "SPARK_GRAFT_CPUS", 32)
+
+  /** Timed reps per query: SPARK_GRAFT_REPS when set, else 3. */
+  private[graft] def timedReps(env: Map[String, String] = sys.env): Int =
+    positiveInt(env, "SPARK_GRAFT_REPS", 3)
+
+  /** The conf of the one local session Bench, Verify and Plans run on,
+    * so the verified and audited plans are the benched plans.
+    *
+    * Shuffle sizing: 32 initial shuffle partitions by DEFAULT. The
+    * SPARK_GRAFT_INITIAL_PARTS knob is an ESCAPE HATCH no shipped
+    * protocol currently sets: round 12 shipped 256 as the unconditional
+    * default on the claim that AQE coalescing keeps sf0.1 plans shaped —
+    * the same-boot min-of-3 A/B (round 13, PLANS.md) refuted it (AQE
+    * does not refund checkpoint materialization or per-stage overhead in
+    * iterative/many-stage queries: x22 14.1s@256 vs 5.6s@32 — a 35%
+    * suite regression), and the 1000x sort spill that originally
+    * motivated 256 is gone at HEAD (x81 174.9s@32 vs 180.1s@256), so the
+    * scale sweeps run at 32 too. On a real cluster the equivalent
+    * decision is per-job sizing (initialPartitionNum ~ a few x total
+    * cores for big inputs), not one global constant. The oracle results
+    * are knob-invariant by design (fixed-point integer sums,
+    * deterministic tiebreaks) — KnobInvarianceSpec pins that claim at
+    * initialPartitionNum 1 vs 512.
+    */
+  private[graft] def localConf(env: Map[String, String] = sys.env)
+      : Seq[(String, String)] = {
+    val cpus = localCores(env).toString
+    Seq("spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        positiveInt(env, "SPARK_GRAFT_INITIAL_PARTS", 32).toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false")
+  }
+
+  /** The session of [[localConf]]. `Smoke` keeps a default-config
+    * session instead, because it replicates the driver's.
+    */
+  private[graft] def localSession(): SparkSession =
+    localConf().foldLeft(SparkSession.builder()) { case (b, (k, v)) =>
+      b.config(k, v)
+    }.getOrCreate()
 
   /** The record's self-describing protocol fragment — extracted so
     * BenchProtocolSpec can pin that EVERY future BENCH record carries
@@ -113,29 +161,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val ticks0 = cpuTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = localCores().toString
-    // shuffle sizing: 32 initial shuffle partitions by DEFAULT. The env
-    // knob is an ESCAPE HATCH no shipped protocol currently sets: round
-    // 12 shipped 256 as the unconditional default on the claim that AQE
-    // coalescing keeps sf0.1 plans shaped — the same-boot min-of-3 A/B
-    // (round 13, PLANS.md) refuted it (AQE does not refund checkpoint
-    // materialization or per-stage overhead in iterative/many-stage
-    // queries: x22 14.1s@256 vs 5.6s@32 — a 35% suite regression), and
-    // the 1000x sort spill that originally motivated 256 is gone at
-    // HEAD (x81 174.9s@32 vs 180.1s@256), so the scale sweeps run at
-    // 32 too. On a real cluster the equivalent decision is per-job
-    // sizing (initialPartitionNum ~ a few x total cores for big
-    // inputs), not one global constant.
-    val initialParts =
-      sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = localSession()
     spark.sparkContext.setLogLevel("WARN")
     // optional filter: `runMain graft.Bench x21 q06` times only those.
     // SPARK_GRAFT_EXCLUDE (comma-separated prefixes) drops queries from
@@ -172,7 +198,7 @@ object Bench {
     // outliers (observed x22 14.6s vs 3.9s on consecutive identical
     // full runs) — the min is the honest per-query cost. Set
     // SPARK_GRAFT_REPS=1 for a quick dev pass.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    val reps = timedReps()
     // per-query peak scratch (MB): a 2s-interval daemon sampler brackets
     // each query's reps, plus an end-of-rep sample (short queries may
     // finish between ticks) — so spill walls are TRACKED per query
@@ -219,7 +245,8 @@ object Bench {
         // failures are reported as -1, never as a fast "success"
         val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         // cache hygiene, OUTSIDE the timed window: queries that persist
-        // multi-consumer frames (x02/x03/x22/x28/x31, x17, langIdNgram)
+        // multi-consumer frames (the near-dup family x02–x04p, x22, x28,
+        // x31, x33, x34 and x58; x17; langIdNgram)
         // would otherwise hand warm blocks to later queries in sorted run
         // order — and to every rep after the first (CacheManager matches
         // canonicalized plans) — cross-contaminating per-query times.

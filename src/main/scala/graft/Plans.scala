@@ -1,26 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints `explain("formatted")` for selected queries so
   * pushdown/pruning/join strategies can be inspected and tracked.
   * Usage: runMain graft.Plans [queryName ...] (default: a headline set).
   * SPARK_GRAFT_PLAN_DIR=<dir> additionally writes each query's plan to
   * <dir>/<query><SPARK_GRAFT_PLAN_SUFFIX>.txt (the optimization rounds'
-  * plans/rNN/<query>_{before,after}.txt deliverable). SPARK_GRAFT_CPUS
-  * sizes the session like Bench (default 32) so the audited plans are
-  * the benched plans.
+  * plans/rNN/<query>_{before,after}.txt deliverable). The session is
+  * Bench's (`Bench.localSession`: SPARK_GRAFT_CPUS, default 32, and the
+  * same shuffle sizing), so the audited plans are the benched plans.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = Bench.localCores().toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,24 +8,10 @@ object Verify {
     // optional extra args: dump only queries matching these prefixes
     // (dev iteration on one oracle); the driver always passes two args
     val only = args.drop(2)
-    // default 32 to match the driver's local[32] contract (and to exercise
-    // the catalog's partition-independence claims under real parallelism)
-    val cpus = Bench.localCores().toString
-    // same shuffle sizing as Bench (see the note there): default 32,
-    // raised only by the scale-sweep protocol via the env knob. The
-    // oracle results are knob-invariant by design (fixed-point integer
-    // sums, deterministic tiebreaks) — KnobInvarianceSpec pins that
-    // claim at initialPartitionNum 1 vs 512
-    val initialParts =
-      sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Bench's session: local[SPARK_GRAFT_CPUS] (default 32, the driver's
+    // local[32] contract, exercising the catalog's partition-independence
+    // claims under real parallelism) and the same shuffle sizing
+    val spark = Bench.localSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

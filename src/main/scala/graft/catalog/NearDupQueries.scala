@@ -314,10 +314,9 @@ private[graft] object NearDupQueries {
       """SELECT md5(lower(trim(text))) AS text_hash,
         |       min(doc_id) AS keeper_id, count(*) AS n_copies
         |FROM documents GROUP BY 1""".stripMargin)),
-    // cacheShingles: the shingle frame feeds sizes + both join sides;
-    // caching it trades one small persisted frame for two re-computations
-    // of the explode+distinct (plan-canonicalized, so repeated catalog
-    // runs reuse one cache entry).
+    // jaccardPairs pins its shingles and the df-capped index (NearDup's
+    // pinning rule): each feeds two steps, and pinning trades one small
+    // persisted frame for a re-run of the explode+distinct per reader.
     // maxDocFreq = wordShingleDfCap: word shingles shared by more docs
     // are dropped BEFORE the pair join (same Σ C(df,2) bound x31
     // applies to char grams — the uncapped char variant measured 874s
@@ -332,8 +331,7 @@ private[graft] object NearDupQueries {
     // Jaccard ratio matches NearDup.jaccardPairsOver's capped spelling
     Entry("x02_jaccard_pairs", (s, d) =>
       NearDup.jaccardPairs(docs(s, d), "doc_id", "text", k = wordShingleK,
-        threshold = mhThreshold, cacheShingles = true,
-        maxDocFreq = Some(wordShingleDfCap)), Sql(
+        threshold = mhThreshold, maxDocFreq = Some(wordShingleDfCap)), Sql(
       s"""WITH $cappedWordShingleCtes,
         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
         |inter AS (
@@ -363,7 +361,7 @@ private[graft] object NearDupQueries {
       NearDup.minhashLshPairs(docs(s, d), "doc_id", "text",
         k = wordShingleK, numHashes = mhNumHashes, bands = mhBands,
         threshold = mhThreshold, maxBucketSize = Some(mhBucketCap),
-        cacheShingles = true, cacheBands = true, portable = true), Sql(
+        portable = true), Sql(
       s"""WITH $minhashPortablePairCtes
         |SELECT doc_a, doc_b, jaccard FROM p""".stripMargin)),
     // portable = true: 60-bit md5-nibble signatures (NearDup.simhash) —
@@ -376,7 +374,7 @@ private[graft] object NearDupQueries {
     // 200-doc hot cap, and Hamming <= 8 verification as the Spark side
     Entry("x04_simhash_pairs", (s, d) =>
       NearDup.simhashPairs(docs(s, d), "doc_id", "text", maxHamming = 8,
-        maxBucketSize = Some(200), cacheBands = true, portable = true), Sql(
+        maxBucketSize = Some(200), portable = true), Sql(
       s"""WITH $simhashPortableCtes
         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
@@ -396,11 +394,10 @@ private[graft] object NearDupQueries {
     Entry("x03p_minhash_lsh_prod", (s, d) =>
       NearDup.minhashLshPairs(docs(s, d), "doc_id", "text",
         k = wordShingleK, numHashes = mhNumHashes, bands = mhBands,
-        threshold = mhThreshold, maxBucketSize = Some(mhBucketCap),
-        cacheShingles = true, cacheBands = true), RowsOnly),
+        threshold = mhThreshold, maxBucketSize = Some(mhBucketCap)), RowsOnly),
     Entry("x04p_simhash_prod", (s, d) =>
       NearDup.simhashPairs(docs(s, d), "doc_id", "text", maxHamming = 8,
-        maxBucketSize = Some(200), cacheBands = true), RowsOnly),
+        maxBucketSize = Some(200)), RowsOnly),
     // cross-twin drift gate for the production-hash paths: candidate-
     // pair counts of the murmur3/xxhash64 bucket structures (the x03p/
     // x04p defaults) must stay within a small factor of their portable
@@ -429,7 +426,9 @@ private[graft] object NearDupQueries {
       // aggregate — r17 ran three full tokenizer passes and two
       // separate simhash aggregations by construction. At 100 TB the
       // toks cache is corpus-sized (disk-backed), the right trade for
-      // a gate that runs four full-corpus aggregations over it.
+      // a gate that runs four full-corpus aggregations over it. Each
+      // count's capped banding pins its own band index (docs × bands
+      // rows; NearDup's pinning rule).
       val toks = dd.select(col("doc_id").as("id"),
         graft.text.TextAnalysis.tokens(col("text")).as("toks")).cache()
       val sh = NearDup.shinglesFromToks(toks, k = wordShingleK)
@@ -474,9 +473,12 @@ private[graft] object NearDupQueries {
     // substrings appear in nearly every doc and the uncapped pair join is
     // Σ C(df,2) — measured 874s vs ~2s at sf0.1
     Entry("x31_char_jaccard", (s, d) =>
+      // the char grams are the caller's frame to jaccardPairsOver, so
+      // they are pinned here: the df cap's aggregate and anti join both
+      // read them (jaccardPairsOver pins the capped index itself)
       NearDup.jaccardPairsOver(
-        NearDup.charShingles(docs(s, d), "doc_id", "text", n = 5),
-        threshold = 0.3, maxDocFreq = Some(charGramDfCap), cacheIndex = true), Sql(
+        NearDup.charShingles(docs(s, d), "doc_id", "text", n = 5).cache(),
+        threshold = 0.3, maxDocFreq = Some(charGramDfCap)), Sql(
       s"""WITH d AS (
         |  SELECT doc_id, lower(trim(text)) AS t FROM documents),
         |sh0 AS (
@@ -532,8 +534,7 @@ private[graft] object NearDupQueries {
             .select("doc_a", "doc_b"))
       val probe = Some(Sampling.hashBucket(col("id"), landedK) === 0)
       val lsh = NearDup.minhashLshPairsOver(sh, numHashes = 16, bands = 4,
-          threshold = 0.2, maxBucketSize = Some(200), cacheBands = true,
-          probePred = probe)
+          threshold = 0.2, maxBucketSize = Some(200), probePred = probe)
         .select("doc_a", "doc_b")
       recallGate(exact, lsh, Seq("doc_a", "doc_b"), 0.7)
     }, Sql(exactPairsGateSql)),
@@ -558,8 +559,7 @@ private[graft] object NearDupQueries {
             .select("doc_a", "doc_b"))
       val probe = Some(Sampling.hashBucket(col("id"), landedK) === 0)
       val sim = NearDup.simhashPairsFromToks(toks,
-          maxHamming = 8, maxBucketSize = Some(200), cacheBands = true,
-          probePred = probe)
+          maxHamming = 8, maxBucketSize = Some(200), probePred = probe)
         .select("doc_a", "doc_b")
       recallGate(exact, sim, Seq("doc_a", "doc_b"), 0.5)
     }, Sql(exactPairsGateSql)),
@@ -575,8 +575,7 @@ private[graft] object NearDupQueries {
     Entry("x22_dup_clusters", (s, d) =>
       NearDup.dupClusters(
         NearDup.jaccardPairs(docs(s, d), "doc_id", "text", k = wordShingleK,
-          threshold = mhThreshold, cacheShingles = true,
-          maxDocFreq = Some(wordShingleDfCap))), Sql(
+          threshold = mhThreshold, maxDocFreq = Some(wordShingleDfCap))), Sql(
       s"""WITH RECURSIVE $cappedWordShingleCtes,
         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
         |inter AS (
@@ -611,7 +610,7 @@ private[graft] object NearDupQueries {
         NearDup.minhashLshPairs(docs(s, d), "doc_id", "text",
           k = wordShingleK, numHashes = mhNumHashes, bands = mhBands,
           threshold = mhThreshold, maxBucketSize = Some(mhBucketCap),
-          cacheShingles = true, cacheBands = true, portable = true)), Sql(
+          portable = true)), Sql(
       s"""WITH RECURSIVE $minhashPortablePairCtes,
         |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
         |      UNION SELECT doc_b, doc_a FROM p),

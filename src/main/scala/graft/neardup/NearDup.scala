@@ -21,6 +21,23 @@ import graft.text.TextAnalysis
   *  - SimHash: one 64-bit signature per doc; banding on 16-bit chunks
   *    finds all pairs within Hamming distance 3·16-bit-chunk guarantee,
   *    verified exactly with bit_count(xor).
+  *
+  * Pinning rule: a function pins (`.cache()`s) a frame it derives itself
+  * when two or more of its own later steps read that frame; it never
+  * pins a frame its caller passed in. A step is one operator over the
+  * frame — an aggregate, an anti join, a join — so the two sides of one
+  * self-join, or one per-doc frame joined to both ends of a pair, are
+  * one read (the DuckDB twins spell each as one CTE). Under the rule:
+  *  - [[jaccardPairs]] and [[minhashLshPairs]] pin their shingles;
+  *  - [[jaccardPairsOver]] pins the df-capped index it derives when a
+  *    cap applies (sizes and the pair join read it), never its `sh`;
+  *  - the MinHash and SimHash banding pins its band index when a
+  *    hot-bucket cap applies (the hot aggregate and the anti join read
+  *    it, and the signature aggregate under it is the costly part).
+  * Pins are session-scoped: the session owner releases them with
+  * `spark.catalog.clearCache()` (README, "Cache lifecycle contract").
+  * A caller that shares one frame between several operators pins it
+  * itself. [[dupClusters]]' pins are scoped to its loop (see there).
   */
 object NearDup {
 
@@ -79,10 +96,13 @@ object NearDup {
     * resulting "Jaccard over discriminative grams" is the sharper
     * near-dup metric anyway; set sizes are computed on the SAME filtered
     * index so the ratio stays internally consistent (and the oracle
-    * replicates the cap). `cacheIndex` opts into caching the filtered
-    * index, which feeds sizes and both join sides.
-    */
-  /** `probePred` (optional, on column `id`) restricts the PROBE side of
+    * replicates the cap). The capped index feeds sizes and the pair
+    * join, so it is pinned (header rule); uncapped, the join reads the
+    * caller's `sh` as given — a caller that shares `sh` with another
+    * operator, or whose `sh` the cap's aggregate and anti join would
+    * both re-derive, pins it itself.
+    *
+    * `probePred` (optional, on column `id`) restricts the PROBE side of
     * the pair join — only pairs whose smaller id satisfies it are
     * produced. The recall gates use a fixed-count id sample here so
     * their exact-truth enumeration stays linear in corpus size (the
@@ -91,18 +111,13 @@ object NearDup {
     */
   def jaccardPairsOver(sh: DataFrame, threshold: Double,
                        maxDocFreq: Option[Int] = None,
-                       cacheIndex: Boolean = false,
                        probePred: Option[Column] = None): DataFrame = {
-    // with a df-cap, the raw index feeds the hot-gram aggregate AND the
-    // anti join — cache it so the (possibly expensive) extraction
-    // doesn't run once per consumer
-    val src = if (cacheIndex && maxDocFreq.isDefined) sh.cache() else sh
-    val filtered = maxDocFreq match {
-      case None => src
+    val idx = maxDocFreq match {
+      case None => sh
       case Some(cap) =>
-        val hot = src.groupBy("shingle").agg(count(lit(1)).as("__df"))
+        val hot = sh.groupBy("shingle").agg(count(lit(1)).as("__df"))
           .filter(col("__df") > cap).select("shingle")
-        src.join(hot, Seq("shingle"), "left_anti")
+        sh.join(hot, Seq("shingle"), "left_anti").cache()
     }
     // Fingerprint join keys: tried and REVERTED (round 18). A 64-bit
     // xxhash64(shingle) leading the pair join's key list — with the
@@ -117,7 +132,6 @@ object NearDup {
     // join from sharing the hot-cap aggregate's shingle partitioning.
     // Guide §1.1's "fresh implementation of the ideal plan is usually
     // slower" — the string-keyed join stays.
-    val idx = if (cacheIndex) filtered.cache() else filtered
     val sizes = idx.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val probe = probePred.map(idx.filter).getOrElse(idx)
     val inter = probe.as("a")
@@ -137,24 +151,16 @@ object NearDup {
 
   /** Exact pairwise Jaccard over the WORD-shingle inverted index; see
     * `jaccardPairsOver` (and `charShingles` for the character-gram
-    * variant). Output: doc_a < doc_b, n_common, jaccard.
+    * variant). Output: doc_a < doc_b, n_common, jaccard. The shingles
+    * are pinned: the cap's hot-gram aggregate and anti join (uncapped:
+    * the sizes aggregate and the pair join) both read them.
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 3, threshold: Double = 0.5,
-                   cacheShingles: Boolean = false,
                    maxDocFreq: Option[Int] = None,
-                   probePred: Option[Column] = None): DataFrame = {
-    // cacheShingles: opt-in for long-lived jobs that manage the cache
-    // lifecycle; default off so repeated catalog runs don't leak blocks.
-    // The same opt-in now also caches the df-capped index inside
-    // jaccardPairsOver (round 18): uncached, the hot-gram aggregate +
-    // anti-join subtree replicated into every consumer — the x02 plan
-    // ran it three times (sizes + both pair-join sides) per rep.
-    val shRaw = shingles(df, idCol, textCol, k)
-    val sh = if (cacheShingles) shRaw.cache() else shRaw
-    jaccardPairsOver(sh, threshold, maxDocFreq, cacheIndex = cacheShingles,
-      probePred = probePred)
-  }
+                   probePred: Option[Column] = None): DataFrame =
+    jaccardPairsOver(shingles(df, idCol, textCol, k).cache(), threshold,
+      maxDocFreq, probePred)
 
   /** Per-document duplicated-n-gram profile — the cut signal behind
     * exact-substring dedup ("Deduplicating Training Data Makes Language
@@ -292,34 +298,28 @@ object NearDup {
     * dominates the job; a bucket that hot carries no near-dup signal —
     * dropping it is the standard LSH df-cap). None = exact banding
     * (default, used by the oracle-checked query).
+    *
+    * The shingles are pinned: the signatures and the verification's
+    * shingle sets both read them.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       k: Int = 3, numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5,
                       maxBucketSize: Option[Int] = None,
-                      cacheShingles: Boolean = false,
-                      cacheBands: Boolean = false,
-                      portable: Boolean = false): DataFrame = {
-    val shRaw = shingles(df, idCol, textCol, k)
-    val sh = if (cacheShingles) shRaw.cache() else shRaw
-    minhashLshPairsOver(sh, numHashes, bands, threshold, maxBucketSize,
-      cacheBands, portable = portable)
-  }
+                      portable: Boolean = false): DataFrame =
+    minhashLshPairsOver(shingles(df, idCol, textCol, k).cache(), numHashes,
+      bands, threshold, maxBucketSize, portable = portable)
 
-  /** MinHash+LSH over a prebuilt (id, shingle) inverted index — lets a
-    * caller (e.g. the x33 recall gate) share ONE shingle frame between
-    * the exact-Jaccard baseline and the banded scale path.
-    */
   /** Just the banded CANDIDATE pairs (doc_a, doc_b) of the MinHash+LSH
     * path — the pair set the bucket structure produces BEFORE exact-
     * Jaccard verification. Public so the x58 drift gate can compare the
     * production-hash and portable bucket structures by candidate mass
     * (bucket skew inflates THIS count long before it changes verified
-    * recall).
+    * recall). With a `maxBucketSize` cap the band index is pinned: the
+    * hot-bucket aggregate and the anti join both read it.
     */
   def minhashCandidatesOver(sh: DataFrame, numHashes: Int = 16, bands: Int = 4,
                             maxBucketSize: Option[Int] = None,
-                            cacheBands: Boolean = false,
                             probePred: Option[Column] = None,
                             portable: Boolean = false): DataFrame = {
     val rows = numHashes / bands
@@ -327,27 +327,25 @@ object NearDup {
     // (band_id, band_hash) inverted index: ONE equi-join on the composite
     // bucket key replaces per-band self-joins + union — one shuffle, and
     // the band id rides in the join key so buckets from different bands
-    // never collide. cacheBands (opt-in, same lifecycle contract as
-    // cacheShingles): the frame is tiny (docs × bands) but feeds the
-    // hot-bucket aggregate, the anti join, and BOTH self-join sides —
-    // uncached, the signature aggregation runs once per consumer.
+    // never collide. The frame is tiny (docs × bands); unpinned, the
+    // signature aggregation under it would run once per reader.
     if (portable) require(rows <= 4,
       "portable band keys support at most 4 rows per band (62-bit packing bound)")
-    val bandedRaw = sig.select(col("id"), posexplode(array((0 until bands).map { b =>
+    val bandedAll = sig.select(col("id"), posexplode(array((0 until bands).map { b =>
       val slots = (b * rows until (b + 1) * rows).map(i => col(s"mh_$i"))
       // portable band key: integer polynomial over the slot values — the
       // oracle rebuilds it with the same literal multipliers; murmur of
       // the slots otherwise (production default)
       if (portable) portableBandKey(slots) else hash(slots: _*)
     }: _*)).as(Seq("band_id", "band_hash")))
-    val bandedAll = if (cacheBands) bandedRaw.cache() else bandedRaw
     val banded = maxBucketSize match {
       case None => bandedAll
       case Some(cap) =>
-        val hot = bandedAll.groupBy("band_id", "band_hash")
+        val pinned = bandedAll.cache()
+        val hot = pinned.groupBy("band_id", "band_hash")
           .agg(count(lit(1)).as("__bn")).filter(col("__bn") > cap)
           .select("band_id", "band_hash")
-        bandedAll.join(hot, Seq("band_id", "band_hash"), "left_anti")
+        pinned.join(hot, Seq("band_id", "band_hash"), "left_anti")
     }
     // probePred (gate use): restricting the a-side to a sampled id set
     // cannot change which SAMPLED pairs band together — banding is a
@@ -362,16 +360,17 @@ object NearDup {
 
   /** MinHash+LSH over a prebuilt (id, shingle) inverted index — lets a
     * caller (e.g. the x33 recall gate) share ONE shingle frame between
-    * the exact-Jaccard baseline and the banded scale path.
+    * the exact-Jaccard baseline and the banded scale path. The
+    * signatures and the verification sets both read `sh`, so a caller
+    * pins it (as [[minhashLshPairs]] does).
     */
   def minhashLshPairsOver(sh: DataFrame, numHashes: Int = 16, bands: Int = 4,
                           threshold: Double = 0.5,
                           maxBucketSize: Option[Int] = None,
-                          cacheBands: Boolean = false,
                           probePred: Option[Column] = None,
                           portable: Boolean = false): DataFrame = {
     val candidates = minhashCandidatesOver(sh, numHashes, bands,
-      maxBucketSize, cacheBands, probePred, portable)
+      maxBucketSize, probePred, portable)
     // Verify candidates with exact Jaccard — via per-doc shingle SETS and
     // array_intersect, not a re-join on the shingle inverted index: each
     // candidate row carries two bounded arrays (doc-length-bounded), so
@@ -396,8 +395,11 @@ object NearDup {
     * pipeline. Output: doc_id, cluster_id.
     *
     * Alternating min-label propagation: labels start as self, each round
-    * joins labels across edges and keeps the min, stopping at fixpoint
-    * (or `maxIter`). Rounds needed = component diameter — near-dup
+    * joins labels across edges and keeps the min, stopping at fixpoint.
+    * A run whose round `maxIter` still changes a label throws an
+    * IllegalStateException naming `maxIter` and how many ids changed in
+    * that round — unconverged labels are never returned as clusters.
+    * Rounds needed = component diameter — near-dup
     * clusters are shallow (dups of dups of one original), so a handful
     * of rounds closes them. The driver loop is CONTROL only (a
     * per-round emptiness check); labels and edges stay distributed —
@@ -413,6 +415,10 @@ object NearDup {
     // so a cache-based loop silently recomputes every earlier round —
     // checkpointing cuts the lineage instead, keeping round i's cost
     // independent of i (the standard iterative-algorithm discipline).
+    // Both pins are scoped to this call: `p` is released as soon as the
+    // eager edge checkpoint holds its rows, and checkpoints are no
+    // cache entries, so nothing stays in the session's cache.
+    require(maxIter >= 1, s"dupClusters: maxIter must be >= 1, got $maxIter")
     val p = pairs.select("doc_a", "doc_b").cache()
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
@@ -445,9 +451,14 @@ object NearDup {
           min(when(col("own"), col("label"))).as("old"))
         .localCheckpoint(true)
       // scans only the just-materialized checkpoint blocks — no join job
-      converged = next.filter(col("label") =!= col("old")).isEmpty
+      val changed = next.filter(col("label") =!= col("old"))
+      converged = changed.isEmpty
       labels = next.select("id", "label")
       i += 1
+      // the count runs only here, so a converged run starts no extra job
+      if (!converged && i == maxIter) throw new IllegalStateException(
+        s"dupClusters: no fixpoint after maxIter = $maxIter rounds; " +
+          s"${changed.count()} ids changed their label in the last round")
     }
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
@@ -523,33 +534,32 @@ object NearDup {
     * over a prebuilt `(id, simhash)` signature frame, hot-cap applied —
     * what the pair and candidate joins read. Taking signatures (round
     * 18) lets the x58 drift gate band both hash families from one
-    * shared signature aggregate.
+    * shared signature aggregate. With a `maxBucketSize` cap the chunk
+    * index is pinned, as in the MinHash banding.
     */
-  private[graft] def simhashBandedSig(sig: DataFrame,
-                                      maxBucketSize: Option[Int],
-                                      cacheBands: Boolean,
-                                      portable: Boolean): DataFrame = {
+  private def simhashBandedSig(sig: DataFrame, maxBucketSize: Option[Int],
+                               portable: Boolean): DataFrame = {
     // (chunk_id, chunk_value) inverted index → single equi-join, as in
     // the MinHash banding; optional hot-bucket cap for low-entropy data.
-    // cacheBands: same multi-consumer rationale as the MinHash banding —
-    // the 64-column bit-sum signature aggregate is the expensive parent.
+    // The 64-column bit-sum signature aggregate is the expensive parent
+    // the pin saves re-running.
     // Chunk width follows the signature width (4 × 16 bits, or 4 × 15 in
     // portable mode) — the any-pair-within-Hamming-3-shares-a-chunk
     // guarantee is the 4-way pigeonhole either way.
     val chunkBits = simhashBits(portable) / 4
     val chunkMask = (1L << chunkBits) - 1
-    val bandedRaw = sig.select(col("id"), col("simhash"),
+    val bandedAll = sig.select(col("id"), col("simhash"),
       posexplode(array((0 until 4).map(c =>
         shiftright(col("simhash"), c * chunkBits).bitwiseAND(lit(chunkMask))): _*))
         .as(Seq("chunk_id", "chunk_val")))
-    val bandedAll = if (cacheBands) bandedRaw.cache() else bandedRaw
     maxBucketSize match {
       case None => bandedAll
       case Some(cap) =>
-        val hot = bandedAll.groupBy("chunk_id", "chunk_val")
+        val pinned = bandedAll.cache()
+        val hot = pinned.groupBy("chunk_id", "chunk_val")
           .agg(count(lit(1)).as("__bn")).filter(col("__bn") > cap)
           .select("chunk_id", "chunk_val")
-        bandedAll.join(hot, Seq("chunk_id", "chunk_val"), "left_anti")
+        pinned.join(hot, Seq("chunk_id", "chunk_val"), "left_anti")
     }
   }
 
@@ -560,11 +570,10 @@ object NearDup {
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 6,
                    maxBucketSize: Option[Int] = None,
-                   cacheBands: Boolean = false,
                    probePred: Option[Column] = None,
                    portable: Boolean = false): DataFrame =
     simhashPairsFromToks(tokenized(df, idCol, textCol), maxHamming,
-      maxBucketSize, cacheBands, probePred, portable)
+      maxBucketSize, probePred, portable)
 
   /** [[simhashPairs]] over an ALREADY-TOKENIZED `(id, toks)` frame —
     * the shared-tokenize seam (the x34 gate tokenizes the corpus once
@@ -572,11 +581,10 @@ object NearDup {
     */
   def simhashPairsFromToks(toks: DataFrame, maxHamming: Int = 6,
                            maxBucketSize: Option[Int] = None,
-                           cacheBands: Boolean = false,
                            probePred: Option[Column] = None,
                            portable: Boolean = false): DataFrame =
     pairsOfBanded(simhashBandedSig(simhashFromToks(toks, portable),
-      maxBucketSize, cacheBands, portable), maxHamming, probePred)
+      maxBucketSize, portable), maxHamming, probePred)
 
   private def pairsOfBanded(banded: DataFrame, maxHamming: Int,
                             probePred: Option[Column]): DataFrame = {
@@ -601,8 +609,7 @@ object NearDup {
   def simhashCandidatesFromSig(sig: DataFrame,
                                maxBucketSize: Option[Int] = None,
                                portable: Boolean = false): DataFrame =
-    candidatesOfBanded(simhashBandedSig(sig, maxBucketSize,
-      cacheBands = false, portable = portable))
+    candidatesOfBanded(simhashBandedSig(sig, maxBucketSize, portable))
 
   private def candidatesOfBanded(banded: DataFrame): DataFrame =
     banded.as("a").join(banded.as("b"),

@@ -140,16 +140,12 @@ object TextAnalysis {
     */
   def langIdNgram(df: DataFrame, idCol: String, textCol: String,
                   labelCol: String, n: Int = 3,
-                  profileSize: Int = 200,
-                  cacheGrams: Boolean = true): DataFrame = {
-    // cacheGrams follows the same opt-out lifecycle contract as
-    // NearDup's cacheShingles/cacheIndex: the cached gram frame feeds
-    // BOTH training and scoring (the whole point — one corpus pass), and
+                  profileSize: Int = 200): DataFrame = {
+    // the gram frame feeds BOTH training and scoring (the whole point —
+    // one corpus pass), so it is pinned under NearDup's pinning rule;
     // releasing it is the session owner's job (Bench/Verify clearCache
-    // between queries). Long-lived sessions that can't manage the cache
-    // pass cacheGrams = false and pay a second gram pass instead.
-    val triRaw = docNgrams(df, idCol, textCol, labelCol, n)
-    val tri = if (cacheGrams) triRaw.cache() else triRaw
+    // between queries)
+    val tri = docNgrams(df, idCol, textCol, labelCol, n).cache()
     classifyNgram(tri, trainNgramProfiles(tri, profileSize))
   }
 

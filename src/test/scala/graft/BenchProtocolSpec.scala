@@ -76,4 +76,31 @@ class BenchProtocolSpec extends AnyFunSuite {
         e.getMessage.contains(s"'$bad'"), e.getMessage)
     }
   }
+
+  test("Bench, Verify and Plans share one local session conf, and its " +
+      "integer settings fail naming the variable and the value") {
+    assert(Bench.localConf(Map.empty) == Seq(
+      "spark.master" -> "local[32]",
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "32",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false"))
+    val conf = Bench.localConf(Map("SPARK_GRAFT_CPUS" -> "4",
+      "SPARK_GRAFT_INITIAL_PARTS" -> "256")).toMap
+    assert(conf("spark.master") == "local[4]")
+    assert(conf("spark.sql.shuffle.partitions") == "4")
+    assert(conf("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "256")
+    assert(Bench.timedReps(Map.empty) == 3)
+    assert(Bench.timedReps(Map("SPARK_GRAFT_REPS" -> "1")) == 1)
+    for (bad <- Seq("", "abc", "0", "-1", "2.5")) {
+      val parts = intercept[IllegalArgumentException](
+        Bench.localConf(Map("SPARK_GRAFT_INITIAL_PARTS" -> bad)))
+      assert(parts.getMessage.contains("SPARK_GRAFT_INITIAL_PARTS") &&
+        parts.getMessage.contains(s"'$bad'"), parts.getMessage)
+      val reps = intercept[IllegalArgumentException](
+        Bench.timedReps(Map("SPARK_GRAFT_REPS" -> bad)))
+      assert(reps.getMessage.contains("SPARK_GRAFT_REPS") &&
+        reps.getMessage.contains(s"'$bad'"), reps.getMessage)
+    }
+  }
 }

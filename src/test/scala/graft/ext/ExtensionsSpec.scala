@@ -183,6 +183,20 @@ class ExtensionsSpec extends SparkSpec {
     assert(c.toSeq == Seq(1L))
   }
 
+  test("dupClusters fails instead of returning labels that did not converge") {
+    import spark.implicits._
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("doc_a", "doc_b")
+    // round 1 moves 2→1, 3→2 and 4→3: no fixpoint after one round
+    val e = intercept[IllegalStateException](
+      NearDup.dupClusters(chain, maxIter = 1))
+    assert(e.getMessage.contains("maxIter = 1") &&
+      e.getMessage.contains("3 ids changed"), e.getMessage)
+    val out = NearDup.dupClusters(chain).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    intercept[IllegalArgumentException](NearDup.dupClusters(chain, maxIter = 0))
+  }
+
   test("edge cases: empty pair graph, empty corpus, degenerate strata") {
     import spark.implicits._
     // dupClusters on an empty pair set → empty labels, no infinite loop

@@ -74,20 +74,6 @@ private[graft] object NearDupQueries {
   private val paraChunkTokens = 12 // x60/x62 derived-paragraph width (tokens)
   private val paraBoilerMaxDf = 1  // x62 max distinct docs before a paragraph is boilerplate
 
-  /** The word-shingle CTE pair (`toks`, shingle set named by `out`) the
-    * Jaccard/MinHash oracles share; width and minimum length come from
-    * [[wordShingleK]].
-    */
-  private def wordShingleCtes(out: String, k: Int = wordShingleK): String =
-    s"""toks AS (
-      |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-      |                             x -> x <> '') AS t
-      |  FROM documents),
-      |$out AS (
-      |  SELECT DISTINCT doc_id, array_to_string(t[i:i+${k - 1}], ' ') AS shingle
-      |  FROM toks, UNNEST(range(1, len(t) - ${k - 2})) AS u(i)
-      |  WHERE len(t) >= $k)""".stripMargin
-
   /** DF-CAPPED word-shingle inverted index as DuckDB CTEs (`toks sh0
     * hotw sh`): `sh` is the filtered index. Downstream sizes/pair joins
     * must read `sh`, matching the Spark side which computes set sizes on
@@ -96,7 +82,7 @@ private[graft] object NearDupQueries {
     * and the x22 connected-components oracle.
     */
   private val cappedWordShingleCtes: String =
-    s"""${wordShingleCtes("sh0")},
+    s"""${wordShingleCtes("sh0", wordShingleK)},
       |hotw AS (
       |  SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > $wordShingleDfCap),
       |sh AS (
@@ -132,7 +118,7 @@ private[graft] object NearDupQueries {
       s"CASE seed % $rowsPerBand $arms ELSE 1 END"
     }
     s"""seeds(seed, a, b) AS (VALUES $coefs),
-      |${wordShingleCtes("sh")},
+      |${wordShingleCtes("sh", wordShingleK)},
       |hx AS (SELECT doc_id, substr(md5(shingle), 1, 15) AS hx FROM sh),
       |hb AS (
       |  SELECT doc_id,
@@ -188,10 +174,7 @@ private[graft] object NearDupQueries {
     * the x04 pair oracle and the x58 drift gate — one truth definition.
     */
   private val simhashPortableCtes: String =
-    """sx_toks AS (
-      |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'),
-      |                             x -> x <> '') AS t
-      |  FROM documents),
+    s"""${tokensCte("sx_toks")},
       |sx_tok AS (SELECT doc_id, u.tok AS tok FROM sx_toks, UNNEST(t) AS u(tok)),
       |sx_h AS (SELECT doc_id, substr(md5(tok), 1, 15) AS hx FROM sx_tok),
       |sx_bits AS (
@@ -273,14 +256,7 @@ private[graft] object NearDupQueries {
     * boolean itself is the in-plan invariant (literal TRUE here).
     */
   private val exactPairsGateSql: String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-       |                             x -> x <> '') AS t
-       |  FROM documents),
-       |sh AS (
-       |  SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle
-       |  FROM toks, UNNEST(range(1, len(t) - 1)) AS u(i)
-       |  WHERE len(t) >= 3),
+    s"""WITH ${wordShingleCtes("sh", 3)},
        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
        |inter AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -636,10 +612,7 @@ private[graft] object NearDupQueries {
     // pos) is unique), ordered string_agg rebuild, LEFT JOIN totality
     Entry("x60_paragraph_dedup", (s, d) =>
       ParaDedup.dedupParagraphs(structuredDocs(s, d), "doc_id", "text"), Sql(
-      s"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-        |                             x -> x <> '') AS t
-        |  FROM documents),
+      s"""WITH ${tokensCte()},
         |paras AS (
         |  SELECT doc_id, i AS pos,
         |         array_to_string(t[i*$paraChunkTokens+1 : i*$paraChunkTokens+$paraChunkTokens], ' ') AS para
@@ -674,10 +647,7 @@ private[graft] object NearDupQueries {
     Entry("x62_boilerplate_rm", (s, d) =>
       ParaDedup.removeBoilerplate(structuredDocs(s, d), "doc_id", "text",
         maxDocFreq = paraBoilerMaxDf), Sql(
-      s"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-        |                             x -> x <> '') AS t
-        |  FROM documents),
+      s"""WITH ${tokensCte()},
         |paras AS (
         |  SELECT doc_id, i AS pos,
         |         array_to_string(t[i*$paraChunkTokens+1 : i*$paraChunkTokens+$paraChunkTokens], ' ') AS para
@@ -713,10 +683,7 @@ private[graft] object NearDupQueries {
     // rollup, LEFT JOIN totality
     Entry("x61_dupgram_profile", (s, d) =>
       NearDup.dupGramProfile(docs(s, d), "doc_id", "text", k = dupGramK), Sql(
-      s"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-        |                             x -> x <> '') AS t
-        |  FROM documents),
+      s"""WITH ${tokensCte()},
         |sh AS (
         |  SELECT DISTINCT doc_id,
         |         substr(md5(array_to_string(t[i:i+${dupGramK - 1}], ' ')), 1, 15) AS gk
@@ -746,10 +713,7 @@ private[graft] object NearDupQueries {
     Entry("x79_span_dedup", (s, d) =>
       SpanDedup.removeDuplicatedSpans(docs(s, d), "doc_id", "text",
         k = dupGramK), Sql(
-      s"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-        |                             x -> x <> '') AS t
-        |  FROM documents),
+      s"""WITH ${tokensCte()},
         |g AS (
         |  SELECT doc_id, CAST(i AS BIGINT) AS gpos,
         |         substr(md5(array_to_string(t[i:i+${dupGramK - 1}], ' ')), 1, 15) AS gk

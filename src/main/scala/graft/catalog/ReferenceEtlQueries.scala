@@ -624,7 +624,10 @@ private[graft] object ReferenceEtlQueries {
         tmp, "day")
       graft.sources.Sinks.overwriteWindow(
         withCut.filter(col("day") >= col("cutoff")).drop("cutoff"), tmp, "day")
-      s.read.parquet(tmp).select("day", "avg_value", "n")
+      // the sink's schema is known, so the read-back infers nothing (an
+      // inferring read starts one job to read the partitioned footers)
+      s.read.schema("day DATE, avg_value DOUBLE, n BIGINT").parquet(tmp)
+        .select("day", "avg_value", "n")
     }, Sql(
       """SELECT ts::DATE AS day,
         |       floor(sum(CAST(round(value * 100) AS BIGINT)) / count(value) + 0.5)
@@ -928,9 +931,10 @@ private[graft] object ReferenceEtlQueries {
     // pinned by the same single-batch assert as x51.
     // Oracle:
     // the streamed curation's emitted set == distinct fingerprints of
-    // the gated PII-redacted corpus (same p/e/g CTE text as x41, minus
-    // the eval-split exclusion and decontamination — x52 streams the
-    // WHOLE corpus through redact→gate→dedup)
+    // the gated PII-redacted corpus (Shared.corpusSignalCtes, the p/e/g
+    // prefix of x41's chain, minus the eval-split exclusion and
+    // decontamination — x52 streams the WHOLE corpus through
+    // redact→gate→dedup)
     Entry("x52_stream_curation", (s, d) => {
       import s.implicits._
       val name = "x52_stream_fingerprints"
@@ -965,47 +969,9 @@ private[graft] object ReferenceEtlQueries {
           s"$dataBatches — landing-dir batching changed?")
       drainMemorySink(s, ss, name, ss.table(name).select("fingerprint"))
     }, Sql(
-      """WITH p AS (
-        |  SELECT doc_id,
-        |         regexp_replace(regexp_replace(regexp_replace(
-        |           text || ' contact user' || doc_id || '@mail.example.com ip 10.'
-        |             || (doc_id % 250) || '.0.' || (doc_id % 100)
-        |             || ' tel +1-555-' || lpad((doc_id % 10000)::VARCHAR, 4, '0'),
-        |           '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-        |           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |           '\+\d[\d-]{6,14}\d', '<PHONE>', 'g') AS text
-        |  FROM documents),
-        |e AS (
-        |  SELECT doc_id,
-        |         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
-        |         list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                     x -> x <> '') AS toks,
-        |         length(text) AS n_chars,
-        |         length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS n_punct
-        |  FROM p),
-        |g AS (
-        |  SELECT doc_id, fingerprint, toks,
-        |    len(list_filter(toks, x -> x IN ('the','a','and','of','to'))) AS en_hits,
-        |    len(list_filter(toks, x -> x IN ('der','die','und','das','ein'))) AS de_hits,
-        |    len(list_filter(toks, x -> x IN ('le','la','et','les','des'))) AS fr_hits,
-        |    len(list_filter(toks, x -> x IN ('el','los','y','las','una'))) AS es_hits,
-        |    CASE WHEN len(toks) < 5 THEN 'too_short'
-        |         WHEN n_punct::DOUBLE / greatest(n_chars, 1) > 0.2 THEN 'punct_heavy'
-        |         ELSE 'ok' END AS quality_bucket,
-        |    CASE WHEN len(toks) >= 2
-        |      THEN list_transform(range(1, len(toks)),
-        |                          i -> array_to_string(toks[i:i+1], ' '))
-        |      ELSE []::VARCHAR[] END AS grams
-        |  FROM e)
+      s"""WITH $corpusSignalCtes
         |SELECT DISTINCT fingerprint FROM g
-        |WHERE quality_bucket = 'ok'
-        |  AND CASE WHEN greatest(en_hits, de_hits, fr_hits, es_hits) = 0 THEN 'und'
-        |           WHEN en_hits = greatest(en_hits, de_hits, fr_hits, es_hits) THEN 'en'
-        |           WHEN de_hits = greatest(en_hits, de_hits, fr_hits, es_hits) THEN 'de'
-        |           WHEN fr_hits = greatest(en_hits, de_hits, fr_hits, es_hits) THEN 'fr'
-        |           ELSE 'es' END = 'en'
-        |  AND NOT (len(grams) <> 0 AND
-        |           round(1 - len(list_distinct(grams))::DOUBLE / len(grams), 4) >= 0.2)""".stripMargin)),
+        |WHERE $corpusGateSql""".stripMargin)),
     // Spark 4 variant shredding: schema-flexible parse_json +
     // variant_get — the modern path for payloads whose schema drifts
     Entry("q38_variant_shred", (s, d) =>

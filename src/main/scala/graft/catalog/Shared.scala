@@ -1,15 +1,26 @@
 package graft
 package catalog
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.text.{Pii, TextAnalysis}
 
 /** Helpers more than one catalog family reads: the table loaders, the
   * memoized corpus count, the fixed-count sample predicate and its
   * DuckDB twin, the recall-gate tail, the integer-cosine SQL, the PII
-  * suffix, and the knobs several families interpolate into both the
-  * Spark build and its oracle SQL. No family object is imported here,
-  * so the families depend on this object and never on each other.
+  * suffix, the DuckDB twins of the text primitives, and the knobs
+  * several families interpolate into both the Spark build and its
+  * oracle SQL. No family object is imported here, so the families
+  * depend on this object and never on each other.
+  *
+  * The rule for twins: the SQL twin of a Spark primitive is generated
+  * from the constants its column reads (`TextAnalysis`' whitespace
+  * regex, stopword lists, quality bounds and repetition gate, `Pii`'s
+  * ordered rules, [[piiSuffix]]), never typed into an oracle. A change
+  * to a text rule is then one edit that reaches both engines. Each twin
+  * is a single-line fragment: the oracles interpolate it into
+  * `stripMargin` templates, where a line that starts with `|` (a `||`
+  * concat) would lose that bar.
   */
 private[graft] object Shared {
   private[catalog] def ev(s: SparkSession, d: String) = Tables.events(s, d)
@@ -29,16 +40,198 @@ private[graft] object Shared {
   private[catalog] def docsCount(s: SparkSession, d: String): Long =
     corpusCountMemo.computeIfAbsent(d, dir => docs(s, dir).count()).longValue()
 
+  /** One piece of the synthetic PII suffix: a literal, the doc id, the
+    * doc id modulo `m`, or that residue left-padded with zeros to `width`.
+    */
+  private sealed trait PiiPart
+  private final case class Text(s: String) extends PiiPart
+  private case object Id extends PiiPart
+  private final case class Mod(m: Int) extends PiiPart
+  private final case class Padded(m: Int, width: Int) extends PiiPart
+
+  /** The deterministic PII appended to each doc: an email, an IPv4
+    * address and a phone number, each a pure function of doc_id.
+    */
+  private val piiSuffix: Seq[PiiPart] = Seq(
+    Text(" contact user"), Id, Text("@mail.example.com ip 10."), Mod(250),
+    Text(".0."), Mod(100), Text(" tel +1-555-"), Padded(10000, 4))
+
   /** The PII suffix as a column expression so the same injection runs on
     * batch (x38/x41) and STREAMING (x52) frames.
     */
   private[catalog] def piiText: Column =
-    concat(col("text"),
-      lit(" contact user"), col("doc_id").cast("string"),
-      lit("@mail.example.com ip 10."), (col("doc_id") % 250).cast("string"),
-      lit(".0."), (col("doc_id") % 100).cast("string"),
-      lit(" tel +1-555-"),
-      lpad((col("doc_id") % 10000).cast("string"), 4, "0")).as("text")
+    concat(col("text") +: piiSuffix.map {
+      case Text(t) => lit(t)
+      case Id => col("doc_id").cast("string")
+      case Mod(m) => (col("doc_id") % m).cast("string")
+      case Padded(m, w) => lpad((col("doc_id") % m).cast("string"), w, "0")
+    }: _*).as("text")
+
+  /** DuckDB twin of [[piiText]] over `documents`' text and doc_id. */
+  private[catalog] val piiTextSql: String =
+    ("text" +: piiSuffix.map {
+      case Text(t) => s"'$t'"
+      case Id => "doc_id"
+      case Mod(m) => s"(doc_id % $m)"
+      case Padded(m, w) => s"lpad((doc_id % $m)::VARCHAR, $w, '0')"
+    }).mkString(" || ")
+
+  // ---- DuckDB twins of the text primitives ----
+
+  /** Twin of `TextAnalysis.tokens` over the column `text`. */
+  private[catalog] val tokensSql: String =
+    s"list_filter(string_split_regex(lower(trim(text)), '${TextAnalysis.whitespaceRe}'), x -> x <> '')"
+
+  /** The CTE `name AS (SELECT keys, <tokens of text> AS t FROM src)`. */
+  private[catalog] def tokensCte(name: String = "toks", t: String = "t",
+                                 keys: String = "doc_id",
+                                 src: String = "documents"): String =
+    s"""$name AS (
+      |  SELECT $keys, $tokensSql AS $t
+      |  FROM $src)""".stripMargin
+
+  /** Twin of `NearDup.shinglesFromToks`: the distinct word k-shingles
+    * (doc_id, shingle) of the token lists `t` of relation `src`.
+    */
+  private[catalog] def shingleCte(out: String, k: Int, src: String = "toks",
+                                  t: String = "t"): String =
+    s"""$out AS (
+      |  SELECT DISTINCT doc_id, array_to_string($t[i:i+${k - 1}], ' ') AS shingle
+      |  FROM $src, UNNEST(range(1, ${lenMinus(t, k - 2)})) AS u(i)
+      |  WHERE len($t) >= $k)""".stripMargin
+
+  /** The word-shingle CTE pair the Jaccard/MinHash and decontamination
+    * oracles share: `toks` (doc_id, t) over documents, then the k-shingle
+    * set named `out`.
+    */
+  private[catalog] def wordShingleCtes(out: String, k: Int): String =
+    s"${tokensCte()},\n${shingleCte(out, k)}"
+
+  private def lenMinus(list: String, m: Int): String =
+    if (m == 0) s"len($list)" else s"len($list) - $m"
+
+  private def sqlList(words: Seq[String]): String =
+    words.map(w => s"'$w'").mkString(",")
+
+  /** Twin of `TextAnalysis`' stopword hit count of `words` in `toks`. */
+  private[catalog] def stopHitsSql(toks: String, words: Seq[String]): String =
+    s"len(list_filter($toks, x -> x IN (${sqlList(words)})))"
+
+  /** One `<lang>_hits` column per stopword list, in tie order; `wrap`
+    * shapes each count (x08 casts them to INTEGER).
+    */
+  private[catalog] def langHitsSql(toks: String,
+                                   wrap: String => String = identity): String =
+    TextAnalysis.stopWords.map { case (l, ws) =>
+      s"${wrap(stopHitsSql(toks, ws))} AS ${l}_hits"
+    }.mkString(", ")
+
+  /** Twin of `TextAnalysis.predLangFromToks` over the [[langHitsSql]]
+    * columns: the argmax language, earlier languages winning ties, and
+    * `und` on zero hits.
+    */
+  private[catalog] val predLangSql: String = {
+    val langs = TextAnalysis.stopWords.map(_._1)
+    val best = langs.map(l => s"${l}_hits").mkString("greatest(", ", ", ")")
+    (s"CASE WHEN $best = 0 THEN '${TextAnalysis.undLang}'" +:
+      langs.init.map(l => s"WHEN ${l}_hits = $best THEN '$l'") :+
+      s"ELSE '${langs.last}' END").mkString(" ")
+  }
+
+  /** Twin of the punctuation count inside `qualityBucketFromToks`. */
+  private[catalog] val punctCountSql: String =
+    s"length(regexp_replace(text, '${TextAnalysis.nonPunctRe}', '', 'g'))"
+
+  /** Twin of `TextAnalysis.qualityBucketFromToks` over a token count,
+    * the [[punctCountSql]] column `n_punct` and a character count.
+    */
+  private[catalog] def qualityBucketSql(nTok: String,
+                                        nChars: String = "n_chars"): String =
+    s"CASE WHEN $nTok < ${TextAnalysis.minTokens} THEN 'too_short' " +
+      s"WHEN n_punct::DOUBLE / greatest($nChars, 1) > ${TextAnalysis.punctHeavyRatio} " +
+      "THEN 'punct_heavy' ELSE 'ok' END"
+
+  /** Twin of `TextAnalysis.fingerprintCol` over the column `text`. */
+  private[catalog] val fingerprintSql: String =
+    s"md5(regexp_replace(lower(trim(text)), '${TextAnalysis.whitespaceRe}', ' ', 'g'))"
+
+  /** Twin of `TextAnalysis.wordGramsFromToks`: DuckDB lists are 1-based
+    * and slices inclusive, and `range` is end-exclusive.
+    */
+  private[catalog] def wordGramsSql(toks: String, n: Int): String =
+    s"CASE WHEN len($toks) >= $n THEN list_transform(range(1, ${lenMinus(toks, n - 2)}), " +
+      s"i -> array_to_string($toks[i:i+${n - 1}], ' ')) ELSE []::VARCHAR[] END"
+
+  /** The duplicate-gram fraction `repetitiveFromGrams` compares. */
+  private[catalog] def repRatioSql(grams: String): String =
+    s"round(1 - len(list_distinct($grams))::DOUBLE / len($grams), 4)"
+
+  /** Twin of `TextAnalysis.repetitiveFromGrams` at its default bound. */
+  private[catalog] def repetitiveSql(grams: String): String =
+    s"(len($grams) <> 0 AND ${repRatioSql(grams)} >= ${TextAnalysis.repetitionThreshold})"
+
+  /** Twin of `Pii.redactedCol`: the rules applied in their fixed order. */
+  private[catalog] def redactSql(text: String): String =
+    Pii.rules.foldLeft(text) { case (t, (re, tag)) =>
+      s"regexp_replace($t, '$re', '$tag', 'g')"
+    }
+
+  /** The signal CTEs over relation `src`: `e` holds the fingerprint,
+    * tokens and the character and punctuation counts, `g` the stopword
+    * hits and the quality bucket; `grams` keeps the tokens in `g` and
+    * adds the repetition gate's word grams.
+    */
+  private def signalCtes(src: String, grams: Boolean): String = {
+    val (toks, gramCol) =
+      if (grams) (" toks,", s",\n    ${wordGramsSql("toks", TextAnalysis.repetitionN)} AS grams")
+      else ("", "")
+    s"""e AS (
+      |  SELECT doc_id,
+      |         $fingerprintSql AS fingerprint,
+      |         $tokensSql AS toks,
+      |         length(text) AS n_chars,
+      |         $punctCountSql AS n_punct
+      |  FROM $src),
+      |g AS (
+      |  SELECT doc_id, fingerprint,$toks
+      |    ${langHitsSql("toks")},
+      |    ${qualityBucketSql("len(toks)")} AS quality_bucket$gramCol
+      |  FROM e)""".stripMargin
+  }
+
+  /** The signal CTEs of `Curation.curate` (x26/x44) over `documents`. */
+  private[catalog] val curateCtes: String = signalCtes("documents", grams = false)
+
+  /** The signal CTEs x41/x81/x82 (`Curation.curatedDocs`) and x52
+    * (`CorpusStream.curate`) share: `p` injects and redacts the PII, then
+    * `e`/`g` as in [[signalCtes]] with the repetition grams.
+    */
+  private[catalog] val corpusSignalCtes: String =
+    s"""p AS (
+      |  SELECT doc_id, ${redactSql(piiTextSql)} AS text
+      |  FROM documents),
+      |${signalCtes("p", grams = true)}""".stripMargin
+
+  /** The corpus gates over a [[corpusSignalCtes]] `g` row: quality ok,
+    * English, and not repetitive.
+    */
+  private[catalog] val corpusGateSql: String =
+    s"quality_bucket = 'ok' AND $predLangSql = 'en' AND NOT ${repetitiveSql("grams")}"
+
+  /** `df` cached and filled by one job before any plan reads it. AQE
+    * fills a cached frame as a query stage of the first plan that scans
+    * it, one stage per scan, so a plan that scans an unfilled pin twice
+    * (a top-k's query and corpus sides, a model's seed pick and first
+    * assignment) starts two fill jobs that race for the same block: the
+    * loser's task waits on the block lock, then logs "already exists".
+    * One pass over the bare frame — no exchange, so one job — fills it,
+    * and those stages start no job.
+    */
+  private[catalog] def filledPin(df: DataFrame): DataFrame = {
+    val p = df.cache()
+    p.foreachPartition((_: Iterator[Row]) => ())
+    p
+  }
 
   /** Deterministic FIXED-COUNT sample predicate over an integral key:
     * keeps ~`target` rows regardless of table size. The recall gates'

@@ -1,7 +1,7 @@
 package graft
 package catalog
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sim.{CellShape, Similarity}
 import graft.multimodal.Multimodal
@@ -86,24 +86,15 @@ private[graft] object SimilarityQueries {
       |    FROM s2) t WHERE rn = 1)""".stripMargin
 
   /** The integer fake embeds of the corpus (x20i and the cell-model
-    * family), cached: every integer-IVF model reads them several times
-    * before its checkpoint pins the assignment.
-    *
-    * The pin is filled once, here. AQE fills a cached frame as a query
-    * stage of the first plan that scans it, one stage per scan, and
-    * `ivfIntModel`'s first plan scans the embeds twice (the seed pick
-    * and the first assignment): unfilled, two concurrent fill jobs
-    * raced for the same block (the loser's task waited on the block
-    * lock, then logged "already exists"). One pass over the bare frame —
-    * no exchange, so one job — fills it, and those stages start no job.
+    * family), pinned and filled once ([[Shared.filledPin]]): every
+    * integer-IVF model reads them several times before its checkpoint
+    * pins the assignment, and `ivfIntModel`'s first plan scans them
+    * twice (the seed pick and the first assignment).
     */
-  private def intEmbeds(s: SparkSession, d: String): DataFrame = {
-    val e = Multimodal.fakeEmbedInt(s,
+  private def intEmbeds(s: SparkSession, d: String): DataFrame =
+    filledPin(Multimodal.fakeEmbedInt(s,
       Multimodal.withPayload(docs(s, d), "doc_id", "text"),
-      dim = fakeEmbedDim).toDF().cache()
-    e.foreachPartition((_: Iterator[Row]) => ())
-    e
-  }
+      dim = fakeEmbedDim).toDF())
 
   /** x63/x65's kNN-graph shape: the constant-cluster-size two-level
     * rule at [[knnHierClusterSize]], from one eager corpus count.

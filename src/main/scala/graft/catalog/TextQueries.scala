@@ -41,10 +41,7 @@ private[graft] object TextQueries {
     * postings, because the engine's screened index never sees it.
     */
   private lazy val bm25TopKOracle: String =
-    s"""WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-        |                             x -> x <> '') AS tk
-        |  FROM documents),
+    s"""WITH ${tokensCte(t = "tk")},
         |st AS (SELECT count(*) AS n, sum(len(tk))::BIGINT AS sl FROM toks),
         |qs AS (
         |  SELECT DISTINCT u.term, substr(md5(u.term), 1, 15) AS tid
@@ -88,23 +85,13 @@ private[graft] object TextQueries {
   val entries: Seq[Entry] = Seq(
     // ---- north-star extensions: text analysis ----
     Entry("x08_langid", (s, d) => TextAnalysis.langId(docs(s, d), "doc_id", "text"), Sql(
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                             x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH ${tokensCte("t", t = "toks")},
         |h AS (
         |  SELECT doc_id,
-        |    CAST(len(list_filter(toks, x -> x IN ('the','a','and','of','to'))) AS INTEGER) AS en_hits,
-        |    CAST(len(list_filter(toks, x -> x IN ('der','die','und','das','ein'))) AS INTEGER) AS de_hits,
-        |    CAST(len(list_filter(toks, x -> x IN ('le','la','et','les','des'))) AS INTEGER) AS fr_hits,
-        |    CAST(len(list_filter(toks, x -> x IN ('el','los','y','las','una'))) AS INTEGER) AS es_hits
+        |    ${langHitsSql("toks", h => s"CAST($h AS INTEGER)")}
         |  FROM t)
         |SELECT doc_id, en_hits, de_hits, fr_hits, es_hits,
-        |  CASE WHEN greatest(en_hits, de_hits, fr_hits, es_hits) = 0 THEN 'und'
-        |       WHEN en_hits = greatest(en_hits, de_hits, fr_hits, es_hits) THEN 'en'
-        |       WHEN de_hits = greatest(en_hits, de_hits, fr_hits, es_hits) THEN 'de'
-        |       WHEN fr_hits = greatest(en_hits, de_hits, fr_hits, es_hits) THEN 'fr'
-        |       ELSE 'es' END AS pred_lang
+        |  $predLangSql AS pred_lang
         |FROM h""".stripMargin)),
     // char-trigram profile language ID, profiles trained in-plan from the
     // labeled corpus — pure relational arithmetic end to end, so the
@@ -188,27 +175,19 @@ private[graft] object TextQueries {
         |FROM g LEFT JOIN best USING (doc_id)
         |WHERE g.doc_id % 2 = 1""".stripMargin)),
     Entry("x09_text_quality", (s, d) => TextAnalysis.quality(docs(s, d), "doc_id", "text"), Sql(
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |         list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                     x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH ${tokensCte("t", t = "toks", keys = "doc_id, text")},
         |m AS (
         |  SELECT doc_id,
         |    CAST(len(toks) AS INTEGER) AS n_tokens,
         |    CAST(length(text) AS INTEGER) AS len_chars,
-        |    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS INTEGER) AS n_punct,
-        |    CAST(len(list_filter(toks, x -> x IN ('a','and','das','der','des','die',
-        |      'ein','el','et','la','las','le','les','los','of','the','to','una','und','y')))
-        |      AS INTEGER) AS n_stop
+        |    CAST($punctCountSql AS INTEGER) AS n_punct,
+        |    CAST(${stopHitsSql("toks", TextAnalysis.allStopWords)} AS INTEGER) AS n_stop
         |  FROM t)
         |SELECT doc_id, n_tokens, len_chars,
         |  round(len_chars::DOUBLE / greatest(n_tokens, 1), 3) AS chars_per_token,
         |  round(n_punct::DOUBLE / greatest(len_chars, 1), 4) AS punct_ratio,
         |  round(n_stop::DOUBLE / greatest(n_tokens, 1), 4) AS stopword_ratio,
-        |  CASE WHEN n_tokens < 5 THEN 'too_short'
-        |       WHEN n_punct::DOUBLE / greatest(len_chars, 1) > 0.2 THEN 'punct_heavy'
-        |       ELSE 'ok' END AS quality_bucket
+        |  ${qualityBucketSql("n_tokens", nChars = "len_chars")} AS quality_bucket
         |FROM m""".stripMargin)),
     // per-source distinct-n lexical diversity (distinct-1/distinct-2):
     // the before/after health check of every curation pass — two
@@ -218,10 +197,7 @@ private[graft] object TextQueries {
     // counts and 4-dp ratios — the x61 division/coalesce idiom
     Entry("x80_diversity_profile", (s, d) =>
       TextAnalysis.diversityProfile(docs(s, d), "source", "text"), Sql(
-      """WITH t AS (
-        |  SELECT source, list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                             x -> x <> '') AS tk
-        |  FROM documents),
+      s"""WITH ${tokensCte("t", t = "tk", keys = "source")},
         |d AS (SELECT source AS domain, count(*) AS n_docs,
         |             sum(len(tk))::BIGINT AS n_tokens
         |      FROM t GROUP BY 1),
@@ -250,10 +226,7 @@ private[graft] object TextQueries {
     Entry("x84_vocab_growth", (s, d) =>
       TextAnalysis.vocabGrowth(docs(s, d), "doc_id", "text",
         bucketDocs = vocabBucketDocs), Sql(
-      s"""WITH t AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-        |                             x -> x <> '') AS tk
-        |  FROM documents),
+      s"""WITH ${tokensCte("t", t = "tk")},
         |b AS (SELECT CAST(floor(doc_id / ${vocabBucketDocs.toDouble}) AS BIGINT) AS bucket,
         |             count(*) AS n_docs, sum(len(tk))::BIGINT AS n_tokens
         |      FROM t GROUP BY 1),
@@ -271,21 +244,17 @@ private[graft] object TextQueries {
         |         AS vocab_size
         |FROM b LEFT JOIN nt USING (bucket)""".stripMargin)),
     Entry("x10_token_counts", (s, d) => TextAnalysis.tokenCounts(docs(s, d), "doc_id", "text"), Sql(
-      """SELECT doc_id,
-        |  CAST(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                       x -> x <> '')) AS INTEGER) AS ws_tokens,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
+      s"""SELECT doc_id,
+        |  CAST(len($tokensSql) AS INTEGER) AS ws_tokens,
+        |  CAST(len(regexp_extract_all(text, '${TextAnalysis.bpeTokenRe}'))
         |    AS INTEGER) AS bpe_tokens
         |FROM documents""".stripMargin)),
     Entry("x11_fingerprint", (s, d) => TextAnalysis.fingerprint(docs(s, d), "doc_id", "text"), Sql(
-      """SELECT doc_id,
-        |       md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint
+      s"""SELECT doc_id,
+        |       $fingerprintSql AS fingerprint
         |FROM documents""".stripMargin)),
     Entry("x12_rolling_hash", (s, d) => TextAnalysis.rollingHash(docs(s, d), "doc_id", "text"), Sql(
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                             x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH ${tokensCte("t", t = "toks")},
         |h AS (
         |  SELECT doc_id,
         |         list_transform(toks, tok ->
@@ -301,9 +270,8 @@ private[graft] object TextQueries {
         |FROM h""".stripMargin)),
     Entry("x23_tfidf_terms", (s, d) =>
       TextAnalysis.tfidfTopTerms(docs(s, d), "doc_id", "text", k = 3), Sql(
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                                    x -> x <> '')) AS term
+      s"""WITH toks AS (
+        |  SELECT doc_id, unnest($tokensSql) AS term
         |  FROM documents),
         |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
         |dfreq AS (SELECT term, count(*) AS dfreq FROM tf GROUP BY 1),
@@ -324,31 +292,10 @@ private[graft] object TextQueries {
     Entry("x26_curation_pipeline", (s, d) =>
       Curation.curate(docs(s, d), "doc_id", "text",
         lang = "en", keepPer100 = 50), Sql(
-      """WITH e AS (
-        |  SELECT doc_id,
-        |         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
-        |         list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |                     x -> x <> '') AS toks,
-        |         length(text) AS n_chars,
-        |         length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS n_punct
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, fingerprint,
-        |    len(list_filter(toks, x -> x IN ('the','a','and','of','to'))) AS en_hits,
-        |    len(list_filter(toks, x -> x IN ('der','die','und','das','ein'))) AS de_hits,
-        |    len(list_filter(toks, x -> x IN ('le','la','et','les','des'))) AS fr_hits,
-        |    len(list_filter(toks, x -> x IN ('el','los','y','las','una'))) AS es_hits,
-        |    CASE WHEN len(toks) < 5 THEN 'too_short'
-        |         WHEN n_punct::DOUBLE / greatest(n_chars, 1) > 0.2 THEN 'punct_heavy'
-        |         ELSE 'ok' END AS quality_bucket
-        |  FROM e),
+      s"""WITH $curateCtes,
         |l AS (
         |  SELECT doc_id, fingerprint, quality_bucket,
-        |    CASE WHEN greatest(en_hits, de_hits, fr_hits, es_hits) = 0 THEN 'und'
-        |         WHEN en_hits = greatest(en_hits, de_hits, fr_hits, es_hits) THEN 'en'
-        |         WHEN de_hits = greatest(en_hits, de_hits, fr_hits, es_hits) THEN 'de'
-        |         WHEN fr_hits = greatest(en_hits, de_hits, fr_hits, es_hits) THEN 'fr'
-        |         ELSE 'es' END AS pred_lang
+        |    $predLangSql AS pred_lang
         |  FROM g),
         |d AS (
         |  SELECT doc_id, fingerprint, pred_lang,
@@ -477,10 +424,7 @@ private[graft] object TextQueries {
       s"""WITH c AS (
         |  SELECT d.doc_id, d.text, e.embedding
         |  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id),
-        |toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-        |                             x -> x <> '') AS tk
-        |  FROM c),
+        |${tokensCte(t = "tk", src = "c")},
         |tf AS (
         |  SELECT doc_id AS nid, len(tk)::BIGINT AS dl, u.term, count(*) AS tf
         |  FROM toks, UNNEST(tk) AS u(term)

@@ -102,7 +102,7 @@ object Curation {
       .select(col("doc_id"), col("text"),
         TextAnalysis.tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("text"), col("toks"),
-        TextAnalysis.wordGramsFromToks(col("toks"), 2).as("grams"))
+        TextAnalysis.wordGramsFromToks(col("toks"), TextAnalysis.repetitionN).as("grams"))
       .select(col("doc_id"), col("text"),
         (TextAnalysis.qualityBucketFromToks(col("toks"), col("text")) === "ok" &&
           TextAnalysis.predLangFromToks(col("toks")) === lang &&
@@ -233,7 +233,7 @@ final class CorpusBuildV2(train: DataFrame, eval: DataFrame, idCol: String,
     .select(col("doc_id"), col("text"),
       TextAnalysis.tokens(col("text")).as("toks"))
     .select(col("doc_id"), col("text"), col("toks"),
-      TextAnalysis.wordGramsFromToks(col("toks"), 2).as("grams"))
+      TextAnalysis.wordGramsFromToks(col("toks"), TextAnalysis.repetitionN).as("grams"))
     .select(col("doc_id"), col("text"),
       (TextAnalysis.qualityBucketFromToks(col("toks"), col("text")) === "ok")
         .as("q_ok"),

@@ -53,7 +53,7 @@ object CorpusStream {
       .select(col("doc_id"), col("ts"), col("text"),
         TextAnalysis.tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("ts"), col("text"), col("toks"),
-        TextAnalysis.wordGramsFromToks(col("toks"), 2).as("grams"))
+        TextAnalysis.wordGramsFromToks(col("toks"), TextAnalysis.repetitionN).as("grams"))
       .select(col("doc_id"), col("ts"), col("text"),
         TextAnalysis.fingerprintCol(col("text")).as("fingerprint"),
         (TextAnalysis.qualityBucketFromToks(col("toks"), col("text")) === "ok" &&

@@ -19,13 +19,16 @@ object Pii {
   val ipRe = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
   val phoneRe = "\\+\\d[\\d-]{6,14}\\d"
 
-  /** Redaction order matters and is fixed: emails first (their local
-    * part can contain digit runs), then IPs, then phones (anchored on a
-    * leading '+', so they never collide with IP octets).
+  /** Each pattern with its replacement tag, in redaction order. The
+    * order matters and is fixed: emails first (their local part can
+    * contain digit runs), then IPs, then phones (anchored on a leading
+    * '+', so they never collide with IP octets).
     */
+  private[graft] val rules: Seq[(String, String)] =
+    Seq(emailRe -> "<EMAIL>", ipRe -> "<IP>", phoneRe -> "<PHONE>")
+
   def redactedCol(text: Column): Column =
-    regexp_replace(regexp_replace(regexp_replace(text,
-      emailRe, "<EMAIL>"), ipRe, "<IP>"), phoneRe, "<PHONE>")
+    rules.foldLeft(text) { case (t, (re, tag)) => regexp_replace(t, re, tag) }
 
   /** Per-document PII report: counts per category (on the original
     * text) and the md5 of the redacted text — the content proof that

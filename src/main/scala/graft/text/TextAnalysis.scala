@@ -14,15 +14,34 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
+  // The constants below are what the text columns read. The catalog's
+  // DuckDB twins (`catalog.Shared`) are generated from the same vals, so
+  // a rule changed here reaches both engines.
+
+  /** A whitespace run: the tokenizer's split and the fingerprint's
+    * collapse to one space.
+    */
+  private[graft] val whitespaceRe = "\\s+"
+
   /** Normalized whitespace tokens (empties dropped). */
   def tokens(text: Column): Column =
-    filter(split(lower(trim(text)), "\\s+"), t => t =!= "")
+    filter(split(lower(trim(text)), whitespaceRe), t => t =!= "")
 
-  private val stop: Map[String, Seq[String]] = Map(
+  /** Stopword lists in the language-ID tie order: on equal hits the
+    * earlier language wins (en > de > fr > es).
+    */
+  private[graft] val stopWords: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "a", "and", "of", "to"),
     "de" -> Seq("der", "die", "und", "das", "ein"),
     "fr" -> Seq("le", "la", "et", "les", "des"),
     "es" -> Seq("el", "los", "y", "las", "una"))
+
+  /** The language ID of a text with no stopword hit. */
+  private[graft] val undLang = "und"
+
+  /** Every stopword once, sorted: the quality metrics' stopword ratio. */
+  private[graft] val allStopWords: Seq[String] =
+    stopWords.flatMap(_._2).distinct.sorted
 
   private def hits(toks: Column, words: Seq[String]): Column =
     size(filter(toks, t => t.isInCollection(words)))
@@ -37,13 +56,16 @@ object TextAnalysis {
     * stopword-list reference (the tree references it ~8 times).
     */
   def predLangFromToks(toks: Column): Column = {
-    val en = hits(toks, stop("en")); val de = hits(toks, stop("de"))
-    val fr = hits(toks, stop("fr")); val es = hits(toks, stop("es"))
-    val best = greatest(en, de, fr, es)
-    when(best === 0, "und")
-      .when(en === best, "en").when(de === best, "de")
-      .when(fr === best, "fr").otherwise("es")
+    val hit = langHits(toks)
+    val best = greatest(hit.map(_._2): _*)
+    hit.init.foldLeft(when(best === 0, undLang)) { case (c, (l, h)) =>
+      c.when(h === best, l)
+    }.otherwise(hit.last._1)
   }
+
+  /** Per-language stopword hits, in [[stopWords]]' tie order. */
+  private def langHits(toks: Column): Seq[(String, Column)] =
+    stopWords.map { case (l, ws) => l -> hits(toks, ws) }
 
   /** Heuristic language ID: count stopword hits per language, argmax with
     * a fixed priority order (en > de > fr > es > unknown) on ties/zero.
@@ -51,13 +73,10 @@ object TextAnalysis {
     * replicate it exactly.
     */
   def langId(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = tokens(col(textCol))
-    val en = hits(t, stop("en")); val de = hits(t, stop("de"))
-    val fr = hits(t, stop("fr")); val es = hits(t, stop("es"))
-    df.select(
-      col(idCol),
-      en.as("en_hits"), de.as("de_hits"), fr.as("fr_hits"), es.as("es_hits"),
-      predLangCol(col(textCol)).as("pred_lang"))
+    val hit = langHits(tokens(col(textCol)))
+    val cols = (col(idCol) +: hit.map { case (l, h) => h.as(s"${l}_hits") }) :+
+      predLangCol(col(textCol)).as("pred_lang")
+    df.select(cols: _*)
   }
 
   /** Per-document distinct character n-gram SETS: (id, lang, grams).
@@ -153,19 +172,28 @@ object TextAnalysis {
   def qualityBucketCol(text: Column): Column =
     qualityBucketFromToks(tokens(text), text)
 
+  /** The quality bucket's rule: fewer than [[minTokens]] tokens is
+    * too short; punctuation (the characters [[nonPunctRe]] does not
+    * match) above [[punctHeavyRatio]] of the characters is punctuation-
+    * heavy.
+    */
+  private[graft] val minTokens = 5
+  private[graft] val nonPunctRe = "[^.,!?;:]"
+  private[graft] val punctHeavyRatio = 0.2
+
   /** `qualityBucketCol` with the token array supplied as a column. */
   def qualityBucketFromToks(toks: Column, text: Column): Column = {
     val nTok = size(toks)
     val nChar = length(text)
-    val nPunct = length(regexp_replace(text, "[^.,!?;:]", ""))
-    when(nTok < 5, "too_short")
-      .when(nPunct.cast("double") / greatest(nChar, lit(1)) > lit(0.2), "punct_heavy")
+    val nPunct = length(regexp_replace(text, nonPunctRe, ""))
+    when(nTok < minTokens, "too_short")
+      .when(nPunct.cast("double") / greatest(nChar, lit(1)) > lit(punctHeavyRatio), "punct_heavy")
       .otherwise("ok")
   }
 
   /** Column form of the canonical-text fingerprint (see `fingerprint`). */
   def fingerprintCol(text: Column): Column =
-    md5(regexp_replace(lower(trim(text)), "\\s+", " "))
+    md5(regexp_replace(lower(trim(text)), whitespaceRe, " "))
 
   /** Quality metrics: token count, char length, mean token length,
     * punctuation ratio, stopword ratio, and a coarse quality bucket.
@@ -175,8 +203,8 @@ object TextAnalysis {
     val t = tokens(txt)
     val nTok = size(t)
     val nChar = length(txt)
-    val nPunct = length(regexp_replace(txt, "[^.,!?;:]", ""))
-    val nStop = hits(t, stop.values.flatten.toSeq.distinct.sorted)
+    val nPunct = length(regexp_replace(txt, nonPunctRe, ""))
+    val nStop = hits(t, allStopWords)
     df.select(
       col(idCol),
       nTok.as("n_tokens"),
@@ -187,6 +215,9 @@ object TextAnalysis {
       qualityBucketCol(txt).as("quality_bucket"))
   }
 
+  /** The BPE-ish token: a letter run, a digit run or one symbol. */
+  private[graft] val bpeTokenRe = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
+
   /** Token counting two ways: whitespace tokens and a BPE-ish regex
     * tokenizer (letter runs / digit runs / single symbols) — the usual
     * pretraining-corpus "token budget" estimators.
@@ -196,7 +227,7 @@ object TextAnalysis {
     df.select(
       col(idCol),
       size(tokens(txt)).as("ws_tokens"),
-      size(regexp_extract_all(txt, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
+      size(regexp_extract_all(txt, lit(bpeTokenRe), lit(0)))
         .as("bpe_tokens"))
   }
 
@@ -224,12 +255,19 @@ object TextAnalysis {
         i => concat_ws(" ", slice(toks, i, lit(n)))))
       .otherwise(array().cast("array<string>"))
 
+  /** The repetition gate's gram width and duplicate-fraction bound, as
+    * the corpus builds and the streaming curation apply it.
+    */
+  private[graft] val repetitionN = 2
+  private[graft] val repetitionThreshold = 0.2
+
   /** The repetition gate (see `repetition`) over an already-built gram
     * column: TRUE when the duplicate word-n-gram fraction reaches
     * `threshold`. The left-hand zero guard short-circuits the NaN that
     * 0.0/0.0 would otherwise feed into the comparison.
     */
-  def repetitiveFromGrams(grams: Column, threshold: Double = 0.2): Column =
+  def repetitiveFromGrams(grams: Column,
+                          threshold: Double = repetitionThreshold): Column =
     size(grams) =!= 0 &&
       round(lit(1.0) - size(array_distinct(grams)).cast("double") /
         size(grams), 4) >= threshold

@@ -11,22 +11,4 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftSqlBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
-
-  /** True when the session's CacheManager holds no cached plans — lets
-    * the harness/specs assert the clearCache-between-queries contract
-    * (`cacheManager` itself is private[sql]).
-    */
-  def cacheIsEmpty(spark: SparkSession): Boolean =
-    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
-
-  /** The OPTIMIZED logical plan of a streaming query's last micro-batch
-    * (`StreamingQueryWrapper`/`IncrementalExecution` are private[sql]) —
-    * lets plan-shape specs assert on what the stream actually ran,
-    * since calling `queryExecution.optimizedPlan` on an unstarted
-    * streaming Dataset trips the batch-execution checker.
-    */
-  def lastStreamOptimizedPlan(q: streaming.StreamingQuery)
-      : catalyst.plans.logical.LogicalPlan =
-    q.asInstanceOf[execution.streaming.runtime.StreamingQueryWrapper]
-      .streamingQuery.lastExecution.optimizedPlan
 }

@@ -24,7 +24,7 @@ class CatalogSpec extends SparkSpec {
         "x53_semantic_dedup", "x56_semantic_dedup_hier")
       .foreach(q => SparkEntry.queries(q)(spark, sfDir).count())
     spark.catalog.clearCache()
-    assert(org.apache.spark.sql.GraftSqlBridge.cacheIsEmpty(spark),
+    assert(org.apache.spark.sql.GraftTestBridge.cacheIsEmpty(spark),
       "cached plans leaked past clearCache")
   }
 

@@ -28,6 +28,18 @@ class CatalogRegistrySpec extends AnyFunSuite {
     assert(empty.isEmpty, s"empty oracle SQL: $empty")
   }
 
+  test("every string_split_regex( in the oracle SQL is the generated tokenizer") {
+    def count(text: String, sub: String): Int =
+      Iterator.iterate(text.indexOf(sub))(i => text.indexOf(sub, i + 1))
+        .takeWhile(_ >= 0).size
+    val tok = Shared.tokensSql
+    val stray = SparkEntry.oracleSql.collect {
+      case (k, v) if count(v, "string_split_regex(") != count(v, tok) => k
+    }
+    assert(stray.isEmpty, s"hand-typed tokenizer in: ${stray.toSeq.sorted}")
+    assert(SparkEntry.oracleSql.values.exists(_.contains(tok)))
+  }
+
   test("a name registered twice makes the registry throw, naming the key") {
     val build: (org.apache.spark.sql.SparkSession, String) =>
       org.apache.spark.sql.DataFrame = (s, _) => s.emptyDataFrame

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.GraftTestBridge
 import org.apache.spark.sql.catalyst.expressions.RegExpReplace
 import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
 import graft.SparkSpec
@@ -83,7 +83,7 @@ class CurationPlanSpec extends SparkSpec {
     try {
       q.awaitTermination()
       // what the micro-batch ACTUALLY ran, after IncrementalExecution
-      assertBarrierShape(GraftSqlBridge.lastStreamOptimizedPlan(q))
+      assertBarrierShape(GraftTestBridge.lastStreamOptimizedPlan(q))
     } finally {
       q.stop()
       spark.catalog.dropTempView("curation_plan_probe")

@@ -624,9 +624,9 @@ private[graft] object ReferenceEtlQueries {
         tmp, "day")
       graft.sources.Sinks.overwriteWindow(
         withCut.filter(col("day") >= col("cutoff")).drop("cutoff"), tmp, "day")
-      // the sink's schema is known, so the read-back infers nothing (an
-      // inferring read starts one job to read the partitioned footers)
-      s.read.schema("day DATE, avg_value DOUBLE, n BIGINT").parquet(tmp)
+      // the read-back takes the schema of the frame written, so it infers
+      // nothing (an inferring read starts one job to read the footers)
+      s.read.schema(withCut.drop("cutoff").schema).parquet(tmp)
         .select("day", "avg_value", "n")
     }, Sql(
       """SELECT ts::DATE AS day,

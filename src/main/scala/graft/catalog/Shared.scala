@@ -177,14 +177,12 @@ private[graft] object Shared {
     }
 
   /** The signal CTEs over relation `src`: `e` holds the fingerprint,
-    * tokens and the character and punctuation counts, `g` the stopword
-    * hits and the quality bucket; `grams` keeps the tokens in `g` and
-    * adds the repetition gate's word grams.
+    * tokens and the character and punctuation counts, `g` the tokens,
+    * stopword hits, quality bucket and the repetition gate's word grams.
+    * A reader that needs fewer of `g`'s columns names the ones it reads,
+    * and DuckDB prunes the rest.
     */
-  private def signalCtes(src: String, grams: Boolean): String = {
-    val (toks, gramCol) =
-      if (grams) (" toks,", s",\n    ${wordGramsSql("toks", TextAnalysis.repetitionN)} AS grams")
-      else ("", "")
+  private def signalCtes(src: String): String =
     s"""e AS (
       |  SELECT doc_id,
       |         $fingerprintSql AS fingerprint,
@@ -193,24 +191,24 @@ private[graft] object Shared {
       |         $punctCountSql AS n_punct
       |  FROM $src),
       |g AS (
-      |  SELECT doc_id, fingerprint,$toks
+      |  SELECT doc_id, fingerprint, toks,
       |    ${langHitsSql("toks")},
-      |    ${qualityBucketSql("len(toks)")} AS quality_bucket$gramCol
+      |    ${qualityBucketSql("len(toks)")} AS quality_bucket,
+      |    ${wordGramsSql("toks", TextAnalysis.repetitionN)} AS grams
       |  FROM e)""".stripMargin
-  }
 
   /** The signal CTEs of `Curation.curate` (x26/x44) over `documents`. */
-  private[catalog] val curateCtes: String = signalCtes("documents", grams = false)
+  private[catalog] val curateCtes: String = signalCtes("documents")
 
   /** The signal CTEs x41/x81/x82 (`Curation.curatedDocs`) and x52
     * (`CorpusStream.curate`) share: `p` injects and redacts the PII, then
-    * `e`/`g` as in [[signalCtes]] with the repetition grams.
+    * `e`/`g` as in [[signalCtes]].
     */
   private[catalog] val corpusSignalCtes: String =
     s"""p AS (
       |  SELECT doc_id, ${redactSql(piiTextSql)} AS text
       |  FROM documents),
-      |${signalCtes("p", grams = true)}""".stripMargin
+      |${signalCtes("p")}""".stripMargin
 
   /** The corpus gates over a [[corpusSignalCtes]] `g` row: quality ok,
     * English, and not repetitive.

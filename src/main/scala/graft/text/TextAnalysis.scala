@@ -18,10 +18,17 @@ object TextAnalysis {
   // DuckDB twins (`catalog.Shared`) are generated from the same vals, so
   // a rule changed here reaches both engines.
 
+  /** The whitespace characters, spelled out: Java's `\s` matches the
+    * vertical tab and RE2's (DuckDB's) does not, so a `\s` twin would
+    * split "a", vertical tab, "b" differently in the two engines. This
+    * class reads the same in both.
+    */
+  private val whitespaceChars = "\\t\\n\\x0B\\f\\r "
+
   /** A whitespace run: the tokenizer's split and the fingerprint's
     * collapse to one space.
     */
-  private[graft] val whitespaceRe = "\\s+"
+  private[graft] val whitespaceRe = s"[$whitespaceChars]+"
 
   /** Normalized whitespace tokens (empties dropped). */
   def tokens(text: Column): Column =
@@ -216,7 +223,7 @@ object TextAnalysis {
   }
 
   /** The BPE-ish token: a letter run, a digit run or one symbol. */
-  private[graft] val bpeTokenRe = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
+  private[graft] val bpeTokenRe = s"[A-Za-z]+|[0-9]+|[^A-Za-z0-9$whitespaceChars]"
 
   /** Token counting two ways: whitespace tokens and a BPE-ish regex
     * tokenizer (letter runs / digit runs / single symbols) — the usual

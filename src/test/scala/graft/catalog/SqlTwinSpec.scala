@@ -10,10 +10,6 @@ import Shared._
   * next to the Spark column it mirrors, on edge-case texts, and the two
   * must agree value for value. Lists are compared as lists: DuckDB's
   * `array_to_string([])` is NULL where Spark's `mkString` gives "".
-  *
-  * Known gap, not covered here: Java's `\s` matches the vertical tab
-  * (U+000B) and RE2's does not, so the tokenizer and fingerprint twins
-  * split "a\u000Bb" differently. The fixtures hold no vertical tab.
   */
 class SqlTwinSpec extends SparkSpec {
   import spark.implicits._
@@ -22,6 +18,8 @@ class SqlTwinSpec extends SparkSpec {
     // empty, whitespace-only, tabs and newlines, mixed case
     "", "   ", "\t\n  \r\n", "Hello World", "  MiXeD\tCase\nLines  ",
     "a  b \t c\n\nd", "\tlead tab", "trail newline\n", "THE The the",
+    // vertical tab and form feed: Java's \s matches both, RE2's only \f
+    "a\u000Bb", "\u000Bvt lead\u000B", "form\ffeed x\u000B\f\r\ny",
     // fewer than 5 tokens, exactly 5, punctuation-heavy
     "one two three four", "one two three four five",
     "Hi!!! ... ,,, ;;; ::: ??? ok ok ok ok", "a, b. c! d? e; f: g",
@@ -133,6 +131,13 @@ class SqlTwinSpec extends SparkSpec {
   test("the fingerprint twin hashes like fingerprintCol") {
     assertTwin("fingerprint", spark1(TextAnalysis.fingerprintCol(col("text"))),
       duck1(fingerprintSql))
+  }
+
+  test("the BPE token count twin counts like tokenCounts") {
+    assertTwin("bpe_tokens",
+      TextAnalysis.tokenCounts(df, "doc_id", "text").orderBy("doc_id").collect().toSeq
+        .map(r => norm(r.getAs[Any]("bpe_tokens"))),
+      duck1(s"len(regexp_extract_all(text, '${TextAnalysis.bpeTokenRe}'))"))
   }
 
   test("the word-gram and repetition twins match wordGramsCol and repetitiveFromGrams") {

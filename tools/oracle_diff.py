@@ -1,15 +1,12 @@
 #!/usr/bin/env python3
 """Compare two oracle_sql.json dumps (written by `runMain graft.Verify`).
 
-Usage: python3 tools/oracle_diff.py [--tokens] A.json B.json
+Usage: python3 tools/oracle_diff.py A.json B.json
 
 Lists the query keys only one side has, and the keys whose oracle SQL
 differs once every whitespace run is collapsed to one space (so a
-re-indented or re-wrapped template reads as unchanged). With --tokens,
-whitespace outside string literals that touches `(`, `)` or `,` is
-dropped as well, so "f( a, b )" equals "f(a,b)" but "' a'" still
-differs from "'a'". Exits 0 when the key sets are equal and no text
-differs, 1 otherwise.
+re-indented or re-wrapped template reads as unchanged). Exits 0 when
+the key sets are equal and no text differs, 1 otherwise.
 """
 import json
 import re
@@ -20,15 +17,6 @@ def norm(sql):
     return re.sub(r"\s+", " ", sql).strip()
 
 
-def norm_tokens(sql):
-    # even-indexed parts lie outside '...' literals ('' escapes split
-    # into an empty literal part, which keeps the parity)
-    parts = norm(sql).split("'")
-    for i in range(0, len(parts), 2):
-        parts[i] = re.sub(r" ?([(),]) ?", r"\1", parts[i])
-    return "'".join(parts)
-
-
 def first_diff(a, b, width=60):
     i = next((k for k, (x, y) in enumerate(zip(a, b)) if x != y),
              min(len(a), len(b)))
@@ -37,8 +25,7 @@ def first_diff(a, b, width=60):
 
 
 def main(argv):
-    tokens = "--tokens" in argv[1:]
-    paths = [x for x in argv[1:] if x != "--tokens"]
+    paths = argv[1:]
     if len(paths) != 2:
         sys.stderr.write(__doc__)
         return 2
@@ -46,16 +33,15 @@ def main(argv):
         a = json.load(f)
     with open(paths[1]) as f:
         b = json.load(f)
-    n = norm_tokens if tokens else norm
     removed = sorted(a.keys() - b.keys())
     added = sorted(b.keys() - a.keys())
-    changed = sorted(k for k in a.keys() & b.keys() if n(a[k]) != n(b[k]))
+    changed = sorted(k for k in a.keys() & b.keys() if norm(a[k]) != norm(b[k]))
     for k in removed:
         print(f"- {k}")
     for k in added:
         print(f"+ {k}")
     for k in changed:
-        i, x, y = first_diff(n(a[k]), n(b[k]))
+        i, x, y = first_diff(norm(a[k]), norm(b[k]))
         print(f"~ {k} (first difference at char {i})")
         print(f"    A: ...{x}...")
         print(f"    B: ...{y}...")

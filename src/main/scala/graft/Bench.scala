@@ -45,20 +45,18 @@ object Bench {
   /** The conf of the one local session Bench, Verify and Plans run on,
     * so the verified and audited plans are the benched plans.
     *
-    * Shuffle sizing: 32 initial shuffle partitions by DEFAULT. The
-    * SPARK_GRAFT_INITIAL_PARTS knob is an ESCAPE HATCH no shipped
-    * protocol currently sets: round 12 shipped 256 as the unconditional
-    * default on the claim that AQE coalescing keeps sf0.1 plans shaped —
-    * the same-boot min-of-3 A/B (round 13, PLANS.md) refuted it (AQE
-    * does not refund checkpoint materialization or per-stage overhead in
+    * Shuffle sizing: 32 initial shuffle partitions. Round 12 shipped
+    * 256 on the claim that AQE coalescing keeps sf0.1 plans shaped — the
+    * same-boot min-of-3 A/B (round 13, PLANS.md) refuted it (AQE does
+    * not refund checkpoint materialization or per-stage overhead in
     * iterative/many-stage queries: x22 14.1s@256 vs 5.6s@32 — a 35%
     * suite regression), and the 1000x sort spill that originally
-    * motivated 256 is gone at HEAD (x81 174.9s@32 vs 180.1s@256), so the
-    * scale sweeps run at 32 too. On a real cluster the equivalent
-    * decision is per-job sizing (initialPartitionNum ~ a few x total
-    * cores for big inputs), not one global constant. The oracle results
-    * are knob-invariant by design (fixed-point integer sums,
-    * deterministic tiebreaks) — KnobInvarianceSpec pins that claim at
+    * motivated 256 is gone (x81 174.9s@32 vs 180.1s@256), so the scale
+    * sweeps run at 32 too. On a real cluster the equivalent decision is
+    * per-job sizing (initialPartitionNum ~ a few x total cores for big
+    * inputs), not one global constant. The oracle results are
+    * knob-invariant by design (fixed-point integer sums, deterministic
+    * tiebreaks) — KnobInvarianceSpec pins that claim at
     * initialPartitionNum 1 vs 512.
     */
   private[graft] def localConf(env: Map[String, String] = sys.env)
@@ -66,8 +64,7 @@ object Bench {
     val cpus = localCores(env).toString
     Seq("spark.master" -> s"local[$cpus]",
       "spark.sql.shuffle.partitions" -> cpus,
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
-        positiveInt(env, "SPARK_GRAFT_INITIAL_PARTS", 32).toString,
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "32",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false")
   }

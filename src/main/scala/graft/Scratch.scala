@@ -51,4 +51,13 @@ object Scratch {
   }
 
   def bytes(conf: org.apache.spark.SparkConf): Long = bytesAndFound(conf)._1
+
+  /** Default per-node scratch budget in MB that the budget-gated routes
+    * (`Retrieval`'s `Auto`, `Curation.curationFunnel`) size against:
+    * 48 GiB — the round-15 measured completions on a ~75 GB-free node
+    * peaked at 51-52 GB with the whole ten-stage build running, so one
+    * query's index must stay under ~2/3 of the free disk to leave the
+    * rest of a real job room. Deployments pass their own budget.
+    */
+  val nodeBudgetMb: Long = 49152L
 }

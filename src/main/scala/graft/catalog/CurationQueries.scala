@@ -27,7 +27,12 @@ private[graft] object CurationQueries {
   private def docsWithPii(s: SparkSession, d: String): DataFrame =
     docs(s, d).select(col("doc_id"), piiText)
 
+  private val mmQueryTarget = 50L // x17/x40 fixed-count query-sample size
+  private val mmTopK = 3 // x17/x40 neighbors per query
   private val exportShards = 8 // x54 shuffle-shard export shard count
+  private val packShards = 8 // x37/x43 and the corpus builds' pack shard count
+  private val packBudget = 512 // x37/x43 tokens per sequence
+  private val corpusPackBudget = 256 // x41/x81 tokens per sequence
   private val domainCapK = 10  // x55 max docs kept per source domain
   private val bloomMBits  = 258048L // x64 bloom size: 4096 63-bit words (~32 KB)
   private val bloomHashes = 3       // x64 bits set per gram
@@ -95,11 +100,39 @@ private[graft] object CurationQueries {
       |mixed AS (
       |  SELECT dom.doc_id, dom.n_clean FROM dom
       |  JOIN cn2 USING (source) CROSS JOIN mn2
-      |  WHERE (((doc_id % 1000000007) * 2654435761 % $tempBuckets
-      |            + $tempBuckets) % $tempBuckets)
-      |          * (((doc_id % 1000000007) * 2654435761 % $tempBuckets
-      |               + $tempBuckets) % $tempBuckets)
+      |  WHERE (${hashBucketSql("doc_id", tempBuckets)})
+      |          * (${hashBucketSql("doc_id", tempBuckets)})
       |          * n_domain < n_min * ${tempBuckets.toLong * tempBuckets})""".stripMargin
+
+  /** `toks`(doc_id, n_tokens): each doc's token count (x37/x43). */
+  private val tokenCountsCte: String =
+    s"""toks AS (
+      |  SELECT doc_id,
+      |         len($tokensSql)::BIGINT AS n_tokens
+      |  FROM documents)""".stripMargin
+
+  /** The packing window — the twin of `Packing.assignments` — over
+    * `src`(doc_id, n_tokens): `a` adds each doc's shard (doc_id mod
+    * [[packShards]]) and `start_tok`, the offset of its first token in
+    * the shard's token stream (the running sum in doc_id order).
+    */
+  private def packWindowCte(src: String): String =
+    s"""a AS (
+      |  SELECT doc_id, n_tokens, doc_id % $packShards AS shard,
+      |         (sum(n_tokens) OVER (PARTITION BY doc_id % $packShards ORDER BY doc_id
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+      |           - n_tokens)::BIGINT AS start_tok
+      |  FROM $src)""".stripMargin
+
+  /** [[packWindowCte]], then one row per packed sequence of `budget`
+    * tokens — the twin of `Packing.packSequences`.
+    */
+  private def packSequencesSql(src: String, budget: Int): String =
+    s"""${packWindowCte(src)}
+      |SELECT shard, (start_tok // $budget)::BIGINT AS seq_id,
+      |       count(*) AS n_docs, sum(n_tokens)::BIGINT AS seq_tokens,
+      |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
+      |FROM a GROUP BY 1, 2""".stripMargin
 
   /** x75's oracle: the BPE training loop unrolled into a CTE chain —
     * s0 is the char-segmented word-frequency table; each round k adds
@@ -177,7 +210,7 @@ private[graft] object CurationQueries {
     // broadcast query side and the corpus side of cosineTopK both read
     // it, and uncached each re-runs the mapPartitions embed of the whole
     // corpus (measured 0.73s → 3.13s). It is filled once before the
-    // top-k plan scans it twice (Shared.filledPin). Lifecycle:
+    // top-k plan scans it twice (Similarity.filledPin). Lifecycle:
     // harness-owned (Bench/Verify clearCache between queries).
     // Oracle:
     // multimodal retrieval: DuckDB re-derives Multimodal.fakeEmbed
@@ -189,11 +222,11 @@ private[graft] object CurationQueries {
     // (FixtureInvariantSpec) makes ord(char) = payload byte. The cosine
     // + round(6) cross-engine parity is the proven x05 pattern.
     Entry("x17_multimodal_topk", (s, d) => {
-      val emb = filledPin(Multimodal.fakeEmbed(s,
+      val emb = Similarity.filledPin(Multimodal.fakeEmbed(s,
         Multimodal.withPayload(docs(s, d), "doc_id", "text"),
         dim = fakeEmbedDim).toDF())
       Similarity.cosineTopK(emb, "doc_id", "embedding",
-        fixedCountPred(docs(s, d), "doc_id", target = 50), k = 3)
+        fixedCountPred(docs(s, d), "doc_id", mmQueryTarget), k = mmTopK)
     }, Sql(
       s"""WITH b AS (
         |  SELECT doc_id, i, ord(substr(text, CAST(i + 1 AS INT), 1)) AS byte
@@ -210,17 +243,12 @@ private[graft] object CurationQueries {
         |      1e-9) AS FLOAT)) AS emb
         |  FROM vec),
         |q AS (SELECT doc_id AS qid, emb AS qemb FROM nrm
-        |      WHERE ${fixedCountPredSql("documents", "doc_id", 50)}),
+        |      WHERE ${fixedCountPredSql("documents", "doc_id", mmQueryTarget)}),
         |s AS (
         |  SELECT q.qid, n.doc_id AS nid,
         |         round(list_cosine_similarity(q.qemb::DOUBLE[], n.emb::DOUBLE[]), 6) AS sim
         |  FROM q, nrm n WHERE n.doc_id <> q.qid),
-        |r AS (
-        |  SELECT qid, nid, sim,
-        |         CAST(row_number() OVER (PARTITION BY qid
-        |                                 ORDER BY sim DESC, nid ASC) AS BIGINT) AS rnk
-        |  FROM s)
-        |SELECT qid, nid, sim, rnk FROM r WHERE rnk <= 3""".stripMargin)),
+        |${topKTailSql("s", mmTopK)}""".stripMargin)),
 
     // resize plumbing: byte-subsample payloads to a budget; the oracle
     // checks the exact output-size arithmetic (ceil-step subsampling)
@@ -578,21 +606,9 @@ private[graft] object CurationQueries {
     // scale-out knob
     Entry("x37_pack_sequences", (s, d) =>
       Packing.packSequences(docs(s, d), "doc_id", "text",
-        budget = 512, shards = 8), Sql(
-      s"""WITH toks AS (
-        |  SELECT doc_id,
-        |         len($tokensSql)::BIGINT AS n_tokens
-        |  FROM documents),
-        |a AS (
-        |  SELECT doc_id, n_tokens, doc_id % 8 AS shard,
-        |         sum(n_tokens) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |           - n_tokens AS start_tok
-        |  FROM toks)
-        |SELECT shard, (start_tok // 512)::BIGINT AS seq_id,
-        |       count(*) AS n_docs, sum(n_tokens)::BIGINT AS seq_tokens,
-        |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM a GROUP BY 1, 2""".stripMargin)),
+        budget = packBudget, shards = packShards), Sql(
+      s"""WITH $tokenCountsCte,
+        |${packSequencesSql("toks", packBudget)}""".stripMargin)),
     // shuffle-shard export: every doc gets a reproducible pseudo-random
     // (shard, position) — the loader-facing global shuffle, one shard
     // shuffle + per-shard sort (see ops.Sharding); portable Knuth
@@ -605,8 +621,7 @@ private[graft] object CurationQueries {
       Sharding.shuffleShard(docs(s, d), "doc_id", nShards = exportShards), Sql(
       s"""WITH k AS (
         |  SELECT doc_id,
-        |         (((doc_id % 1000000007) * 2654435761) % 999999937
-        |          + 999999937) % 999999937 AS k
+        |         ${hashBucketSql("doc_id", Sharding.spreadBuckets)} AS k
         |  FROM documents)
         |SELECT doc_id, CAST(k % $exportShards AS INT) AS shard,
         |       CAST(row_number() OVER (PARTITION BY k % $exportShards
@@ -658,7 +673,7 @@ private[graft] object CurationQueries {
     // vacuous TRUE on empty input (null compares, no division)
     Entry("x40_multimodal_gate", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val emb = filledPin(Multimodal.fakeEmbed(s,
+      val emb = Similarity.filledPin(Multimodal.fakeEmbed(s,
         Multimodal.withPayload(docs(s, d), "doc_id", "text")).toDF())
       val dot = expr("aggregate(zip_with(embedding, embedding, " +
         "(a, b) -> CAST(a AS DOUBLE) * b), 0D, (acc, x) -> acc + x)")
@@ -666,9 +681,9 @@ private[graft] object CurationQueries {
         coalesce(max(abs(dot - 1.0)) < 1e-3, lit(true)).as("norm_ok"))
       // fixed-count query sample over the DOCS table (~50 at any sf):
       // keeps this gate's brute-force pass linear in corpus size
-      val qp = fixedCountPred(docs(s, d), "doc_id", target = 50)
+      val qp = fixedCountPred(docs(s, d), "doc_id", mmQueryTarget)
       val topk = Similarity.cosineTopK(emb, "doc_id", "embedding",
-        qp, k = 3)
+        qp, k = mmTopK)
       val w = Window.partitionBy("qid").orderBy("rnk")
       val per = topk.withColumn("prev_sim", lag("sim", 1).over(w))
         .groupBy("qid").agg(count(lit(1)).as("cnt"),
@@ -676,7 +691,7 @@ private[graft] object CurationQueries {
           max(when(col("prev_sim").isNotNull &&
             col("sim") > col("prev_sim"), 1).otherwise(0)).as("ooo"))
       val gates = per.agg(
-        coalesce(min("cnt") === 3 && max("cnt") === 3, lit(true)).as("shape_ok"),
+        coalesce(min("cnt") === mmTopK && max("cnt") === mmTopK, lit(true)).as("shape_ok"),
         coalesce(max("ooo") === 0, lit(true)).as("order_ok"),
         coalesce(min("min_sim") >= -1.000001 &&
           max("max_sim") <= 1.000001, lit(true)).as("bounds_ok"))
@@ -687,7 +702,7 @@ private[graft] object CurationQueries {
       s"""SELECT count(*) AS n_queries, TRUE AS shape_ok, TRUE AS norm_ok,
          |       TRUE AS order_ok, TRUE AS bounds_ok
          |FROM documents
-         |WHERE ${fixedCountPredSql("documents", "doc_id", 50)}""".stripMargin)),
+         |WHERE ${fixedCountPredSql("documents", "doc_id", mmQueryTarget)}""".stripMargin)),
     // the flagship composition: the WHOLE training-data build in one
     // query — PII-redact → quality/lang/repetition gates → benchmark
     // decontamination (docs with doc_id % 20 == 0 stand in for the eval
@@ -706,20 +721,11 @@ private[graft] object CurationQueries {
       Curation.buildCorpus(
         withPii.filter(col("doc_id") % 20 =!= 0),
         withPii.filter(col("doc_id") % 20 === 0),
-        "doc_id", "text")
+        "doc_id", "text", budget = corpusPackBudget, shards = packShards)
     }, Sql(
       s"""WITH $corpusCtes,
         |tk AS (SELECT doc_id, len(toks)::BIGINT AS n_tokens FROM dd WHERE rn = 1),
-        |a AS (
-        |  SELECT doc_id, n_tokens, doc_id % 8 AS shard,
-        |         sum(n_tokens) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |           - n_tokens AS start_tok
-        |  FROM tk)
-        |SELECT shard, (start_tok // 256)::BIGINT AS seq_id,
-        |       count(*) AS n_docs, sum(n_tokens)::BIGINT AS seq_tokens,
-        |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM a GROUP BY 1, 2""".stripMargin)),
+        |${packSequencesSql("tk", corpusPackBudget)}""".stripMargin)),
     // corpus build v2: x41's stages + the two post-dedup passes the
     // round-9 operators add — duplicated-span removal (exact dedup only
     // catches whole-doc twins; shared spans survive it) and τ=2
@@ -736,19 +742,12 @@ private[graft] object CurationQueries {
         withPii.filter(col("doc_id") % 20 =!= 0),
         withPii.filter(col("doc_id") % 20 === 0),
         "doc_id", "text", "source",
-        spanK = dupGramK, tau = tempTau, mixBuckets = tempBuckets)
+        spanK = dupGramK, tau = tempTau, mixBuckets = tempBuckets,
+        budget = corpusPackBudget, shards = packShards)
     }, Sql(
       s"""WITH $corpusV2Ctes,
-        |a AS (
-        |  SELECT doc_id, n_clean AS n_tokens, doc_id % 8 AS shard,
-        |         sum(n_clean) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |           - n_clean AS start_tok
-        |  FROM mixed)
-        |SELECT shard, (start_tok // 256)::BIGINT AS seq_id,
-        |       count(*) AS n_docs, sum(n_tokens)::BIGINT AS seq_tokens,
-        |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM a GROUP BY 1, 2""".stripMargin)),
+        |tk AS (SELECT doc_id, n_clean AS n_tokens FROM mixed),
+        |${packSequencesSql("tk", corpusPackBudget)}""".stripMargin)),
     // the "where did my corpus go" attrition funnel over x81's stages:
     // one row per stage, surviving docs + drop vs previous — the
     // observability report a production build publishes with its output
@@ -872,7 +871,7 @@ private[graft] object CurationQueries {
         |k AS (
         |  SELECT t.source, sum(t.n_tokens)::BIGINT AS kept_tokens
         |  FROM t JOIN c ON t.source = c.source CROSS JOIN mt
-        |  WHERE ((t.doc_id % 1000000007) * 2654435761 % 100 + 100) % 100
+        |  WHERE ${hashBucketSql("t.doc_id", 100)}
         |          * c.m < mt.m_target * 100
         |  GROUP BY t.source)
         |SELECT c.source, c.m AS total_tokens,
@@ -928,25 +927,18 @@ private[graft] object CurationQueries {
     // each shard's trailing partial (the oracle checks the exact values)
     Entry("x43_pack_spans", (s, d) =>
       Packing.packSpans(docs(s, d), "doc_id", "text",
-        budget = 512, shards = 8), Sql(
-      s"""WITH toks AS (
-        |  SELECT doc_id,
-        |         len($tokensSql)::BIGINT AS n_tokens
-        |  FROM documents),
-        |a AS (
-        |  SELECT doc_id, n_tokens, doc_id % 8 AS shard,
-        |         (sum(n_tokens) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |           - n_tokens)::BIGINT AS start_tok
-        |  FROM toks WHERE n_tokens > 0),
+        budget = packBudget, shards = packShards), Sql(
+      s"""WITH $tokenCountsCte,
+        |${packWindowCte("toks")},
         |sp AS (
         |  SELECT shard, doc_id, start_tok, start_tok + n_tokens AS end_tok,
         |         u.seq_id
-        |  FROM a, UNNEST(range(start_tok // 512,
-        |                       (start_tok + n_tokens - 1) // 512 + 1)) AS u(seq_id))
+        |  FROM a, UNNEST(range(start_tok // $packBudget,
+        |                       (start_tok + n_tokens - 1) // $packBudget + 1)) AS u(seq_id)
+        |  WHERE n_tokens > 0)
         |SELECT shard, seq_id, count(*) AS n_docs,
-        |       sum(least(end_tok, (seq_id + 1) * 512)
-        |           - greatest(start_tok, seq_id * 512))::BIGINT AS seq_tokens,
+        |       sum(least(end_tok, (seq_id + 1) * $packBudget)
+        |           - greatest(start_tok, seq_id * $packBudget))::BIGINT AS seq_tokens,
         |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
         |FROM sp GROUP BY 1, 2""".stripMargin)),
     // domain-mixture rebalancing: downsample every source to the
@@ -961,13 +953,13 @@ private[graft] object CurationQueries {
         .select(col("source"), col("n_before"),
           coalesce(col("n_kept"), lit(0L)).as("n_kept"))
     }, Sql(
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT source, count(*) AS n_before FROM documents GROUP BY source),
         |t AS (SELECT min(n_before) AS n_target FROM c),
         |k AS (
         |  SELECT d.source, count(*) AS n_kept
         |  FROM documents d JOIN c ON d.source = c.source CROSS JOIN t
-        |  WHERE ((d.doc_id % 1000000007) * 2654435761 % 100 + 100) % 100
+        |  WHERE ${hashBucketSql("d.doc_id", 100)}
         |          * c.n_before < t.n_target * 100
         |  GROUP BY d.source)
         |SELECT c.source, c.n_before, coalesce(k.n_kept, 0) AS n_kept
@@ -1012,8 +1004,7 @@ private[graft] object CurationQueries {
         |mn AS (SELECT min(n_domain) AS n_min FROM cn),
         |h AS (
         |  SELECT d.doc_id, d.lang, cn.n_domain, mn.n_min,
-        |         ((d.doc_id % 1000000007) * 2654435761 % $tempBuckets
-        |            + $tempBuckets) % $tempBuckets AS hb
+        |         ${hashBucketSql("d.doc_id", tempBuckets)} AS hb
         |  FROM documents d JOIN cn USING (lang) CROSS JOIN mn)
         |SELECT doc_id, lang FROM h
         |WHERE hb * hb * n_domain < n_min * ${tempBuckets.toLong * tempBuckets}""".stripMargin))

@@ -66,6 +66,7 @@ private[graft] object NearDupQueries {
   // pairs keep sharing capped grams and their filtered-set Jaccard
   // stays high while coincidental mid-df candidates vanish.
   private val charGramDfCap    = 32
+  private val charJaccard      = 0.3 // x31 char-5-gram Jaccard threshold
 
   private val mhNumHashes      = 16  // MinHash slots (x03/x28)
   private val mhBands          = 4   // LSH bands (x03/x28)
@@ -83,11 +84,77 @@ private[graft] object NearDupQueries {
     */
   private val cappedWordShingleCtes: String =
     s"""${wordShingleCtes("sh0", wordShingleK)},
-      |hotw AS (
-      |  SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > $wordShingleDfCap),
+      |${dfCapCtes(wordShingleDfCap)}""".stripMargin
+
+  /** The paragraphs of [[structuredDocs]] as DuckDB CTEs (x60/x62):
+    * `toks`, `paras`(doc_id, pos, para) — chunks of [[paraChunkTokens]]
+    * tokens (DuckDB slices are inclusive, range() is exclusive) — and
+    * `ne`, the non-blank paragraphs keyed by their 15-nibble md5 prefix
+    * `pkey`.
+    */
+  private val paraCtes: String =
+    s"""${tokensCte()},
+      |paras AS (
+      |  SELECT doc_id, i AS pos,
+      |         array_to_string(t[i*$paraChunkTokens+1 : i*$paraChunkTokens+$paraChunkTokens], ' ') AS para
+      |  FROM toks, UNNEST(range(0, (len(t)+${paraChunkTokens - 1})//$paraChunkTokens)) AS u(i)),
+      |ne AS (
+      |  SELECT doc_id, pos, para, substr(md5(para), 1, 15) AS pkey
+      |  FROM paras WHERE trim(para) <> '')""".stripMargin
+
+  /** The rebuild of `ParaDedup` over `fl`(doc_id, pos, para, kept):
+    * per doc, its paragraph count, kept count and kept paragraphs
+    * joined by '\n' in order as `textAs`; total over `documents`.
+    */
+  private def paraRebuildSql(textAs: String): String =
+    s"""ag AS (
+      |  SELECT doc_id, count(*) AS n_para,
+      |         count(*) FILTER (WHERE kept) AS n_kept,
+      |         string_agg(para, chr(10) ORDER BY pos) FILTER (WHERE kept) AS $textAs
+      |  FROM fl GROUP BY doc_id)
+      |SELECT d.doc_id, coalesce(n_para, 0) AS n_para,
+      |       coalesce(n_kept, 0) AS n_kept,
+      |       coalesce($textAs, '') AS $textAs
+      |FROM documents d LEFT JOIN ag USING (doc_id)""".stripMargin
+
+  /** The df cap of `NearDup.jaccardPairsOver` over the (doc_id,
+    * shingle) index `sh0`: `hotw` holds the shingles of more than `cap`
+    * docs, `sh` the index without them.
+    */
+  private def dfCapCtes(cap: Int): String =
+    s"""hotw AS (
+      |  SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > $cap),
       |sh AS (
       |  SELECT doc_id, shingle FROM sh0
       |  WHERE NOT EXISTS (SELECT 1 FROM hotw WHERE hotw.shingle = sh0.shingle))""".stripMargin
+
+  /** The exact shared-shingle pair counts over `sh`: `inter`(doc_a,
+    * doc_b, n_common) for every pair sharing a shingle.
+    */
+  private[catalog] val exactInterSql: String =
+    """  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
+      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2""".stripMargin
+
+  /** The Jaccard verify step over the shingle index `sh` — the twin of
+    * `NearDup.jaccardPairsOver`'s: `sizes` counts each doc's shingles,
+    * `inter` is the (doc_a, doc_b, n_common) pair source `interSql`, and
+    * `out`(doc_a, doc_b, n_common, jaccard) keeps the pairs whose
+    * 4dp-rounded Jaccard reaches `threshold`.
+    */
+  private[catalog] def jaccardCtes(interSql: String, threshold: Double,
+                          out: String = "p"): String = {
+    val jaccard = "round(n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common), 4)"
+    s"""sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+      |inter AS (
+      |$interSql),
+      |$out AS (
+      |  SELECT doc_a, doc_b, n_common, $jaccard AS jaccard
+      |  FROM inter
+      |  JOIN sizes sa ON sa.doc_id = doc_a
+      |  JOIN sizes sb ON sb.doc_id = doc_b
+      |  WHERE $jaccard >= $threshold)""".stripMargin
+  }
 
   /** DuckDB twin of the PORTABLE MinHash+LSH pair generation
     * (`NearDup.minhashLshPairs(..., portable = true)`): the 60-bit
@@ -101,9 +168,16 @@ private[graft] object NearDupQueries {
     * pass to NearDup — x03/x28 and their oracles cannot de-sync. Shared
     * by the x03 pair oracle and the x28 connected-components oracle —
     * one truth definition. Produces CTEs `toks sh hb mh bands hot b2
-    * cand sizes inter p`; `p` is (doc_a, doc_b, jaccard).
+    * cand sizes inter p`; `p` is (doc_a, doc_b, n_common, jaccard)
+    * ([[jaccardCtes]] over the candidate pairs).
     */
   private val minhashPortablePairCtes: String = {
+    val candInterSql =
+      """  SELECT c.doc_a, c.doc_b, count(*) AS n_common
+        |  FROM cand c
+        |  JOIN sh sa ON sa.doc_id = c.doc_a
+        |  JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
+        |  GROUP BY 1, 2""".stripMargin
     val coefs = (0 until mhNumHashes).map(i =>
       s"($i, ${graft.neardup.NearDup.portableCoef(i, 0)}, ${graft.neardup.NearDup.portableCoef(i, 1)})")
       .mkString(", ")
@@ -149,20 +223,7 @@ private[graft] object NearDupQueries {
       |  FROM b2 a JOIN b2 b ON a.band_id = b.band_id
       |                     AND a.band_hash = b.band_hash
       |                     AND a.doc_id < b.doc_id),
-      |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT c.doc_a, c.doc_b, count(*) AS n_common
-      |  FROM cand c
-      |  JOIN sh sa ON sa.doc_id = c.doc_a
-      |  JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-      |  GROUP BY 1, 2),
-      |p AS (
-      |  SELECT i.doc_a, i.doc_b,
-      |         round(i.n_common::DOUBLE / (sa.n_sh + sb.n_sh - i.n_common), 4) AS jaccard
-      |  FROM inter i
-      |  JOIN sizes sa ON sa.doc_id = i.doc_a
-      |  JOIN sizes sb ON sb.doc_id = i.doc_b
-      |  WHERE round(i.n_common::DOUBLE / (sa.n_sh + sb.n_sh - i.n_common), 4) >= $mhThreshold)""".stripMargin
+      |${jaccardCtes(candInterSql, mhThreshold)}""".stripMargin
   }
 
   /** DuckDB twin of the PORTABLE SimHash banded index
@@ -225,6 +286,8 @@ private[graft] object NearDupQueries {
     * scale).
     */
   private val gateMinPairs = 10L
+  private val gateTargetDocs = 200L // x33/x34 probe sample the adaptive rule starts from
+  private val gateJaccard = 0.5 // x33/x34 exact-truth Jaccard floor (threshold + margin)
 
   private def adaptiveProbeExact(nDocs: Long, targetDocs: Long)
                                 (exactAt: Int => DataFrame): (DataFrame, Int) = {
@@ -256,30 +319,20 @@ private[graft] object NearDupQueries {
     * boolean itself is the in-plan invariant (literal TRUE here).
     */
   private val exactPairsGateSql: String =
-    s"""WITH ${wordShingleCtes("sh", 3)},
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |pairs AS (
-       |  SELECT doc_a FROM inter
-       |  JOIN sizes sa ON sa.doc_id = doc_a
-       |  JOIN sizes sb ON sb.doc_id = doc_b
-       |  WHERE round(n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common), 4) >= 0.5),
+    s"""WITH ${wordShingleCtes("sh", wordShingleK)},
+       |${jaccardCtes(exactInterSql, gateJaccard, "pairs")},
        |b0 AS (
-       |  SELECT CAST(2 ** floor(log2(greatest(count(*) // 200, 1))) AS BIGINT) AS b
+       |  SELECT CAST(2 ** floor(log2(greatest(count(*) // $gateTargetDocs, 1))) AS BIGINT) AS b
        |  FROM documents),
        |ks AS (
        |  SELECT DISTINCT CAST(greatest(b // (4 ** g), 1) AS BIGINT) AS k
        |  FROM b0, generate_series(0, 15) AS t(g)),
        |nk AS (
        |  SELECT k, (SELECT count(*) FROM pairs
-       |             WHERE (((doc_a % 1000000007) * 2654435761) % k
-       |                    + k) % k = 0) AS n
+       |             WHERE ${hashBucketSql("doc_a", "k")} = 0) AS n
        |  FROM ks),
        |chosen AS (
-       |  SELECT coalesce(max(k) FILTER (WHERE n >= 10), 1) AS k FROM nk)
+       |  SELECT coalesce(max(k) FILTER (WHERE n >= $gateMinPairs), 1) AS k FROM nk)
        |SELECT nk.n AS n_pairs, TRUE AS recall_ok
        |FROM nk JOIN chosen ON nk.k = chosen.k""".stripMargin
 
@@ -309,17 +362,8 @@ private[graft] object NearDupQueries {
       NearDup.jaccardPairs(docs(s, d), "doc_id", "text", k = wordShingleK,
         threshold = mhThreshold, maxDocFreq = Some(wordShingleDfCap)), Sql(
       s"""WITH $cappedWordShingleCtes,
-        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, n_common,
-        |       round(n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common), 4) AS jaccard
-        |FROM inter
-        |JOIN sizes sa ON sa.doc_id = doc_a
-        |JOIN sizes sb ON sb.doc_id = doc_b
-        |WHERE round(n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common), 4) >= $mhThreshold""".stripMargin)),
+        |${jaccardCtes(exactInterSql, mhThreshold)}
+        |SELECT doc_a, doc_b, n_common, jaccard FROM p""".stripMargin)),
     // hot band buckets capped at 200 docs: on this low-entropy corpus the
     // cap drops NO pairs at sf0.01/sf0.1 (sweep-verified) but bounds the
     // C(n,2) pair expansion that would otherwise dominate at 100 TB.
@@ -454,7 +498,7 @@ private[graft] object NearDupQueries {
       // read them (jaccardPairsOver pins the capped index itself)
       NearDup.jaccardPairsOver(
         NearDup.charShingles(docs(s, d), "doc_id", "text", n = 5).cache(),
-        threshold = 0.3, maxDocFreq = Some(charGramDfCap)), Sql(
+        threshold = charJaccard, maxDocFreq = Some(charGramDfCap)), Sql(
       s"""WITH d AS (
         |  SELECT doc_id, lower(trim(text)) AS t FROM documents),
         |sh0 AS (
@@ -463,22 +507,9 @@ private[graft] object NearDupQueries {
         |                                      i -> t[i:i+4]))
         |    ELSE [] END) AS shingle
         |  FROM d),
-        |hot AS (
-        |  SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > $charGramDfCap),
-        |sh AS (
-        |  SELECT doc_id, shingle FROM sh0
-        |  WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.shingle = sh0.shingle)),
-        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, n_common,
-        |       round(n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common), 4) AS jaccard
-        |FROM inter
-        |JOIN sizes sa ON sa.doc_id = doc_a
-        |JOIN sizes sb ON sb.doc_id = doc_b
-        |WHERE round(n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common), 4) >= 0.3""".stripMargin)),
+        |${dfCapCtes(charGramDfCap)},
+        |${jaccardCtes(exactInterSql, charJaccard)}
+        |SELECT doc_a, doc_b, n_common, jaccard FROM p""".stripMargin)),
     // recall gate for the capped MinHash-LSH path (x03, and x28
     // transitively — identical candidate generation): the banded pairs
     // must cover ≥70% of the exact-Jaccard pairs at threshold+margin
@@ -502,10 +533,10 @@ private[graft] object NearDupQueries {
       // pair density. Recall over a deterministic pair sample is exact
       // on that sample, not an estimate of something else.
       // (NearDup's internal frames spell the key `id`.)
-      val sh = NearDup.shingles(docs(s, d), "doc_id", "text", k = 3).cache()
+      val sh = NearDup.shingles(docs(s, d), "doc_id", "text", k = wordShingleK).cache()
       val (exact, landedK) =
-        adaptiveProbeExact(docs(s, d).count(), targetDocs = 200)(kk =>
-          NearDup.jaccardPairsOver(sh, threshold = 0.5,
+        adaptiveProbeExact(docs(s, d).count(), gateTargetDocs)(kk =>
+          NearDup.jaccardPairsOver(sh, threshold = gateJaccard,
               probePred = Some(Sampling.hashBucket(col("id"), kk) === 0))
             .select("doc_a", "doc_b"))
       val probe = Some(Sampling.hashBucket(col("id"), landedK) === 0)
@@ -527,10 +558,10 @@ private[graft] object NearDupQueries {
       // r17 tokenized the corpus once per family by construction.
       val toks = docs(s, d).select(col("doc_id").as("id"),
         graft.text.TextAnalysis.tokens(col("text")).as("toks")).cache()
-      val sh = NearDup.shinglesFromToks(toks, k = 3).cache()
+      val sh = NearDup.shinglesFromToks(toks, k = wordShingleK).cache()
       val (exact, landedK) =
-        adaptiveProbeExact(docs(s, d).count(), targetDocs = 200)(kk =>
-          NearDup.jaccardPairsOver(sh, threshold = 0.5,
+        adaptiveProbeExact(docs(s, d).count(), gateTargetDocs)(kk =>
+          NearDup.jaccardPairsOver(sh, threshold = gateJaccard,
               probePred = Some(Sampling.hashBucket(col("id"), kk) === 0))
             .select("doc_a", "doc_b"))
       val probe = Some(Sampling.hashBucket(col("id"), landedK) === 0)
@@ -553,24 +584,8 @@ private[graft] object NearDupQueries {
         NearDup.jaccardPairs(docs(s, d), "doc_id", "text", k = wordShingleK,
           threshold = mhThreshold, maxDocFreq = Some(wordShingleDfCap))), Sql(
       s"""WITH RECURSIVE $cappedWordShingleCtes,
-        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |p AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = doc_a
-        |  JOIN sizes sb ON sb.doc_id = doc_b
-        |  WHERE round(n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common), 4) >= $mhThreshold),
-        |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-        |      UNION SELECT doc_b, doc_a FROM p),
-        |r AS (
-        |  SELECT src AS id, src AS label FROM e
-        |  UNION
-        |  SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id)
-        |SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
-        |FROM r GROUP BY id""".stripMargin)),
+        |${jaccardCtes(exactInterSql, mhThreshold)},
+        |${componentsSql("p")}""".stripMargin)),
     // the same cluster assignment over the SCALE pair path (capped
     // MinHash-LSH candidates instead of the exact all-shared-shingle
     // join) — the composition a 100 TB dedup actually runs. portable
@@ -588,14 +603,7 @@ private[graft] object NearDupQueries {
           threshold = mhThreshold, maxBucketSize = Some(mhBucketCap),
           portable = true)), Sql(
       s"""WITH RECURSIVE $minhashPortablePairCtes,
-        |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-        |      UNION SELECT doc_b, doc_a FROM p),
-        |r AS (
-        |  SELECT src AS id, src AS label FROM e
-        |  UNION
-        |  SELECT e.dst AS id, r.label FROM r JOIN e ON e.src = r.id)
-        |SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
-        |FROM r GROUP BY id""".stripMargin)),
+        |${componentsSql("p")}""".stripMargin)),
 
     // ---- sub-document dedup: paragraphs, duplicated n-grams, spans ----
     // paragraph-level keep-first dedup (CCNet-style boilerplate
@@ -612,27 +620,12 @@ private[graft] object NearDupQueries {
     // pos) is unique), ordered string_agg rebuild, LEFT JOIN totality
     Entry("x60_paragraph_dedup", (s, d) =>
       ParaDedup.dedupParagraphs(structuredDocs(s, d), "doc_id", "text"), Sql(
-      s"""WITH ${tokensCte()},
-        |paras AS (
-        |  SELECT doc_id, i AS pos,
-        |         array_to_string(t[i*$paraChunkTokens+1 : i*$paraChunkTokens+$paraChunkTokens], ' ') AS para
-        |  FROM toks, UNNEST(range(0, (len(t)+${paraChunkTokens - 1})//$paraChunkTokens)) AS u(i)),
-        |ne AS (
-        |  SELECT doc_id, pos, para, substr(md5(para), 1, 15) AS pkey
-        |  FROM paras WHERE trim(para) <> ''),
+      s"""WITH $paraCtes,
         |fl AS (
         |  SELECT doc_id, pos, para,
         |         row_number() OVER (PARTITION BY pkey ORDER BY doc_id, pos) = 1 AS kept
         |  FROM ne),
-        |ag AS (
-        |  SELECT doc_id, count(*) AS n_para,
-        |         count(*) FILTER (WHERE kept) AS n_kept,
-        |         string_agg(para, chr(10) ORDER BY pos) FILTER (WHERE kept) AS text_dedup
-        |  FROM fl GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(n_para, 0) AS n_para,
-        |       coalesce(n_kept, 0) AS n_kept,
-        |       coalesce(text_dedup, '') AS text_dedup
-        |FROM documents d LEFT JOIN ag USING (doc_id)""".stripMargin)),
+        |${paraRebuildSql("text_dedup")}""".stripMargin)),
     // cross-document boilerplate removal (the C4/RefinedWeb rule, the
     // complement of x60's keep-first policy): a paragraph occurring in
     // > [paraBoilerMaxDf] distinct docs is dropped from ALL of them —
@@ -647,28 +640,13 @@ private[graft] object NearDupQueries {
     Entry("x62_boilerplate_rm", (s, d) =>
       ParaDedup.removeBoilerplate(structuredDocs(s, d), "doc_id", "text",
         maxDocFreq = paraBoilerMaxDf), Sql(
-      s"""WITH ${tokensCte()},
-        |paras AS (
-        |  SELECT doc_id, i AS pos,
-        |         array_to_string(t[i*$paraChunkTokens+1 : i*$paraChunkTokens+$paraChunkTokens], ' ') AS para
-        |  FROM toks, UNNEST(range(0, (len(t)+${paraChunkTokens - 1})//$paraChunkTokens)) AS u(i)),
-        |ne AS (
-        |  SELECT doc_id, pos, para, substr(md5(para), 1, 15) AS pkey
-        |  FROM paras WHERE trim(para) <> ''),
+      s"""WITH $paraCtes,
         |fr AS (
         |  SELECT pkey, count(DISTINCT doc_id) AS df FROM ne GROUP BY pkey),
         |fl AS (
         |  SELECT doc_id, pos, para, df <= $paraBoilerMaxDf AS kept
         |  FROM ne JOIN fr USING (pkey)),
-        |ag AS (
-        |  SELECT doc_id, count(*) AS n_para,
-        |         count(*) FILTER (WHERE kept) AS n_kept,
-        |         string_agg(para, chr(10) ORDER BY pos) FILTER (WHERE kept) AS text_clean
-        |  FROM fl GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(n_para, 0) AS n_para,
-        |       coalesce(n_kept, 0) AS n_kept,
-        |       coalesce(text_clean, '') AS text_clean
-        |FROM documents d LEFT JOIN ag USING (doc_id)""".stripMargin)),
+        |${paraRebuildSql("text_clean")}""".stripMargin)),
     // duplicated-n-gram profile (the exact-substring-dedup cut signal,
     // Lee et al. 2022): per doc, distinct word 8-grams shared verbatim
     // with ANY other doc + the fraction — same gram width as x36's

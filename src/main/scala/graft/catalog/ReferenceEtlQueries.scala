@@ -142,6 +142,70 @@ private[graft] object ReferenceEtlQueries {
     }
   }
 
+  /** The IoT flagship's band (the reference's `base` and `p` CTEs): the
+    * clean readings, and their exact 5th and 95th percentiles — the
+    * twin of `Iot.cleanBanded` before its filter.
+    */
+  private val iotBandCtes: String =
+    """base AS (
+      |  SELECT event_id, ts::DATE AS day, value FROM events
+      |  WHERE value IS NOT NULL AND trim(lower(event_type)) <> ''),
+      |p AS (
+      |  SELECT percentile_cont(0.05) WITHIN GROUP (ORDER BY value) AS p_lo,
+      |         percentile_cont(0.95) WITHIN GROUP (ORDER BY value) AS p_hi
+      |  FROM base)""".stripMargin
+
+  /** [[iotBandCtes]] and `daily`(day, avg_value, n): the cent-exact
+    * daily average of the banded readings — the twin of `Iot.dailyAvg`.
+    */
+  private val iotDailyCtes: String =
+    s"""$iotBandCtes,
+      |daily AS (
+      |  SELECT day,
+      |         floor(sum(CAST(round(value * 100) AS BIGINT)) / count(*) + 0.5)
+      |           / 100.0 AS avg_value,
+      |         count(*) AS n
+      |  FROM base, p WHERE value BETWEEN p_lo AND p_hi GROUP BY day)""".stripMargin
+
+  /** q03/q04: the five days of [[iotDailyCtes]] first in `dir` order of
+    * their average, ranked — the twin of `Iot.top5Hot` / `top5Cold`.
+    */
+  private def iotTop5Oracle(dir: String): String =
+    s"""WITH $iotDailyCtes
+      |SELECT day, avg_value, n,
+      |       CAST(row_number() OVER (ORDER BY avg_value $dir, day ASC) AS BIGINT) AS rnk
+      |FROM daily ORDER BY avg_value $dir, day ASC LIMIT 5""".stripMargin
+
+  /** The cent-exact daily average of `events.value` — the twin of
+    * [[dailyCentAvg]] (q11, q45) and of `Incremental.incrementalDailyAvg`'s
+    * aggregate (q10): the sum of whole cents divided
+    * by the non-null count, rounded half up to a cent, and the row count
+    * per day. `from` is the FROM clause, a filter included.
+    */
+  private def dailyCentAvgSql(from: String): String =
+    s"""SELECT ts::DATE AS day,
+      |       floor(sum(CAST(round(value * 100) AS BIGINT)) / count(value) + 0.5)
+      |         / 100.0 AS avg_value,
+      |       count(*) AS n
+      |FROM $from GROUP BY 1""".stripMargin
+
+  /** The sessions derived from `events` as the CTE `s` — the twin of
+    * `Ecommerce.sessionsFromEvents` (q27, q28), before `cleanSessions`'
+    * duration filter.
+    */
+  private val sessionsCte: String =
+    """s AS (
+      |  SELECT event_id AS session_id, user_id, ts AS start_time,
+      |         ts + to_minutes(event_id % 2000 - 2) AS end_time,
+      |         CASE WHEN event_id % 7 = 0 THEN NULL
+      |              ELSE list_slice(string_split('home search product cart checkout', ' '),
+      |                              1, CAST(event_id % 5 + 1 AS INT)) END AS pages_visited,
+      |         CASE WHEN event_id % 11 = 0 THEN NULL
+      |              ELSE list_slice(string_split('click scroll search purchase logout', ' '),
+      |                              1, CAST(event_id % 4 + 1 AS INT)) END AS actions,
+      |         string_split('mobile desktop tablet', ' ')[CAST(event_id % 3 + 1 AS INT)] AS device
+      |  FROM events)""".stripMargin
+
   /** Fixture payload for the JSON-shredding family (S3/F13/J4/A8/F12) —
     * single source of truth in the pipeline object; the q14 oracle's
     * VALUES are derived from it.
@@ -162,62 +226,14 @@ private[graft] object ReferenceEtlQueries {
   val entries: Seq[Entry] = Seq(
     // ---- IoT flagship family (SURVEY §3.1: P1-P4, A1, A2, J1, W1, T1) ----
     Entry("q01_iot_clean", (s, d) => Iot.cleanBanded(ev(s, d)), Sql(
-      """WITH base AS (
-        |  SELECT event_id, ts::DATE AS day, value FROM events
-        |  WHERE value IS NOT NULL AND trim(lower(event_type)) <> ''),
-        |p AS (
-        |  SELECT percentile_cont(0.05) WITHIN GROUP (ORDER BY value) AS p_lo,
-        |         percentile_cont(0.95) WITHIN GROUP (ORDER BY value) AS p_hi
-        |  FROM base)
+      s"""WITH $iotBandCtes
         |SELECT event_id, day, value FROM base, p
         |WHERE value BETWEEN p_lo AND p_hi""".stripMargin)),
     Entry("q02_iot_daily", (s, d) => Iot.dailyAvg(ev(s, d)), Sql(
-      """WITH base AS (
-        |  SELECT event_id, ts::DATE AS day, value FROM events
-        |  WHERE value IS NOT NULL AND trim(lower(event_type)) <> ''),
-        |p AS (
-        |  SELECT percentile_cont(0.05) WITHIN GROUP (ORDER BY value) AS p_lo,
-        |         percentile_cont(0.95) WITHIN GROUP (ORDER BY value) AS p_hi
-        |  FROM base)
-        |SELECT day,
-        |       floor(sum(CAST(round(value * 100) AS BIGINT)) / count(*) + 0.5)
-        |         / 100.0 AS avg_value,
-        |       count(*) AS n
-        |FROM base, p WHERE value BETWEEN p_lo AND p_hi GROUP BY day""".stripMargin)),
-    Entry("q03_iot_top5_hot", (s, d) => Iot.top5Hot(ev(s, d)), Sql(
-      """WITH base AS (
-        |  SELECT ts::DATE AS day, value FROM events
-        |  WHERE value IS NOT NULL AND trim(lower(event_type)) <> ''),
-        |p AS (
-        |  SELECT percentile_cont(0.05) WITHIN GROUP (ORDER BY value) AS p_lo,
-        |         percentile_cont(0.95) WITHIN GROUP (ORDER BY value) AS p_hi
-        |  FROM base),
-        |daily AS (
-        |  SELECT day,
-        |         floor(sum(CAST(round(value * 100) AS BIGINT)) / count(*) + 0.5)
-        |           / 100.0 AS avg_value,
-        |         count(*) AS n
-        |  FROM base, p WHERE value BETWEEN p_lo AND p_hi GROUP BY day)
-        |SELECT day, avg_value, n,
-        |       CAST(row_number() OVER (ORDER BY avg_value DESC, day ASC) AS BIGINT) AS rnk
-        |FROM daily ORDER BY avg_value DESC, day ASC LIMIT 5""".stripMargin)),
-    Entry("q04_iot_top5_cold", (s, d) => Iot.top5Cold(ev(s, d)), Sql(
-      """WITH base AS (
-        |  SELECT ts::DATE AS day, value FROM events
-        |  WHERE value IS NOT NULL AND trim(lower(event_type)) <> ''),
-        |p AS (
-        |  SELECT percentile_cont(0.05) WITHIN GROUP (ORDER BY value) AS p_lo,
-        |         percentile_cont(0.95) WITHIN GROUP (ORDER BY value) AS p_hi
-        |  FROM base),
-        |daily AS (
-        |  SELECT day,
-        |         floor(sum(CAST(round(value * 100) AS BIGINT)) / count(*) + 0.5)
-        |           / 100.0 AS avg_value,
-        |         count(*) AS n
-        |  FROM base, p WHERE value BETWEEN p_lo AND p_hi GROUP BY day)
-        |SELECT day, avg_value, n,
-        |       CAST(row_number() OVER (ORDER BY avg_value ASC, day ASC) AS BIGINT) AS rnk
-        |FROM daily ORDER BY avg_value ASC, day ASC LIMIT 5""".stripMargin)),
+      s"""WITH $iotDailyCtes
+        |SELECT day, avg_value, n FROM daily""".stripMargin)),
+    Entry("q03_iot_top5_hot", (s, d) => Iot.top5Hot(ev(s, d)), Sql(iotTop5Oracle("DESC"))),
+    Entry("q04_iot_top5_cold", (s, d) => Iot.top5Cold(ev(s, d)), Sql(iotTop5Oracle("ASC"))),
 
     // ---- marts family (A3-A6, J2, W2, F8-F10) ----
     Entry("q05_top_event_type", (s, d) =>
@@ -280,12 +296,8 @@ private[graft] object ReferenceEtlQueries {
     // ---- incremental family (P8, K4, K5, F16) ----
     Entry("q10_incremental_daily", (s, d) =>
       Incremental.incrementalDailyAvg(ev(s, d), 8), Sql(
-      """WITH m AS (SELECT max(ts::DATE) - 7 AS cutoff FROM events)
-        |SELECT ts::DATE AS day,
-        |       floor(sum(CAST(round(value * 100) AS BIGINT)) / count(value) + 0.5)
-        |         / 100.0 AS avg_value,
-        |       count(*) AS n
-        |FROM events, m WHERE ts::DATE >= cutoff GROUP BY 1""".stripMargin)),
+      s"""WITH m AS (SELECT max(ts::DATE) - 7 AS cutoff FROM events)
+        |${dailyCentAvgSql("events, m WHERE ts::DATE >= cutoff")}""".stripMargin)),
     Entry("q11_upsert_merge", (s, d) => {
       val events = ev(s, d)
       val daily = dailyCentAvg(events)
@@ -293,12 +305,7 @@ private[graft] object ReferenceEtlQueries {
       val incoming = daily.crossJoin(broadcast(cutoff))
         .filter(col("day") >= col("cutoff")).drop("cutoff")
       Incremental.mergeWindow(daily, incoming, "day", cutoff)
-    }, Sql(
-      """SELECT ts::DATE AS day,
-        |       floor(sum(CAST(round(value * 100) AS BIGINT)) / count(value) + 0.5)
-        |         / 100.0 AS avg_value,
-        |       count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin)),
+    }, Sql(dailyCentAvgSql("events"))),
 
     // K4 generalized: arbitrary-key full-row upsert (incoming wins,
     // existing survives where unclaimed)
@@ -396,17 +403,7 @@ private[graft] object ReferenceEtlQueries {
       cleanSess(s, d)
         .select("session_id", "user_id", "session_date", "duration_min",
           "num_pages", "num_actions", "device"), Sql(
-      """WITH s AS (
-        |  SELECT event_id AS session_id, user_id, ts AS start_time,
-        |         ts + to_minutes(event_id % 2000 - 2) AS end_time,
-        |         CASE WHEN event_id % 7 = 0 THEN NULL
-        |              ELSE list_slice(string_split('home search product cart checkout', ' '),
-        |                              1, CAST(event_id % 5 + 1 AS INT)) END AS pages_visited,
-        |         CASE WHEN event_id % 11 = 0 THEN NULL
-        |              ELSE list_slice(string_split('click scroll search purchase logout', ' '),
-        |                              1, CAST(event_id % 4 + 1 AS INT)) END AS actions,
-        |         string_split('mobile desktop tablet', ' ')[CAST(event_id % 3 + 1 AS INT)] AS device
-        |  FROM events)
+      s"""WITH $sessionsCte
         |SELECT session_id, user_id, start_time::DATE AS session_date,
         |       round(epoch(end_time - start_time) / 60.0, 2) AS duration_min,
         |       CAST(CASE WHEN pages_visited IS NULL THEN 0 ELSE len(pages_visited) END AS INT) AS num_pages,
@@ -428,17 +425,7 @@ private[graft] object ReferenceEtlQueries {
     // need the same expensive wide derivation — here they don't.
     Entry("q28_mart_user_activity", (s, d) =>
       Ecommerce.martUserActivity(cleanSess(s, d)), Sql(
-      """WITH s AS (
-        |  SELECT event_id AS session_id, user_id, ts AS start_time,
-        |         ts + to_minutes(event_id % 2000 - 2) AS end_time,
-        |         CASE WHEN event_id % 7 = 0 THEN NULL
-        |              ELSE list_slice(string_split('home search product cart checkout', ' '),
-        |                              1, CAST(event_id % 5 + 1 AS INT)) END AS pages_visited,
-        |         CASE WHEN event_id % 11 = 0 THEN NULL
-        |              ELSE list_slice(string_split('click scroll search purchase logout', ' '),
-        |                              1, CAST(event_id % 4 + 1 AS INT)) END AS actions,
-        |         string_split('mobile desktop tablet', ' ')[CAST(event_id % 3 + 1 AS INT)] AS device
-        |  FROM events),
+      s"""WITH $sessionsCte,
         |c AS (
         |  SELECT user_id, date_trunc('month', start_time::DATE)::DATE AS report_month,
         |         round(epoch(end_time - start_time) / 60.0, 2) AS duration_min,
@@ -628,12 +615,7 @@ private[graft] object ReferenceEtlQueries {
       // nothing (an inferring read starts one job to read the footers)
       s.read.schema(withCut.drop("cutoff").schema).parquet(tmp)
         .select("day", "avg_value", "n")
-    }, Sql(
-      """SELECT ts::DATE AS day,
-        |       floor(sum(CAST(round(value * 100) AS BIGINT)) / count(value) + 0.5)
-        |         / 100.0 AS avg_value,
-        |       count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin)),
+    }, Sql(dailyCentAvgSql("events"))),
     // K3 insert-if-absent DISK sink under the oracle gate (q09 pins the
     // anti-join logic; this pins the storage round-trip): seed the target
     // with the %3 rows, then appendIfAbsent the %2 rows — the %6 overlap
@@ -989,8 +971,8 @@ private[graft] object ReferenceEtlQueries {
           rates = Map("error" -> 100, "signup" -> 100, "click" -> 10),
           defaultRate = 5)
         .groupBy("event_type").agg(count(lit(1)).as("n_kept")), Sql(
-      """SELECT event_type, count(*) AS n_kept FROM events
-        |WHERE ((event_id % 1000000007) * 2654435761 % 100 + 100) % 100 <
+      s"""SELECT event_type, count(*) AS n_kept FROM events
+        |WHERE ${hashBucketSql("event_id", 100)} <
         |      CASE event_type WHEN 'error' THEN 100 WHEN 'signup' THEN 100
         |                      WHEN 'click' THEN 10 ELSE 5 END
         |GROUP BY event_type""".stripMargin)),

@@ -1,26 +1,33 @@
 package graft
 package catalog
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Sampling
 import graft.text.{Pii, TextAnalysis}
 
 /** Helpers more than one catalog family reads: the table loaders, the
   * memoized corpus count, the fixed-count sample predicate and its
   * DuckDB twin, the recall-gate tail, the integer-cosine SQL, the PII
-  * suffix, the DuckDB twins of the text primitives, and the knobs
-  * several families interpolate into both the Spark build and its
-  * oracle SQL. No family object is imported here, so the families
-  * depend on this object and never on each other.
+  * suffix, the DuckDB twins of the text, hash, top-k and
+  * connected-components primitives, and the knobs several families
+  * interpolate into both the Spark build and its oracle SQL. No family
+  * object is imported here, so the families depend on this object and
+  * never on each other.
   *
   * The rule for twins: the SQL twin of a Spark primitive is generated
-  * from the constants its column reads (`TextAnalysis`' whitespace
-  * regex, stopword lists, quality bounds and repetition gate, `Pii`'s
-  * ordered rules, [[piiSuffix]]), never typed into an oracle. A change
-  * to a text rule is then one edit that reaches both engines. Each twin
-  * is a single-line fragment: the oracles interpolate it into
-  * `stripMargin` templates, where a line that starts with `|` (a `||`
-  * concat) would lose that bar.
+  * once, from the constants its column reads (`TextAnalysis`'
+  * whitespace regex, stopword lists, quality bounds and repetition
+  * gate, `Pii`'s ordered rules, [[piiSuffix]], `Sampling`'s Knuth
+  * constants), never typed into an oracle. A fragment one family reads
+  * is built in that family's object (the integer-IVF cell chain, the
+  * LSH bands, the Jaccard verify step, the BM25 contribution, the
+  * packing window, the IoT band); a fragment several families read is
+  * built here. A change to a rule is then one edit that reaches both
+  * engines. Each twin is a single-line fragment or a CTE block whose
+  * interpolated lines never start with `|`: the oracles interpolate it
+  * into `stripMargin` templates, where a line that starts with `|` (a
+  * `||` concat) would lose that bar.
   */
 private[graft] object Shared {
   private[catalog] def ev(s: SparkSession, d: String) = Tables.events(s, d)
@@ -39,6 +46,55 @@ private[graft] object Shared {
 
   private[catalog] def docsCount(s: SparkSession, d: String): Long =
     corpusCountMemo.computeIfAbsent(d, dir => docs(s, dir).count()).longValue()
+
+  // ---- DuckDB twins of the hash and top-k primitives ----
+
+  /** Twin of `Sampling.hashBucket(key, buckets)`: the Knuth spread of
+    * `key` folded into [0, buckets). The inner modulus comes before the
+    * multiply, so the product stays inside DuckDB's BIGINT, and
+    * `+ buckets) % buckets` folds a negative key into range (both
+    * engines truncate `%` toward zero). `buckets` is SQL text, so a
+    * bucket column reads it as well as a literal.
+    */
+  private[catalog] def hashBucketSql(key: String, buckets: String): String =
+    s"(($key % ${Sampling.knuthModulus}) * ${Sampling.knuthMultiplier} % $buckets" +
+      s" + $buckets) % $buckets"
+
+  private[catalog] def hashBucketSql(key: String, buckets: Int): String =
+    hashBucketSql(key, buckets.toString)
+
+  /** Twin of the top-k rank of `Similarity` and `Retrieval`: per qid,
+    * row_number over (`score` DESC, nid ASC), as BIGINT.
+    */
+  private[catalog] def rankSql(score: String = "sim"): String =
+    s"CAST(row_number() OVER (PARTITION BY qid ORDER BY $score DESC, nid ASC) AS BIGINT)"
+
+  /** The top-k tail over `src`(qid, nid, sim): `r` ranks by [[rankSql]],
+    * and the final SELECT keeps rnk <= `k` (qid, nid, sim, rnk).
+    */
+  private[catalog] def topKTailSql(src: String, k: Int): String =
+    s"""r AS (
+      |  SELECT qid, nid, sim, ${rankSql()} AS rnk
+      |  FROM $src)
+      |SELECT qid, nid, sim, rnk FROM r WHERE rnk <= $k""".stripMargin
+
+  /** Twin of `NearDup.dupClusters`, the connected components the
+    * near-dup and kNN families close their pairs with: `cc_ed` is the
+    * symmetric edge set of `pairs`(doc_a, doc_b), `cc_r` the recursive
+    * label fold, and the final SELECT gives each doc of a pair its
+    * component (doc_id, cluster_id = the least member id). The caller's
+    * WITH must be RECURSIVE.
+    */
+  private[catalog] def componentsSql(pairs: String): String =
+    s"""cc_ed AS (SELECT doc_a AS src, doc_b AS dst FROM $pairs
+      |          UNION SELECT doc_b, doc_a FROM $pairs),
+      |cc_r AS (
+      |  SELECT src AS id, src AS label FROM cc_ed
+      |  UNION
+      |  SELECT cc_ed.dst AS id, cc_r.label
+      |  FROM cc_r JOIN cc_ed ON cc_ed.src = cc_r.id)
+      |SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
+      |FROM cc_r GROUP BY id""".stripMargin
 
   /** One piece of the synthetic PII suffix: a literal, the doc id, the
     * doc id modulo `m`, or that residue left-padded with zeros to `width`.
@@ -215,21 +271,6 @@ private[graft] object Shared {
     */
   private[catalog] val corpusGateSql: String =
     s"quality_bucket = 'ok' AND $predLangSql = 'en' AND NOT ${repetitiveSql("grams")}"
-
-  /** `df` cached and filled by one job before any plan reads it. AQE
-    * fills a cached frame as a query stage of the first plan that scans
-    * it, one stage per scan, so a plan that scans an unfilled pin twice
-    * (a top-k's query and corpus sides, a model's seed pick and first
-    * assignment) starts two fill jobs that race for the same block: the
-    * loser's task waits on the block lock, then logs "already exists".
-    * One pass over the bare frame — no exchange, so one job — fills it,
-    * and those stages start no job.
-    */
-  private[catalog] def filledPin(df: DataFrame): DataFrame = {
-    val p = df.cache()
-    p.foreachPartition((_: Iterator[Row]) => ())
-    p
-  }
 
   /** Deterministic FIXED-COUNT sample predicate over an integral key:
     * keeps ~`target` rows regardless of table size. The recall gates'

@@ -1,7 +1,7 @@
 package graft
 package catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sim.{CellShape, Similarity}
 import graft.multimodal.Multimodal
@@ -30,69 +30,148 @@ private[graft] object SimilarityQueries {
   private val semHierMinCoarse   = 4    // x56 coarse-cell floor
   private val knnHierClusterSize = 100  // x63/x65 target docs per fine cluster
                                         // (scoring = nprobe·cluster per query)
+  private val embDim = 64 // `embeddings` width (every ANN, LSH, PQ and JL entry)
+  private val annQueryTarget = 40 // fixed-count query-sample size of the ANN top-k and recall entries
+  private val annK = 5 // neighbors per query of the ANN top-k and recall entries
+  private val lshTables = 8 // hash tables of every LSH entry
+  private val lshNbits = 6 // x06/x35 fixed grid, and x85's floor
   private val lshAutoTargetBucket = 256 // x85 max expected docs per LSH bucket
-  private val lshAutoMinNbits     = 6   // x85 grid floor (= x06's fixed shape)
+  private val nearDupNbits = 4 // x07/x32/x57/x88 grid
+  private val nearDupThreshold = 0.25 // x07/x32/x57/x91 cosine floor
   private val jlOutDim = 16 // x67 JL projected dims (64 → 16: 4× cheaper sims)
   private val jlShortlist = 100 // x68 rerank shortlist per query (recall knob)
   private val jlRecallBound = 0.3 // x68 floor: measured 0.39–0.67 on fixtures
   private val repBucketCap = 256 // x57/x88 per-bucket member cap (pairs ≤ tables·2^nbits·C(cap,2))
   private val repBucketCapTight = 32 // x90/x91 cap sized to ENGAGE at sf0.01 (occupancy ≈125/bucket)
 
-  /** The exact-integer IVF model as DuckDB CTEs (`b acc vec c0 s1 a1
-    * c1p c1 s2 a2`): byte-sum embeds, Knuth-spread init, one integer
-    * floor-mean Lloyd pass, final assignment — the SQL twin of
-    * `Similarity.ivfIntModel`, shared verbatim by the x20i (IVF top-k)
-    * and x53 (semantic dedup) oracles so the two cannot drift. `a2` is
-    * (doc_id, v, cid). `nlistSql` is the centroid count as SQL text —
-    * a literal for the fixed-shape x20i, a scalar subquery for x53's
-    * corpus-adaptive shape; rn-over-total-order is LIMIT spelled so a
-    * subquery bound is legal.
+  // ---- the exact-integer IVF model's DuckDB twins ----
+
+  /** The first `nSql` vectors of `vec` in Knuth-spread order as the CTE
+    * `name`(`id`, `v`): the twin of `Similarity.knuthSeeds`. `nSql` is
+    * SQL text — a literal for the fixed-shape x20i, a scalar subquery
+    * for the corpus-adaptive shapes; rn-over-total-order is LIMIT
+    * spelled so a subquery bound is legal.
     */
-  private def ivfIntAssignCtes(nlistSql: String): String =
-    s"""$intEmbedVecCtes,
-      |c0 AS (
-      |  SELECT cid, cvec FROM (
-      |    SELECT doc_id AS cid, v AS cvec,
+  private def knuthSeedCte(name: String, id: String, v: String, nSql: String): String =
+    s"""$name AS (
+      |  SELECT $id, $v FROM (
+      |    SELECT doc_id AS $id, v AS $v,
       |           row_number() OVER (
-      |             ORDER BY (((doc_id % 1000000007) * 2654435761) % 1000003
-                       + 1000003) % 1000003 ASC,
+      |             ORDER BY ${hashBucketSql("doc_id", Similarity.seedBuckets)} ASC,
       |                      doc_id ASC) AS rn
-      |    FROM vec) t
-      |  WHERE rn <= $nlistSql),
-      |s1 AS (
-      |  SELECT vec.doc_id, vec.v, c0.cid, ${intCosSql("vec.v", "c0.cvec")} AS csim
-      |  FROM vec, c0),
-      |a1 AS (
-      |  SELECT doc_id, v, cid FROM (
-      |    SELECT doc_id, v, cid,
-      |           row_number() OVER (PARTITION BY doc_id
-      |                              ORDER BY csim DESC, cid ASC) AS rn
-      |    FROM s1) t WHERE rn = 1),
-      |c1p AS (
+      |    FROM vec) t WHERE rn <= $nSql)""".stripMargin
+
+  /** The CTE `name`: each row of `from` with the cell (`cid`, `cvec`) of
+    * highest integer cosine to its vector `v`, the lower cell id winning
+    * ties — the twin of the family's max_by (csim, -cid) argmax. Its
+    * columns are `id`, `v` and `cid` without their relation prefixes.
+    */
+  private def nearestCellCte(name: String, id: String, v: String,
+                             cid: String, cvec: String, from: String): String =
+    s"""$name AS (
+      |  SELECT ${Seq(id, v, cid).map(_.split('.').last).mkString(", ")} FROM (
+      |    SELECT $id, $v, $cid,
+      |           row_number() OVER (PARTITION BY $id
+      |             ORDER BY ${intCosSql(v, cvec)} DESC, $cid ASC) AS rn
+      |    FROM $from) t WHERE rn = 1)""".stripMargin
+
+  /** One integer floor-mean Lloyd pass over the assignment `a1`(doc_id,
+    * v, cid): `c1p` sums each component per cell and `c1`(cid, `vecAs`)
+    * floor-divides — the twin of `Similarity.lloydFloorMean`.
+    */
+  private def lloydCtes(vecAs: String): String =
+    s"""c1p AS (
       |  SELECT cid, u.j AS pos, sum(v[CAST(u.j + 1 AS INT)]) AS sv,
       |         count(*) AS cnt
       |  FROM a1, UNNEST(range($fakeEmbedDim)) AS u(j)
       |  GROUP BY 1, 2),
-      |c1 AS (SELECT cid, list(sv // cnt ORDER BY pos) AS cvec
-      |       FROM c1p GROUP BY cid),
-      |s2 AS (
-      |  SELECT vec.doc_id, vec.v, c1.cid, ${intCosSql("vec.v", "c1.cvec")} AS csim
-      |  FROM vec, c1),
-      |a2 AS (
-      |  SELECT doc_id, v, cid FROM (
-      |    SELECT doc_id, v, cid,
-      |           row_number() OVER (PARTITION BY doc_id
+      |c1 AS (SELECT cid, list(sv // cnt ORDER BY pos) AS $vecAs
+      |       FROM c1p GROUP BY cid)""".stripMargin
+
+  /** The exact-integer IVF model as DuckDB CTEs (`b acc vec c0 a1 c1p
+    * c1 a2`): byte-sum embeds, Knuth-spread init, one integer
+    * floor-mean Lloyd pass, final assignment — the SQL twin of
+    * `Similarity.ivfIntModel`, shared by the x20i (IVF top-k) and x53
+    * (semantic dedup) oracles so the two cannot drift. `a2` is
+    * (doc_id, v, cid); `nlistSql` is the centroid count as SQL text.
+    */
+  private def ivfIntAssignCtes(nlistSql: String): String =
+    s"""$intEmbedVecCtes,
+      |${knuthSeedCte("c0", "cid", "cvec", nlistSql)},
+      |${nearestCellCte("a1", "vec.doc_id", "vec.v", "c0.cid", "c0.cvec", "vec, c0")},
+      |${lloydCtes("cvec")},
+      |${nearestCellCte("a2", "vec.doc_id", "vec.v", "c1.cid", "c1.cvec", "vec, c1")}""".stripMargin
+
+  /** The TWO-LEVEL cell-model CTE chain (`fs cs fcs live csl vcell a1
+    * c1p c1 c1c a2`) — the DuckDB twin of `Similarity.hierIntModel`,
+    * shared by the x56 dedup oracle and the x63/x65 kNN-graph oracles so
+    * the hierarchical replays cannot drift. `vcell` is (doc_id, v,
+    * ccid), `c1c` the refined fine centroids with their inherited
+    * coarse cell, `a2` the final cell-restricted assignment (doc_id, v,
+    * cid). The bounds are the constant-cluster-size shape at
+    * `clusterSize` ([[hierNlistSql]]).
+    */
+  private def hierAssignCtes(clusterSize: Int): String =
+    s"""$intEmbedVecCtes,
+      |${knuthSeedCte("fs", "cid", "fvec", hierNlistSql(clusterSize))},
+      |${knuthSeedCte("cs", "ccid", "cvec", hierNcoarseSql(clusterSize))},
+      |${nearestCellCte("fcs", "fs.cid", "fs.fvec", "cs.ccid", "cs.cvec", "fs, cs")},
+      |live AS (SELECT DISTINCT ccid FROM fcs),
+      |csl AS (SELECT cs.ccid, cs.cvec FROM cs JOIN live USING (ccid)),
+      |${nearestCellCte("vcell", "vec.doc_id", "vec.v", "csl.ccid", "csl.cvec", "vec, csl")},
+      |${nearestCellCte("a1", "vcell.doc_id", "vcell.v", "fcs.cid", "fcs.fvec",
+           "vcell JOIN fcs ON fcs.ccid = vcell.ccid")},
+      |${lloydCtes("fvec")},
+      |c1c AS (SELECT c1.cid, c1.fvec, fcs.ccid
+      |        FROM c1 JOIN fcs ON fcs.cid = c1.cid),
+      |${nearestCellCte("a2", "vcell.doc_id", "vcell.v", "c1c.cid", "c1c.fvec",
+           "vcell JOIN c1c ON c1c.ccid = vcell.ccid")}""".stripMargin
+
+  /** The constant-cluster-size hierarchical shape bounds as DuckDB
+    * scalar subqueries — ONE spelling shared by the x56 and x63/x65
+    * oracles (the catalog entries compute the identical IEEE ceil/sqrt
+    * sequences driver-side: nlist = max(minNlist, ceil(n/clusterSize)),
+    * ncoarse = max(minCoarse, ceil(sqrt(nlist)))). Parameterized on the
+    * target cluster size because the two families tune it differently:
+    * dedup (x56) amortizes a one-off Σ n_c² pair stage, while the kNN
+    * graph (x63/x65) pays nprobe·clusterSize SCORED candidates per
+    * query, so it targets a smaller cell.
+    */
+  private def hierNlistExpr(clusterSize: Int): String =
+    s"greatest($ivfIntNlist, CAST(ceil(count(*) / $clusterSize.0) AS BIGINT))"
+
+  private def hierNlistSql(clusterSize: Int): String =
+    s"(SELECT ${hierNlistExpr(clusterSize)} FROM documents)"
+
+  private def hierNcoarseSql(clusterSize: Int): String =
+    s"(SELECT greatest($semHierMinCoarse, CAST(ceil(sqrt(CAST(${hierNlistExpr(clusterSize)} AS DOUBLE))) AS BIGINT)) FROM documents)"
+
+  /** The integer-IVF query tail over `ps`(qid, qvec, cid, csim): `pr`
+    * keeps each query's [[ivfIntNprobe]] nearest cells, `sc` scores the
+    * `a2` members of those cells, and the top-[[ivfIntK]] tail ranks
+    * them — x20i's and the kNN graph's spelling.
+    */
+  private lazy val ivfIntProbeTail: String =
+    s"""pr AS (
+      |  SELECT qid, qvec, cid FROM (
+      |    SELECT qid, qvec, cid,
+      |           row_number() OVER (PARTITION BY qid
       |                              ORDER BY csim DESC, cid ASC) AS rn
-      |    FROM s2) t WHERE rn = 1)""".stripMargin
+      |    FROM ps) t WHERE rn <= $ivfIntNprobe),
+      |sc AS (
+      |  SELECT pr.qid, a2.doc_id AS nid,
+      |         round(${intCosSql("pr.qvec", "a2.v")}, 6) AS sim
+      |  FROM pr JOIN a2 ON a2.cid = pr.cid AND a2.doc_id <> pr.qid),
+      |${topKTailSql("sc", ivfIntK)}""".stripMargin
 
   /** The integer fake embeds of the corpus (x20i and the cell-model
-    * family), pinned and filled once ([[Shared.filledPin]]): every
+    * family), pinned and filled once (`Similarity.filledPin`): every
     * integer-IVF model reads them several times before its checkpoint
     * pins the assignment, and `ivfIntModel`'s first plan scans them
     * twice (the seed pick and the first assignment).
     */
   private def intEmbeds(s: SparkSession, d: String): DataFrame =
-    filledPin(Multimodal.fakeEmbedInt(s,
+    Similarity.filledPin(Multimodal.fakeEmbedInt(s,
       Multimodal.withPayload(docs(s, d), "doc_id", "text"),
       dim = fakeEmbedDim).toDF())
 
@@ -102,6 +181,51 @@ private[graft] object SimilarityQueries {
   private def knnShape(s: SparkSession, d: String): CellShape =
     CellShape.hier(docs(s, d).count(), ivfIntNlist, knnHierClusterSize,
       semHierMinCoarse)
+
+  // kNN-graph replay (x63, nested by x65): the HIERARCHICAL assignment
+  // chain (shared with x56 via hierAssignCtes) with probes ranked INSIDE
+  // each vector's coarse cell (vcell ⋈ c1c on ccid — the cell-restricted
+  // trade Similarity.knnGraph makes), then x20i's probe/score/rank tail
+  private lazy val knnGraphHierOracleSql: String =
+    s"""WITH ${hierAssignCtes(knnHierClusterSize)},
+      |ps AS (
+      |  SELECT vcell.doc_id AS qid, vcell.v AS qvec, c1c.cid,
+      |         ${intCosSql("vcell.v", "c1c.fvec")} AS csim
+      |  FROM vcell JOIN c1c ON c1c.ccid = vcell.ccid),
+      |$ivfIntProbeTail""".stripMargin
+
+  /** The SemDeDup oracle over an assignment chain ending in `a2`
+    * (doc_id, v, cid): a doc is dropped iff a lower-id cluster-mate
+    * reaches [[semDedupThreshold]] (round-6dp, the proven cross-engine
+    * float-compare idiom). x53 (flat, x59's below-crossover branch)
+    * and x56 (hierarchical, x59's at-or-above-crossover branch).
+    */
+  private def semDedupOracle(assignCtes: String): String =
+    s"""WITH $assignCtes,
+      |drops AS (
+      |  SELECT DISTINCT a.doc_id
+      |  FROM a2 a JOIN a2 b ON a.cid = b.cid AND b.doc_id < a.doc_id
+      |  WHERE round(${intCosSql("a.v", "b.v")}, 6) >= $semDedupThreshold)
+      |SELECT a2.doc_id, a2.cid, (d.doc_id IS NULL) AS kept
+      |FROM a2 LEFT JOIN drops d ON d.doc_id = a2.doc_id""".stripMargin
+
+  /** Flat SemDeDup: the x20i assignment CTEs at the corpus-adaptive
+    * √(n/2) nlist bound.
+    */
+  private lazy val semDedupFlatOracleSql: String = semDedupOracle(ivfIntAssignCtes(
+    s"(SELECT greatest($ivfIntNlist, CAST(ceil(sqrt(count(*) / 2.0)) AS BIGINT)) FROM documents)"))
+
+  private lazy val semDedupHierOracleSql: String =
+    semDedupOracle(hierAssignCtes(semHierClusterSize))
+
+  /** x59's branch predicate bound — the corpus size where
+    * `CellShape.auto` switches to the two-level shape — interpolated
+    * into the oracle's WHERE predicates.
+    */
+  private lazy val semHierCrossoverDocs: Long =
+    CellShape.crossoverDocs(semHierClusterSize)
+
+  // ---- the float-vector twins: JL projection, LSH planes and bands ----
 
   /** DuckDB twin of `Similarity.jlProject` over a DOUBLE[] column `v`:
     * each projected component is the explicit left-associated ±v[i]
@@ -120,42 +244,70 @@ private[graft] object SimilarityQueries {
       }.mkString
     }.mkString("[", ", ", "]")
 
-  /** DuckDB twin of `Similarity.lshBucket`'s hyperplanes: the splitmix64
-    * plane constants are pure functions of (bit, component), so their
-    * exact double values are interpolated into the oracle SQL as literal
-    * arrays (generated HERE, not hand-written) — DuckDB recomputes the
-    * same sign-bit buckets from the same planes, which is what lets the
-    * LSH candidate sets (x06/x07) be hash-compared instead of rows-only.
-    * Shortest-round-trip double formatting re-parses to the identical
-    * bits in any correct reader.
+  /** DuckDB twin of `Similarity.lshBucket`'s hyperplanes: the CTE
+    * `planes`(t, b, plane) of [[lshTables]] tables × `nbits` planes over
+    * [[embDim]] components. The splitmix64 plane constants are pure
+    * functions of (bit, component), so their exact double values are
+    * interpolated as literal arrays (generated HERE, not hand-written)
+    * — DuckDB recomputes the same sign-bit buckets from the same
+    * planes, which is what lets the LSH candidate sets (x06/x07) be
+    * hash-compared instead of rows-only. Shortest-round-trip double
+    * formatting re-parses to the identical bits in any correct reader.
     */
-  private def lshPlanesSqlValues(tables: Int, nbits: Int, dim: Int): String =
-    (0 until tables).flatMap { t =>
+  private def lshPlanesCte(nbits: Int): String = {
+    val rows = (0 until lshTables).flatMap { t =>
       (0 until nbits).map { b =>
-        val arr = (0 until dim)
+        val arr = (0 until embDim)
           .map(i => graft.sim.Similarity.planeConst(t * nbits + b, i))
           .mkString("[", ", ", "]")
         s"($t, $b, $arr::DOUBLE[])"
       }
-    }.mkString(", ")
+    }
+    s"planes(t, b, plane) AS (VALUES ${rows.mkString(", ")})"
+  }
 
-  /** The LSH top-k oracle chain at a given nbits (8 tables, dim 64,
-    * k=5, fixed-count-40 queries — x06's shape constants): candidate
-    * generation from the interpolated plane literals, exact rescoring,
-    * rank. ONE spelling shared by the fixed x06 oracle (nbits=6) and
-    * every x85 auto branch, so the fixed and auto replays cannot
-    * drift.
+  /** Twin of `Similarity.lshBucket` per table: the CTE `name`(vec_id, t,
+    * bucket) of `v`'s sign-bit buckets against `planes`.
     */
-  private def lshTopKOracleChain(nbits: Int): String =
-    s"""WITH planes(t, b, plane) AS (VALUES ${lshPlanesSqlValues(8, nbits, 64)}),
-      |v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-      |bands AS (
+  private def lshBandsCte(name: String): String =
+    s"""$name AS (
       |  SELECT vec_id, t,
       |         bit_or(CASE WHEN list_dot_product(vec, plane) > 0
       |                     THEN (1::BIGINT << b) ELSE 0::BIGINT END) AS bucket
-      |  FROM v, planes GROUP BY vec_id, t),
+      |  FROM v, planes GROUP BY vec_id, t)""".stripMargin
+
+  /** The LSH pair verify over `bands` and `v`: `cand`(id_a, id_b)
+    * shares a bucket in some table, `scored` adds their 6dp cosine.
+    */
+  private val lshPairCtes: String =
+    s"""cand AS (
+      |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+      |  FROM bands a JOIN bands b ON a.t = b.t AND a.bucket = b.bucket
+      |                            AND a.vec_id < b.vec_id),
+      |scored AS (
+      |  SELECT c.id_a, c.id_b,
+      |         round(list_cosine_similarity(va.vec, vb.vec), 6) AS sim
+      |  FROM cand c
+      |  JOIN v va ON va.vec_id = c.id_a
+      |  JOIN v vb ON vb.vec_id = c.id_b)""".stripMargin
+
+  /** The fixed-count query sample of the ANN entries over
+    * `embeddings`, as SQL.
+    */
+  private lazy val annQueriesSql: String =
+    fixedCountPredSql("embeddings", "vec_id", annQueryTarget)
+
+  /** The LSH top-k oracle chain at a given nbits: candidate generation
+    * from the interpolated plane literals, exact rescoring, rank. ONE
+    * spelling shared by the fixed x06 oracle and every x85 auto branch,
+    * so the fixed and auto replays cannot drift.
+    */
+  private def lshTopKOracleChain(nbits: Int): String =
+    s"""WITH ${lshPlanesCte(nbits)},
+      |v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+      |${lshBandsCte("bands")},
       |q AS (SELECT vec_id AS qid FROM embeddings
-      |      WHERE ${fixedCountPredSql("embeddings", "vec_id", 40)}),
+      |      WHERE $annQueriesSql),
       |qb AS (SELECT q.qid, bb.t, bb.bucket
       |       FROM bands bb JOIN q ON q.qid = bb.vec_id),
       |cand AS (
@@ -168,158 +320,20 @@ private[graft] object SimilarityQueries {
       |  FROM cand c
       |  JOIN v vq ON vq.vec_id = c.qid
       |  JOIN v vn ON vn.vec_id = c.nid),
-      |r AS (
-      |  SELECT qid, nid, sim,
-      |         CAST(row_number() OVER (PARTITION BY qid
-      |                                 ORDER BY sim DESC, nid ASC) AS BIGINT) AS rnk
-      |  FROM scored)
-      |SELECT qid, nid, sim, rnk FROM r WHERE rnk <= 5""".stripMargin
+      |${topKTailSql("scored", annK)}""".stripMargin
 
-  // kNN-graph replay (x63, nested by x65): the HIERARCHICAL assignment
-  // chain (shared verbatim with x56 via hierAssignCtes) with probes
-  // ranked INSIDE each vector's coarse cell (vcell ⋈ c1c on ccid — the
-  // cell-restricted trade Similarity.knnGraph makes), then
-  // x20i's probe/score/rank spellings — the integer-IVF oracles cannot
-  // drift apart
-  private lazy val knnGraphHierOracleSql: String =
-    s"""WITH ${hierAssignCtes(hierNlistSqlFor(knnHierClusterSize),
-           hierNcoarseSqlFor(knnHierClusterSize))},
-      |ps AS (
-      |  SELECT vcell.doc_id AS qid, vcell.v AS qvec, c1c.cid,
-      |         ${intCosSql("vcell.v", "c1c.fvec")} AS csim
-      |  FROM vcell JOIN c1c ON c1c.ccid = vcell.ccid),
-      |pr AS (
-      |  SELECT qid, qvec, cid FROM (
-      |    SELECT qid, qvec, cid,
-      |           row_number() OVER (PARTITION BY qid
-      |                              ORDER BY csim DESC, cid ASC) AS rn
-      |    FROM ps) t WHERE rn <= $ivfIntNprobe),
-      |sc AS (
-      |  SELECT pr.qid, a2.doc_id AS nid,
-      |         round(${intCosSql("pr.qvec", "a2.v")}, 6) AS sim
-      |  FROM pr JOIN a2 ON a2.cid = pr.cid AND a2.doc_id <> pr.qid),
-      |r AS (
-      |  SELECT qid, nid, sim,
-      |         CAST(row_number() OVER (PARTITION BY qid
-      |                                 ORDER BY sim DESC, nid ASC) AS BIGINT) AS rnk
-      |  FROM sc)
-      |SELECT qid, nid, sim, rnk FROM r WHERE rnk <= $ivfIntK""".stripMargin
-
-  /** Flat-SemDeDup oracle (x53, and x59's below-crossover branch):
-    * shared x20i assignment CTEs with the corpus-adaptive √(n/2)
-    * nlist bound, then the within-cluster epsilon-ball drop rule.
+  /** The representative banding x57/x91 and x88/x90 share: `g` collapses
+    * identical vectors to their min-id rep with its multiplicity, `v`
+    * holds the reps, `bands0` their uncapped buckets.
     */
-  private lazy val semDedupFlatOracleSql: String =
-    s"""WITH ${ivfIntAssignCtes(
-           s"(SELECT greatest($ivfIntNlist, CAST(ceil(sqrt(count(*) / 2.0)) AS BIGINT)) FROM documents)")},
-      |drops AS (
-      |  SELECT DISTINCT a.doc_id
-      |  FROM a2 a JOIN a2 b ON a.cid = b.cid AND b.doc_id < a.doc_id
-      |  WHERE round(${intCosSql("a.v", "b.v")}, 6) >= $semDedupThreshold)
-      |SELECT a2.doc_id, a2.cid, (d.doc_id IS NULL) AS kept
-      |FROM a2 LEFT JOIN drops d ON d.doc_id = a2.doc_id""".stripMargin
-
-  /** The constant-cluster-size hierarchical shape bounds as DuckDB
-    * scalar subqueries — ONE spelling shared by the x56 and x63/x65
-    * oracles (the catalog entries compute the identical IEEE ceil/sqrt
-    * sequences driver-side: nlist = max(minNlist, ceil(n/clusterSize)),
-    * ncoarse = max(minCoarse, ceil(sqrt(nlist)))). Parameterized on the
-    * target cluster size because the two families tune it differently:
-    * dedup (x56) amortizes a one-off Σ n_c² pair stage, while the kNN
-    * graph (x63/x65) pays nprobe·clusterSize SCORED candidates per
-    * query, so it targets a smaller cell.
-    */
-  private def hierNlistSqlFor(clusterSize: Int): String =
-    s"(SELECT greatest($ivfIntNlist, CAST(ceil(count(*) / $clusterSize.0) AS BIGINT)) FROM documents)"
-
-  private def hierNcoarseSqlFor(clusterSize: Int): String =
-    s"(SELECT greatest($semHierMinCoarse, CAST(ceil(sqrt(CAST(greatest($ivfIntNlist, CAST(ceil(count(*) / $clusterSize.0) AS BIGINT)) AS DOUBLE))) AS BIGINT)) FROM documents)"
-
-  private lazy val hierNlistSql: String = hierNlistSqlFor(semHierClusterSize)
-  private lazy val hierNcoarseSql: String =
-    hierNcoarseSqlFor(semHierClusterSize)
-
-  /** The TWO-LEVEL cell-model CTE chain (`fs cs fcs live csl vcell a1
-    * c1p c1 c1c a2`) — the DuckDB twin of `Similarity.hierIntModel`,
-    * shared verbatim by the x56 dedup oracle and the x63/x65 kNN-graph
-    * oracles so the hierarchical replays cannot drift. `vcell` is
-    * (doc_id, v, ccid), `c1c` the refined fine centroids with their
-    * inherited coarse cell, `a2` the final cell-restricted assignment
-    * (doc_id, v, cid).
-    */
-  private def hierAssignCtes(nlistSql: String, ncSql: String): String =
-    s"""$intEmbedVecCtes,
-      |fs AS (
-      |  SELECT cid, fvec FROM (
-      |    SELECT doc_id AS cid, v AS fvec,
-      |           row_number() OVER (
-      |             ORDER BY (((doc_id % 1000000007) * 2654435761) % 1000003
-                       + 1000003) % 1000003 ASC,
-      |                      doc_id ASC) AS rn
-      |    FROM vec) t WHERE rn <= $nlistSql),
-      |cs AS (
-      |  SELECT ccid, cvec FROM (
-      |    SELECT doc_id AS ccid, v AS cvec,
-      |           row_number() OVER (
-      |             ORDER BY (((doc_id % 1000000007) * 2654435761) % 1000003
-                       + 1000003) % 1000003 ASC,
-      |                      doc_id ASC) AS rn
-      |    FROM vec) t WHERE rn <= $ncSql),
-      |fcs AS (
-      |  SELECT cid, fvec, ccid FROM (
-      |    SELECT fs.cid, fs.fvec, cs.ccid,
-      |           row_number() OVER (PARTITION BY fs.cid
-      |             ORDER BY ${intCosSql("fs.fvec", "cs.cvec")} DESC, cs.ccid ASC) AS rn
-      |    FROM fs, cs) t WHERE rn = 1),
-      |live AS (SELECT DISTINCT ccid FROM fcs),
-      |csl AS (SELECT cs.ccid, cs.cvec FROM cs JOIN live USING (ccid)),
-      |vcell AS (
-      |  SELECT doc_id, v, ccid FROM (
-      |    SELECT vec.doc_id, vec.v, csl.ccid,
-      |           row_number() OVER (PARTITION BY vec.doc_id
-      |             ORDER BY ${intCosSql("vec.v", "csl.cvec")} DESC, csl.ccid ASC) AS rn
-      |    FROM vec, csl) t WHERE rn = 1),
-      |a1 AS (
-      |  SELECT doc_id, v, cid FROM (
-      |    SELECT vcell.doc_id, vcell.v, fcs.cid,
-      |           row_number() OVER (PARTITION BY vcell.doc_id
-      |             ORDER BY ${intCosSql("vcell.v", "fcs.fvec")} DESC, fcs.cid ASC) AS rn
-      |    FROM vcell JOIN fcs ON fcs.ccid = vcell.ccid) t WHERE rn = 1),
-      |c1p AS (
-      |  SELECT cid, u.j AS pos, sum(v[CAST(u.j + 1 AS INT)]) AS sv,
-      |         count(*) AS cnt
-      |  FROM a1, UNNEST(range($fakeEmbedDim)) AS u(j)
-      |  GROUP BY 1, 2),
-      |c1 AS (SELECT cid, list(sv // cnt ORDER BY pos) AS fvec
-      |       FROM c1p GROUP BY cid),
-      |c1c AS (SELECT c1.cid, c1.fvec, fcs.ccid
-      |        FROM c1 JOIN fcs ON fcs.cid = c1.cid),
-      |a2 AS (
-      |  SELECT doc_id, v, cid FROM (
-      |    SELECT vcell.doc_id, vcell.v, c1c.cid,
-      |           row_number() OVER (PARTITION BY vcell.doc_id
-      |             ORDER BY ${intCosSql("vcell.v", "c1c.fvec")} DESC, c1c.cid ASC) AS rn
-      |    FROM vcell JOIN c1c ON c1c.ccid = vcell.ccid) t WHERE rn = 1)""".stripMargin
-
-  /** Hierarchical-SemDeDup oracle (x56, and x59's at-or-above-
-    * crossover branch): the shared two-level assignment chain, then the
-    * within-cluster epsilon-ball drop rule.
-    */
-  private lazy val semDedupHierOracleSql: String =
-    s"""WITH ${hierAssignCtes(hierNlistSql, hierNcoarseSql)},
-      |drops AS (
-      |  SELECT DISTINCT a.doc_id
-      |  FROM a2 a JOIN a2 b ON a.cid = b.cid AND b.doc_id < a.doc_id
-      |  WHERE round(${intCosSql("a.v", "b.v")}, 6) >= $semDedupThreshold)
-      |SELECT a2.doc_id, a2.cid, (d.doc_id IS NULL) AS kept
-      |FROM a2 LEFT JOIN drops d ON d.doc_id = a2.doc_id""".stripMargin
-
-  /** x59's branch predicate bound — the corpus size where
-    * `CellShape.auto` switches to the two-level shape — interpolated
-    * into the oracle's WHERE predicates.
-    */
-  private lazy val semHierCrossoverDocs: Long =
-    CellShape.crossoverDocs(semHierClusterSize)
+  private lazy val repBandCtes: String =
+    s"""${lshPlanesCte(nearDupNbits)},
+      |g AS (
+      |  SELECT min(vec_id) AS rep_id, count(*)::BIGINT AS n_members,
+      |         embedding AS vec0
+      |  FROM embeddings GROUP BY embedding),
+      |v AS (SELECT rep_id AS vec_id, vec0::DOUBLE[] AS vec FROM g),
+      |${lshBandsCte("bands0")}""".stripMargin
 
   /** The x57 reps-near-dup oracle parameterized by the per-bucket
     * member cap — ONE text for the loose (x57, never engages at sf
@@ -329,57 +343,59 @@ private[graft] object SimilarityQueries {
     * kept-member rule, exact cosine verify, implied cross-twin counts.
     */
   private def nearDupRepsOracle(cap: Int): String =
-    s"""WITH planes(t, b, plane) AS (VALUES ${lshPlanesSqlValues(8, 4, 64)}),
-      |g AS (
-      |  SELECT min(vec_id) AS rep_id, count(*)::BIGINT AS n_members,
-      |         embedding AS vec0
-      |  FROM embeddings GROUP BY embedding),
-      |v AS (SELECT rep_id AS vec_id, vec0::DOUBLE[] AS vec FROM g),
-      |bands0 AS (
-      |  SELECT vec_id, t,
-      |         bit_or(CASE WHEN list_dot_product(vec, plane) > 0
-      |                     THEN (1::BIGINT << b) ELSE 0::BIGINT END) AS bucket
-      |  FROM v, planes GROUP BY vec_id, t),
+    s"""WITH $repBandCtes,
       |bands AS (
       |  SELECT vec_id, t, bucket FROM (
       |    SELECT vec_id, t, bucket,
       |           row_number() OVER (PARTITION BY t, bucket
       |                              ORDER BY vec_id ASC) AS __rn
       |    FROM bands0) WHERE __rn <= $cap),
-      |cand AS (
-      |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-      |  FROM bands a JOIN bands b ON a.t = b.t AND a.bucket = b.bucket
-      |                            AND a.vec_id < b.vec_id),
-      |scored AS (
-      |  SELECT c.id_a, c.id_b,
-      |         round(list_cosine_similarity(va.vec, vb.vec), 6) AS sim
-      |  FROM cand c
-      |  JOIN v va ON va.vec_id = c.id_a
-      |  JOIN v vb ON vb.vec_id = c.id_b)
+      |$lshPairCtes
       |SELECT s.id_a, s.id_b, s.sim,
       |       ga.n_members * gb.n_members AS implied_pairs
       |FROM scored s
       |JOIN g ga ON ga.rep_id = s.id_a
       |JOIN g gb ON gb.rep_id = s.id_b
-      |WHERE s.sim >= 0.25""".stripMargin
+      |WHERE s.sim >= $nearDupThreshold""".stripMargin
 
   /** The bucket-load truncation report parameterized the same way
     * (x88 loose / x90 tight).
     */
   private def nearDupBucketLoadOracle(cap: Int): String =
-    s"""WITH planes(t, b, plane) AS (VALUES ${lshPlanesSqlValues(8, 4, 64)}),
-      |g AS (
-      |  SELECT min(vec_id) AS rep_id, embedding AS vec0
-      |  FROM embeddings GROUP BY embedding),
-      |v AS (SELECT rep_id AS vec_id, vec0::DOUBLE[] AS vec FROM g),
-      |bands0 AS (
-      |  SELECT vec_id, t,
-      |         bit_or(CASE WHEN list_dot_product(vec, plane) > 0
-      |                     THEN (1::BIGINT << b) ELSE 0::BIGINT END) AS bucket
-      |  FROM v, planes GROUP BY vec_id, t)
+    s"""WITH $repBandCtes
       |SELECT t AS table_id, bucket, count(*)::BIGINT AS n_ids,
       |       least(count(*), $cap)::BIGINT AS n_kept
       |FROM bands0 GROUP BY t, bucket""".stripMargin
+
+  /** x88/x90's Spark side: the bucket-load report over the min-id
+    * representative of each distinct embedding, at member cap `cap`.
+    */
+  private def nearDupBucketLoad(s: SparkSession, d: String, cap: Int): DataFrame = {
+    val reps = Tables.embeddings(s, d).groupBy(col("embedding").as("__vec"))
+      .agg(min(col("vec_id")).as("rep_id"))
+      .select(col("rep_id"), col("__vec").as("embedding"))
+    Similarity.nearDupBucketLoad(reps, "rep_id", "embedding",
+      dim = embDim, nbits = nearDupNbits, tables = lshTables, bucketCap = cap)
+  }
+
+  /** An ANN recall gate (x27, x35, x47, x49, x68): the fixed-count
+    * query sample, brute `cosineTopK` truth at [[annK]], and
+    * [[recallGate]] of `ann`'s (qid, nid) at `bound`, reported as
+    * `okCol`. `ann` gets the embeddings and the query predicate.
+    */
+  private def annRecall(name: String, bound: Double, okCol: String)(
+      ann: (DataFrame, Column) => DataFrame): Entry =
+    Entry(name, (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val qp = fixedCountPred(emb, "vec_id", annQueryTarget)
+      val brute = Similarity.cosineTopK(emb, "vec_id", "embedding", qp, k = annK)
+        .select("qid", "nid")
+      recallGate(brute, ann(emb, qp).select("qid", "nid"), Seq("qid", "nid"),
+        bound, Some(emb.filter(qp)), okCol)
+    }, Sql(
+      s"""SELECT count(*) AS n_queries, TRUE AS $okCol
+         |FROM embeddings
+         |WHERE $annQueriesSql""".stripMargin))
 
   val entries: Seq[Entry] = Seq(
     // ---- north-star extensions: similarity search ----
@@ -390,20 +406,15 @@ private[graft] object SimilarityQueries {
     // probe (x06 measured 19× wall for 10× data; ~2× after this change)
     Entry("x05_cosine_topk", (s, d) =>
       Similarity.cosineTopK(Tables.embeddings(s, d), "vec_id", "embedding",
-        fixedCountPred(Tables.embeddings(s, d), "vec_id", target = 40), k = 5), Sql(
+        fixedCountPred(Tables.embeddings(s, d), "vec_id", annQueryTarget), k = annK), Sql(
       s"""WITH q AS (
         |  SELECT vec_id AS qid, embedding::DOUBLE[] AS qvec
-        |  FROM embeddings WHERE ${fixedCountPredSql("embeddings", "vec_id", 40)}),
+        |  FROM embeddings WHERE $annQueriesSql),
         |s AS (
         |  SELECT q.qid, e.vec_id AS nid,
         |         round(list_cosine_similarity(q.qvec, e.embedding::DOUBLE[]), 6) AS sim
         |  FROM q, embeddings e WHERE e.vec_id <> q.qid),
-        |r AS (
-        |  SELECT qid, nid, sim,
-        |         CAST(row_number() OVER (PARTITION BY qid
-        |                                 ORDER BY sim DESC, nid ASC) AS BIGINT) AS rnk
-        |  FROM s)
-        |SELECT qid, nid, sim, rnk FROM r WHERE rnk <= 5""".stripMargin)),
+        |${topKTailSql("s", annK)}""".stripMargin)),
     // Johnson-Lindenstrauss compressed-space top-k: deterministic ±1
     // (Achlioptas) projection 64 → 16 dims as pure column arithmetic in
     // the scan stage, then x05's brute shape over the projected vectors
@@ -418,34 +429,30 @@ private[graft] object SimilarityQueries {
     // brute chain over the compressed space
     Entry("x67_jl_topk", (s, d) =>
       Similarity.cosineTopKJl(Tables.embeddings(s, d), "vec_id", "embedding",
-        fixedCountPred(Tables.embeddings(s, d), "vec_id", target = 40),
-        dim = 64, r = jlOutDim, k = 5), Sql(
+        fixedCountPred(Tables.embeddings(s, d), "vec_id", annQueryTarget),
+        dim = embDim, r = jlOutDim, k = annK), Sql(
       s"""WITH pv AS (
-        |  SELECT vec_id, ${jlProjectSqlList("v", 64, jlOutDim)} AS p
+        |  SELECT vec_id, ${jlProjectSqlList("v", embDim, jlOutDim)} AS p
         |  FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings) t0),
         |q AS (SELECT vec_id AS qid, p AS qvec FROM pv
-        |      WHERE ${fixedCountPredSql("embeddings", "vec_id", 40)}),
+        |      WHERE $annQueriesSql),
         |s AS (
         |  SELECT q.qid, e.vec_id AS nid,
         |         round(list_cosine_similarity(q.qvec, e.p), 6) AS sim
         |  FROM q, pv e WHERE e.vec_id <> q.qid),
-        |r AS (
-        |  SELECT qid, nid, sim,
-        |         CAST(row_number() OVER (PARTITION BY qid
-        |                                 ORDER BY sim DESC, nid ASC) AS BIGINT) AS rnk
-        |  FROM s)
-        |SELECT qid, nid, sim, rnk FROM r WHERE rnk <= 5""".stripMargin)),
+        |${topKTailSql("s", annK)}""".stripMargin)),
     // 8 hash tables: single-table bucketing recalls only ~7-10% of the
     // true top-5 on these near-uniform vectors; 8 tables reach ~35-48%
     // (gated by x35) at linear extra cost — the production LSH-ANN shape
     // Oracle:
     // bucketed LSH-ANN: DuckDB rebuilds the SAME hyperplane buckets from
-    // the interpolated plane literals (lshPlanesSqlValues), so the
+    // the interpolated plane literals (lshPlanesCte), so the
     // candidate set — not just the scoring — is cross-engine-checked
     Entry("x06_cosine_lsh", (s, d) =>
       Similarity.cosineTopKLsh(Tables.embeddings(s, d), "vec_id", "embedding",
-        fixedCountPred(Tables.embeddings(s, d), "vec_id", target = 40),
-        dim = 64, k = 5, nbits = 6, tables = 8), Sql(lshTopKOracleChain(6))),
+        fixedCountPred(Tables.embeddings(s, d), "vec_id", annQueryTarget),
+        dim = embDim, k = annK, nbits = lshNbits, tables = lshTables),
+      Sql(lshTopKOracleChain(lshNbits))),
     // AUTO-shaped LSH ANN — x06's production spelling: nbits grows
     // with the corpus (smallest b >= 6 with n <= 256·2^b, pure integer
     // compares) so bucket occupancy and per-query candidate work stay
@@ -469,16 +476,16 @@ private[graft] object SimilarityQueries {
     Entry("x85_lsh_auto", (s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.cosineTopKLshAuto(emb, "vec_id", "embedding",
-        fixedCountPred(emb, "vec_id", target = 40), dim = 64,
-        n = emb.count(), k = 5, targetBucket = lshAutoTargetBucket,
-        minNbits = lshAutoMinNbits, tables = 8)
+        fixedCountPred(emb, "vec_id", annQueryTarget), dim = embDim,
+        n = emb.count(), k = annK, targetBucket = lshAutoTargetBucket,
+        minNbits = lshNbits, tables = lshTables)
     }, Sql({
-      val b6Max = lshAutoTargetBucket.toLong << 6
-      val b7Max = lshAutoTargetBucket.toLong << 7
-      s"""SELECT qid, nid, sim, rnk FROM (${lshTopKOracleChain(6)}) b6
+      val b6Max = lshAutoTargetBucket.toLong << lshNbits
+      val b7Max = lshAutoTargetBucket.toLong << (lshNbits + 1)
+      s"""SELECT qid, nid, sim, rnk FROM (${lshTopKOracleChain(lshNbits)}) b6
         |WHERE (SELECT count(*) FROM embeddings) <= $b6Max
         |UNION ALL
-        |SELECT qid, nid, sim, rnk FROM (${lshTopKOracleChain(7)}) b7
+        |SELECT qid, nid, sim, rnk FROM (${lshTopKOracleChain(lshNbits + 1)}) b7
         |WHERE (SELECT count(*) FROM embeddings) > $b6Max
         |  AND (SELECT count(*) FROM embeddings) <= $b7Max
         |UNION ALL
@@ -491,19 +498,9 @@ private[graft] object SimilarityQueries {
     // query set is a FIXED-COUNT sample (~40 queries at any sf, same
     // rule as x06 itself), so the brute truth pass stays linear in
     // corpus size
-    Entry("x35_lsh_ann_recall", (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val qp = fixedCountPred(emb, "vec_id", target = 40)
-      val brute = Similarity.cosineTopK(emb, "vec_id", "embedding",
-        qp, k = 5).select("qid", "nid")
-      val lsh = Similarity.cosineTopKLsh(emb, "vec_id", "embedding",
-          qp, dim = 64, k = 5, nbits = 6, tables = 8)
-        .select("qid", "nid")
-      recallGate(brute, lsh, Seq("qid", "nid"), 0.2, Some(emb.filter(qp)))
-    }, Sql(
-      s"""SELECT count(*) AS n_queries, TRUE AS recall_ok
-         |FROM embeddings
-         |WHERE ${fixedCountPredSql("embeddings", "vec_id", 40)}""".stripMargin)),
+    annRecall("x35_lsh_ann_recall", 0.2, "recall_ok")((emb, qp) =>
+      Similarity.cosineTopKLsh(emb, "vec_id", "embedding", qp, dim = embDim,
+        k = annK, nbits = lshNbits, tables = lshTables)),
     // recall gate for the product-quantization path: PQ-ADC shortlist +
     // exact rerank vs in-plan brute force. PQ codes depend on Lloyd
     // means (float-order sensitive), so the output pins the recall
@@ -512,42 +509,21 @@ private[graft] object SimilarityQueries {
     // sf0.01, 0.945 at sf0.1 — the 0.7 gate has real margin, and a
     // codebook regression (bad init, broken ADC table order, subspace
     // misalignment) collapses straight through it
-    Entry("x47_pq_recall", (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      // fixed-count query sample (~40 at any sf): the truth pass is
-      // O(queries · corpus) — linear in corpus — where the old modulo
-      // predicate measured 5.7× wall at 10× (PLANS.md)
-      val qp = fixedCountPred(emb, "vec_id", target = 40)
-      val brute = Similarity.cosineTopK(emb, "vec_id", "embedding",
-        qp, k = 5).select("qid", "nid")
-      val pq = Similarity.cosineTopKPq(emb, "vec_id", "embedding",
-          qp, dim = 64, m = 16, ksub = 32,
-          shortlist = 100, k = 5).select("qid", "nid")
-      recallGate(brute, pq, Seq("qid", "nid"), 0.7, Some(emb.filter(qp)))
-    }, Sql(
-      s"""SELECT count(*) AS n_queries, TRUE AS recall_ok
-         |FROM embeddings
-         |WHERE ${fixedCountPredSql("embeddings", "vec_id", 40)}""".stripMargin)),
+    // (the fixed-count query sample keeps the truth pass O(queries ·
+    // corpus) — linear in corpus — where the old modulo predicate
+    // measured 5.7× wall at 10×, PLANS.md)
+    annRecall("x47_pq_recall", 0.7, "recall_ok")((emb, qp) =>
+      Similarity.cosineTopKPq(emb, "vec_id", "embedding", qp, dim = embDim,
+        m = 16, ksub = 32, shortlist = 100, k = annK)),
     // recall gate for the IVF-PQ composition — the production index
     // shape: coarse lists prune WHICH vectors are scored, PQ codes
     // compress WHAT is scored, rerank restores precision. Probing half
     // the lists measured recall@5 0.78 / 0.73 at sf0.01 / sf0.1; the
     // 0.5 gate matches the IVF-flat convention (x27) and catches a
     // regression in either stage or in their composition
-    Entry("x49_ivfpq_recall", (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      // fixed-count query sample, as in x47
-      val qp = fixedCountPred(emb, "vec_id", target = 40)
-      val brute = Similarity.cosineTopK(emb, "vec_id", "embedding",
-        qp, k = 5).select("qid", "nid")
-      val ivfpq = Similarity.cosineTopKIvfPq(emb, "vec_id", "embedding",
-          qp, dim = 64, nlist = 16, nprobe = 8,
-          m = 16, ksub = 32, shortlist = 100, k = 5).select("qid", "nid")
-      recallGate(brute, ivfpq, Seq("qid", "nid"), 0.5, Some(emb.filter(qp)))
-    }, Sql(
-      s"""SELECT count(*) AS n_queries, TRUE AS recall_ok
-         |FROM embeddings
-         |WHERE ${fixedCountPredSql("embeddings", "vec_id", 40)}""".stripMargin)),
+    annRecall("x49_ivfpq_recall", 0.5, "recall_ok")((emb, qp) =>
+      Similarity.cosineTopKIvfPq(emb, "vec_id", "embedding", qp, dim = embDim,
+        nlist = 16, nprobe = 8, m = 16, ksub = 32, shortlist = 100, k = annK)),
     // multi-table LSH (8 tables × 4 hyperplanes): single-table recall at
     // this threshold is ~4-11% (measured) — the multi-table profile lifts
     // it to ~65-74% at linear extra cost, gated by x32
@@ -556,25 +532,13 @@ private[graft] object SimilarityQueries {
     // then the exact verify-filter over the LSH candidate pairs
     Entry("x07_embedding_neardup", (s, d) =>
       Similarity.embeddingNearDupPairs(Tables.embeddings(s, d), "vec_id", "embedding",
-        dim = 64, threshold = 0.25, nbits = 4, tables = 8), Sql(
-      s"""WITH planes(t, b, plane) AS (VALUES ${lshPlanesSqlValues(8, 4, 64)}),
+        dim = embDim, threshold = nearDupThreshold, nbits = nearDupNbits,
+        tables = lshTables), Sql(
+      s"""WITH ${lshPlanesCte(nearDupNbits)},
         |v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-        |bands AS (
-        |  SELECT vec_id, t,
-        |         bit_or(CASE WHEN list_dot_product(vec, plane) > 0
-        |                     THEN (1::BIGINT << b) ELSE 0::BIGINT END) AS bucket
-        |  FROM v, planes GROUP BY vec_id, t),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM bands a JOIN bands b ON a.t = b.t AND a.bucket = b.bucket
-        |                            AND a.vec_id < b.vec_id),
-        |scored AS (
-        |  SELECT c.id_a, c.id_b,
-        |         round(list_cosine_similarity(va.vec, vb.vec), 6) AS sim
-        |  FROM cand c
-        |  JOIN v va ON va.vec_id = c.id_a
-        |  JOIN v vb ON vb.vec_id = c.id_b)
-        |SELECT id_a, id_b, sim FROM scored WHERE sim >= 0.25""".stripMargin)),
+        |${lshBandsCte("bands")},
+        |$lshPairCtes
+        |SELECT id_a, id_b, sim FROM scored WHERE sim >= $nearDupThreshold""".stripMargin)),
     // x07's production composition for dup-heavy corpora: collapse
     // byte-identical vectors first (one hash groupBy), near-dup over
     // representatives, multiplicities carried as implied_pairs — the
@@ -594,7 +558,8 @@ private[graft] object SimilarityQueries {
     // checked), implied cross-twin pair counts on the way out
     Entry("x57_embed_neardup_reps", (s, d) =>
       Similarity.embeddingNearDupReps(Tables.embeddings(s, d), "vec_id",
-        "embedding", dim = 64, threshold = 0.25, nbits = 4, tables = 8,
+        "embedding", dim = embDim, threshold = nearDupThreshold,
+        nbits = nearDupNbits, tables = lshTables,
         bucketCap = Some(repBucketCap)), Sql(nearDupRepsOracle(repBucketCap))),
     // the no-silent-caps companion of x57: per-(table, bucket) rep
     // occupancy with the kept count under the member cap — where the
@@ -604,14 +569,8 @@ private[graft] object SimilarityQueries {
     // Oracle:
     // x57's truncation report: the same rep collapse + banding, one
     // occupancy aggregate, n_kept = least(n_ids, cap)
-    Entry("x88_neardup_bucket_load", (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val reps = emb.groupBy(col("embedding").as("__vec"))
-        .agg(min(col("vec_id")).as("rep_id"))
-        .select(col("rep_id"), col("__vec").as("embedding"))
-      Similarity.nearDupBucketLoad(reps, "rep_id", "embedding",
-        dim = 64, nbits = 4, tables = 8, bucketCap = repBucketCap)
-    }, Sql(nearDupBucketLoadOracle(repBucketCap))),
+    Entry("x88_neardup_bucket_load", (s, d) => nearDupBucketLoad(s, d, repBucketCap),
+      Sql(nearDupBucketLoadOracle(repBucketCap))),
     // the report with the cap ENGAGED (round-14 verdict item 6: the
     // sf0.01 replay of x88 never truncates — occupancy ≈125 « 256 —
     // so the engaged path was only spec-covered): at cap=32 most
@@ -621,15 +580,9 @@ private[graft] object SimilarityQueries {
     // Oracle:
     // the report with the cap ENGAGED at sf0.01: n_kept < n_ids on
     // most rows — the literal truncation quantity is hash-checked
-    Entry("x90_neardup_bucket_load_tight", (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val reps = emb.groupBy(col("embedding").as("__vec"))
-        .agg(min(col("vec_id")).as("rep_id"))
-        .select(col("rep_id"), col("__vec").as("embedding"))
-      Similarity.nearDupBucketLoad(reps, "rep_id", "embedding",
-        dim = 64, nbits = 4, tables = 8, bucketCap = repBucketCapTight)
-    }, Sql(
-      nearDupBucketLoadOracle(repBucketCapTight))),
+    Entry("x90_neardup_bucket_load_tight",
+      (s, d) => nearDupBucketLoad(s, d, repBucketCapTight),
+      Sql(nearDupBucketLoadOracle(repBucketCapTight))),
     // x57 with the cap ENGAGED: the deterministic kept-member SELECTION
     // (lowest cap ids per bucket) — not just the count — feeds the pair
     // join and is pinned by the hash compare against the same-rule
@@ -642,7 +595,8 @@ private[graft] object SimilarityQueries {
     // spec-covered, never DuckDB-oracle-covered)
     Entry("x91_neardup_reps_tight", (s, d) =>
       Similarity.embeddingNearDupReps(Tables.embeddings(s, d), "vec_id",
-        "embedding", dim = 64, threshold = 0.25, nbits = 4, tables = 8,
+        "embedding", dim = embDim, threshold = nearDupThreshold,
+        nbits = nearDupNbits, tables = lshTables,
         bucketCap = Some(repBucketCapTight)),
       Sql(nearDupRepsOracle(repBucketCapTight))),
     // near-dup recall gate over a 1-in-10 sample: brute-force pairs are
@@ -661,14 +615,15 @@ private[graft] object SimilarityQueries {
         .filter(fixedCountPred(Tables.embeddings(s, d), "vec_id",
           target = 200))
       val lsh = Similarity.embeddingNearDupPairs(sample, "vec_id", "embedding",
-        dim = 64, threshold = 0.25, nbits = 4, tables = 8)
+        dim = embDim, threshold = nearDupThreshold, nbits = nearDupNbits,
+        tables = lshTables)
         .select("id_a", "id_b")
       val v = sample.select(col("vec_id").as("id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("vec"))
       val brute = v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
           round(Similarity.cosine(col("a.vec"), col("b.vec")), 6).as("sim"))
-        .filter(col("sim") >= 0.25)
+        .filter(col("sim") >= nearDupThreshold)
         .select("id_a", "id_b")
       recallGate(brute, lsh, Seq("id_a", "id_b"), 0.5)
     }, Sql(
@@ -678,11 +633,11 @@ private[graft] object SimilarityQueries {
         |  WHERE ${fixedCountPredSql("embeddings", "vec_id", 200)})
         |SELECT count(*) AS n_pairs, TRUE AS recall_ok
         |FROM v a JOIN v b ON a.id < b.id
-        |WHERE round(list_cosine_similarity(a.vec, b.vec), 6) >= 0.25""".stripMargin)),
+        |WHERE round(list_cosine_similarity(a.vec, b.vec), 6) >= $nearDupThreshold""".stripMargin)),
     Entry("x20_cosine_ivf", (s, d) =>
       Similarity.cosineTopKIvf(Tables.embeddings(s, d), "vec_id", "embedding",
-        fixedCountPred(Tables.embeddings(s, d), "vec_id", target = 40),
-        nlist = 16, nprobe = 2, k = 5), RowsOnly),
+        fixedCountPred(Tables.embeddings(s, d), "vec_id", annQueryTarget),
+        nlist = 16, nprobe = 2, k = annK), RowsOnly),
     // ANN quality gate: IVF mean recall@5 against in-plan brute force —
     // the oracle expects literal TRUE, so a probe/centroid regression
     // that tanks recall fails the hash gate instead of hiding in
@@ -690,21 +645,9 @@ private[graft] object SimilarityQueries {
     // queries near list boundaries legitimately dip); nprobe=4 with one
     // Lloyd pass clears 0.5 with margin, while the benchmarked x20 keeps
     // the faster nprobe=2 profile
-    Entry("x27_ann_recall", (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      // fixed-count query sample, as in x35/x47/x49
-      val qp = fixedCountPred(emb, "vec_id", target = 40)
-      val brute = Similarity.cosineTopK(emb, "vec_id", "embedding",
-        qp, k = 5).select("qid", "nid")
-      val ivf = Similarity.cosineTopKIvf(emb, "vec_id", "embedding",
-        qp, nlist = 16, nprobe = 4, k = 5)
-        .select("qid", "nid")
-      recallGate(brute, ivf, Seq("qid", "nid"), 0.5, Some(emb.filter(qp)),
-        okCol = "mean_recall_ok")
-    }, Sql(
-      s"""SELECT count(*) AS n_queries, TRUE AS mean_recall_ok
-         |FROM embeddings
-         |WHERE ${fixedCountPredSql("embeddings", "vec_id", 40)}""".stripMargin)),
+    annRecall("x27_ann_recall", 0.5, "mean_recall_ok")((emb, qp) =>
+      Similarity.cosineTopKIvf(emb, "vec_id", "embedding", qp, nlist = 16,
+        nprobe = 4, k = annK)),
     // recall gate for the two-stage JL pipeline (shortlist in projected
     // space, exact rerank — the production composition) vs exact-space
     // brute force — same literal-TRUE-oracle pattern and ANSI
@@ -712,20 +655,9 @@ private[graft] object SimilarityQueries {
     // deliberately hard case): 0.39 (sf0.1) – 0.67 (sf0.01) at
     // shortlist=100, vs 0.09 for raw projected top-5 — the 0.3 floor is
     // the x35-family honest band, and `shortlist` is the recall knob
-    Entry("x68_jl_recall", (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val qp = fixedCountPred(emb, "vec_id", target = 40)
-      val brute = Similarity.cosineTopK(emb, "vec_id", "embedding",
-        qp, k = 5).select("qid", "nid")
-      val jl = Similarity.cosineTopKJlRerank(emb, "vec_id", "embedding",
-        qp, dim = 64, r = jlOutDim, shortlist = jlShortlist, k = 5)
-        .select("qid", "nid")
-      recallGate(brute, jl, Seq("qid", "nid"), jlRecallBound,
-        Some(emb.filter(qp)), okCol = "mean_recall_ok")
-    }, Sql(
-      s"""SELECT count(*) AS n_queries, TRUE AS mean_recall_ok
-        |FROM embeddings
-        |WHERE ${fixedCountPredSql("embeddings", "vec_id", 40)}""".stripMargin)),
+    annRecall("x68_jl_recall", jlRecallBound, "mean_recall_ok")((emb, qp) =>
+      Similarity.cosineTopKJlRerank(emb, "vec_id", "embedding", qp, dim = embDim,
+        r = jlOutDim, shortlist = jlShortlist, k = annK)),
     // EXACT-INTEGER IVF (hash-green variant of the x20 family): float
     // k-means sums doubles in partition order, so x20's centroids — and
     // therefore its assignment — can never be SQL-reproduced (the one
@@ -753,22 +685,7 @@ private[graft] object SimilarityQueries {
         |ps AS (
         |  SELECT q.qid, q.qvec, c1.cid, ${intCosSql("q.qvec", "c1.cvec")} AS csim
         |  FROM q, c1),
-        |pr AS (
-        |  SELECT qid, qvec, cid FROM (
-        |    SELECT qid, qvec, cid,
-        |           row_number() OVER (PARTITION BY qid
-        |                              ORDER BY csim DESC, cid ASC) AS rn
-        |    FROM ps) t WHERE rn <= $ivfIntNprobe),
-        |sc AS (
-        |  SELECT pr.qid, a2.doc_id AS nid,
-        |         round(${intCosSql("pr.qvec", "a2.v")}, 6) AS sim
-        |  FROM pr JOIN a2 ON a2.cid = pr.cid AND a2.doc_id <> pr.qid),
-        |r AS (
-        |  SELECT qid, nid, sim,
-        |         CAST(row_number() OVER (PARTITION BY qid
-        |                                 ORDER BY sim DESC, nid ASC) AS BIGINT) AS rnk
-        |  FROM sc)
-        |SELECT qid, nid, sim, rnk FROM r WHERE rnk <= $ivfIntK""".stripMargin)),
+        |$ivfIntProbeTail""".stripMargin)),
     // kNN-GRAPH construction: every vector of the corpus gets its top-k
     // approximate neighbors from the shared TWO-LEVEL exact-integer
     // cell model (x56's hierarchical assignment — ~n^1.25 instead of
@@ -814,15 +731,7 @@ private[graft] object SimilarityQueries {
         |  SELECT a.qid AS doc_a, a.nid AS doc_b
         |  FROM cc_e0 a JOIN cc_e0 b ON a.qid = b.nid AND a.nid = b.qid
         |  WHERE a.qid < a.nid),
-        |cc_ed AS (SELECT doc_a AS src, doc_b AS dst FROM cc_m
-        |          UNION SELECT doc_b, doc_a FROM cc_m),
-        |cc_r AS (
-        |  SELECT src AS id, src AS label FROM cc_ed
-        |  UNION
-        |  SELECT cc_ed.dst AS id, cc_r.label
-        |  FROM cc_r JOIN cc_ed ON cc_ed.src = cc_r.id)
-        |SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
-        |FROM cc_r GROUP BY id""".stripMargin)),
+        |${componentsSql("cc_m")}""".stripMargin)),
     // SEMANTIC dedup (SemDeDup, Abbas et al. 2023): k-means-cluster the
     // integer fake embeds (the shared x20i model), then drop every doc
     // with a lower-id cluster-mate inside the cosine epsilon ball —

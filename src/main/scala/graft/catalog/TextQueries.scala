@@ -27,6 +27,27 @@ private[graft] object TextQueries {
   private val rrfLegK = 10 // x77 per-ranker candidate-list depth fed to the fuse
   private val rrfC = 60    // x77 RRF damping constant (Cormack et al. 2009's 60)
   private val rrfTopK = 5  // x77 fused hits returned per query
+  private val curateKeepPer100 = 50 // x26 sample rate in hash buckets of 100
+  private val docBucketSql = hashBucketSql("doc_id", 100) // x26 sample and x66 split bucket
+
+  /** Twin of `Retrieval`'s fixed-point BM25 contribution of one
+    * (query term, doc) row: the rational idf (n - df + 0.5) / (df +
+    * 0.5) times the saturated, length-normalized tf, floored to
+    * integer millionths, as the fixed IEEE sequence the Spark plan
+    * evaluates. Reads `q`(n, df, sl) and `tf`(tf, dl); every float
+    * constant is interpolated from the same Scala doubles (::DOUBLE
+    * keeps DuckDB out of DECIMAL arithmetic).
+    */
+  private val bm25ContribSql: String =
+    s"""CAST(floor(
+       |           ((CAST(q.n - q.df AS DOUBLE) + 0.5::DOUBLE)
+       |             / (CAST(q.df AS DOUBLE) + 0.5::DOUBLE))
+       |           * (CAST(tf.tf AS DOUBLE) * ${bmK1 + 1}::DOUBLE
+       |              / (CAST(tf.tf AS DOUBLE)
+       |                 + ${bmK1}::DOUBLE * (${1 - bmB}::DOUBLE
+       |                     + ${bmB}::DOUBLE * CAST(tf.dl AS DOUBLE)
+       |                       / (CAST(q.sl AS DOUBLE) / CAST(q.n AS DOUBLE)))))
+       |           * 1e6) AS BIGINT)""".stripMargin
 
   /** The x70 BM25 oracle text, shared verbatim by x86 (the
     * impact-ordered spelling is output-identical by construction
@@ -63,24 +84,56 @@ private[graft] object TextQueries {
         |      WHERE dfs.df <= floor($bmDfFrac::DOUBLE * CAST(st.n AS DOUBLE))),
         |sc AS (
         |  SELECT q.qid, tf.nid,
-        |         CAST(floor(
-        |           ((CAST(q.n - q.df AS DOUBLE) + 0.5::DOUBLE)
-        |             / (CAST(q.df AS DOUBLE) + 0.5::DOUBLE))
-        |           * (CAST(tf.tf AS DOUBLE) * ${bmK1 + 1}::DOUBLE
-        |              / (CAST(tf.tf AS DOUBLE)
-        |                 + ${bmK1}::DOUBLE * (${1 - bmB}::DOUBLE
-        |                     + ${bmB}::DOUBLE * CAST(tf.dl AS DOUBLE)
-        |                       / (CAST(q.sl AS DOUBLE) / CAST(q.n AS DOUBLE)))))
-        |           * 1e6) AS BIGINT) AS c
+        |         $bm25ContribSql AS c
         |  FROM q JOIN tf USING (tid)
         |  WHERE tf.nid <> q.qid),
         |ag AS (SELECT qid, nid, CAST(sum(c) AS BIGINT) AS score
         |       FROM sc GROUP BY 1, 2),
-        |r AS (SELECT qid, nid, score,
-        |        CAST(row_number() OVER (PARTITION BY qid
-        |               ORDER BY score DESC, nid ASC) AS BIGINT) AS rnk
+        |r AS (SELECT qid, nid, score, ${rankSql("score")} AS rnk
         |      FROM ag)
         |SELECT qid, nid, score, rnk FROM r WHERE rnk <= $bmK""".stripMargin
+
+  /** The char-trigram profile language ID of x21/x30 — the twin of
+    * `TextAnalysis.trainNgramProfiles` and `classifyNgram`: each
+    * language's 200 most frequent distinct trigrams, weighted 201 -
+    * rank, are trained on the labeled docs matching `trainPred`; every
+    * doc matching `testPred` gets its best-scoring language (the lower
+    * code on a tie, 'und' with score 0 when no trigram hits).
+    */
+  private def ngramLangIdOracle(trainPred: String, testPred: String): String =
+    s"""WITH d AS (
+      |  SELECT doc_id, lang, lower(trim(text)) AS t FROM documents),
+      |g AS (
+      |  SELECT doc_id, lang,
+      |         CASE WHEN length(t) >= 3
+      |              THEN list_distinct(list_transform(range(1, length(t) - 1),
+      |                                                i -> t[i:i+2]))
+      |              ELSE [] END AS grams
+      |  FROM d),
+      |etr AS (SELECT doc_id, lang, unnest(grams) AS gram FROM g
+      |        WHERE $trainPred),
+      |ete AS (SELECT doc_id, unnest(grams) AS gram FROM g
+      |        WHERE $testPred),
+      |prof AS (
+      |  SELECT lang AS p_lang, gram, 201 - rnk AS weight FROM (
+      |    SELECT lang, gram,
+      |           row_number() OVER (PARTITION BY lang
+      |                              ORDER BY count(*) DESC, gram ASC) AS rnk
+      |    FROM etr WHERE lang IS NOT NULL GROUP BY lang, gram) t
+      |  WHERE rnk <= 200),
+      |sc AS (
+      |  SELECT doc_id, p_lang, CAST(sum(weight) AS BIGINT) AS score
+      |  FROM ete JOIN prof USING (gram) GROUP BY doc_id, p_lang),
+      |best AS (
+      |  SELECT doc_id, p_lang, score FROM (
+      |    SELECT doc_id, p_lang, score,
+      |           row_number() OVER (PARTITION BY doc_id
+      |                              ORDER BY score DESC, p_lang ASC) AS rn
+      |    FROM sc) t WHERE rn = 1)
+      |SELECT g.doc_id, coalesce(best.p_lang, 'und') AS pred_lang,
+      |       coalesce(best.score, 0) AS best_score
+      |FROM g LEFT JOIN best USING (doc_id)
+      |WHERE $testPred""".stripMargin
 
   val entries: Seq[Entry] = Seq(
     // ---- north-star extensions: text analysis ----
@@ -98,36 +151,8 @@ private[graft] object TextQueries {
     // whole train→score→argmax path is replicated by the DuckDB oracle
     Entry("x21_langid_ngram", (s, d) =>
       TextAnalysis.langIdNgram(docs(s, d), "doc_id", "text", "lang")
-        .withColumnRenamed("id", "doc_id"), Sql(
-      """WITH d AS (
-        |  SELECT doc_id, lang, lower(trim(text)) AS t FROM documents),
-        |g AS (
-        |  SELECT doc_id, lang,
-        |         CASE WHEN length(t) >= 3
-        |              THEN list_distinct(list_transform(range(1, length(t) - 1),
-        |                                                i -> t[i:i+2]))
-        |              ELSE [] END AS grams
-        |  FROM d),
-        |e AS (SELECT doc_id, lang, unnest(grams) AS gram FROM g),
-        |prof AS (
-        |  SELECT lang AS p_lang, gram, 201 - rnk AS weight FROM (
-        |    SELECT lang, gram,
-        |           row_number() OVER (PARTITION BY lang
-        |                              ORDER BY count(*) DESC, gram ASC) AS rnk
-        |    FROM e WHERE lang IS NOT NULL GROUP BY lang, gram) t
-        |  WHERE rnk <= 200),
-        |sc AS (
-        |  SELECT doc_id, p_lang, CAST(sum(weight) AS BIGINT) AS score
-        |  FROM e JOIN prof USING (gram) GROUP BY doc_id, p_lang),
-        |best AS (
-        |  SELECT doc_id, p_lang, score FROM (
-        |    SELECT doc_id, p_lang, score,
-        |           row_number() OVER (PARTITION BY doc_id
-        |                              ORDER BY score DESC, p_lang ASC) AS rn
-        |    FROM sc) t WHERE rn = 1)
-        |SELECT g.doc_id, coalesce(best.p_lang, 'und') AS pred_lang,
-        |       coalesce(best.score, 0) AS best_score
-        |FROM g LEFT JOIN best USING (doc_id)""".stripMargin)),
+        .withColumnRenamed("id", "doc_id"),
+      Sql(ngramLangIdOracle("TRUE", "TRUE"))),
     // the factored train/test path: profiles trained OFFLINE on the even
     // split (tiny broadcastable frame — at 100 TB you persist this), test
     // split classified against them — the production inference shape
@@ -140,40 +165,7 @@ private[graft] object TextQueries {
           TextAnalysis.docNgrams(all.filter(col("doc_id") % 2 === 1),
             "doc_id", "text", "lang"), profiles)
         .withColumnRenamed("id", "doc_id")
-    }, Sql(
-      """WITH d AS (
-        |  SELECT doc_id, lang, lower(trim(text)) AS t FROM documents),
-        |g AS (
-        |  SELECT doc_id, lang,
-        |         CASE WHEN length(t) >= 3
-        |              THEN list_distinct(list_transform(range(1, length(t) - 1),
-        |                                                i -> t[i:i+2]))
-        |              ELSE [] END AS grams
-        |  FROM d),
-        |etr AS (SELECT doc_id, lang, unnest(grams) AS gram FROM g
-        |        WHERE doc_id % 2 = 0),
-        |ete AS (SELECT doc_id, unnest(grams) AS gram FROM g
-        |        WHERE doc_id % 2 = 1),
-        |prof AS (
-        |  SELECT lang AS p_lang, gram, 201 - rnk AS weight FROM (
-        |    SELECT lang, gram,
-        |           row_number() OVER (PARTITION BY lang
-        |                              ORDER BY count(*) DESC, gram ASC) AS rnk
-        |    FROM etr WHERE lang IS NOT NULL GROUP BY lang, gram) t
-        |  WHERE rnk <= 200),
-        |sc AS (
-        |  SELECT doc_id, p_lang, CAST(sum(weight) AS BIGINT) AS score
-        |  FROM ete JOIN prof USING (gram) GROUP BY doc_id, p_lang),
-        |best AS (
-        |  SELECT doc_id, p_lang, score FROM (
-        |    SELECT doc_id, p_lang, score,
-        |           row_number() OVER (PARTITION BY doc_id
-        |                              ORDER BY score DESC, p_lang ASC) AS rn
-        |    FROM sc) t WHERE rn = 1)
-        |SELECT g.doc_id, coalesce(best.p_lang, 'und') AS pred_lang,
-        |       coalesce(best.score, 0) AS best_score
-        |FROM g LEFT JOIN best USING (doc_id)
-        |WHERE g.doc_id % 2 = 1""".stripMargin)),
+    }, Sql(ngramLangIdOracle("doc_id % 2 = 0", "doc_id % 2 = 1"))),
     Entry("x09_text_quality", (s, d) => TextAnalysis.quality(docs(s, d), "doc_id", "text"), Sql(
       s"""WITH ${tokensCte("t", t = "toks", keys = "doc_id, text")},
         |m AS (
@@ -291,7 +283,7 @@ private[graft] object TextQueries {
     // dedup shuffle (see pipelines.Curation)
     Entry("x26_curation_pipeline", (s, d) =>
       Curation.curate(docs(s, d), "doc_id", "text",
-        lang = "en", keepPer100 = 50), Sql(
+        lang = "en", keepPer100 = curateKeepPer100), Sql(
       s"""WITH $curateCtes,
         |l AS (
         |  SELECT doc_id, fingerprint, quality_bucket,
@@ -304,8 +296,7 @@ private[graft] object TextQueries {
         |  FROM l WHERE quality_bucket = 'ok' AND pred_lang = 'en')
         |SELECT doc_id, fingerprint, pred_lang FROM d
         |WHERE rn = 1
-        |  AND ((doc_id % 1000000007) * 2654435761 % 100 + 100) % 100
-        |        < 50""".stripMargin)),
+        |  AND $docBucketSql < $curateKeepPer100""".stripMargin)),
     // deterministic 80/10/10 train/val/test split: the pure Knuth-spread
     // bucket of doc_id → a stable per-doc label; no rand(), no engine
     // hash — re-materializing the corpus never moves a doc across the
@@ -316,13 +307,10 @@ private[graft] object TextQueries {
     Entry("x66_split_assign", (s, d) =>
       Sampling.splitAssign(
         docs(s, d).select("doc_id", "lang", "source"), "doc_id"), Sql(
-      """SELECT doc_id, lang, source,
-        |       CAST(((doc_id % 1000000007) * 2654435761 % 100 + 100) % 100
-        |            AS BIGINT) AS bucket,
-        |       CASE WHEN ((doc_id % 1000000007) * 2654435761 % 100 + 100) % 100 < 80
-        |              THEN 'train'
-        |            WHEN ((doc_id % 1000000007) * 2654435761 % 100 + 100) % 100 < 90
-        |              THEN 'val'
+      s"""SELECT doc_id, lang, source,
+        |       CAST($docBucketSql AS BIGINT) AS bucket,
+        |       CASE WHEN $docBucketSql < 80 THEN 'train'
+        |            WHEN $docBucketSql < 90 THEN 'val'
         |            ELSE 'test' END AS split
         |FROM documents""".stripMargin)),
 
@@ -437,22 +425,12 @@ private[graft] object TextQueries {
         |        AND dfs.df <= floor($bmDfFrac::DOUBLE * CAST(st.n AS DOUBLE))),
         |sc AS (
         |  SELECT q.qid, tf.nid,
-        |         CAST(floor(
-        |           ((CAST(q.n - q.df AS DOUBLE) + 0.5::DOUBLE)
-        |             / (CAST(q.df AS DOUBLE) + 0.5::DOUBLE))
-        |           * (CAST(tf.tf AS DOUBLE) * ${bmK1 + 1}::DOUBLE
-        |              / (CAST(tf.tf AS DOUBLE)
-        |                 + ${bmK1}::DOUBLE * (${1 - bmB}::DOUBLE
-        |                     + ${bmB}::DOUBLE * CAST(tf.dl AS DOUBLE)
-        |                       / (CAST(q.sl AS DOUBLE) / CAST(q.n AS DOUBLE)))))
-        |           * 1e6) AS BIGINT) AS cb
+        |         $bm25ContribSql AS cb
         |  FROM q JOIN tf USING (term)
         |  WHERE tf.nid <> q.qid),
         |ag AS (SELECT qid, nid, CAST(sum(cb) AS BIGINT) AS score
         |       FROM sc GROUP BY 1, 2),
-        |sr AS (SELECT qid, nid,
-        |         CAST(row_number() OVER (PARTITION BY qid
-        |                ORDER BY score DESC, nid ASC) AS BIGINT) AS rnk
+        |sr AS (SELECT qid, nid, ${rankSql("score")} AS rnk
         |       FROM ag),
         |dq AS (SELECT doc_id AS qid, embedding::DOUBLE[] AS qvec FROM c
         |       WHERE ${fixedCountPredSql("c", "doc_id", rrfQueryTarget)}),
@@ -460,9 +438,7 @@ private[graft] object TextQueries {
         |  SELECT dq.qid, e.doc_id AS nid,
         |         round(list_cosine_similarity(dq.qvec, e.embedding::DOUBLE[]), 6) AS sim
         |  FROM dq, c e WHERE e.doc_id <> dq.qid),
-        |dr AS (SELECT qid, nid,
-        |         CAST(row_number() OVER (PARTITION BY qid
-        |                ORDER BY sim DESC, nid ASC) AS BIGINT) AS rnk
+        |dr AS (SELECT qid, nid, ${rankSql()} AS rnk
         |       FROM dsim),
         |u AS (
         |  SELECT qid, nid,
@@ -476,9 +452,7 @@ private[graft] object TextQueries {
         |  FROM dr WHERE rnk <= $rrfLegK),
         |f AS (SELECT qid, nid, CAST(sum(cc) AS BIGINT) AS score
         |      FROM u GROUP BY 1, 2),
-        |fr AS (SELECT qid, nid, score,
-        |         CAST(row_number() OVER (PARTITION BY qid
-        |                ORDER BY score DESC, nid ASC) AS BIGINT) AS rnk
+        |fr AS (SELECT qid, nid, score, ${rankSql("score")} AS rnk
         |       FROM f)
         |SELECT qid, nid, score, rnk FROM fr WHERE rnk <= $rrfTopK""".stripMargin))
   )

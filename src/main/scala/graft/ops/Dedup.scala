@@ -26,9 +26,13 @@ object Dedup {
   def keepFirst(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
     Top1PerGroup.keepFirst(df, keys.map(col), order)
 
-  /** Rows of `incoming` whose `keys` do not appear in `existing` (K3). */
+  /** Rows of `incoming` whose `keys` do not appear in `existing` (K3).
+    * A left-anti join never multiplies its left rows, so a key that
+    * `existing` holds twice excludes its match once: no `distinct()`
+    * (and no aggregate stage) is needed on the existing side.
+    */
   def insertIfAbsent(incoming: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
-    incoming.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    incoming.join(existing.select(keys.map(col): _*), keys, "left_anti")
 
   /** Exact content dedup by normalized-text hash: groups identical texts,
     * keeps the minimum id as the canonical representative (north-star

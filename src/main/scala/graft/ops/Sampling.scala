@@ -30,13 +30,22 @@ object Sampling {
     * outer `% b` folds to [0, b). Rate predicates (`hashBucket < r`)
     * therefore downsample negative-keyed rows at the same rate as
     * positive ones — a sign-preserving `%` here would silently keep
-    * ALL negative-keyed rows. The whole Knuth-spread family
-    * (Similarity.knuthSpread, Sharding.spreadKey) uses this spelling.
+    * ALL negative-keyed rows. This is the one spelling of the Knuth
+    * spread: Sharding.spreadKey and the integer-IVF seed order
+    * (Similarity) call it, and the oracles' SQL twin
+    * (`catalog.Shared.hashBucketSql`) interpolates [[knuthModulus]] and
+    * [[knuthMultiplier]].
     */
   def hashBucket(key: Column, buckets: Int = 100): Column = {
     val b = lit(buckets.toLong)
-    (key % lit(1000000007L) * lit(2654435761L) % b + b) % b
+    (key % lit(knuthModulus) * lit(knuthMultiplier) % b + b) % b
   }
+
+  /** The spread's inner modulus and multiplier: (key mod 1000000007)
+    * times 2654435761 stays below 2^62, inside Long and DuckDB's BIGINT.
+    */
+  private[graft] val knuthModulus = 1000000007L
+  private[graft] val knuthMultiplier = 2654435761L
 
   /** Deterministic train/val/test split assignment: every row gets a
     * stable `split` label from its key's hash bucket — bucket < trainPct

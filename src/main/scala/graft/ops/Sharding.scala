@@ -25,19 +25,17 @@ import org.apache.spark.sql.functions._
   */
 object Sharding {
 
-  /** Pseudo-random spread key in [0, 999999937) — TOTAL over all Long
-    * ids, negatives included. (id % 1000000007) * 2654435761 ≤ ~2.7e18
-    * stays inside Long, then the Mersenne-ish-prime mod is spelled as
-    * the portable pmod `((x % p) + p) % p` (same spelling as
-    * Sampling.hashBucket / Similarity.knuthSpread) so any
-    * sign-preserving-`%` engine replays it exactly AND the key is
-    * non-negative — which keeps the downstream `__k % nShards` shard
-    * assignment inside the [0, nShards) contract for every id.
+  /** The prime the spread key is taken modulo. */
+  private[graft] val spreadBuckets = 999999937
+
+  /** Pseudo-random spread key in [0, [[spreadBuckets]]) — TOTAL over
+    * all Long ids, negatives included: [[Sampling.hashBucket]] at a
+    * large prime, so any sign-preserving-`%` engine replays it exactly
+    * AND the key is non-negative — which keeps the downstream
+    * `__k % nShards` shard assignment inside the [0, nShards) contract
+    * for every id.
     */
-  def spreadKey(id: Column): Column = {
-    val p = lit(999999937L)
-    (id % lit(1000000007L) * lit(2654435761L) % p + p) % p
-  }
+  def spreadKey(id: Column): Column = Sampling.hashBucket(id, spreadBuckets)
 
   /** One row per input row: (idCol, shard, pos) where `pos` is the
     * 1-based position of the row inside its shard's deterministic

@@ -162,7 +162,7 @@ object Curation {
                      textCol: String, domainCol: String, lang: String = "en",
                      shingleK: Int = 8, spanK: Int = 8, tau: Int = 2,
                      mixBuckets: Int = 1000, nDocs: Option[Long] = None,
-                     scratchBudgetMb: Long = funnelDefaultScratchBudgetMb)
+                     scratchBudgetMb: Long = graft.Scratch.nodeBudgetMb)
       : DataFrame = {
     val b = new CorpusBuildV2(train, eval, idCol, textCol, domainCol, lang,
       shingleK, spanK, tau, mixBuckets)
@@ -190,11 +190,6 @@ object Curation {
     * it only costs a few 1-row jobs.
     */
   val funnelOneJobScratchMbPer1MDocs: Long = 14746L
-
-  /** Default per-node scratch budget (48 GiB — the shared node-budget
-    * constant, see Retrieval.bm25DefaultScratchBudgetMb).
-    */
-  val funnelDefaultScratchBudgetMb: Long = 49152L
 
   def funnelOneJobScratchEstimateMb(nDocs: Long): Long =
     math.ceil(funnelOneJobScratchMbPer1MDocs * (nDocs / 1e6)).toLong

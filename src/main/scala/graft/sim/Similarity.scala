@@ -1,8 +1,9 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Sampling
 
 /** The cell structure of the exact-integer IVF model behind
   * [[Similarity.semDedup]] and [[Similarity.knnGraph]]: `nlist` fine
@@ -150,6 +151,22 @@ object Similarity {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.queryExecution.toRdd.getNumPartitions < target) df.repartition(target)
     else df
+  }
+
+  /** `df` cached and filled by one job before any plan reads it. AQE
+    * fills a cached frame as a query stage of the first plan that scans
+    * it, one stage per scan, so a plan that scans an unfilled pin twice
+    * (a top-k's query and corpus sides, a model's seed pick and first
+    * assignment, a PQ codebook's init window and first Lloyd pass)
+    * starts two fill jobs that race for the same block: the loser's
+    * task waits on the block lock, then logs "already exists". One pass
+    * over the bare frame — no exchange, so one job — fills it, and
+    * those stages start no job.
+    */
+  private[graft] def filledPin(df: DataFrame): DataFrame = {
+    val p = df.cache()
+    p.foreachPartition((_: Iterator[Row]) => ())
+    p
   }
 
   /** `(<side>id, <side>vec)` rows of `df`: side "n" is the corpus, side
@@ -450,23 +467,20 @@ object Similarity {
   private def cosExactInt(a: Column, b: Column): Column =
     dot(a, b) / greatest(sqrt(dot(a, a)) * sqrt(dot(b, b)), lit(1e-9))
 
-  /** The Knuth multiplicative spread key the integer-IVF family seeds
-    * with — ONE definition for ivfIntModel and hierIntModel (the
-    * oracles interpolate the same constants; a typo in a hand-rolled
-    * copy would surface as a hash mismatch, not a compile error).
-    * Portable-pmod spelled like the rest of the family
-    * (Sampling.hashBucket, Sharding.spreadKey) so the seed ORDER is
-    * total over negative ids too.
+  /** The bucket count of the Knuth spread the integer-IVF family
+    * seeds with; the oracles interpolate it.
     */
-  private def knuthSpread(id: Column): Column =
-    (id % 1000000007L * 2654435761L % 1000003L + 1000003L) % 1000003L
+  private[graft] val seedBuckets = 1000003
 
-  /** The first `nlist` corpus vectors in Knuth-spread order, as seed
-    * centroids (cid, <vecName>): pure integer arithmetic, unlike
-    * [[ivfTrain]]'s engine-murmur spread, so any engine reproduces them.
+  /** The first `nlist` corpus vectors in Knuth-spread order
+    * (`Sampling.hashBucket` at [[seedBuckets]], total over negative ids
+    * too), as seed centroids (cid, <vecName>): pure integer arithmetic,
+    * unlike [[ivfTrain]]'s engine-murmur spread, so any engine
+    * reproduces them. ONE definition for ivfIntModel and hierIntModel.
     */
   private def knuthSeeds(corpus: DataFrame, nlist: Int, vecName: String): DataFrame =
-    corpus.orderBy(knuthSpread(col("nid")).asc, col("nid").asc).limit(nlist)
+    corpus.orderBy(Sampling.hashBucket(col("nid"), seedBuckets).asc, col("nid").asc)
+      .limit(nlist)
       .select(col("nid").as("cid"), col("nvec").as(vecName))
 
   /** Integer FLOOR-mean Lloyd update shared by [[ivfIntModel]] and
@@ -516,8 +530,8 @@ object Similarity {
     * reproduce the assignment bit-for-bit (x20's rows-only residue).
     * [[ivfIntModel]] removes every order-dependent float:
     *
-    *  - init: Knuth-spread order (nid % 1000000007 * 2654435761
-    *    % 1000003, nid) take nlist;
+    *  - init: Knuth-spread order (`Sampling.hashBucket(nid,
+    *    seedBuckets)`, nid) take nlist;
     *  - Lloyd update: element-wise integer SUM (exact, order-free) and
     *    floor-divided integer mean — centroids stay integer vectors;
     *  - similarity: cosine whose three dot products are exact integers
@@ -1174,7 +1188,9 @@ object Similarity {
     // the subvector frame feeds the codebook init window, every Lloyd
     // pass, and the encode pass — refineIters+2 evaluations of the
     // normalize + m-way posexplode uncached (round 17). Iterative-
-    // algorithm discipline: cache it; release is the session owner's
+    // algorithm discipline: pin it, filled once before the codebook's
+    // checkpoint plan scans it twice (init window and first Lloyd
+    // join — [[filledPin]]); release is the session owner's
     // clearCache (the established contract). NOTE (round-17 advice):
     // in THIS entry point codebook training and encode consume the same
     // full-corpus svecs frame, so the cache pins m rows per corpus
@@ -1183,7 +1199,7 @@ object Similarity {
     // through cosineTopKPq/cosineTopKIvfPq today (it would need a
     // trainPred parameter), so the full-corpus pin is the honest cost
     // of the shipped API, traded against refineIters+2 corpus passes.
-    val svecs = pqSvecs(base, m, sub).cache()
+    val svecs = filledPin(pqSvecs(base, m, sub))
     val codebook = pqCodebook(svecs, ksub, refineIters)
     val codes = pqEncode(svecs, codebook)
     // queryPred applies to the RAW input frame (idCol spelling), the
@@ -1218,8 +1234,8 @@ object Similarity {
     val corpus = base.select(col("id").as("nid"), col("vec").as("nvec"))
     val centroids = ivfTrain(corpus, nlist, refineIters)
     val lists = ivfAssign(corpus, centroids).select("nid", "cid")
-    // cached for the same reason as in cosineTopKPq (3 consumers)
-    val svecs = pqSvecs(base, m, sub).cache()
+    // pinned and filled for the same reasons as in cosineTopKPq
+    val svecs = filledPin(pqSvecs(base, m, sub))
     val codebook = pqCodebook(svecs, ksub, refineIters)
     val listed = pqEncode(svecs, codebook)
       .join(lists, col("id") === col("nid")).select("id", "cid", "codes")

@@ -26,7 +26,7 @@ object Bm25Route {
     * spellings.
     */
   final case class Auto(n: Long, queryCount: Long = 40L,
-      scratchBudgetMb: Long = Retrieval.bm25DefaultScratchBudgetMb)
+      scratchBudgetMb: Long = graft.Scratch.nodeBudgetMb)
       extends Bm25Route {
     require(scratchBudgetMb > 0L,
       s"scratchBudgetMb must be > 0, got $scratchBudgetMb")
@@ -76,7 +76,7 @@ object Bm25Route {
   * wins 2.75× at 150k, impact 2.1× at 500k),
   * [[Retrieval.bm25ScratchMbPer1MDocsPer10Queries]] (~3 GB per 1M docs
   * per 10 queries, round 15 at 10M docs) and
-  * [[Retrieval.bm25DefaultScratchBudgetMb]] (48 GiB). Staging the
+  * [[graft.Scratch.nodeBudgetMb]] (48 GiB). Staging the
   * tokens of a batched run measured 0.83× the per-batch re-tokenize at
   * equal peak scratch (round 16, v2-5M, 4 batches).
   *
@@ -696,14 +696,6 @@ object Retrieval {
     * spelling is the batched one.
     */
   val bm25ScratchMbPer1MDocsPer10Queries: Long = 3072L
-
-  /** Default per-node scratch budget the `Auto` route sizes against:
-    * 48 GiB — the round-15 measured completions on a ~75 GB-free node
-    * peaked at 51-52 GB with the whole ten-stage build running, so one
-    * query's index must stay under ~2/3 of the free disk to leave the
-    * rest of a real job room. Deployments pass their own budget.
-    */
-  val bm25DefaultScratchBudgetMb: Long = 49152L
 
   /** The `Auto` route's scratch rule, exposed for the spec and the
     * sizing discussion: estimated monolithic-index scratch in MB (the

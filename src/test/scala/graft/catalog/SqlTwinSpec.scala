@@ -3,6 +3,8 @@ package catalog
 
 import java.sql.{Connection, DriverManager, ResultSet}
 import org.apache.spark.sql.functions._
+import graft.neardup.NearDup
+import graft.ops.Sampling
 import graft.text.{Pii, TextAnalysis}
 import Shared._
 
@@ -162,6 +164,56 @@ class SqlTwinSpec extends SparkSpec {
                         "n_phones" -> Pii.phoneRe))
       assertTwin(c, counts.map(r => norm(r.getAs[Any](c))),
         duck1(s"len(regexp_extract_all(text, '$re'))::BIGINT"))
+  }
+
+  /** Every row of a DuckDB query, each column normalized. */
+  private def duckRows(sql: String): Seq[Seq[Any]] = {
+    val rs = duck.createStatement().executeQuery(sql)
+    val n = rs.getMetaData.getColumnCount
+    val out = Iterator.continually(rs).takeWhile(_.next())
+      .map(r => (1 to n).map(i => norm(r.getObject(i)))).toVector
+    rs.close()
+    out
+  }
+
+  test("the hash-bucket twin spreads like Sampling.hashBucket") {
+    // negative keys, zero, Long's ends, and ScaleGen's id lattice
+    // orig + copy * 10^8
+    val keys = Seq(Long.MinValue, -1000000008L, -1000000007L, -4999L, -1L, 0L,
+      1L, 4999L, 1000000006L, 1000000007L, Long.MaxValue) ++
+      (for (orig <- Seq(0L, 7L, 4999L); copy <- Seq(1L, 9L, 99L))
+        yield orig + copy * 100000000L)
+    duck.createStatement().execute("CREATE TABLE keys (k BIGINT)")
+    duck.createStatement().execute(
+      s"INSERT INTO keys VALUES ${keys.map(k => s"($k)").mkString(", ")}")
+    val kdf = keys.toDF("k")
+    for (b <- Seq(1, 100, 1000003, 999999937)) {
+      val sparkVals = kdf.select(col("k"), Sampling.hashBucket(col("k"), b))
+        .orderBy("k").collect().toSeq.map(r => Seq(r.getLong(0), r.getLong(1)))
+      val duckVals = duckRows(s"SELECT k, ${hashBucketSql("k", b)} FROM keys ORDER BY k")
+      assert(duckVals == sparkVals, s"buckets = $b")
+      assert(sparkVals.forall { case Seq(_, h: Long) => h >= 0 && h < b }, s"buckets = $b")
+    }
+  }
+
+  test("the Jaccard twin scores pairs like NearDup.jaccardPairsOver") {
+    // doc 1 shares 2 of 4 distinct shingles with docs 2 and 4, 1 of 4
+    // with doc 3; doc 4 repeats doc 2's set; doc 5 shares nothing
+    val sh = Seq(1L -> "a", 1L -> "b", 1L -> "c", 2L -> "a", 2L -> "b", 2L -> "d",
+      3L -> "c", 3L -> "x", 4L -> "a", 4L -> "b", 4L -> "d", 5L -> "z")
+    duck.createStatement().execute("CREATE TABLE sh (doc_id BIGINT, shingle VARCHAR)")
+    duck.createStatement().execute(
+      s"INSERT INTO sh VALUES ${sh.map { case (d, g) => s"($d, '$g')" }.mkString(", ")}")
+    for (threshold <- Seq(0.0, 0.5, 0.75)) {
+      val sparkVals = NearDup.jaccardPairsOver(sh.toDF("id", "shingle"), threshold)
+        .orderBy("doc_a", "doc_b").collect().toSeq
+        .map(r => Seq(r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      val duckVals = duckRows(
+        s"""WITH ${NearDupQueries.jaccardCtes(NearDupQueries.exactInterSql, threshold)}
+           |SELECT doc_a, doc_b, n_common, jaccard FROM p
+           |ORDER BY doc_a, doc_b""".stripMargin)
+      assert(sparkVals.nonEmpty && duckVals == sparkVals, s"threshold = $threshold")
+    }
   }
 
   test("the edge cases exercise every branch the twins generate") {

@@ -59,6 +59,14 @@ class AggWindowSpec extends SparkSpec {
     assert(out.collect().map(_.getInt(0)).toSet == Set(4, 5))
   }
 
+  test("insertIfAbsent excludes a match once when existing holds its key twice") {
+    val existing = Seq(2, 2, 3).toDF("k")
+    val incoming = Seq((2, "a"), (4, "b"), (4, "c")).toDF("k", "v")
+    val out = Dedup.insertIfAbsent(incoming, existing, Seq("k"))
+    assert(out.collect().map(r => (r.getInt(0), r.getString(1))).sorted.toSeq ==
+      Seq((4, "b"), (4, "c")))
+  }
+
   test("sizeOrZero guards null arrays (size(NULL) = -1 trap)") {
     val df = Seq((Some(Seq("a", "b")), 1), (None, 2)).toDF("arr", "i")
     val out = df.select(Explode.sizeOrZero(col("arr")).as("n")).collect()

@@ -217,8 +217,8 @@ class TrainingDataOpsSpec extends SparkSpec {
     // the gate: the measured one-job rule (72 GB at 5M docs) fits a
     // 48 GiB budget only below ~3.3M docs; no nDocs ⇒ sequential
     import graft.pipelines.Curation._
-    assert(funnelOneJobScratchEstimateMb(5000000L) > funnelDefaultScratchBudgetMb)
-    assert(funnelOneJobScratchEstimateMb(1000000L) <= funnelDefaultScratchBudgetMb)
+    assert(funnelOneJobScratchEstimateMb(5000000L) > graft.Scratch.nodeBudgetMb)
+    assert(funnelOneJobScratchEstimateMb(1000000L) <= graft.Scratch.nodeBudgetMb)
     // and the routed entry stays output-identical under both routes
     val viaFused = rows(curationFunnel(train, eval, "doc_id", "text",
       "source", nDocs = Some(4L)))
@@ -234,7 +234,7 @@ class TrainingDataOpsSpec extends SparkSpec {
       .queryExecution.logical.collectFirst {
         case _: org.apache.spark.sql.execution.LogicalRDD => ()
       }.isDefined
-    assert(!sequential(funnelDefaultScratchBudgetMb),
+    assert(!sequential(graft.Scratch.nodeBudgetMb),
       "a fitting corpus must take the fused route")
     // an unknown (non-positive) budget fails closed: sequential
     for (budget <- Seq(0L, -1L))

@@ -89,7 +89,7 @@ object Bm25ScaleProbe {
     val autoBatches =
       if (mode == "auto")
         graft.text.Retrieval.bm25AutoBatches(n, 40L,
-          graft.text.Retrieval.bm25DefaultScratchBudgetMb)
+          graft.Scratch.nodeBudgetMb)
       else batches
     val bootId =
       try java.nio.file.Files
